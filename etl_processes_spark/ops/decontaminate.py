@@ -39,17 +39,6 @@ def eval_gram_hashes(eval_df: DataFrame, text_col: str, k: int = 5) -> DataFrame
     )
 
 
-def eval_gram_strings(eval_df: DataFrame, text_col: str, k: int = 5) -> DataFrame:
-    """Distinct RAW gram strings of the evaluation set: one column ``h``.
-    The ``key="string"`` twin of eval_gram_hashes — broadcast payload is the
-    strings themselves (still tiny: benchmarks are thousands of docs), and
-    membership is exact string equality rather than a 60-bit md5 residue."""
-    return (
-        eval_df.select(F.explode(shingles_expr(text_col, k)).alias("h"))
-        .distinct()
-    )
-
-
 def contamination_report(
     corpus: DataFrame,
     eval_df: DataFrame,
@@ -58,7 +47,6 @@ def contamination_report(
     k: int = 5,
     threshold: float = 0.5,
     ndigits: int = 6,
-    key: str = "hash",
 ) -> DataFrame:
     """Per corpus document: (id, n_grams, n_contaminated, contamination_ratio,
     contaminated) where n_contaminated counts the doc's DISTINCT k-gram
@@ -69,26 +57,11 @@ def contamination_report(
 
     Plan: corpus grams (one shuffle to groupBy doc) left-semi'd against the
     BROADCAST eval hash set for the hit count; total gram counts ride the
-    same exploded stream, so the text is shingled exactly once.
-
-    ``key`` selects the join-key representation (round-11 advice: try the
-    pii-style cheap-probe idea on the gram membership test):
-     - "hash" (default): 60-bit md5 residues on BOTH sides — 8-byte keys,
-       DuckDB-replayable (the correctness gate's certified semantics).
-     - "string": raw gram strings — skips the md5+conv work on every
-       corpus gram and probes the broadcast hash relation with the
-       string's native hash instead; exact (no 60-bit collisions). See
-       SCALING.md round-12 for the measured keep-or-revert decision."""
-    if key not in ("hash", "string"):
-        raise ValueError(f"key must be 'hash' or 'string' (got {key!r})")
-    gram_key = (
-        md5_long_expr("shingle") if key == "hash" else F.col("shingle")
-    )
+    same exploded stream, so the text is shingled exactly once."""
     grams = widen(corpus).select(
         F.col(id_col).alias("id"), F.explode(shingles_expr(text_col, k)).alias("shingle")
-    ).select("id", gram_key.alias("h"))
-    ev_side = eval_gram_hashes if key == "hash" else eval_gram_strings
-    ev = ev_side(eval_df, text_col, k).withColumn("__hit", F.lit(1))
+    ).select("id", md5_long_expr("shingle").alias("h"))
+    ev = eval_gram_hashes(eval_df, text_col, k).withColumn("__hit", F.lit(1))
     # broadcast the (small) eval set; left join + conditional count gives
     # totals and hits in ONE doc-keyed aggregation
     tagged = grams.join(F.broadcast(ev), "h", "left")

@@ -110,24 +110,11 @@ def let_expr(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def tokens_from_normalized_expr(c: str | Column) -> Column:
-    """Tokens of text that is ALREADY normalized (space-joined alnum tokens,
-    i.e. the output of ``normalized_text_expr``): a literal single-space
-    split — value-identical to ``tokens_expr`` on such text (tokens contain
-    no spaces by construction) but skips the lowercase pass and the
-    character-class regex. The empty-string filter keeps the empty-doc case
-    identical (split('') == [''] must become [])."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.filter(F.split(col.cast("string"), " "), lambda t: t != "")
-
-
-def shingles_expr(c: str | Column, k: int = 3, normalized: bool = False) -> Column:
+def shingles_expr(c: str | Column, k: int = 3) -> Column:
     """Distinct k-word shingles (space-joined). Docs shorter than k tokens
     contribute their full token string as a single shingle. The token array
     is let-bound (``let_expr``) so the split+filter pipeline runs once per
-    row, not once per shingle index. ``normalized=True`` declares the input
-    column already normalized (``normalized_text_expr`` output) and tokenizes
-    with the cheap literal-space split — identical shingles either way."""
+    row, not once per shingle index."""
 
     def build(toks: Column) -> Column:
         sh = F.when(
@@ -135,8 +122,7 @@ def shingles_expr(c: str | Column, k: int = 3, normalized: bool = False) -> Colu
         ).otherwise(F.array(F.array_join(toks, " ")))
         return F.array_distinct(sh)
 
-    src = tokens_from_normalized_expr(c) if normalized else tokens_expr(c)
-    return let_expr(src, build)
+    return let_expr(tokens_expr(c), build)
 
 
 # ---------------------------------------------------------------------------
@@ -477,8 +463,15 @@ def _jaccard_pairs_prefix(sh: DataFrame, threshold: float, ndigits: int) -> Data
 
     Verify then joins candidate pairs to per-doc sorted hash ARRAYS and
     computes exact Jaccard with native array_intersect — JVM-side, no
-    lambda, no Python."""
+    lambda, no Python.
+
+    Every pruning bound runs at ``t = threshold - 0.5·10^-ndigits``, not at
+    ``threshold``: the final filter keeps round(J, ndigits) >= threshold,
+    which a J just under ``threshold`` can pass by rounding up, so pruning
+    at the exact threshold would drop pairs the inverted mode returns."""
     from pyspark.sql.window import Window
+
+    t = threshold - 0.5 * 10.0**-ndigits
 
     # df attaches via a COUNT WINDOW over the shingle hash, not a groupBy +
     # self-join (round-13): the agg+join form exchanged the full posting
@@ -507,7 +500,7 @@ def _jaccard_pairs_prefix(sh: DataFrame, threshold: float, ndigits: int) -> Data
         ranked.join(sizes, "id")
         .filter(
             F.col("rn")
-            <= F.col("__mc") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
+            <= F.col("__mc") - F.ceil(F.lit(t) * F.col("sz")) + 1
         )
         # pos = the posting's position in the doc's FULL rarity order
         # (df asc, h asc): the sz - __mc df==1 singletons all sort before
@@ -519,18 +512,19 @@ def _jaccard_pairs_prefix(sh: DataFrame, threshold: float, ndigits: int) -> Data
         )
     )
     a, b = prefix.alias("a"), prefix.alias("b")
+    # float slack for both pair bounds below, proportional to the operand so
+    # rounding error cannot drop a boundary pair at any document size (false
+    # positives are fine — verify is exact)
+    slack = F.lit(1e-12) * (F.col("a.sz") + F.col("b.sz"))
     cand = (
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
             & (F.col("a.id") < F.col("b.id"))
-            # length filter: J >= t ⇒ min(|a|,|b|) >= t·max(|a|,|b|); the
-            # 1e-9 slack keeps float rounding from dropping boundary pairs
-            # (false positives are fine — verify is exact)
+            # length filter: J >= t ⇒ min(|a|,|b|) >= t·max(|a|,|b|)
             & (
                 F.least(F.col("a.sz"), F.col("b.sz"))
-                >= F.lit(threshold) * F.greatest(F.col("a.sz"), F.col("b.sz"))
-                - F.lit(1e-9)
+                >= F.lit(t) * F.greatest(F.col("a.sz"), F.col("b.sz")) - slack
             )
             # positional filter (PPJoin, Xiao et al. WWW'08): J >= t forces
             # overlap o >= α = ceil(t/(1+t)·(|a|+|b|)). Take the pair's FIRST
@@ -541,7 +535,7 @@ def _jaccard_pairs_prefix(sh: DataFrame, threshold: float, ndigits: int) -> Data
             # common element of a qualifying pair — and the first common
             # element of every qualifying pair (always df>=2, always inside
             # both prefixes) passes it, so dropping failing rows before the
-            # distinct loses no pair. The 1e-9 slack keeps float ceil from
+            # distinct loses no pair. The slack keeps float ceil from
             # overshooting the exact rational α (drop direction would be a
             # false negative).
             & (
@@ -550,9 +544,7 @@ def _jaccard_pairs_prefix(sh: DataFrame, threshold: float, ndigits: int) -> Data
                     F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos")
                 )
                 >= F.ceil(
-                    F.lit(threshold / (1.0 + threshold))
-                    * (F.col("a.sz") + F.col("b.sz"))
-                    - F.lit(1e-9)
+                    F.lit(t / (1.0 + t)) * (F.col("a.sz") + F.col("b.sz")) - slack
                 )
             ),
         )
@@ -621,8 +613,6 @@ def minhash_signatures(
     text_col: str,
     num_hashes: int = 64,
     k: int = 5,
-    text_normalized: bool = False,
-    kernel: str = "expr",
 ) -> DataFrame:
     """(id, sig array<long>) — sig[i] = min over shingles of
     (a_i * h0 + b_i) mod P31 with h0 = md5-derived residue: ONE string hash
@@ -630,75 +620,11 @@ def minhash_signatures(
     num_hashes full string hashes, overflow-free, and reproducible in
     DuckDB — the oracle runs the identical pipeline). One explode + one
     groupBy(id) with num_hashes min-aggregates (all partial-agg'd map-side;
-    the shuffle carries one row per doc).
-
-    ``text_normalized=True``: the text column is already normalized
-    (``normalized_text_expr`` output) — tokenization becomes a literal-space
-    split; the shingles, hashes and signatures are identical (test-pinned).
-    A library option for callers that hold normalized text; the round-13
-    one-pass ingest-state-build experiment that motivated it measured
-    slower than the four-subtree shape and was reverted (pipeline.py).
-
-    ``kernel``: "expr" (default) runs the ``num_hashes`` modular min
-    aggregates as JVM codegen expressions. "arrow" batches all permutations
-    as ONE vectorized int64 matrix op per Arrow batch (outer multiply-add
-    mod P31, then ``np.minimum.reduceat`` over the id runs — the exploded
-    shingle stream keeps each doc's rows contiguous, so a batch collapses
-    to ~one partial row per doc before the groupBy). Arithmetic is
-    identical int64 (products < 2^62, no overflow on either side), so the
-    signatures are bit-equal — test-pinned. Keep-or-revert measurement in
-    OPTIMIZATION_r13.md."""
-    if kernel not in ("expr", "arrow"):
-        raise ValueError(f"kernel must be expr|arrow, got {kernel!r}")
+    the shuffle carries one row per doc)."""
     mix = minhash_mix_constants(num_hashes)
     sh = widen(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles_expr(text_col, k, normalized=text_normalized)).alias(
-            "shingle"
-        ),
+        F.col(id_col).alias("id"), F.explode(shingles_expr(text_col, k)).alias("shingle")
     ).select("id", (md5_long_expr("shingle") % P31).alias("h0"))
-    if kernel == "arrow":
-        mix_a = np.array([a for a, _ in mix], dtype=np.int64)
-        mix_b = np.array([b for _, b in mix], dtype=np.int64)
-        out_schema = "id long, " + ", ".join(
-            f"h{i} long" for i in range(num_hashes)
-        )
-
-        _SENT = np.int64(2**62)  # > any valid residue; survives min ⟺ all-NULL run
-
-        def _partial_mins(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf["id"].to_numpy()
-                # NULL h0 (a NULL-text doc's single NULL shingle) must keep
-                # the expr path's min-ignores-NULL semantics: sentinel the
-                # NULL rows above every valid value, then turn a surviving
-                # sentinel (all-NULL run) back into SQL NULL
-                mask = pdf["h0"].isna().to_numpy()
-                h0 = pdf["h0"].fillna(0).to_numpy(dtype=np.int64)
-                # one row per id RUN (doc rows are contiguous within a
-                # batch); duplicate partials across batch/partition
-                # boundaries merge in the final min aggregation
-                starts = np.nonzero(np.r_[True, ids[1:] != ids[:-1]])[0]
-                m = (h0[:, None] * mix_a[None, :] + mix_b[None, :]) % P31
-                if mask.any():
-                    m[mask, :] = _SENT
-                mins = np.minimum.reduceat(m, starts, axis=0)
-                cols = [f"h{i}" for i in range(num_hashes)]
-                odf = pd.DataFrame(mins, columns=cols)
-                if mask.any():
-                    odf = odf.astype("Int64").mask(odf == _SENT)
-                odf.insert(0, "id", ids[starts])
-                yield odf
-
-        part = sh.mapInPandas(_partial_mins, out_schema)
-        sig = part.groupBy("id").agg(
-            *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
-        )
-        return sig.select(
-            "id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")
-        )
     aggs = [
         F.min((F.col("h0") * F.lit(a) + F.lit(b)) % P31).alias(f"h{i}")
         for i, (a, b) in enumerate(mix)
@@ -716,7 +642,6 @@ def minhash_lsh_pairs(
     k: int = 5,
     threshold: float = 0.5,
     verify: bool = True,
-    sig_kernel: str = "expr",
 ) -> DataFrame:
     """LSH-banded candidate generation + (optional) exact-Jaccard verify.
     rows-per-band = num_hashes // bands; two docs are candidates if any band
@@ -729,7 +654,7 @@ def minhash_lsh_pairs(
             "signature components (bands > num_hashes would crash)"
         )
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, k, kernel=sig_kernel)
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, k)
 
     def band_hash(i: int) -> Column:
         # Horner fold of the band's signature rows mod P31 — same arithmetic
@@ -1235,7 +1160,6 @@ def minhash_index(
     num_hashes: int = 64,
     bands: int = 16,
     k: int = 5,
-    text_normalized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """The persistable near-dup INDEX of a corpus, NORMALIZED into two
     frames: ``sigs`` = (id, sig) — ONE row per doc carrying the full
@@ -1260,11 +1184,7 @@ def minhash_index(
     rows_per_band = num_hashes // bands
     # lazily checkpointed: buckets derive from sigs, and both frames are
     # consumed — without this the signature aggregation runs twice
-    sigs = _ckpt_wide(
-        minhash_signatures(
-            df, id_col, text_col, num_hashes, k, text_normalized=text_normalized
-        )
-    )
+    sigs = _ckpt_wide(minhash_signatures(df, id_col, text_col, num_hashes, k))
 
     def band_hash(i: int) -> Column:
         bh: Column | None = None

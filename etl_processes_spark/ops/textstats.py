@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_processes_spark.partitioning import widen
+from etl_processes_spark.partitioning import _plan_size_bytes, widen
 from etl_processes_spark.ops.dedup import (
     grams_from_tokens_expr,
     normalized_text_expr,
@@ -1057,33 +1057,12 @@ def token_heavy_hitters(
     return heavy_hitters(toks, "token", min_share=min_share, ndigits=ndigits)
 
 
-def _tf_pairs_batch(toks_values) -> "pd.Series":
-    """Per-doc (token, tf) pairs for one Arrow batch of token arrays —
-    factorize + bincount, the same C-speed hash path as _rep_stats_batch.
-    Emitting the DISTINCT-token counts row-wise removes the widest shuffle
-    of the tf-idf plan (the (doc, token) occurrence stream)."""
-    import numpy as np
-    import pandas as pd
-
-    out = []
-    for toks in toks_values:
-        if toks is None or len(toks) == 0:
-            out.append([])
-            continue
-        codes, uniq = pd.factorize(toks)
-        cnt = np.bincount(codes)
-        out.append(list(zip(uniq.tolist(), cnt.tolist())))
-    return pd.Series(out)
-
-
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str,
     text_col: str,
     k: int = 3,
     min_token_len: int = 1,
-    kernel: str = "expr",
-    topk: str = "window",
 ) -> DataFrame:
     """Top-``k`` most DISTINCTIVE terms per document: rank tokens by
     tf/df — term frequency in the doc over corpus document frequency
@@ -1095,101 +1074,53 @@ def tfidf_top_terms(
     result is fully deterministic. Returns (id, rank, token, tf, df).
 
     PRECONDITION: ``id_col`` is unique (one row per document), the shared
-    doc-id contract (see ngram_jaccard_pairs). The arrow kernel computes tf
-    per ROW; rows duplicating an id would keep separate tf rows where the
-    expr path's groupBy would merge them.
+    doc-id contract (see ngram_jaccard_pairs).
 
-    Plan, ``kernel="expr"`` (DEFAULT — measured faster): explode → tf agg
-    on (doc, token) → df agg on token → join → per-doc top-k window. All
+    Plan: explode → tf agg on (doc, token) → df agg on token → join →
+    per-doc top-k window (row_number over (id, score desc, token)). All
     aggs partial-agg'd; the window sort is bounded per doc. At 100 TB the
     (doc, token) agg is the dominant shuffle — the same one any tf
     computation pays, and partial map-side aggregation already collapses it
-    to ~distinct pairs before the exchange.
-
-    ``kernel="arrow"``: per-doc (token, tf) pairs from one vectorized
-    pandas_udf (factorize + bincount) → explode distinct pairs — tf becomes
-    row-wise and the occurrence stream never shuffles. Kept as a pinned
-    value-identical alternative, but it MEASURED SLOWER at sf10 (14.7s vs
-    11.5s warm best-of-2, round 11): unlike repetition_stats — where the
-    kernel replaced an interpreted expression fold — the baseline here is
-    codegen'd explode + hash-agg with map-side partial aggregation, and
-    shipping the whole token stream through Arrow to Python costs more than
-    the exchange it saves. The expr default is the keep decision.
-
-    ``topk`` selects the per-doc top-k strategy:
-     - "window" (DEFAULT): row_number over (id, score desc, token) — a full
-       sort of the joined (id, token, tf, df) stream by id; the suite's
-       last remaining production sort spill at sf100 (~2.6 GB, round 11).
-     - "agg": collect_list(struct(-score, token, tf, df)) per id →
-       array_sort → slice(1, k) → posexplode. The full sort becomes an
-       ObjectHashAggregate with a per-doc in-memory sort (docs have
-       bounded distinct tokens), so nothing corpus-sized is ever
-       sort-spilled. Ordering is bit-identical: scores are positive
-       finite doubles, so negation is exactly order-reversing and the
-       (−score, token) struct sort equals the window's (score desc,
-       token asc); identity is test-pinned. See SCALING.md round-12 for
-       the measured keep-or-revert decision."""
+    to ~distinct pairs before the exchange."""
     from pyspark.sql import Window
 
-    if kernel not in ("arrow", "expr"):
-        raise ValueError(f"kernel must be 'arrow' or 'expr', got {kernel!r}")
-    if topk not in ("window", "agg"):
-        raise ValueError(f"topk must be 'window' or 'agg', got {topk!r}")
-    if kernel == "arrow":
-        tok_arr = F.coalesce(tokens_expr(text_col), F.array().cast("array<string>"))
-        if min_token_len > 1:
-            tok_arr = F.filter(tok_arr, lambda t: F.length(t) >= min_token_len)
-        kern = F.pandas_udf(
-            lambda s: _tf_pairs_batch(s.to_numpy()),
-            "array<struct<token:string,tf:long>>",
-        )
-        tf = (
-            widen(df, per_mb=2.0)
-            .select(F.col(id_col).alias("id"), kern(tok_arr).alias("__p"))
-            .select("id", F.explode("__p").alias("p"))
-            .select("id", F.col("p.token").alias("token"), F.col("p.tf").alias("tf"))
-        )
-    else:
-        toks = df.select(
-            F.col(id_col).alias("id"), F.explode(tokens_expr(text_col)).alias("token")
-        ).filter(F.length("token") >= min_token_len)
-        # ONE doc-keyed exchange for the whole query (round-13): the natural
-        # groupBy(id, token) exchange hashes on (id, token), which scatters
-        # each doc's tokens across every partition — so the downstream
-        # per-doc top-k needed a SECOND full exchange on id, and Spark's
-        # two-phase WindowGroupLimit pruned ~nothing at the partial step
-        # (k=3 per doc per partition keeps ~all rows when a doc has ~1-2
-        # rows per partition) while still paying a corpus-wide local sort.
-        # Repartitioning the occurrence stream by id up front satisfies
-        # ClusteredDistribution for the tf agg, the rank window AND the
-        # topk="agg" groupBy alike: one exchange, one sort, no partial
-        # window pass. The width is EXPLICIT and derived from the input
-        # size (guide §2: scale-adaptive, not a constant): an unsized
-        # repartition("id") is AQE-coalesced on COMPRESSED shuffle bytes
-        # down to ~defaultParallelism, which at sf100 put ~28M raw
-        # occurrence rows behind each aggregate task and sort-spilled
-        # 12.6 GB (measured, round 13). ~8 MB of source text per reduce
-        # task keeps the per-task agg hash + window sort state small;
-        # capped at the session's shuffle width (itself 8× cores /
-        # env-parameterized for cluster scale).
-        spark = df.sparkSession
-        try:
-            src_mb = (
-                int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-                / 1048576.0
-            )
-        except Exception:
-            src_mb = None
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        npart = cap if src_mb is None else max(1, min(cap, int(src_mb / 8) + 1))
-        tf = toks.repartition(npart, "id").groupBy("id", "token").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
+    toks = df.select(
+        F.col(id_col).alias("id"), F.explode(tokens_expr(text_col)).alias("token")
+    ).filter(F.length("token") >= min_token_len)
+    # ONE doc-keyed exchange for the whole query: the natural
+    # groupBy(id, token) exchange hashes on (id, token), which scatters
+    # each doc's tokens across every partition — so the downstream
+    # per-doc top-k needed a SECOND full exchange on id, and Spark's
+    # two-phase WindowGroupLimit pruned ~nothing at the partial step
+    # (k=3 per doc per partition keeps ~all rows when a doc has ~1-2
+    # rows per partition) while still paying a corpus-wide local sort.
+    # Repartitioning the occurrence stream by id up front satisfies
+    # ClusteredDistribution for both the tf agg and the rank window: one
+    # exchange, one sort, no partial window pass. The width is EXPLICIT
+    # and derived from the input size: an unsized repartition("id") is
+    # AQE-coalesced on COMPRESSED shuffle bytes down to
+    # ~defaultParallelism, which at sf100 put ~28M raw occurrence rows
+    # behind each aggregate task and sort-spilled 12.6 GB (measured).
+    # ~8 MB of source text per reduce task keeps the per-task agg hash +
+    # window sort state small; floored at defaultParallelism so a Catalyst
+    # underestimate cannot squeeze the stream into one task, and capped at
+    # the session's shuffle width.
+    spark = df.sparkSession
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    src = _plan_size_bytes(df)
+    npart = (
+        cap
+        if src is None
+        else min(cap, max(spark.sparkContext.defaultParallelism, src // (8 << 20) + 1))
+    )
+    tf = toks.repartition(npart, "id").groupBy("id", "token").agg(
+        F.count(F.lit(1)).alias("tf")
+    )
     # tf feeds BOTH the document-frequency aggregate and the ranking join.
     # No materialization barrier: a lazy localCheckpoint records
     # UnknownPartitioning under AQE (the final layout isn't known until
-    # execution), which put the window's id exchange BACK into the plan
-    # (measured round-13). Instead both consumers deliberately share the
+    # execution), which put the window's id exchange BACK into the plan.
+    # Instead both consumers deliberately share the
     # IDENTICAL Exchange(id) subtree — the physical planner's
     # ReuseExchange rule (and AQE stage reuse) dedups it, so the corpus is
     # scanned/exploded/shuffled once, only the cheap post-exchange
@@ -1197,37 +1128,6 @@ def tfidf_top_terms(
     # still feeds the rank window with no exchange of its own
     # (plan-verified: ReusedExchange node in plans/r13).
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    if topk == "agg":
-        neg_score = -(F.col("tf").cast("double") / F.col("df"))
-        top = (
-            tf.join(dfreq, "token")
-            .groupBy("id")
-            .agg(
-                F.slice(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                neg_score.alias("ns"),
-                                F.col("token"),
-                                F.col("tf"),
-                                F.col("df"),
-                            )
-                        )
-                    ),
-                    1,
-                    k,
-                ).alias("__top")
-            )
-        )
-        return top.select(
-            "id", F.posexplode("__top").alias("pos", "p")
-        ).select(
-            "id",
-            (F.col("pos") + 1).cast("int").alias("rank"),
-            F.col("p.token").alias("token"),
-            F.col("p.tf").alias("tf"),
-            F.col("p.df").alias("df"),
-        )
     w = Window.partitionBy("id").orderBy(
         F.desc(F.col("tf").cast("double") / F.col("df")), F.asc("token")
     )

@@ -462,17 +462,7 @@ def run_incremental_ingest(
         )
         batch = cleaned.join(batch.select(id_col, *extra), id_col) if extra else cleaned
 
-    # Round-13 MEASURED AND REVERTED: a cold-start "one-pass" state build
-    # (normalize once into a serialized localCheckpoint of (id, __norm),
-    # derive digests/LM counts/MinHash index from literal-space re-splits —
-    # value-identical, test-pinned via shingles_expr(normalized=True)) lost
-    # the interleaved A/B at BOTH sf10 (11.4-12.0s → 12.6-13.9s) and sf100
-    # (82.9-88.4s → 91.2-96.4s on like canaries): the four scan→tokenize
-    # subtrees all hang off ONE action, so the stage scheduler already
-    # overlaps them across cores, and the checkpoint is a hard barrier that
-    # serializes normalize → materialize → derive while paying a
-    # corpus-sized block write. Shared computation < lost concurrency +
-    # write cost here. See OPTIMIZATION_r13.md (ingest_state_build).
+    # A one-pass normalize-once state build measured slower: OPTIMIZATION_r13.md.
     if seen_digests is not None:
         batch, _ = dedup_incremental(batch, seen_digests, id_col, text_col)
     if near_dup_index is not None:

@@ -80,16 +80,6 @@ def test_broadcast_join_shape(corpus, eval_df):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_key_modes_identical(corpus, eval_df):
-    """key="string" (raw-gram join keys, no md5) must produce exactly the
-    rows of the default key="hash" — same counts, ratios, and flags."""
-    h = contamination_report(corpus, eval_df, "doc_id", "text", k=3, key="hash")
-    s = contamination_report(corpus, eval_df, "doc_id", "text", k=3, key="string")
-    assert sorted(map(tuple, h.collect())) == sorted(map(tuple, s.collect()))
-    with pytest.raises(ValueError, match="key must be"):
-        contamination_report(corpus, eval_df, "doc_id", "text", key="md5")
-
-
 def test_threshold_boundary(corpus, eval_df):
     # ratio == threshold counts as contaminated (>=)
     rep = contamination_report(corpus, eval_df, "doc_id", "text", k=3, threshold=0.25)

@@ -110,6 +110,25 @@ def test_minhash_lsh_recovers_exact_pairs(docs):
     assert (0, 1) in got and (0, 3) in got
 
 
+def test_minhash_signatures_short_and_null_docs(spark):
+    """Docs shorter than k hash their whole token string as ONE shingle
+    ('' for the empty doc); a NULL doc's single NULL shingle leaves every
+    signature component NULL (min ignores NULL)."""
+    import hashlib
+
+    from etl_processes_spark.ops.dedup import P31, minhash_mix_constants, minhash_signatures
+
+    def ref(shingle):
+        h0 = int(hashlib.md5(shingle.encode()).hexdigest()[:15], 16) % P31
+        return [(a * h0 + b) % P31 for a, b in minhash_mix_constants(64)]
+
+    df = spark.createDataFrame(
+        [(100, ""), (101, "one"), (102, None)], "doc_id long, text string"
+    )
+    sig = {r["id"]: r["sig"] for r in minhash_signatures(df, "doc_id", "text", 64, 5).collect()}
+    assert sig == {100: ref(""), 101: ref("one"), 102: [None] * 64}
+
+
 def test_simhash_identical_for_dups(docs):
     fp = {r["id"]: r["simhash"] for r in simhash_fingerprints(docs, "doc_id", "text").collect()}
     assert fp[0] == fp[1] == fp[3]
@@ -606,6 +625,30 @@ def test_prefix_positional_filter_exact_boundary(spark):
     assert got == {(1, 2): 0.5, (3, 4): 0.5}
 
 
+def test_prefix_mode_keeps_pairs_that_round_up_to_threshold(spark):
+    """J = 5/11 rounds to 0.5 at ndigits=1, so the final filter keeps the
+    pair at t=0.5 — prefix pruning must not drop it before the verify.
+    8 tokens each, 5 shared: the 3 unique tokens fill the front of both
+    rarity orders, so the first common token sits at position 4, which
+    fails the positional bound taken at the exact t (1 + 4 < ceil(16/3))."""
+    rows = [
+        (1, "u1 u2 u3 c1 c2 c3 c4 c5"),
+        (2, "v1 v2 v3 c1 c2 c3 c4 c5"),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    kw = dict(k=1, threshold=0.5, ndigits=1)
+    inv = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(df, "doc_id", "text", mode="inverted", **kw).collect()
+    }
+    pre = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(df, "doc_id", "text", mode="prefix", **kw).collect()
+    }
+    assert inv == {(1, 2): 0.5}
+    assert pre == inv
+
+
 def test_prefix_index_is_actually_smaller(spark):
     """At t=0.9 the prefix index holds ~|S| - ceil(0.9|S|) + 1 entries per
     doc — materially smaller than full postings (the point of the route)."""
@@ -631,51 +674,6 @@ def test_prefix_index_is_actually_smaller(spark):
         .count()
     )
     assert prefix_n < total * 0.35
-
-
-def test_minhash_arrow_kernel_bit_identical(spark):
-    """The vectorized Arrow signature kernel must produce BIT-EQUAL
-    signatures to the expr kernel (same int64 multiply-add-mod, products
-    < 2^62 on both sides) — including empty docs (single '' shingle) and
-    docs shorter than k."""
-    from etl_processes_spark.ops.dedup import minhash_signatures
-
-    rows = _rand_docs(21, n=50, vocab=30) + [(100, ""), (101, "one"), (102, None)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    expr = {
-        r["id"]: r["sig"]
-        for r in minhash_signatures(df, "doc_id", "text", 64, 5).collect()
-    }
-    arrow = {
-        r["id"]: r["sig"]
-        for r in minhash_signatures(
-            df, "doc_id", "text", 64, 5, kernel="arrow"
-        ).collect()
-    }
-    assert arrow == expr and len(expr) > 0
-
-
-def test_shingles_normalized_input_identical(spark):
-    """shingles_expr(normalized=True) over normalized_text_expr output must
-    equal shingles_expr over the raw text (the one-pass ingest state build
-    depends on it)."""
-    from etl_processes_spark.ops.dedup import normalized_text_expr, shingles_expr
-
-    rows = [(1, "Hello, WORLD! foo-bar baz"), (2, ""), (3, None), (4, "a b")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"]).withColumn(
-        "__norm", normalized_text_expr("text")
-    )
-    raw = {
-        r["doc_id"]: sorted(r["s"]) if r["s"] is not None else None
-        for r in df.select("doc_id", shingles_expr("text", 3).alias("s")).collect()
-    }
-    norm = {
-        r["doc_id"]: sorted(r["s"]) if r["s"] is not None else None
-        for r in df.select(
-            "doc_id", shingles_expr("__norm", 3, normalized=True).alias("s")
-        ).collect()
-    }
-    assert raw == norm
 
 
 def test_cc_driver_string_ids_fallback(spark):

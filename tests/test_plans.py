@@ -278,3 +278,26 @@ def test_gap_fill_single_data_exchange(spark):
     # no (key, bucket) equi-join — the grid resolves in the window pass
     for op in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
         assert op not in plan, op
+
+
+def test_tfidf_exchange_width_floored_at_parallelism(spark, tmp_path):
+    """A tiny parquet input sizes to one 8 MB reduce task; the doc-keyed
+    exchange is still floored at defaultParallelism (and capped at the
+    shuffle width), so a size underestimate cannot serialize the agg."""
+    import re
+
+    from etl_processes_spark.ops.textstats import tfidf_top_terms
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(1, "apple banana"), (2, "banana cherry")], "doc_id long, text string"
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        plan = _plan(tfidf_top_terms(docs, "doc_id", "text", k=2))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    widths = {int(n) for n in re.findall(r"hashpartitioning\(id#\d+L?, (\d+)\)", plan)}
+    assert widths == {spark.sparkContext.defaultParallelism}

@@ -183,66 +183,6 @@ def test_repetition_stats_kernels_identical(spark):
         assert a.collect() == e.collect()
 
 
-def test_tfidf_kernels_identical(spark):
-    """The Arrow tf kernel (kernel="arrow"; measured slower than the
-    default explode→groupBy expression path at sf10, so NOT the default)
-    must produce identical (id, rank, token, tf, df) rows — edge docs
-    plus a real corpus slice, and the min_token_len filter."""
-    from etl_processes_spark.ops.textstats import tfidf_top_terms
-
-    edge = spark.createDataFrame(
-        [
-            (0, "aa bb aa cc aa"),
-            (1, "bb cc dd"),
-            (2, ""),
-            (3, None),
-            (4, "x yy zzz x yy x"),
-        ],
-        ["doc_id", "text"],
-    )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for df, mtl in ((edge, 1), (edge, 2), (docs, 1)):
-        a = tfidf_top_terms(df, "doc_id", "text", k=3, min_token_len=mtl,
-                            kernel="arrow").orderBy("id", "rank")
-        e = tfidf_top_terms(df, "doc_id", "text", k=3, min_token_len=mtl,
-                            kernel="expr").orderBy("id", "rank")
-        assert a.collect() == e.collect()
-    import pytest
-
-    with pytest.raises(ValueError, match="kernel"):
-        tfidf_top_terms(edge, "doc_id", "text", kernel="Arrow")
-
-
-def test_tfidf_topk_strategies_identical(spark):
-    """topk="agg" (collect_list→array_sort→slice; no corpus-wide window
-    sort) must produce exactly the default window strategy's rows —
-    schema, ranks, and tie-breaks included. Scores are positive finite
-    doubles, so the (−score, token) struct sort is order-identical to the
-    window's (score desc, token asc)."""
-    from etl_processes_spark.ops.textstats import tfidf_top_terms
-
-    edge = spark.createDataFrame(
-        [
-            (0, "aa bb aa cc aa"),
-            (1, "bb cc dd"),     # all-tie doc: rank order must fall to token
-            (2, ""),
-            (3, None),
-            (4, "x yy zzz x yy x"),
-        ],
-        ["doc_id", "text"],
-    )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for df, kk in ((edge, 2), (edge, 3), (docs, 3)):
-        w = tfidf_top_terms(df, "doc_id", "text", k=kk, topk="window").orderBy("id", "rank")
-        a = tfidf_top_terms(df, "doc_id", "text", k=kk, topk="agg").orderBy("id", "rank")
-        assert w.schema == a.schema
-        assert w.collect() == a.collect()
-    import pytest
-
-    with pytest.raises(ValueError, match="topk"):
-        tfidf_top_terms(edge, "doc_id", "text", topk="sort")
-
-
 def test_pii_scrub_pregate_null_and_tokenless(spark):
     """The contains() pre-gate must preserve the exact ungated semantics:
     NULL text → NULL clean_text and NULL counts; text without '@'/'-' →
@@ -478,6 +418,36 @@ def test_tfidf_top_terms(spark):
     a = sorted(map(tuple, out.collect()))
     b = sorted(map(tuple, tfidf_top_terms(docs.repartition(7), "doc_id", "text", k=2).collect()))
     assert a == b
+
+    edge = spark.createDataFrame(
+        [
+            (0, "aa bb aa cc aa"),
+            (1, "bb cc dd"),         # bb/cc tie: rank order falls to the token
+            (2, ""),                 # no tokens, no rows
+            (3, None),               # NULL text, no rows
+            (4, "x yy zzz x yy x"),
+            (5, "rr qq pp"),         # all-tie doc: token order, not input order
+        ],
+        "doc_id long, text string",
+    )
+
+    def rows(k, min_token_len):
+        out = tfidf_top_terms(edge, "doc_id", "text", k=k, min_token_len=min_token_len)
+        return [tuple(r) for r in out.orderBy("id", "rank").collect()]
+
+    assert rows(3, 1) == [
+        (0, 1, "aa", 3, 1), (0, 2, "bb", 1, 2), (0, 3, "cc", 1, 2),
+        (1, 1, "dd", 1, 1), (1, 2, "bb", 1, 2), (1, 3, "cc", 1, 2),
+        (4, 1, "x", 3, 1), (4, 2, "yy", 2, 1), (4, 3, "zzz", 1, 1),
+        (5, 1, "pp", 1, 1), (5, 2, "qq", 1, 1), (5, 3, "rr", 1, 1),
+    ]
+    # min_token_len=2 drops 'x' before tf and df are counted
+    assert rows(2, 2) == [
+        (0, 1, "aa", 3, 1), (0, 2, "bb", 1, 2),
+        (1, 1, "dd", 1, 1), (1, 2, "bb", 1, 2),
+        (4, 1, "yy", 2, 1), (4, 2, "zzz", 1, 1),
+        (5, 1, "pp", 1, 1), (5, 2, "qq", 1, 1),
+    ]
 
 
 def test_compression_ratio(spark):

@@ -174,6 +174,14 @@ def test_rolling_stats_partition_invariant(spark):
     assert a == b_
 
 
+def test_rolling_stats_rejects_reserved_column(spark):
+    from etl_processes_spark.ops.timeseries import rolling_stats
+
+    df = spark.createDataFrame([(1, 0, 1.0, 5)], "k long, b long, value double, __c1 long")
+    with pytest.raises(ValueError, match=r"input already has \['__c1'\]"):
+        rolling_stats(df, "k", "b", "value")
+
+
 def test_empty_inputs(spark):
     from etl_processes_spark.ops.dedup import edit_distance_pairs
     from etl_processes_spark.ops.textstats import tfidf_top_terms

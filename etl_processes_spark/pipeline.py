@@ -2,8 +2,10 @@
 ingest → profile → generate → validate → report/sink.
 
 This is the "main()" a user of the reference would run — reproduced on
-Spark: one profile pass (two scans + tiny per-categorical groupBys), one
-generation job, one validation pass, optional CSV sink.
+Spark: one profile pass over a bounded sample (see profile(): an inference
+scan, one wide stats aggregate, one groupBy shared by all categoricals, and
+per-column jobs for retained entries, date formats and text embeddings),
+one generation job, one validation pass, optional CSV sink.
 """
 
 from __future__ import annotations

@@ -6,11 +6,14 @@
     whole-stage-codegen pass with map-side partial aggregation.
   Stage 2 (driver): the reference's decision tree per column.
   Stage 3 (one scan): numeric + datetime + boolean stats for ALL typed
-    columns in a second single agg(); categorical columns add one tiny
-    groupBy each (bounded: <50 categories by definition).
+    columns in a second single agg(); ALL categorical columns share one
+    exploded (col, category) groupBy (bounded: <50 categories each by
+    definition).
   Stage 4: email/phone/text columns retain their (sample-bounded) raw
     entries for bootstrap generation / embedding modeling — bounded by
-    ``sample_rows``, never the full table.
+    ``sample_rows``, never the full table — and get their embedding
+    profiles (text_profile, run concurrently across columns). Datetime
+    columns each add a date-format detection pass.
 
 Scale policy: like the reference (SAMPLE_SIZE = min(1000, n), seed 42,
 Latanova_v1.py:632-633), profiling runs on a seeded sample, so cost is

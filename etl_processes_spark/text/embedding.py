@@ -14,11 +14,13 @@ Scale design: vectorisation is an Arrow-batched pandas_udf (no per-row Python
 dispatch); per-dimension moments come from one Arrow powersum pass;
 per-dimension exact medians from histogram-bracketed distributed selection
 (no posexplode — the explode+sort-agg route spilled 27.2 GB at sf100);
-covariance is a distributed Gramian (Σ x·xᵀ tree-aggregated as a d²-length
-array column), so raw n×d vectors are NEVER collected (unlike
-Latanova_v1.py:223-224 which retains the full matrix in the stats dict). Generation draws z ~ N(0, I) with
-a per-row-id-seeded RNG inside mapInPandas (deterministic under any
-partitioning) and applies the driver-computed Cholesky factor.
+covariance is a distributed Gramian (Σ x·xᵀ per partition, the partials
+merged through one stage only above ``merge_partitions`` partitions), so raw
+n×d vectors are NEVER collected (unlike Latanova_v1.py:223-224 which retains
+the full matrix in the stats dict). Generation draws z ~ N(0, I) by md5
+Box-Muller keyed (seed, row id, dim) inside mapInPandas (deterministic under
+any partitioning), applies the driver-computed Cholesky factor and decodes
+every token slot by one block-wise cosine k-NN over the vocabulary.
 """
 
 from __future__ import annotations
@@ -200,6 +202,26 @@ def embed_entries(df: DataFrame, c: str, vector_size: int = VECTOR_SIZE) -> Data
 # ---------------------------------------------------------------------------
 
 
+def _reduce_partials(
+    vec_df: DataFrame, part, merge, schema: T.StructType, merge_partitions: int
+) -> pd.DataFrame:
+    """Partition partials of ``part`` over ``vec_df.__vec``, collected to the
+    driver as one pandas frame the caller folds.
+
+    The driver receives at most ``merge_partitions`` partials, whatever the
+    input width: above that many partitions they are first shuffled into
+    ONE stage of ``merge_partitions`` tasks running ``merge``, which folds
+    several partials into one of the same schema. At or below it the
+    partials are collected directly, which saves a shuffle and a second
+    Python stage."""
+    partial = vec_df.select("__vec").mapInPandas(part, schema=schema)
+    if vec_df.rdd.getNumPartitions() > merge_partitions:
+        partial = partial.repartition(merge_partitions).mapInPandas(
+            merge, schema=schema
+        )
+    return partial.toPandas()
+
+
 def _medians(
     vec_df: DataFrame,
     d: int,
@@ -221,8 +243,8 @@ def _medians(
 
     1. HISTOGRAM pass: each partition bins its values per dim over the
        global [mn, mx] range into one d·bins int64 array (a single
-       np.bincount per Arrow batch); partials merge through one
-       ``merge_partitions``-way stage, so the driver receives O(d·bins),
+       np.bincount per Arrow batch); at most ``merge_partitions`` partials
+       reach the driver (_reduce_partials), so it receives O(d·bins),
        never O(n). Cumulative counts locate, per dim, the bin(s) holding
        the two flank ranks floor/ceil((n-1)/2) and the EXACT count of
        values below them — exact because the bin index
@@ -310,11 +332,7 @@ def _medians(
             if acc is not None:
                 yield pd.DataFrame({"h": [acc.tolist()]})
 
-        partial = vec_df.select("__vec").mapInPandas(part, schema=hist_schema)
-        merged = partial.repartition(merge_partitions).mapInPandas(
-            merge, schema=hist_schema
-        )
-        rows = merged.toPandas()
+        rows = _reduce_partials(vec_df, part, merge, hist_schema, merge_partitions)
         if rows.empty:
             return np.zeros((d, bins), dtype=np.int64)
         return np.sum(
@@ -423,16 +441,13 @@ _POWERSUM_FIELDS = ("s1", "s2", "s3", "s4", "gram", "mn", "mx")
 def _powersums_and_gram(vec_df: DataFrame, d: int, merge_partitions: int = 8):
     """One pass, Arrow-batched end to end: per partition the vectors are
     stacked into an (n_i, d) matrix and reduced to [n, Σx, Σx², Σx³, Σx⁴,
-    XᵀX, min, max] — matrix ops, no per-row Python and no RDD/Row
-    deserialization (this replaces an .rdd.mapPartitions + treeReduce that
-    paid a Python Row loop per vector). Partition partials are then merged
-    through ONE repartition(merge_partitions) Arrow stage, so the driver
-    receives at most merge_partitions accumulators (O(d²) each) regardless
-    of input partition count — the same ingress bound treeReduce gave
-    (collect() of raw partials would ship ~1 GB at 2000 partitions, d=256).
-    Per-dim min/max ride along for free (two O(d) reductions on an already
-    stacked matrix) — they seed _medians' histogram brackets, so the
-    median selection needs no extra range-discovery pass."""
+    XᵀX, min, max] — matrix ops, no per-row Python and no Row
+    deserialization. The driver folds at most ``merge_partitions`` of these
+    O(d²) partials (_reduce_partials merges them through one stage only
+    above that many partitions; collecting raw partials of 2000 partitions
+    at d=256 would ship ~1 GB). Per-dim min/max ride along for free — they
+    seed _medians' histogram brackets, so the median selection needs no
+    extra range-discovery pass."""
     _SUM = ("s1", "s2", "s3", "s4", "gram")
     schema = T.StructType(
         [T.StructField("n", T.LongType())]
@@ -498,9 +513,7 @@ def _powersums_and_gram(vec_df: DataFrame, d: int, merge_partitions: int = 8):
         if acc is not None:
             yield _acc_frame(n, *(acc[f] for f in _POWERSUM_FIELDS))
 
-    partial = vec_df.select("__vec").mapInPandas(part, schema=schema)
-    merged = partial.repartition(merge_partitions).mapInPandas(merge, schema=schema)
-    rows = merged.toPandas()
+    rows = _reduce_partials(vec_df, part, merge, schema, merge_partitions)
     if rows.empty:
         return None
     n = int(rows["n"].sum())
@@ -546,6 +559,10 @@ def text_profile(
         # persist so the source scan+filter runs once, not twice (profile
         # inputs are bounded samples by contract, so caching text is safe)
         base = base.persist()
+    # Persisted even when only the powersum pass reads it (validate mode):
+    # unpersisted, the embedding pandas_udf and the powersum mapInPandas
+    # chain into one stage with two Python workers per task, which costs
+    # more memory than the cache.
     vec_df = embed_entries(base, c, vector_size).persist()
     try:
         d = MAX_TOKENS_PER_ENTRY * vector_size
@@ -679,7 +696,10 @@ def _vocab_matrix(vocab: list[str], vector_size: int) -> np.ndarray:
     return r_tab[k1] * c_tab[k2]
 
 
-_KNN_CHUNK_CELLS = 32_000_000  # ≤ ~256 MB similarity block per step
+# Cells (slot × vocabulary word) per knn_decode block. Each cell holds a
+# float64 similarity and then an int64 argpartition index, 16 B, so a block
+# stays at 16 MB however large the vocabulary or the Arrow batch.
+_KNN_CHUNK_CELLS = 1 << 20
 
 
 def knn_decode(
@@ -688,11 +708,15 @@ def knn_decode(
     """similar_by_vector(topn=3) then first alphanumeric word
     (Latanova_v1.py:338-342): cosine similarity against the vocabulary.
 
-    Memory-bounded: the (n_vectors × |vocab|) similarity matrix is never
-    materialized whole — slot rows are processed in chunks sized so each
-    block stays ≤ ~256 MB (a 100k-token vocabulary against a 10k-row Arrow
-    batch would otherwise allocate hundreds of GB). Results are identical
-    to the single-block computation (same dot products, same selection)."""
+    Block-wise, with no per-row Python: slot rows are taken in blocks of
+    ``_KNN_CHUNK_CELLS // len(vocab)`` rows, and each block's negated
+    similarities go through one row-wise argpartition for the top ``topn``,
+    one argsort of those candidates and a lookup in a precomputed
+    ``isalnum`` mask of the vocabulary. The similarity matrix is never
+    materialized whole (a 100k-token vocabulary against a 10k-row Arrow
+    batch would need hundreds of GB). Block size does not change the result:
+    every row sees the same dot products and the same selection. A slot
+    whose top ``topn`` holds no alphanumeric word decodes to ``""``."""
     if len(vocab) == 0:
         return ["" for _ in range(len(vectors))]
     norms = np.linalg.norm(vocab_mat, axis=1)
@@ -700,23 +724,22 @@ def knn_decode(
     vnorm = np.linalg.norm(vectors, axis=1)
     vnorm[vnorm == 0] = 1.0
     k = min(topn, len(vocab))
-    out: list[str] = []
-    chunk = max(1, _KNN_CHUNK_CELLS // max(1, len(vocab)))
+    words = np.array(list(vocab) + [""], dtype=object)  # [len(vocab)] = no pick
+    alnum = np.fromiter((w.isalnum() for w in vocab), dtype=bool, count=len(vocab))
+    pick = np.empty(len(vectors), dtype=np.int64)
+    chunk = max(1, _KNN_CHUNK_CELLS // len(vocab))
     for lo in range(0, len(vectors), chunk):
         hi = min(lo + chunk, len(vectors))
-        sims = (vectors[lo:hi] @ vocab_mat.T) / (
-            vnorm[lo:hi, None] * norms[None, :]
-        )
-        for row in sims:
-            idx = np.argpartition(-row, k - 1)[:k]
-            idx = idx[np.argsort(-row[idx])]
-            word = ""
-            for j in idx:
-                if vocab[j].isalnum():
-                    word = vocab[j]
-                    break
-            out.append(word)
-    return out
+        neg = vectors[lo:hi] @ vocab_mat.T
+        neg /= vnorm[lo:hi, None] * norms[None, :]
+        np.negative(neg, out=neg)
+        top = np.argpartition(neg, k - 1, axis=1)[:, :k]
+        order = np.argsort(np.take_along_axis(neg, top, axis=1), axis=1)
+        top = np.take_along_axis(top, order, axis=1)
+        ok = alnum[top]
+        first = top[np.arange(hi - lo), ok.argmax(axis=1)]
+        pick[lo:hi] = np.where(ok.any(axis=1), first, len(vocab))
+    return words[pick].tolist()
 
 
 # Model broadcasts (Cholesky + vocab matrix, tens of MB for large vocabs)
@@ -724,8 +747,10 @@ def knn_decode(
 # session calling generate() repeatedly reuses one broadcast per distinct
 # model instead of leaking one per call (Spark broadcasts are only
 # reclaimed when the Python handle is GC'd, which the task closure pins).
-# Eviction uses unpersist (drops executor copies, re-ships on demand), not
-# destroy — a lazily-built DataFrame may still reference an evicted model.
+# The cache is LRU (a hit moves its entry to the end, the first entry is
+# evicted). Eviction uses unpersist (drops executor copies, re-ships on
+# demand), not destroy — a lazily-built DataFrame may still reference an
+# evicted model.
 _MODEL_BCAST: "dict[tuple, object]" = {}
 _MODEL_BCAST_MAX = 4
 
@@ -738,16 +763,16 @@ def _model_broadcast(spark, payload):
         hash(mu.tobytes()),
         hash(tuple(vocab)),
     )
-    b = _MODEL_BCAST.get(key)
+    b = _MODEL_BCAST.pop(key, None)
     if b is None:
         while len(_MODEL_BCAST) >= _MODEL_BCAST_MAX:
-            _, old = _MODEL_BCAST.popitem()
+            old = _MODEL_BCAST.pop(next(iter(_MODEL_BCAST)))  # least recent
             try:
                 old.unpersist(blocking=False)
             except Exception:
                 pass
         b = spark.sparkContext.broadcast(payload)
-        _MODEL_BCAST[key] = b
+    _MODEL_BCAST[key] = b  # (re)insert as the most recently used
     return b
 
 

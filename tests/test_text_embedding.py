@@ -117,6 +117,148 @@ def test_knn_decode_chunked_matches_unchunked():
     assert full == chunked
 
 
+def _knn_decode_reference(vectors, vocab, vocab_mat, topn=3):
+    """The per-row loop knn_decode replaced: argpartition, argsort and the
+    first-alphanumeric scan one slot row at a time."""
+    if len(vocab) == 0:
+        return ["" for _ in range(len(vectors))]
+    norms = np.linalg.norm(vocab_mat, axis=1)
+    norms[norms == 0] = 1.0
+    vnorm = np.linalg.norm(vectors, axis=1)
+    vnorm[vnorm == 0] = 1.0
+    k = min(topn, len(vocab))
+    sims = (vectors @ vocab_mat.T) / (vnorm[:, None] * norms[None, :])
+    out = []
+    for row in sims:
+        idx = np.argpartition(-row, k - 1)[:k]
+        idx = idx[np.argsort(-row[idx])]
+        out.append(next((vocab[j] for j in idx if vocab[j].isalnum()), ""))
+    return out
+
+
+def test_knn_decode_matches_per_row_reference(monkeypatch):
+    import etl_processes_spark.text.embedding as emb
+
+    rng = np.random.RandomState(11)
+
+    def check(vecs, vocab, vmat, expect_empty=False, topn=3):
+        want = _knn_decode_reference(vecs, vocab, vmat, topn)
+        got = emb.knn_decode(vecs, vocab, vmat, topn)
+        assert got == want
+        if expect_empty:
+            assert "" in got
+        with monkeypatch.context() as m:
+            m.setattr(emb, "_KNN_CHUNK_CELLS", 1)  # one slot row per block
+            assert emb.knn_decode(vecs, vocab, vmat, topn) == want
+        return got
+
+    # duplicate and tied vocabulary vectors: every vector appears 3 times
+    vocab = [f"w{i}" for i in range(30)]
+    vmat = np.repeat(rng.randn(10, 4), 3, axis=0)
+    check(rng.randn(200, 4), vocab, vmat)
+    # a scaled copy ties on cosine with its original
+    vmat2 = np.vstack([vmat, 2.0 * vmat[:5]])
+    check(rng.randn(200, 4), vocab + [f"s{i}" for i in range(5)], vmat2)
+    # zero slot vectors: every similarity is 0, every row ties
+    check(np.zeros((50, 4)), vocab, vmat)
+    # zero vocabulary vectors next to real ones
+    vmat3 = vmat.copy()
+    vmat3[::4] = 0.0
+    check(rng.randn(100, 4), vocab, vmat3)
+    # tokens with '_' in the top 3: the next alphanumeric one is picked,
+    # and a top 3 with none decodes to ""
+    under = ["a_b", "c_d", "e_f", "ghi", "j_k", "lmn"]
+    umat = np.array(
+        [[1, 0], [0.99, 0.1], [0.98, 0.2], [0.9, 0.4], [-1, 0], [-0.9, -0.4]]
+    )
+    got = check(np.array([[1.0, 0.0], [-1.0, 0.0], [1.0, 0.05]]), under, umat)
+    assert got == ["", "lmn", ""]
+    check(rng.randn(300, 2), under, umat)
+    # vocabularies below topn
+    check(rng.randn(20, 3), ["solo"], rng.randn(1, 3))
+    check(rng.randn(20, 3), ["x_y"], rng.randn(1, 3), expect_empty=True)
+    check(rng.randn(20, 3), ["one", "t_o"], rng.randn(2, 3))
+    # a wider top-n, where argpartition leaves the candidates unordered
+    mixed = [f"m{i}" if i % 3 == 0 else f"m_{i}" for i in range(60)]
+    check(rng.randn(400, 4), mixed, emb._vocab_matrix(mixed, 4), topn=8)
+    # a real vocabulary matrix, blocks of several rows
+    vocab4 = [f"tok{i}" for i in range(97)] + ["u_v", "w_x"]
+    vmat4 = emb._vocab_matrix(vocab4, 4)
+    vecs4 = rng.randn(1000, 4)
+    want4 = _knn_decode_reference(vecs4, vocab4, vmat4)
+    with monkeypatch.context() as m:
+        m.setattr(emb, "_KNN_CHUNK_CELLS", 7 * len(vocab4))
+        assert emb.knn_decode(vecs4, vocab4, vmat4) == want4
+    assert emb.knn_decode(np.zeros((0, 4)), vocab4, vmat4) == []
+    assert emb.knn_decode(vecs4[:3], [], np.zeros((0, 4))) == ["", "", ""]
+
+
+def test_model_broadcast_cache_is_lru(spark, monkeypatch):
+    import etl_processes_spark.text.embedding as emb
+
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def counting(value):
+        made.append(value)
+        return real(value)
+
+    monkeypatch.setattr(emb, "_MODEL_BCAST", {})
+    monkeypatch.setattr(sc, "broadcast", counting)
+
+    def payload(i):
+        return (None, (0.0, 1.0), np.full(2, float(i)), ["w"], np.zeros((1, 2)))
+
+    handles = [emb._model_broadcast(spark, payload(i)) for i in range(6)]
+    assert len(made) == 6
+    assert list(emb._MODEL_BCAST.values()) == handles[2:]  # the last 4
+    # a hit reuses its broadcast and makes it the most recent entry
+    assert emb._model_broadcast(spark, payload(2)) is handles[2]
+    assert len(made) == 6
+    emb._model_broadcast(spark, payload(6))
+    assert len(made) == 7
+    assert handles[2] in emb._MODEL_BCAST.values()
+    assert handles[3] not in emb._MODEL_BCAST.values()  # least recent left
+
+
+def test_powersums_same_on_both_sides_of_the_merge_route(spark, monkeypatch):
+    """_powersums_and_gram collects partials directly at <= merge_partitions
+    partitions and merges them through one stage above that; integer values
+    make every sum exact, so both routes must agree bit for bit."""
+    import etl_processes_spark.text.embedding as emb
+
+    X = np.random.default_rng(5).integers(-6, 7, size=(64, 5)).astype(float)
+    base = spark.createDataFrame([(r.tolist(),) for r in X], ["__vec"])
+    frames = {p: base.repartition(p).persist() for p in (2, 16)}
+    calls = []
+    cls = type(base)
+    real = cls.repartition
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "repartition", spy)
+    try:
+        got = {}
+        for p, df in frames.items():
+            calls.clear()
+            got[p] = emb._powersums_and_gram(df, X.shape[1], merge_partitions=8)
+            assert calls == ([] if p == 2 else [(8,)])
+    finally:
+        for df in frames.values():
+            df.unpersist()
+    want = (
+        len(X), X.sum(0), (X**2).sum(0), (X**3).sum(0), (X**4).sum(0),
+        X.T @ X, X.min(0), X.max(0),
+    )
+    for p in (2, 16):
+        assert got[p][0] == want[0]
+        for a, b in zip(got[p][1:], want[1:]):
+            assert np.array_equal(a, b)
+
+
 def test_embed_mean_reference_parity(spark):
     """embed_mean (reference dead code, Latanova_v1.py:23-43): mean of ALL
     token vectors (min_len=1, no 32-token cap), zeros for token-less."""
@@ -156,15 +298,16 @@ def test_medians_matches_spark_median(spark):
 
     rng = np.random.default_rng(7)
 
-    def check(X, bins, cap, levels):
+    def check(X, bins, cap, levels, partitions=5):
         n, d = X.shape
         df = spark.createDataFrame(
             [(row.tolist(),) for row in X], ["__vec"]
-        ).repartition(5).persist()
+        ).repartition(partitions).persist()
         try:
             got = _medians(
                 df, d, n, X.min(axis=0), X.max(axis=0),
                 bins=bins, per_dim_cap=cap, max_levels=levels,
+                merge_partitions=8,
             )
             want = np.array(
                 [
@@ -194,3 +337,9 @@ def test_medians_matches_spark_median(spark):
     # extreme spread (huge magnitudes) — binning arithmetic stays monotone
     Y = rng.normal(size=(64, 4)) * np.array([1e12, 1e-12, 1e6, 1.0])
     check(Y, bins=4, cap=2, levels=6)
+    # both sides of the histogram merge route (merge_partitions=8):
+    # partials collected directly at 2 partitions, merged at 16
+    Z = np.round(rng.normal(size=(80, 4)) * 4)
+    Z[:40, 1] = 2.0
+    for partitions in (2, 16):
+        check(Z, bins=4, cap=3, levels=6, partitions=partitions)

@@ -9,7 +9,9 @@ shares, ranges, dup rates).
 Usage: python tools/gen_testdata.py SF OUTDIR [SEED] [--fixed-vocab]
        [--only=documents,embeddings]   (sections: dims orders events
                                         documents embeddings)
-e.g.   python tools/gen_testdata.py 1.0 /root/repo/testdata_sf1
+e.g.   python tools/gen_testdata.py 1.0 testdata_sf1
+SEED defaults to 42. --help prints this text; an unknown option or a
+missing SF OUTDIR prints the usage and exits 2.
 --fixed-vocab regenerates the adversarial 31-token document corpus (every
 shingle's df grows linearly with corpus size — the documented dedup stress
 case); the default documents table draws Zipf(1.07) over a vocabulary that
@@ -312,18 +314,46 @@ def generate(
         }))
 
 
-if __name__ == "__main__":
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    doc_vocab = "fixed31" if "--fixed-vocab" in sys.argv else "zipf"
-    only = None
-    for a in sys.argv[1:]:
-        if a.startswith("--only="):
+SECTIONS = ("dims", "orders", "events", "documents", "embeddings")
+
+
+def main(argv: list[str]) -> int:
+    usage = __doc__[__doc__.index("Usage:"):__doc__.index("\n--fixed-vocab")]
+    if "--help" in argv or "-h" in argv:
+        print(__doc__)
+        return 0
+
+    def bad(msg: str) -> int:
+        print(f"gen_testdata: {msg}\n{usage}", file=sys.stderr)
+        return 2
+
+    args, doc_vocab, only = [], "zipf", None
+    for a in argv:
+        if a == "--fixed-vocab":
+            doc_vocab = "fixed31"
+        elif a.startswith("--only="):
             only = {s for s in a[len("--only="):].split(",") if s}
-    sf = float(args[0]) if args else 1.0
-    outdir = args[1] if len(args) > 1 else f"/root/repo/testdata_sf{sf:g}"
-    seed = int(args[2]) if len(args) > 2 else 42
+            if not only or not only <= set(SECTIONS):
+                return bad(f"--only takes sections from {', '.join(SECTIONS)}")
+        elif a.startswith("-"):
+            return bad(f"unknown option {a}")
+        else:
+            args.append(a)
+    if not 2 <= len(args) <= 3:
+        return bad("expected SF OUTDIR [SEED]")
+    try:
+        sf = float(args[0])
+        seed = int(args[2]) if len(args) > 2 else 42
+    except ValueError as e:
+        return bad(str(e))
+    outdir = args[1]
     assert not os.path.realpath(outdir).startswith("/root/testdata"), \
         "driver testdata is read-only"
     print(f"generating sf={sf} -> {outdir} (seed={seed}, docs={doc_vocab})", flush=True)
     generate(sf, outdir, seed, doc_vocab=doc_vocab, only=only)
     print("done", flush=True)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

@@ -213,7 +213,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ColumnProfile,
         bool_profile_df,
         cat_profile_df,
-        datetime_profile_df,
         infer_types,
         numeric_profile_df,
         profile,

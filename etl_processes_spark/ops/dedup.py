@@ -633,6 +633,26 @@ def minhash_signatures(
     return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
 
+def _band_buckets(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """(id, band, bh) LSH buckets of an (id, sig) frame: ``bh`` is the Horner
+    fold of the band's signature rows mod P31 — the same arithmetic the
+    DuckDB twin runs (xxhash64 would be Spark-only)."""
+
+    def band_hash(i: int) -> Column:
+        bh: Column | None = None
+        for j in range(rows_per_band):
+            s = F.col("sig")[i * rows_per_band + j]
+            bh = s if bh is None else (bh * F.lit(31337) + s) % F.lit(P31)
+        return bh
+
+    band_cols = F.array(
+        *[F.struct(F.lit(i).alias("band"), band_hash(i).alias("bh")) for i in range(bands)]
+    )
+    return sig.select("id", F.explode(band_cols).alias("b")).select(
+        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -656,24 +676,7 @@ def minhash_lsh_pairs(
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, num_hashes, k)
 
-    def band_hash(i: int) -> Column:
-        # Horner fold of the band's signature rows mod P31 — same arithmetic
-        # the DuckDB twin runs (xxhash64 would be Spark-only)
-        bh: Column | None = None
-        for j in range(rows_per_band):
-            s = F.col("sig")[i * rows_per_band + j]
-            bh = s if bh is None else (bh * F.lit(31337) + s) % F.lit(P31)
-        return bh
-
-    band_cols = F.array(
-        *[
-            F.struct(F.lit(i).alias("band"), band_hash(i).alias("bh"))
-            for i in range(bands)
-        ]
-    )
-    buckets = sig.select("id", F.explode(band_cols).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
+    buckets = _band_buckets(sig, bands, rows_per_band)
     a, b = buckets.alias("a"), buckets.alias("b")
     cand = (
         a.join(
@@ -1186,20 +1189,7 @@ def minhash_index(
     # consumed — without this the signature aggregation runs twice
     sigs = _ckpt_wide(minhash_signatures(df, id_col, text_col, num_hashes, k))
 
-    def band_hash(i: int) -> Column:
-        bh: Column | None = None
-        for j in range(rows_per_band):
-            s = F.col("sig")[i * rows_per_band + j]
-            bh = s if bh is None else (bh * F.lit(31337) + s) % F.lit(P31)
-        return bh
-
-    band_cols = F.array(
-        *[F.struct(F.lit(i).alias("band"), band_hash(i).alias("bh")) for i in range(bands)]
-    )
-    buckets = sigs.select("id", F.explode(band_cols).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    return sigs, buckets
+    return sigs, _band_buckets(sigs, bands, rows_per_band)
 
 
 def _sig_agreement(a: Column, b: Column, num_hashes: int) -> Column:

@@ -3,9 +3,11 @@ ingest → profile → generate → validate → report/sink.
 
 This is the "main()" a user of the reference would run — reproduced on
 Spark: one profile pass over a bounded sample (see profile(): an inference
-scan, one wide stats aggregate, one groupBy shared by all categoricals, and
-per-column jobs for retained entries, date formats and text embeddings),
-one generation job, one validation pass, optional CSV sink.
+scan, then ``column_stats`` — one wide stats aggregate plus one groupBy
+shared by all categoricals — and per-column jobs for retained entries, date
+formats and text embeddings), one generation job, a validation that
+re-profiles the synthetic frame through the same ``column_stats`` pass (plus
+one text re-profile per text column), optional CSV sink.
 """
 
 from __future__ import annotations
@@ -47,8 +49,8 @@ def run_reference_pipeline(
     profiles = profile(
         df, sample_rows=sample_rows, deterministic=deterministic, sample_key=sample_key
     )
-    # persist: the synthetic frame is re-read by every per-column validation
-    # job (submitted concurrently) and again by the sinks
+    # persist: the synthetic frame is re-read by the validation jobs (the
+    # shared stats pass and the concurrent text re-profiles) and the sinks
     synthetic = generate(spark, profiles, n_samples, seed=seed).persist()
     validation = validate(profiles, synthetic)
     report = report_sink(profiles, validation)

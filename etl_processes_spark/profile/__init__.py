@@ -5,15 +5,21 @@
     single agg() — Catalyst collapses the conditional aggregates into one
     whole-stage-codegen pass with map-side partial aggregation.
   Stage 2 (driver): the reference's decision tree per column.
-  Stage 3 (one scan): numeric + datetime + boolean stats for ALL typed
-    columns in a second single agg(); ALL categorical columns share one
+  Stage 3 (``column_stats``): numeric + datetime + boolean stats for ALL
+    typed columns in one wide agg(); ALL categorical columns share one
     exploded (col, category) groupBy (bounded: <50 categories each by
-    definition).
-  Stage 4: email/phone/text columns retain their (sample-bounded) raw
-    entries for bootstrap generation / embedding modeling — bounded by
-    ``sample_rows``, never the full table — and get their embedding
-    profiles (text_profile, run concurrently across columns). Datetime
-    columns each add a date-format detection pass.
+    definition). ``validate()`` re-profiles the synthetic frame through the
+    same function, so learned and synthetic stats come from one code path.
+  Stage 4: datetime columns each add a date-format detection pass;
+    email/phone/text columns retain their (sample-bounded) raw entries for
+    bootstrap generation / embedding modeling — bounded by ``sample_rows``,
+    never the full table — and get their embedding profiles (text_profile,
+    run concurrently across columns).
+
+Exact mode (``deterministic=True``): the integer/float columns' exact-decimal
+guards ride in the stage-3 wide agg, and every column that passes them, plus
+every datetime column (in epoch days), gets its moments from ONE
+``numeric_profile_exact_multi_df`` aggregate.
 
 Scale policy: like the reference (SAMPLE_SIZE = min(1000, n), seed 42,
 Latanova_v1.py:632-633), profiling runs on a seeded sample, so cost is
@@ -23,7 +29,7 @@ full frame (all aggregates have partial forms; still one scan per stage).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,16 +41,12 @@ from etl_processes_spark.profile.infer import (
 )
 from etl_processes_spark.profile.profilers import (
     bool_format_from_counts,
-    bool_profile,
     bool_profile_df,
     bool_profile_exprs,
-    cat_profile,
     cat_profile_df,
-    datetime_profile,
-    datetime_profile_df,
     detect_date_format,
-    numeric_profile,
     numeric_profile_df,
+    numeric_profile_exact_multi_df,
     numeric_profile_exprs,
     round_floats,
     ts_expr,
@@ -100,6 +102,169 @@ def sample_frame(
     return df.sample(withReplacement=False, fraction=fraction, seed=seed).limit(sample_rows)
 
 
+# stats key -> numeric_profile_exprs / numeric_profile_exact_multi_df column
+_NUMERIC_KEYS = {
+    "mean": "mean", "std": "std", "median": "median", "min": "min_val",
+    "max": "max_val", "skew": "skew", "kurtosis": "kurt", "q1": "q1",
+    "q3": "q3", "n_samples": "n_samples",
+}
+
+
+def _far(a, b) -> bool:
+    return a is not None and b is not None and abs(a - b) > 1e-4 * max(abs(a), abs(b), 1.0)
+
+
+def column_stats(
+    frame: DataFrame, types: dict[str, str], exact: bool = False
+) -> dict[str, dict]:
+    """Per-type statistics of ``frame``'s integer, float, datetime, boolean
+    and categorical columns (``types``: column → logical type; other types
+    are skipped), keyed as ``profile()`` stores them. Empty columns report
+    ``n_samples`` 0 (categorical: ``{}``).
+
+    One wide agg covers every numeric/datetime/boolean column and one
+    exploded groupBy every categorical column, whatever the column count.
+
+    ``exact=True`` replaces the order-dependent double-sum moments with exact
+    decimal power sums (bit-stable across engines and partitionings; see
+    numeric_profile_exact_df): integers scale by 1, floats by cents,
+    datetimes by epoch days. Integer/float columns the exact path cannot
+    represent keep their double moments; the guards for that ride in the wide
+    agg: |y| < 1e9 (the decimal(9,0) domain), Σy⁴ within decimal(38,0), and
+    no fractional part the scaling would round away (>2dp floats, integer
+    columns holding a few non-integers). The passing columns then share ONE
+    exact aggregate."""
+    schema = {f.name: f.dataType for f in frame.schema.fields}
+    exprs: list[Column] = []
+    exact_specs: dict[str, tuple[Column, float]] = {}
+    for c, t in types.items():
+        p = f"{c}__"
+        if t in (INTEGER, FLOAT):
+            exprs.extend(numeric_profile_exprs(F.col(c), prefix=p))
+            if exact:
+                if t == INTEGER:
+                    y, mult, unit = F.col(c), 1.0, F.col(c)
+                else:
+                    y, mult, unit = F.round(F.col(c) * 100, 0), 0.01, F.col(c) * 100
+                exact_specs[c] = (y, mult)
+                exprs += [
+                    F.max(F.abs(y)).alias(f"{p}mx"),
+                    # a 2dp value stored as double leaves ~1e-9 noise in
+                    # c*100 (4755.8*100 = 475579.99999...); only genuine
+                    # fractions of the scaled unit reach the 1e-6 tolerance
+                    F.max(F.abs(unit - F.round(unit, 0))).alias(f"{p}frac"),
+                    F.count(F.col(c)).alias(f"{p}n"),
+                ]
+        elif t == DATETIME:
+            ts = ts_expr(frame, c)
+            exprs.extend(
+                numeric_profile_exprs(
+                    F.floor(ts.cast("double")).cast("long").cast("double"), prefix=p
+                )
+            )
+            exprs.append(F.date_format(F.min(ts), "yyyy-MM-dd HH:mm:ss").alias(f"{p}min_date"))
+            exprs.append(F.date_format(F.max(ts), "yyyy-MM-dd HH:mm:ss").alias(f"{p}max_date"))
+            if exact:  # epoch days: always within decimal(9,0)
+                exact_specs[c] = (F.floor(ts.cast("double") / 86400), 86400.0)
+        elif t == BOOLEAN:
+            exprs.extend(
+                bool_profile_exprs(c, isinstance(schema[c], T.BooleanType), prefix=p)
+            )
+    wide = frame.agg(*exprs).collect()[0].asDict() if exprs else {}
+
+    stats: dict[str, dict] = {}
+    for c, t in types.items():
+        p = f"{c}__"
+        if t in (INTEGER, FLOAT, DATETIME):
+            stats[c] = {k: wide[f"{p}{v}"] for k, v in _NUMERIC_KEYS.items()}
+            if t == DATETIME:
+                stats[c]["min_date"] = wide[f"{p}min_date"]
+                stats[c]["max_date"] = wide[f"{p}max_date"]
+        elif t == BOOLEAN:
+            counts = {f: wide[f"{p}cnt_{f}"] for f in BOOL_FORMATS}
+            stats[c] = {
+                "true_probability": float(wide[f"{p}true_probability"] or 0.0),
+                "true_count": int(wide[f"{p}true_count"] or 0),
+                "false_count": int(wide[f"{p}false_count"] or 0),
+                "n_samples": int(wide[f"{p}n_samples"] or 0),
+                "format": bool_format_from_counts(counts),
+            }
+
+    def _exact_ok(c: str) -> bool:
+        if types[c] == DATETIME:
+            return True
+        p = f"{c}__"
+        mx = wide[f"{p}mx"]
+        return (
+            mx is not None
+            and float(mx) < 1e9
+            # Σy⁴ must fit decimal(38,0): with ANSI off an overflow is a
+            # silent NULL, with ANSI on it throws
+            and float(mx) ** 4 * int(wide[f"{p}n"]) < 9e37
+            and float(wide[f"{p}frac"] or 0.0) <= 1e-6
+        )
+
+    specs = [(c, y, mult) for c, (y, mult) in exact_specs.items() if _exact_ok(c)]
+    if specs:
+        for row in numeric_profile_exact_multi_df(frame, specs).collect():
+            c = row["col_name"]
+            exact_stats = {k: row[v] for k, v in _NUMERIC_KEYS.items() if k != "n_samples"}
+            # backstop against the exact path's numeric hazards (decimal
+            # overflow → NULL; m2 = s2/n - m² cancellation when |mean| >>
+            # std): a NULL stat, or an integer/float mean/std off the double
+            # moments beyond low-order-bit noise, keeps the double values.
+            # Datetimes are exempt: their exact path day-truncates, so they
+            # differ from the epoch-second moments by construction.
+            if any(v is None for v in exact_stats.values()):
+                continue
+            if types[c] != DATETIME and (
+                _far(exact_stats["mean"], stats[c]["mean"])
+                or _far(exact_stats["std"], stats[c]["std"])
+            ):
+                continue
+            stats[c].update(exact_stats)
+
+    # ONE exploded groupBy for all categorical columns (one shuffle, not one
+    # per column), split per column driver-side in (count desc, value asc)
+    # order with cnt/total probabilities, as cat_profile_df orders them
+    cat_cols = [c for c, t in types.items() if t == CATEGORICAL]
+    if cat_cols:
+        entries = F.array(
+            *[
+                F.struct(F.lit(c).alias("col"), F.col(c).cast("string").alias("category"))
+                for c in cat_cols
+            ]
+        )
+        counted = (
+            frame.select(F.explode(entries).alias("e"))
+            .select("e.col", "e.category")
+            .filter(F.col("category").isNotNull())
+            .groupBy("col", "category")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        )
+        by_col: dict[str, list] = {c: [] for c in cat_cols}
+        for r in counted:
+            by_col[r["col"]].append((r["category"], int(r["cnt"])))
+        for c in cat_cols:
+            rows_c = sorted(by_col[c], key=lambda t: (-t[1], t[0]))
+            if not rows_c:
+                stats[c] = {}
+                continue
+            total = sum(cnt for _, cnt in rows_c)
+            cats = [v for v, _ in rows_c]
+            probs = [cnt / total for _, cnt in rows_c]
+            stats[c] = {
+                "n_categories": len(rows_c),
+                "categories": cats,
+                "probabilities": probs,
+                "most_common": cats[0],
+                "most_common_prob": probs[0],
+                "n_samples": total,
+            }
+    return stats
+
+
 def profile(
     df: DataFrame,
     sample_rows: int | None = DEFAULT_SAMPLE_ROWS,
@@ -140,177 +305,7 @@ def profile(
     frame = frame.persist()
     try:
         types = infer_types(frame)
-        schema = {f.name: f.dataType for f in frame.schema.fields}
-
-        # Stage 3: one wide agg for every numeric/datetime/boolean column.
-        exprs = []
-        for c, t in types.items():
-            p = f"{c}__"
-            if t in (INTEGER, FLOAT):
-                exprs.extend(numeric_profile_exprs(F.col(c), prefix=p))
-            elif t == DATETIME:
-                ts = ts_expr(frame, c)
-                exprs.extend(
-                    numeric_profile_exprs(
-                        F.floor(ts.cast("double")).cast("long").cast("double"),
-                        prefix=p,
-                    )
-                )
-                exprs.append(
-                    F.date_format(F.min(ts), "yyyy-MM-dd HH:mm:ss").alias(f"{p}min_date")
-                )
-                exprs.append(
-                    F.date_format(F.max(ts), "yyyy-MM-dd HH:mm:ss").alias(f"{p}max_date")
-                )
-            elif t == BOOLEAN:
-                exprs.extend(
-                    bool_profile_exprs(
-                        c, isinstance(schema[c], T.BooleanType), prefix=p
-                    )
-                )
-        wide = frame.agg(*exprs).collect()[0].asDict() if exprs else {}
-
-        # Deterministic mode: replace the order-dependent double-sum moments
-        # with exact decimal power sums (bit-stable across engines and
-        # partitionings; see numeric_profile_exact_df). Integer columns
-        # scale by 1, datetimes by epoch-days, floats by cents. Columns the
-        # exact profiler can't represent keep their double moments: floats
-        # with >2 decimal places (cents-rounding would corrupt them) and
-        # integers outside ±1e9 (the decimal(9,0) domain) — the override is
-        # guarded, never assumed. Per-column exact jobs run concurrently on
-        # the persisted sample (same pattern as the text profiles).
-        if deterministic:
-            from concurrent.futures import ThreadPoolExecutor
-
-            from etl_processes_spark.profile.profilers import numeric_profile_exact_df
-
-            def _exact_row(c: str, t: str):
-                if t == INTEGER:
-                    y, mult = F.col(c), 1.0
-                elif t == FLOAT:
-                    y, mult = F.round(F.col(c) * 100, 0), 0.01
-                else:  # DATETIME: epoch days — always within decimal(9,0)
-                    y = F.floor(ts_expr(frame, c).cast("double") / 86400)
-                    mult = 86400.0
-                nn = frame.filter(F.col(c).isNotNull())
-                if t in (INTEGER, FLOAT):
-                    guard = nn.agg(
-                        F.max(F.abs(y)).alias("mx"),
-                        F.max(F.abs(F.col(c) * 100 - F.round(F.col(c) * 100, 0))).alias(
-                            "frac"
-                        ),
-                        F.max(F.abs(F.col(c) - F.round(F.col(c), 0))).alias("ifrac"),
-                        F.count(F.lit(1)).alias("n"),
-                    ).collect()[0]
-                    if guard["mx"] is None or float(guard["mx"]) >= 1e9:
-                        return None  # out of exact-decimal range
-                    # Σy⁴ must fit decimal(38,0): with ANSI off an overflow
-                    # is a silent NULL (kurt would come back None), with
-                    # ANSI on it throws — refuse the exact path up front
-                    if float(guard["mx"]) ** 4 * int(guard["n"]) >= 9e37:
-                        return None
-                    # tolerance: a 2dp value stored as double leaves ~1e-9
-                    # representation noise in c*100 (4755.8*100 =
-                    # 475579.99999...); only genuine >2dp data (frac >= 0.1
-                    # after cents scaling) must keep double moments
-                    if t == FLOAT and float(guard["frac"] or 0.0) > 1e-6:
-                        return None  # >2dp values: cents scaling would corrupt
-                    # INTEGER-typed columns can still hold fractional values
-                    # (int_ratio >= 0.95 admits 5% non-integers) — the
-                    # decimal(9,0) cast would silently ROUND them, changing
-                    # the stats; same 'ifrac' guard validate.py uses
-                    if t == INTEGER and float(guard["ifrac"] or 0.0) > 1e-6:
-                        return None
-                return numeric_profile_exact_df(nn, y, out_mult=mult).collect()[0]
-
-            todo_exact = {
-                c: t for c, t in types.items() if t in (INTEGER, FLOAT, DATETIME)
-            }
-            if todo_exact:
-                with ThreadPoolExecutor(max_workers=min(4, len(todo_exact))) as ex:
-                    futs = {
-                        c: ex.submit(_exact_row, c, t) for c, t in todo_exact.items()
-                    }
-                    for c, fut in futs.items():
-                        row = fut.result()
-                        if row is None:
-                            continue
-                        p = f"{c}__"
-                        # sanity backstop against the exact path's two known
-                        # numeric hazards (decimal overflow → NULL; m2 =
-                        # s2/n - m² catastrophic cancellation when |mean| >>
-                        # std): any NULL stat, or mean/std disagreeing with
-                        # the stage-3 double moments beyond low-order-bit
-                        # noise, keeps the double values instead. For data
-                        # the exact path was built for, both paths agree to
-                        # ~1e-9 relative, so this never fires there.
-                        keys = ("mean", "std", "median", "min_val", "max_val",
-                                "skew", "kurt", "q1", "q3")
-                        if any(row[k] is None for k in keys):
-                            continue
-
-                        def _far(a, b):
-                            if a is None or b is None:
-                                return False
-                            return abs(a - b) > 1e-4 * max(abs(a), abs(b), 1.0)
-
-                        # (DATETIME is exempt: its exact path day-truncates,
-                        # so it differs from the stage-3 epoch-second
-                        # moments by construction, not by error)
-                        if todo_exact[c] in (INTEGER, FLOAT) and (
-                            _far(row["mean"], wide.get(f"{p}mean"))
-                            or _far(row["std"], wide.get(f"{p}std"))
-                        ):
-                            continue
-                        for k in keys:
-                            wide[f"{p}{k}"] = row[k]
-
-        # ALL categorical columns profile in ONE exploded groupBy (one
-        # shuffle total, not one per column — in full-frame mode each
-        # per-column groupBy would be its own pass over the table). The
-        # result rows are split per column driver-side with the same
-        # (count desc, value asc) ordering and cnt/total probabilities
-        # cat_profile computes; outputs are bounded (<50 categories per
-        # column by the inference definition).
-        cat_stats: dict[str, dict | None] = {}
-        cat_cols = [c for c, t in types.items() if t == CATEGORICAL]
-        if cat_cols:
-            entries = F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col"),
-                        F.col(c).cast("string").alias("category"),
-                    )
-                    for c in cat_cols
-                ]
-            )
-            counted = (
-                frame.select(F.explode(entries).alias("e"))
-                .select("e.col", "e.category")
-                .filter(F.col("category").isNotNull())
-                .groupBy("col", "category")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            )
-            by_col: dict[str, list] = {c: [] for c in cat_cols}
-            for r in counted:
-                by_col[r["col"]].append((r["category"], int(r["cnt"])))
-            for c in cat_cols:
-                rows_c = sorted(by_col[c], key=lambda t: (-t[1], t[0]))
-                if not rows_c:
-                    cat_stats[c] = None
-                    continue
-                total = sum(cnt for _, cnt in rows_c)
-                cats = [v for v, _ in rows_c]
-                probs = [cnt / total for _, cnt in rows_c]
-                cat_stats[c] = {
-                    "n_categories": len(rows_c),
-                    "categories": cats,
-                    "probabilities": probs,
-                    "most_common": cats[0],
-                    "most_common_prob": probs[0],
-                    "n_samples": total,
-                }
+        col_stats = column_stats(frame, types, exact=deterministic)
 
         # Text-ish columns' embedding profiles run CONCURRENTLY (Spark's
         # scheduler interleaves the per-column jobs; each is several small
@@ -332,41 +327,14 @@ def profile(
 
         profiles: dict[str, ColumnProfile] = {}
         for c, t in types.items():
-            p = f"{c}__"
-            if t in (INTEGER, FLOAT):
-                stats = {
-                    "mean": wide[f"{p}mean"], "std": wide[f"{p}std"],
-                    "median": wide[f"{p}median"], "min": wide[f"{p}min_val"],
-                    "max": wide[f"{p}max_val"], "skew": wide[f"{p}skew"],
-                    "kurtosis": wide[f"{p}kurt"], "q1": wide[f"{p}q1"],
-                    "q3": wide[f"{p}q3"], "n_samples": wide[f"{p}n_samples"],
-                }
-                profiles[c] = ColumnProfile(c, t, None, stats)
+            if t in (INTEGER, FLOAT, CATEGORICAL):
+                profiles[c] = ColumnProfile(c, t, None, col_stats[c])
             elif t == DATETIME:
-                stats = {
-                    "mean": wide[f"{p}mean"], "std": wide[f"{p}std"],
-                    "median": wide[f"{p}median"], "min": wide[f"{p}min_val"],
-                    "max": wide[f"{p}max_val"], "skew": wide[f"{p}skew"],
-                    "kurtosis": wide[f"{p}kurt"], "q1": wide[f"{p}q1"],
-                    "q3": wide[f"{p}q3"], "n_samples": wide[f"{p}n_samples"],
-                    "min_date": wide[f"{p}min_date"], "max_date": wide[f"{p}max_date"],
-                }
                 fmt = detect_date_format(frame, c)
-                stats["date_format"] = fmt
-                profiles[c] = ColumnProfile(c, t, fmt, stats)
+                col_stats[c]["date_format"] = fmt
+                profiles[c] = ColumnProfile(c, t, fmt, col_stats[c])
             elif t == BOOLEAN:
-                counts = {f: wide[f"{p}cnt_{f}"] for f in BOOL_FORMATS}
-                fmt = bool_format_from_counts(counts)
-                stats = {
-                    "true_probability": float(wide[f"{p}true_probability"] or 0.0),
-                    "true_count": int(wide[f"{p}true_count"] or 0),
-                    "false_count": int(wide[f"{p}false_count"] or 0),
-                    "n_samples": int(wide[f"{p}n_samples"] or 0),
-                    "format": fmt,
-                }
-                profiles[c] = ColumnProfile(c, t, fmt, stats)
-            elif t == CATEGORICAL:
-                profiles[c] = ColumnProfile(c, t, None, cat_stats.get(c) or {})
+                profiles[c] = ColumnProfile(c, t, col_stats[c]["format"], col_stats[c])
             elif t in (EMAIL, PHONE, TEXT):
                 # Retain sample-bounded raw entries: bootstrap source for
                 # email/phone (Latanova_v1.py:307-309) and embedding-model
@@ -400,21 +368,17 @@ def profile(
 __all__ = [
     "ColumnProfile",
     "profile",
+    "column_stats",
     "infer_types",
     "inference_metrics",
     "decide_type",
     "sample_frame",
-    "numeric_profile",
     "numeric_profile_df",
     "numeric_profile_exprs",
-    "bool_profile",
     "bool_profile_df",
     "bool_profile_exprs",
     "bool_format_from_counts",
-    "cat_profile",
     "cat_profile_df",
-    "datetime_profile",
-    "datetime_profile_df",
     "detect_date_format",
     "round_floats",
 ]

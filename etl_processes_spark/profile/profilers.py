@@ -17,10 +17,12 @@ Semantic parity decisions (SURVEY.md §2.11):
  - Categorical tie-break: pandas value_counts order among equal counts is not
    contractual; this engine defines (count desc, value asc).
 
-Every profiler has two forms: ``*_profile_exprs`` (aggregate Columns, so many
-columns profile in ONE scan) and ``*_profile`` (collected dict, the reference's
-stats_dict shape). All scans are single-pass with partial aggregation —
-map-side combine means the shuffle is one row per partition at any scale.
+The ``*_profile_exprs`` builders return aggregate Columns, so many columns
+profile in ONE scan: ``profile.column_stats`` composes them into the stats
+dicts that ``profile()`` stores and ``validate()`` compares. The one-column
+``*_profile_df`` frames serve the oracle queries. All scans are single-pass
+with partial aggregation — map-side combine means the shuffle is one row per
+partition at any scale.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_processes_spark.partitioning import _plan_size_bytes
 from etl_processes_spark.profile.types import (
     BOOL_FALSE,
     BOOL_FORMATS,
@@ -41,28 +44,10 @@ from etl_processes_spark.profile.infer import bool_lower, datetime_parse
 # ---------------------------------------------------------------------------
 
 
-def numeric_profile_exprs(
-    c: str | Column, prefix: str = "", approx_percentiles: bool = False
-) -> list[Column]:
-    """mean/std(pop)/median/min/max/skew/kurtosis/q1/q3/count
-    (Latanova_v1.py:179-189). ``skew``/``kurt`` are 0 for degenerate inputs
-    (n<=2 / n<=3), matching the reference's explicit guards (:185-186).
-
-    ``approx_percentiles=True`` swaps exact sort-based percentiles for
-    percentile_approx — the 100 TB knob (SURVEY §4): exact percentiles are
-    fine at profile-sample scale but require a per-column sort at full-frame
-    scale."""
-    x = (F.col(c) if isinstance(c, str) else c).cast("double")
+def _stat_exprs(x: Column, q1: Column, med: Column, q3: Column, p: str = "") -> list[Column]:
+    """The numeric profile row: moments of ``x`` around the given quartile
+    Columns (aggregates or literals)."""
     n = F.count(x)
-    p = prefix
-    if approx_percentiles:
-        q1 = F.percentile_approx(x, F.lit(0.25), F.lit(10000))
-        med = F.percentile_approx(x, F.lit(0.5), F.lit(10000))
-        q3 = F.percentile_approx(x, F.lit(0.75), F.lit(10000))
-    else:
-        q1 = F.percentile(x, F.lit(0.25))
-        med = F.median(x)
-        q3 = F.percentile(x, F.lit(0.75))
     return [
         F.avg(x).alias(f"{p}mean"),
         F.coalesce(F.stddev_pop(x), F.lit(0.0)).alias(f"{p}std"),
@@ -77,13 +62,34 @@ def numeric_profile_exprs(
     ]
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes statistic for the optimized plan — free (no
-    job), defined for file sources and local relations."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
+def numeric_profile_exprs(
+    c: str | Column, prefix: str = "", approx_percentiles: bool = False
+) -> list[Column]:
+    """mean/std(pop)/median/min/max/skew/kurtosis/q1/q3/count
+    (Latanova_v1.py:179-189). ``skew``/``kurt`` are 0 for degenerate inputs
+    (n<=2 / n<=3), matching the reference's explicit guards (:185-186).
+
+    ``approx_percentiles=True`` swaps exact sort-based percentiles for
+    percentile_approx — the 100 TB knob (SURVEY §4): exact percentiles are
+    fine at profile-sample scale but require a per-column sort at full-frame
+    scale."""
+    x = (F.col(c) if isinstance(c, str) else c).cast("double")
+    if approx_percentiles:
+        q1 = F.percentile_approx(x, F.lit(0.25), F.lit(10000))
+        med = F.percentile_approx(x, F.lit(0.5), F.lit(10000))
+        q3 = F.percentile_approx(x, F.lit(0.75), F.lit(10000))
+    else:
+        q1 = F.percentile(x, F.lit(0.25))
+        med = F.median(x)
+        q3 = F.percentile(x, F.lit(0.75))
+    return _stat_exprs(x, q1, med, q3, prefix)
+
+
+# numeric_profile_df(percentiles="auto") switches to distributed selection
+# above this much scanned column data (see its docstring for the crossover)
+DISTRIBUTED_THRESHOLD_BYTES = 512 << 10
+# range partitions of the distributed selection (a floor; it widens with size)
+DISTRIBUTED_PARTS = 32
 
 
 def numeric_profile_df(
@@ -91,8 +97,6 @@ def numeric_profile_df(
     c: str,
     ndigits: int | None = None,
     percentiles: str = "auto",
-    distributed_threshold_bytes: int = 512 << 10,
-    parts: int = 32,
 ) -> DataFrame:
     """One-row numeric profile. ``percentiles`` routes the q1/median/q3
     computation:
@@ -104,66 +108,38 @@ def numeric_profile_df(
       take 1.5s — the single-task merge IS the wall clock.
     - "distributed": ``exact_percentiles_distributed`` (range partition +
       per-partition counts + flank-rank fetch) — bit-identical values,
-      nothing bigger than ``parts`` counts on any one task (measured 3.4s
-      on the same sf1 column, ~15x).
+      nothing bigger than the per-range-partition counts on any one task
+      (measured 3.4s on the same sf1 column, ~15x).
     - "approx": percentile_approx, when exactness isn't required.
-    - "auto" (default): "exact" below ``distributed_threshold_bytes`` of
+    - "auto" (default): "exact" below ``DISTRIBUTED_THRESHOLD_BYTES`` of
       scanned column data (Catalyst's column-pruned size statistic, no
-      job), else "distributed". The 512 KB default sits at the MEASURED
-      crossover on wide-domain doubles (~2.5 pruned bytes/value): exact
-      wins at 140 KB/60k rows (1.4s vs 2.1s) and loses at 1.4 MB/600k rows
-      (4.4s vs 1.4s) — the percentile() map merge is O(distinct) on one
-      task, so its cost passes the distributed path's ~1.3s multi-job
-      overhead a few hundred thousand distincts in, far below the round-5
-      4 MB guess."""
+      job; an unknown size counts as small), else "distributed". The
+      512 KB threshold sits at the MEASURED crossover on wide-domain
+      doubles (~2.5 pruned bytes/value): exact wins at 140 KB/60k rows
+      (1.4s vs 2.1s) and loses at 1.4 MB/600k rows (4.4s vs 1.4s) — the
+      percentile() map merge is O(distinct) on one task, so its cost
+      passes the distributed path's ~1.3s multi-job overhead a few hundred
+      thousand distincts in."""
     base = df.filter(F.col(c).isNotNull())
     mode = percentiles
     if mode == "auto":
         sz = _plan_size_bytes(base.select(c))
         mode = (
             "distributed"
-            if sz is not None and sz > distributed_threshold_bytes
+            if sz is not None and sz > DISTRIBUTED_THRESHOLD_BYTES
             else "exact"
         )
     if mode in ("exact", "approx"):
         out = base.agg(*numeric_profile_exprs(c, approx_percentiles=(mode == "approx")))
     elif mode == "distributed":
-        n, (q1, med, q3) = exact_percentiles_distributed(
-            base, c, [0.25, 0.5, 0.75], parts=parts
-        )
-        x = F.col(c).cast("double")
-        nn = F.count(x)
-        lit = lambda v: F.lit(v if n else None).cast("double")
-        out = base.agg(
-            F.avg(x).alias("mean"),
-            F.coalesce(F.stddev_pop(x), F.lit(0.0)).alias("std"),
-            F.min(x).alias("min_val"),
-            F.max(x).alias("max_val"),
-            F.when(nn > 2, F.coalesce(F.skewness(x), F.lit(0.0))).otherwise(0.0).alias("skew"),
-            F.when(nn > 3, F.coalesce(F.kurtosis(x), F.lit(0.0))).otherwise(0.0).alias("kurt"),
-            nn.alias("n_samples"),
-        ).select(
-            "mean", "std", lit(med).alias("median"), "min_val", "max_val",
-            "skew", "kurt", lit(q1).alias("q1"), lit(q3).alias("q3"), "n_samples",
-        )
+        n, qs = exact_percentiles_distributed(base, c, [0.25, 0.5, 0.75])
+        q1, med, q3 = (F.lit(v if n else None).cast("double") for v in qs)
+        out = base.agg(*_stat_exprs(F.col(c).cast("double"), q1, med, q3))
     else:
         raise ValueError(f"percentiles must be auto|exact|approx|distributed, got {mode!r}")
     if ndigits is not None:
         out = round_floats(out, ndigits)
     return out
-
-
-def numeric_profile(df: DataFrame, c: str) -> dict | None:
-    """Reference stats_dict keys (Latanova_v1.py:179-190)."""
-    row = numeric_profile_df(df, c).collect()[0]
-    if row["n_samples"] == 0:
-        return None
-    return {
-        "mean": row["mean"], "std": row["std"], "median": row["median"],
-        "min": row["min_val"], "max": row["max_val"], "skew": row["skew"],
-        "kurtosis": row["kurt"], "q1": row["q1"], "q3": row["q3"],
-        "n_samples": row["n_samples"],
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -232,20 +208,6 @@ def bool_profile_df(df: DataFrame, c: str, ndigits: int | None = None) -> DataFr
     return out
 
 
-def bool_profile(df: DataFrame, c: str) -> dict | None:
-    row = bool_profile_df(df, c).collect()[0].asDict()
-    if not row["n_samples"]:
-        return None
-    counts = {f: row[f"cnt_{f}"] for f in BOOL_FORMATS}
-    return {
-        "true_probability": float(row["true_probability"]),
-        "true_count": int(row["true_count"]),
-        "false_count": int(row["false_count"]),
-        "n_samples": int(row["n_samples"]),
-        "format": bool_format_from_counts(counts),
-    }
-
-
 # ---------------------------------------------------------------------------
 # categorical
 # ---------------------------------------------------------------------------
@@ -275,22 +237,6 @@ def cat_profile_df(df: DataFrame, c: str, ndigits: int | None = None) -> DataFra
     return out
 
 
-def cat_profile(df: DataFrame, c: str) -> dict | None:
-    rows = cat_profile_df(df, c).collect()
-    if not rows:
-        return None
-    cats = [r["category"] for r in rows]
-    probs = [r["probability"] for r in rows]
-    return {
-        "n_categories": len(rows),
-        "categories": cats,
-        "probabilities": probs,
-        "most_common": cats[0],
-        "most_common_prob": probs[0],
-        "n_samples": int(sum(r["cnt"] for r in rows)),
-    }
-
-
 # ---------------------------------------------------------------------------
 # datetime
 # ---------------------------------------------------------------------------
@@ -302,23 +248,6 @@ def ts_expr(df: DataFrame, c: str) -> Column:
     if isinstance(df.schema[c].dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)):
         return F.col(c).cast("timestamp")
     return datetime_parse(c)
-
-
-def datetime_profile_df(df: DataFrame, c: str, ndigits: int | None = None) -> DataFrame:
-    """numeric_profile over epoch seconds + min/max date strings
-    (Latanova_v1.py:273-298)."""
-    ts = ts_expr(df, c)
-    secs = F.floor(ts.cast("double")).cast("long").alias("__epoch")
-    base = df.select(ts.alias("__ts"), secs).filter(F.col("__ts").isNotNull())
-    exprs = numeric_profile_exprs("__epoch")
-    exprs += [
-        F.date_format(F.min("__ts"), "yyyy-MM-dd HH:mm:ss").alias("min_date"),
-        F.date_format(F.max("__ts"), "yyyy-MM-dd HH:mm:ss").alias("max_date"),
-    ]
-    out = base.agg(*exprs)
-    if ndigits is not None:
-        out = round_floats(out, ndigits)
-    return out
 
 
 def detect_date_format(df: DataFrame, c: str) -> str | None:
@@ -340,20 +269,6 @@ def detect_date_format(df: DataFrame, c: str) -> str | None:
     if re.match(r"\d{2}-\d{2}-\d{4}", s):
         return "DD-MM-YYYY"
     return None
-
-
-def datetime_profile(df: DataFrame, c: str) -> dict | None:
-    row = datetime_profile_df(df, c).collect()[0]
-    if row["n_samples"] == 0:
-        return None
-    return {
-        "mean": row["mean"], "std": row["std"], "median": row["median"],
-        "min": float(row["min_val"]), "max": float(row["max_val"]),
-        "skew": row["skew"], "kurtosis": row["kurt"],
-        "q1": row["q1"], "q3": row["q3"], "n_samples": row["n_samples"],
-        "date_format": detect_date_format(df, c),
-        "min_date": row["min_date"], "max_date": row["max_date"],
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -577,7 +492,7 @@ def exact_percentiles_distributed(
     df: DataFrame,
     y: Column | str,
     qs: list[float],
-    parts: int = 32,
+    parts: int = DISTRIBUTED_PARTS,
 ) -> tuple[int, list[float]]:
     """Exact linear-interpolated percentiles by DISTRIBUTED SELECTION —
     the 100 TB path. Spark's exact ``percentile()`` aggregate buffers every

@@ -1,24 +1,27 @@
 """validate(profiles, synthetic_df) — re-profile the synthetic frame and diff
 against the learned stats, per column (Latanova_v1.py:425-494).
 
+The synthetic frame is re-profiled by ``profile.column_stats``, the function
+``profile()`` learned its stats with: one wide agg for all numeric, datetime
+and boolean columns, one groupBy for all categorical ones and, with
+``exact=True``, one exact-decimal aggregate. Text, email and phone columns
+are re-vectorized per column, concurrently with that pass.
+
 Unlike the reference, which only PRINTS errors (:706-710), these results are
 returned structured so tests can assert thresholds. Datetime columns are
-validated on epoch seconds — the reference's datetime validation feeds
-formatted date strings into np.mean and crashes (UFuncTypeError,
-Latanova_v1.py:460-463 with :697); documented fix (SURVEY.md §2.11 Q8).
+validated on epoch seconds (epoch days under ``exact``) — the reference's
+datetime validation feeds formatted date strings into np.mean and crashes
+(UFuncTypeError, Latanova_v1.py:460-463 with :697); documented fix
+(SURVEY.md §2.11 Q8).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from concurrent.futures import ThreadPoolExecutor
 
-from etl_processes_spark.profile.profilers import (
-    bool_profile,
-    cat_profile,
-    datetime_profile,
-    numeric_profile,
-)
+from pyspark.sql import DataFrame
+
+from etl_processes_spark.profile import column_stats
 from etl_processes_spark.profile.types import (
     BOOLEAN,
     CATEGORICAL,
@@ -31,65 +34,8 @@ from etl_processes_spark.profile.types import (
     ColumnProfile,
 )
 
-
-def validate_numeric(
-    prof: ColumnProfile, df: DataFrame, c: str, exact: bool = False
-) -> dict:
-    """abs errors of mean/std/median (Latanova_v1.py:455-472).
-
-    ``exact=True`` re-profiles via the exact-decimal power sums (integer
-    columns ×1, float columns in cents) so the error values are
-    bit-reproducible cross-engine — the validate twin of
-    profile(deterministic=True)."""
-    if exact:
-        from etl_processes_spark.profile.profilers import numeric_profile_exact_df
-
-        is_int = prof.logical_type == INTEGER
-        y = F.col(c) if is_int else F.round(F.col(c) * 100, 0)
-        nn = df.filter(F.col(c).isNotNull())
-        guard = nn.agg(
-            F.max(F.abs(y)).alias("mx"),
-            F.max(F.abs(F.col(c) * 100 - F.round(F.col(c) * 100, 0))).alias("frac"),
-            # integer profiles over a buggy generator can contain fractional
-            # values; the decimal(9,0) cast would silently ROUND them and
-            # mask the very discrepancy validation exists to surface
-            F.max(F.abs(F.col(c) - F.round(F.col(c), 0))).alias("ifrac"),
-        ).collect()[0]
-        if guard["mx"] is None:
-            return {"error": "empty synthetic column"}
-        if (
-            float(guard["mx"]) >= 1e9
-            or (not is_int and float(guard["frac"] or 0.0) > 0)
-            or (is_int and float(guard["ifrac"] or 0.0) > 0)
-        ):
-            # outside the exact-decimal domain (or fractional values the
-            # cast would corrupt): the double-moment path is correct, just
-            # not hash-stable
-            synth = numeric_profile(df, c)
-        else:
-            row = numeric_profile_exact_df(nn, y, out_mult=1.0 if is_int else 0.01).collect()[0]
-            synth = {"mean": row["mean"], "std": row["std"], "median": row["median"]}
-    else:
-        synth = numeric_profile(df, c)
-    if synth is None:
-        return {"error": "empty synthetic column"}
-    return {
-        "mean_error": abs(synth["mean"] - prof.stats["mean"]),
-        "std_error": abs(synth["std"] - prof.stats["std"]),
-        "median_error": abs(synth["median"] - prof.stats["median"]),
-    }
-
-
-def validate_datetime(prof: ColumnProfile, df: DataFrame, c: str) -> dict:
-    """Numeric validation over parsed epoch seconds (reference-bug fix Q8)."""
-    synth = datetime_profile(df, c)
-    if synth is None:
-        return {"error": "empty synthetic column"}
-    return {
-        "mean_error": abs(synth["mean"] - prof.stats["mean"]),
-        "std_error": abs(synth["std"] - prof.stats["std"]),
-        "median_error": abs(synth["median"] - prof.stats["median"]),
-    }
+_STATS_TYPES = (INTEGER, FLOAT, DATETIME, BOOLEAN, CATEGORICAL)
+_TEXT_TYPES = (TEXT, EMAIL, PHONE)
 
 
 def validate_text(prof: ColumnProfile, df: DataFrame, c: str) -> dict:
@@ -122,86 +68,76 @@ def validate_text(prof: ColumnProfile, df: DataFrame, c: str) -> dict:
     }
 
 
-def validate_boolean(prof: ColumnProfile, df: DataFrame, c: str) -> dict:
-    """abs error of true-probability (Latanova_v1.py:473-484)."""
-    synth = bool_profile(df, c)
-    if synth is None:
-        return {"error": "no parseable boolean values"}
-    return {
-        "true_prob_error": abs(
-            synth["true_probability"] - prof.stats["true_probability"]
-        )
-    }
-
-
-def validate_categorical(prof: ColumnProfile, df: DataFrame, c: str) -> dict:
-    """n_categories error + most-common match (Latanova_v1.py:485-493)."""
-    synth = cat_profile(df, c)
-    if synth is None:
-        return {"error": "empty synthetic column"}
-    return {
-        "n_categories_error": abs(
-            synth["n_categories"] - prof.stats["n_categories"]
-        ),
-        "most_common_match": synth["most_common"] == prof.stats["most_common"],
-    }
-
-
-def _validate_one(
-    prof: ColumnProfile, synthetic: DataFrame, c: str, exact: bool = False
-) -> dict:
+def _compare(prof: ColumnProfile, synth: dict) -> dict:
+    """Error dict of one column from its learned and synthetic stats:
+    numeric/datetime abs errors of mean/std/median (Latanova_v1.py:455-472),
+    boolean true-probability error (:473-484), categorical n_categories error
+    and most-common match (:485-493)."""
     t = prof.logical_type
-    if t in (INTEGER, FLOAT):
-        return validate_numeric(prof, synthetic, c, exact=exact)
-    if t == DATETIME:
-        return validate_datetime(prof, synthetic, c)
+    if not synth.get("n_samples"):
+        return {
+            "error": "no parseable boolean values" if t == BOOLEAN else "empty synthetic column"
+        }
     if t == BOOLEAN:
-        return validate_boolean(prof, synthetic, c)
+        return {
+            "true_prob_error": abs(
+                synth["true_probability"] - prof.stats["true_probability"]
+            )
+        }
     if t == CATEGORICAL:
-        return validate_categorical(prof, synthetic, c)
-    if t in (TEXT, EMAIL, PHONE):
-        return validate_text(prof, synthetic, c)
-    return {"skipped": t}
+        return {
+            "n_categories_error": abs(
+                synth["n_categories"] - prof.stats["n_categories"]
+            ),
+            "most_common_match": synth["most_common"] == prof.stats["most_common"],
+        }
+    return {f"{k}_error": abs(synth[k] - prof.stats[k]) for k in ("mean", "std", "median")}
+
+
+def _error(e: Exception) -> dict:
+    return {"error": f"{type(e).__name__}: {e}"}
 
 
 def validate(
     profiles: dict[str, ColumnProfile], synthetic: DataFrame, exact: bool = False
 ) -> dict[str, dict]:
-    """Per-column validations are independent Spark jobs — submitted
-    concurrently (wall-clock is job-count bound at sample scale).
-    ``exact=True``: numeric re-profiling uses exact decimal power sums
+    """{column: error dict}, in ``profiles`` order. A failure is recorded as
+    the error entry of the columns it touched; validate never raises for a
+    single column. ``exact=True`` re-profiles with exact-decimal moments
     (cross-engine-stable error values; pair with profile(deterministic))."""
-    from concurrent.futures import ThreadPoolExecutor
-
     results: dict[str, dict] = {}
-    todo = {}
+    typed: dict[str, str] = {}
+    text: dict[str, ColumnProfile] = {}
     for c, prof in profiles.items():
+        t = prof.logical_type
         if c not in synthetic.columns:
             results[c] = {"error": "column missing from synthetic frame"}
+        elif t in _STATS_TYPES:
+            typed[c] = t
+        elif t in _TEXT_TYPES:
+            text[c] = prof
         else:
-            todo[c] = prof
-    if todo:
-        with ThreadPoolExecutor(max_workers=min(4, len(todo))) as ex:
-            futures = {
-                c: ex.submit(_validate_one, p, synthetic, c, exact)
-                for c, p in todo.items()
-            }
-            for c, f in futures.items():
-                # one column's failure must not discard every other
-                # column's result — record it as that column's error entry
-                # (the same structured shape the validators return)
+            results[c] = {"skipped": t}
+    # the text re-profiles are several small jobs per column: submit them
+    # first so they overlap the shared stats pass on this thread
+    with ThreadPoolExecutor(max_workers=max(1, min(4, len(text)))) as ex:
+        futures = {c: ex.submit(validate_text, p, synthetic, c) for c, p in text.items()}
+        try:
+            synth = column_stats(synthetic, typed, exact)
+        except Exception as e:
+            results.update({c: _error(e) for c in typed})
+        else:
+            for c in typed:
                 try:
-                    results[c] = f.result()
+                    results[c] = _compare(profiles[c], synth[c])
                 except Exception as e:
-                    results[c] = {"error": f"{type(e).__name__}: {e}"}
-    return {c: results[c] for c in list(profiles)}
+                    results[c] = _error(e)
+        for c, f in futures.items():
+            try:
+                results[c] = f.result()
+            except Exception as e:
+                results[c] = _error(e)
+    return {c: results[c] for c in profiles}
 
 
-__all__ = [
-    "validate",
-    "validate_numeric",
-    "validate_datetime",
-    "validate_boolean",
-    "validate_categorical",
-    "validate_text",
-]
+__all__ = ["validate", "validate_text"]

@@ -8,7 +8,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_processes_spark.profile import infer_types, numeric_profile, profile
+from etl_processes_spark.profile import column_stats, infer_types, profile
 from etl_processes_spark.generate import generate
 
 
@@ -24,7 +24,7 @@ def test_all_null_column_is_unknown(spark):
 
 def test_single_row_numeric_profile_and_constant_generation(spark):
     df = spark.createDataFrame([(7.5,)], "x double")
-    prof = numeric_profile(df, "x")
+    prof = column_stats(df, {"x": "float"})["x"]
     assert prof["std"] == 0.0 and prof["skew"] == 0.0 and prof["kurtosis"] == 0.0
     assert prof["mean"] == prof["median"] == prof["min"] == prof["max"] == 7.5
     profs = profile(df, drop_null_rows=False)

@@ -30,13 +30,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from etl_processes_spark.profile import (
-    bool_profile,
-    cat_profile,
-    datetime_profile,
-    infer_types,
-    numeric_profile,
-)
+from etl_processes_spark.profile import column_stats, infer_types
 
 BOOL_VOCAB = {"true", "false", "1", "0", "yes", "no", "y", "n", "t", "f"}
 TRUE_SET = {"true", "yes", "1", "y", "t"}
@@ -371,7 +365,7 @@ def test_numeric_profile_differential(spark, seed):
     }
     for name, vals in batteries.items():
         df = spark.createDataFrame([(float(v),) for v in vals], "x double")
-        prof = numeric_profile(df, "x")
+        prof = column_stats(df, {"x": "float"})["x"]
         twin = twin_numeric_stats(vals.astype(float))
         for k, v in twin.items():
             assert prof[k] == pytest.approx(v, rel=1e-9, abs=1e-9), (name, k)
@@ -384,7 +378,7 @@ def test_bool_profile_differential(spark, seed):
     vals = [vocab[i] for i in rng.randint(0, len(vocab), 120)]
     s = pd.Series(vals, dtype=object)
     df = spark.createDataFrame([(v,) for v in vals], "b string")
-    prof = bool_profile(df, "b")
+    prof = column_stats(df, {"b": "boolean"})["b"]
     twin = twin_bool_stats(s)
     for k in ("true_probability", "true_count", "false_count", "n_samples", "format"):
         assert prof[k] == pytest.approx(twin[k]) if k == "true_probability" else prof[k] == twin[k], k
@@ -395,7 +389,7 @@ def test_cat_profile_differential(spark, seed):
     rng = np.random.RandomState(seed)
     vals = [f"cat{v}" for v in rng.randint(0, 9, 150)]
     df = spark.createDataFrame([(v,) for v in vals], "c string")
-    prof = cat_profile(df, "c")
+    prof = column_stats(df, {"c": "categorical"})["c"]
     vc = pd.Series(vals).value_counts(normalize=True)
     assert prof["n_categories"] == len(vc)
     assert prof["n_samples"] == len(vals)
@@ -419,7 +413,7 @@ def test_datetime_profile_differential(spark):
         for x in rng.randint(0, 10**8, 200)
     )
     df = spark.createDataFrame([(d,) for d in dates], "d string")
-    prof = datetime_profile(df, "d")
+    prof = column_stats(df, {"d": "datetime"})["d"]
     ts = (pd.to_datetime(pd.Series(dates)).astype(np.int64) // 10**9).to_numpy()
     twin = twin_numeric_stats(ts.astype(float))
     for k in ("mean", "std", "median", "min", "max", "q1", "q3"):

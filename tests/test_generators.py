@@ -152,11 +152,11 @@ def test_deterministic_profile_guards_fractional_floats(spark):
 
 def test_validate_exact_empty_column_returns_error(spark):
     from etl_processes_spark.profile.types import ColumnProfile
-    from etl_processes_spark.validate import validate_numeric
+    from etl_processes_spark.validate import validate
 
     empty = spark.createDataFrame([], "x double")
     prof = ColumnProfile("x", "float", None, {"mean": 1.0, "std": 0.0, "median": 1.0})
-    assert "error" in validate_numeric(prof, empty, "x", exact=True)
+    assert "error" in validate({"x": prof}, empty, exact=True)["x"]
 
 
 def test_deterministic_profile_guards_huge_integers(spark):

@@ -4,12 +4,7 @@ aggregates must reproduce the reference's numpy/scipy formulas exactly."""
 import numpy as np
 import pytest
 
-from etl_processes_spark.profile import (
-    bool_profile,
-    cat_profile,
-    datetime_profile,
-    numeric_profile,
-)
+from etl_processes_spark.profile import column_stats, detect_date_format
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +16,7 @@ def num_df(spark):
 
 def test_numeric_profile_matches_numpy_scipy(num_df):
     df, vals = num_df
-    prof = numeric_profile(df, "x")
+    prof = column_stats(df, {"x": "float"})["x"]
     # np.std ddof=0 (Latanova_v1.py:181) == stddev_pop
     assert prof["mean"] == pytest.approx(np.mean(vals), rel=1e-12)
     assert prof["std"] == pytest.approx(np.std(vals), rel=1e-12)
@@ -42,7 +37,7 @@ def test_numeric_profile_matches_numpy_scipy(num_df):
 
 def test_numeric_profile_degenerate(spark):
     one = spark.createDataFrame([(5.0,)], ["x"])
-    p = numeric_profile(one, "x")
+    p = column_stats(one, {"x": "float"})["x"]
     assert p["std"] == 0.0 and p["skew"] == 0.0 and p["kurtosis"] == 0.0
 
 
@@ -51,7 +46,7 @@ def test_bool_profile_excludes_nonvocab(spark):
     df = spark.createDataFrame(
         [("yes",), ("no",), ("Yes",), ("maybe",), ("TRUE",), (None,)], ["b"]
     )
-    p = bool_profile(df, "b")
+    p = column_stats(df, {"b": "boolean"})["b"]
     assert p["n_samples"] == 4  # maybe + null excluded
     assert p["true_count"] == 3 and p["false_count"] == 1
     assert p["true_probability"] == pytest.approx(0.75)
@@ -61,12 +56,12 @@ def test_bool_profile_excludes_nonvocab(spark):
 def test_bool_format_tie_break(spark):
     # tie → earliest dict key wins (Latanova_v1.py:118): true_false
     df = spark.createDataFrame([("true",), ("no",)], ["b"])
-    assert bool_profile(df, "b")["format"] == "true_false"
+    assert column_stats(df, {"b": "boolean"})["b"]["format"] == "true_false"
 
 
 def test_cat_profile_order_and_probs(spark):
     df = spark.createDataFrame([("a",)] * 3 + [("b",)] * 3 + [("c",)] * 1, ["v"])
-    p = cat_profile(df, "v")
+    p = column_stats(df, {"v": "categorical"})["v"]
     assert p["n_categories"] == 3
     # tie between a and b → value asc
     assert p["categories"][:2] == ["a", "b"]
@@ -80,11 +75,11 @@ def test_datetime_profile_epoch_parity(spark):
 
     dates = ["2020-01-01", "2020-06-15", "2021-12-31", "2020-01-01"]
     df = spark.createDataFrame([(d,) for d in dates], ["d"])
-    p = datetime_profile(df, "d")
+    p = column_stats(df, {"d": "datetime"})["d"]
     ts = pd.to_datetime(pd.Series(dates)).astype(np.int64) // 10**9
     assert p["mean"] == pytest.approx(np.mean(ts), rel=1e-12)
     assert p["std"] == pytest.approx(np.std(ts), rel=1e-9)
-    assert p["date_format"] == "YYYY-MM-DD"
+    assert detect_date_format(df, "d") == "YYYY-MM-DD"
     assert p["min_date"] == "2020-01-01 00:00:00"
     assert p["max_date"] == "2021-12-31 00:00:00"
 
@@ -111,7 +106,7 @@ def test_deterministic_exact_path_large_magnitude_falls_back(spark):
 def test_deterministic_integer_with_fractions_not_rounded(spark):
     """int_ratio >= 0.95 classes a column INTEGER even with a few
     fractional values; the decimal(9,0) cast must NOT silently round them
-    (the 'ifrac' guard validate.py already had)."""
+    (column_stats' fractional-part guard)."""
     from etl_processes_spark.profile import profile
 
     vals = [float(i % 9) for i in range(96)] + [1.5, 2.5, 3.5, 4.5]
@@ -177,3 +172,28 @@ def test_numeric_profile_distributed_route_bit_identical(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="auto\\|exact"):
         numeric_profile_df(df, "x", percentiles="bogus")
+
+
+def test_unknown_size_frame_routes_exact_with_partition_floor(spark, monkeypatch):
+    """An RDD-backed frame has no size estimate. percentiles="auto" must
+    treat it as small (exact), and the distributed selection must keep its
+    32-partition floor instead of sizing itself from an unknown estimate."""
+    from etl_processes_spark.profile import profilers
+
+    rdd = spark.sparkContext.parallelize([(float(i),) for i in range(100)], 2)
+    df = spark.createDataFrame(rdd, "x double")
+
+    widths = []
+    real = type(df).repartitionByRange
+
+    def spy(self, n, *cols):
+        widths.append(n)
+        return real(self, n, *cols)
+
+    monkeypatch.setattr(type(df), "repartitionByRange", spy)
+    row = profilers.numeric_profile_df(df, "x").collect()[0]
+    assert row["median"] == 49.5 and row["n_samples"] == 100
+    assert widths == []  # exact route: no range partitioning
+    n, (med,) = profilers.exact_percentiles_distributed(df, "x", [0.5])
+    assert (n, med) == (100, 49.5)
+    assert widths == [profilers.DISTRIBUTED_PARTS]

@@ -1422,7 +1422,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         li = _t(spark, sf, "lineitem")
         # grouping_id() must be computed inside the agg, so the rollup part
-        # re-states sales_rollup's agg with the gid column added
+        # is stated here with the gid column in it
         roll = (
             li.rollup("l_returnflag", "l_linestatus")
             .agg(

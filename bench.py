@@ -562,8 +562,8 @@ def main() -> None:
                 # 32-core round record in the working tree (round-12 verdict
                 # ask #2) — a run at any non-default core count now writes
                 # BENCH_r{N}_c{CPUS}[_sf..].json and can never clobber it.
-                cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
-                csuffix = "" if cpus_env == "32" else f"_c{cpus_env}"
+                cpus = spark.sparkContext.defaultParallelism
+                csuffix = "" if cpus == 32 else f"_c{cpus}"
                 out_paths.append(
                     os.path.join(repo, f"BENCH_r{rnd:02d}{csuffix}{suffix}.json")
                 )

@@ -44,10 +44,6 @@ def csv_scan(
     )
 
 
-def parquet_scan(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def csv_sink(df: DataFrame, path: str, single_file: bool = True) -> None:
     """to_csv(index=False) equivalent (Latanova_v1.py:705). Writes RFC4180
     doubled-quote escapes so csv_scan (and pandas) read back verbatim."""

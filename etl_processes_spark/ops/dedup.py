@@ -13,8 +13,8 @@ the driver-mandated extensions (BASELINE.json north star), designed for the
  - MinHash + LSH: per-doc signature via min-over-shingles of seeded xxhash64
    (one explode + one groupBy), banded into buckets; candidate pairs only
    join within a bucket (no quadratic blow-up), then exact-Jaccard verified.
- - SimHash: 64-bit sign-sum fingerprint via 64 conditional aggregates over
-   exploded token hashes; near-dups = equal fingerprints (or banded Hamming).
+ - SimHash: 60-bit sign-sum fingerprint via 60 conditional aggregates over
+   exploded token hashes; near-dups = equal fingerprints.
 
 All tokenization/shingling is pure Column expressions (JVM-side, codegen).
 """
@@ -28,20 +28,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_processes_spark.partitioning import track_checkpoint, widen
-
-
-def _stage_log(msg: str) -> None:
-    """Opt-in stage attribution (``SPARK_GRAFT_STAGE_LOG=1``): wall timings
-    of the eager materialization points inside composed operators, printed
-    to stderr so a bench line's cost can be attributed to its stages
-    without changing any plan (round-10 verdict ask #6 — the
-    dedup_clusters_minhash sf100 regression had a byte-identical plan, so
-    the next instrument down is per-stage wall)."""
-    import os
-    import sys
-
-    if os.environ.get("SPARK_GRAFT_STAGE_LOG"):
-        print(f"# stage {msg}", file=sys.stderr, flush=True)
 
 
 def _ckpt_wide(df: DataFrame) -> DataFrame:
@@ -321,7 +307,7 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
     ndigits: int = 6,
     mode: str = "auto",
-    log_dropped: bool | None = None,
+    log_dropped: bool = False,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with Jaccard(shingleset_a, shingleset_b) >=
     threshold. Exact; the self-join is on the shingle key (inverted index),
@@ -369,16 +355,11 @@ def ngram_jaccard_pairs(
         # certified by the oracle gate, which mirrors max_df in SQL). One
         # tiny agg over the checkpointed freq frame; the same blocks feed
         # the keep-filter join below, so the groupBy still runs once.
-        # OPT-IN (log_dropped=True, or SPARK_GRAFT_STAGE_LOG like _stage_log
-        # when unset): the diagnostic is an eager action — running it at
-        # plan-CONSTRUCTION time would break laziness for every library
-        # caller that builds the plan without executing it (round-11
-        # advice). The bench diagnostic line passes log_dropped=True.
-        import os
-
-        if log_dropped or (
-            log_dropped is None and os.environ.get("SPARK_GRAFT_STAGE_LOG")
-        ):
+        # OPT-IN (log_dropped=True): the diagnostic is an eager action —
+        # running it at plan-CONSTRUCTION time would break laziness for
+        # every library caller that builds the plan without executing it.
+        # The bench diagnostic line passes log_dropped=True.
+        if log_dropped:
             d = freq.filter(F.col("__df") > max_df).agg(
                 F.count(F.lit(1)).alias("b"),
                 F.sum(F.col("__df") * (F.col("__df") - 1) / 2).alias("p"),
@@ -778,24 +759,16 @@ def connected_components(
     # branches over the same (expensive) pair pipeline materializes it
     # twice — Spark has no cross-branch subplan reuse — so the reversal is
     # derived from the checkpoint, not recomputed
-    import time as _time
-
     from etl_processes_spark.partitioning import release_checkpoint
 
-    t0 = _time.time()
     edges = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     edges = edges.localCheckpoint(eager=True)
     # size the iteration's shuffle to the edge count (post-checkpoint count is
     # a cheap cached scan): tiny dup graphs iterate in one partition instead
     # of paying 32-task scheduling per round; huge graphs keep full width
     n_edges = edges.count()
-    # the eager checkpoint materializes the WHOLE upstream pair pipeline, so
-    # this first mark is the edge-GENERATION cost, not CC's own
-    _stage_log(f"cc.edge_materialize n_edges={n_edges} {_time.time() - t0:.1f}s")
     if 2 * n_edges <= driver_max_edges:
-        t1 = _time.time()
         out = _cc_driver_union_find(edges)
-        _stage_log(f"cc.driver_union_find {_time.time() - t1:.1f}s")
         # the result lives on the driver now (createDataFrame) — the edge
         # checkpoint's blocks are dead weight the moment toPandas returned
         release_checkpoint(edges)
@@ -819,8 +792,7 @@ def connected_components(
     labels = labels.localCheckpoint(eager=True)
     prev_sum = None
     converged = False
-    for _it in range(max_iterations):
-        t_it = _time.time()
+    for _ in range(max_iterations):
         nbr = (
             und.join(labels.withColumnRenamed("node", "s"), "s")
             .groupBy(F.col("d").alias("node"))
@@ -845,7 +817,6 @@ def connected_components(
         # labels only ever decrease, so an unchanged label-sum IS the
         # fixpoint — one small aggregate instead of a join + count per round
         s = jumped.agg(F.sum("label")).collect()[0][0]
-        _stage_log(f"cc.iter {_it} label_sum={s} {_time.time() - t_it:.1f}s")
         release_checkpoint(labels)  # superseded by the materialized jumped
         labels = jumped
         if s == prev_sum:
@@ -1077,40 +1048,6 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str, bits: int = 
         term = bit * F.lit(2 ** i).cast("long")
         fp = term if fp is None else fp + term
     return sums.select("id", fp.alias("simhash"))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame, id_col: str, text_col: str, band_bits: int = 15
-) -> DataFrame:
-    """Candidate near-dup pairs whose simhash matches on at least one of the
-    60/band_bits bands (Hamming-distance blocking)."""
-    fp = simhash_fingerprints(df, id_col, text_col)
-    nb = 60 // band_bits
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), i * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("bh"),
-            )
-            for i in range(nb)
-        ]
-    )
-    buckets = fp.select("id", F.explode(bands).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
 
 
 def select_cluster_survivors(

@@ -150,15 +150,6 @@ def top_orders_per_priority(orders: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def sales_rollup(lineitem: DataFrame) -> DataFrame:
-    """ROLLUP over (returnflag, linestatus): subtotals + grand total in one
-    pass (Expand + single shuffle)."""
-    return lineitem.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum("l_quantity").alias("sum_qty"),
-    )
-
-
 def pivot_returnflag(lineitem: DataFrame) -> DataFrame:
     """Pivot l_returnflag into columns of quantity sums per linestatus.
     Values enumerated explicitly — never let pivot() run its distinct-scan

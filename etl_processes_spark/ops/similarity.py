@@ -1,19 +1,18 @@
-"""Embedding similarity search — brute-force cosine top-k (exact baseline)
-and LSH-bucketed ANN (the scale path). No reference counterpart (the
-reference's only similarity op is the k-NN vocabulary decode,
-Latanova_v1.py:338); these are the driver-mandated extensions.
+"""Embedding similarity search — exact cosine top-k, LSH-bucketed and
+IVF/PQ ANN (the scale paths), and embedding near-dup / semantic dedup. No
+reference counterpart (the reference's only similarity op is the k-NN
+vocabulary decode, Latanova_v1.py:338); these are the driver-mandated
+extensions.
 
 Scale notes:
- - Brute force is a broadcast nested-loop of queries × corpus — correct and
-   cheap when ONE side is small (broadcast the queries). The dot product is a
-   JVM-side ``aggregate(zip_with(...))`` expression — no Python in the loop.
+ - Exact top-k (``cosine_topk_fast``) collects the small query side and
+   broadcasts its normalized matrix; the corpus is streamed, and per Arrow
+   batch (mapInPandas) one numpy matmul scores the whole block — BLAS beats
+   per-element codegen when both sides are dense float blocks.
  - ``ann_cosine_lsh`` buckets by random-hyperplane signature (SimHash for
    vectors): equi-join on (band, band-signature) so candidate generation is
    linear-ish; multiprobe = more bands. Recall/cost tunable via
    (num_planes, bands).
- - For massive query sets, ``cosine_topk_blocked`` does the matmul in numpy
-   per Arrow batch (mapInPandas) against a broadcast corpus matrix — BLAS
-   beats per-element codegen when both sides are dense float blocks.
 """
 
 from __future__ import annotations
@@ -31,23 +30,7 @@ def _as_double_array(c: str | Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Sequential-order dot/norms — same summation order as the DuckDB
-    oracle's list_cosine_similarity over DOUBLE[], so rounded values match."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
-def cosine_topk(
+def cosine_topk_fast(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
@@ -55,54 +38,19 @@ def cosine_topk(
     k: int = 5,
     ndigits: int = 6,
 ) -> DataFrame:
-    """Exact top-k neighbors per query: (query_id, neighbor_id, cosine_sim,
-    rank). Queries are broadcast; ranking uses the ROUNDED similarity with
-    neighbor-id tie-break, so results are deterministic and oracle-stable.
-    Self-matches are excluded when ids collide."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double_array(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double_array(vec_col).alias("cv")
-    )
-    sims = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_expr(F.col("qv"), F.col("cv")), ndigits).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    """Exact top-k neighbors per query: (query_id, neighbor_id, cosine_sim
+    rounded to ``ndigits``, rank), ranked by (rounded sim desc, neighbor_id
+    asc); self-matches are excluded when ids collide.
 
-
-def cosine_topk_blocked(
-    corpus: DataFrame,
-    queries_pdf: pd.DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    ndigits: int = 6,
-) -> DataFrame:
-    """Brute-force top-k with the corpus STREAMED and the query matrix
-    broadcast: per Arrow batch, one BLAS matmul scores the whole block.
-    Partial top-k per partition, final top-k via a window — the classic
-    scalable ANN-exact pattern (corpus never collected).
-
-    Output contract matches ``cosine_topk`` exactly: (query_id, neighbor_id,
-    cosine_sim rounded to ``ndigits``, rank), ranked by (rounded sim desc,
-    neighbor_id asc). Partial selection inside the kernel uses the SAME total
-    order (np-rounded sim desc, neighbor asc) plus a small slack so the
-    global top-k is always contained in the union of per-batch top-k even
-    when many sims tie at the rounded precision."""
+    The query side is collected to the driver (it must be small) and its
+    normalized matrix broadcast; the corpus is STREAMED, and per Arrow batch
+    one BLAS matmul scores the whole block. Partial top-k per batch, final
+    top-k via a window, so the corpus is never collected. Partial selection
+    inside the kernel uses the SAME total order (np-rounded sim desc,
+    neighbor asc) plus a small slack so the global top-k is always contained
+    in the union of per-batch top-k even when many sims tie at the rounded
+    precision."""
+    queries_pdf = queries.select(id_col, vec_col).toPandas()
     spark = corpus.sparkSession
     qids = queries_pdf[id_col].to_numpy().astype(np.int64)
     qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
@@ -157,22 +105,6 @@ def cosine_topk_blocked(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine_sim", "rank")
     )
-
-
-def cosine_topk_fast(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    ndigits: int = 6,
-) -> DataFrame:
-    """Drop-in replacement for ``cosine_topk`` (same inputs, same output
-    schema/rounding/ranking) on the blocked BLAS path. The query side is
-    collected to the driver — it must be small, which is already the contract
-    of the broadcast in ``cosine_topk``."""
-    qpdf = queries.select(id_col, vec_col).toPandas()
-    return cosine_topk_blocked(corpus, qpdf, id_col, vec_col, k=k, ndigits=ndigits)
 
 
 def cosine_pairs_udf():
@@ -1256,10 +1188,10 @@ def pq_topk(
     an (m, ksub) inner-product lookup table is precomputed driver-side and
     broadcast; scoring a corpus item is m table lookups + a sum — no
     floating-point vector math per candidate. Output contract matches
-    cosine_topk: (query_id, neighbor_id, cosine_sim, rank) where cosine_sim
-    is the ADC APPROXIMATION of cosine (rounded), ranked (sim desc,
-    neighbor_id asc). Partial top-k per partition (same slack trick as
-    cosine_topk_blocked), final top-k via window.
+    cosine_topk_fast: (query_id, neighbor_id, cosine_sim, rank) where
+    cosine_sim is the ADC APPROXIMATION of cosine (rounded), ranked (sim
+    desc, neighbor_id asc). Partial top-k per partition (same slack trick as
+    cosine_topk_fast), final top-k via window.
 
     100 TB shape: the scanned side is the codes frame (m bytes/row), query
     tables are (nq, m, ksub) floats broadcast once, and the shuffle after
@@ -1516,7 +1448,7 @@ def ann_cosine_ivf_pq(
     isin BEFORE any Python — on a cell-clustered index it prunes at the
     parquet row-group level. Per-query cell masks apply inside the scoring
     kernel (boolean table lookup, no vector math). Output contract matches
-    cosine_topk/ann_cosine_pq: (query_id, neighbor_id, cosine_sim, rank),
+    cosine_topk_fast/ann_cosine_pq: (query_id, neighbor_id, cosine_sim, rank),
     cosine_sim = ADC approximation, rank by (sim desc, neighbor_id asc).
     With ``refine`` = r, the ADC stage over-fetches r*k candidates per
     query and ``exact_rerank`` re-scores them against the true vectors.

@@ -1,16 +1,19 @@
-"""Skew-mitigation utilities for 100 TB joins/aggregations.
+"""Skew-mitigation utilities for 100 TB joins.
 
 AQE's skew-join splitting (enabled in session.py) handles most runtime skew;
 these utilities cover the cases AQE can't re-plan:
 
  - ``salted_join``: explicit key-salting for a shuffle join where one key
    dominates (AQE splits partitions, but a single monster KEY still lands in
-   one task per split boundary). Salts the big side N ways and explodes the
-   small side N ways — classic, deterministic, works on any join type that
-   reduces to inner/left on the salted key.
- - ``two_phase_count``: skew-proof groupBy for hot keys — partial aggregate
-   on (key, salt) then re-aggregate on key, bounding any single task's input
-   to ~1/N of the hottest key.
+   one task per split boundary). Salts the big side's hot keys N ways and
+   explodes the matching small-side rows N ways — deterministic, works on
+   any join type that reduces to inner/left on the salted key.
+ - ``bloom_semi_filter`` / ``bloom_join``: semi-join reduction for a small
+   side too big to broadcast whose key set still fits a bloom filter — rows
+   of the big side that cannot match are dropped before its shuffle.
+
+A skewed ``groupBy(key).count()`` needs no utility: Spark's partial
+aggregation already collapses a hot key map-side.
 """
 
 from __future__ import annotations
@@ -38,12 +41,11 @@ def _row_salt(n_buckets: int) -> Column:
     a bug in repetition_stats): a retried/recomputed task may assign
     different salt values to the same rows, but salt never reaches a result
     — salted_join drops it after the join (every salt matches the exploded
-    small side identically), and two_phase_count sums the per-(key,salt)
-    partials back to per-key, so any partition of rows into buckets yields
-    the same totals. A retry shifts LOAD PLACEMENT only; join/aggregate
-    RESULTS are salt-invariant by construction (pinned by tests). Using MII
-    as a row IDENTITY key (what repetition_stats once did) is the unsafe
-    pattern, because there the value itself survives into the output."""
+    small side identically), so any partition of rows into buckets yields
+    the same result. A retry shifts LOAD PLACEMENT only; join RESULTS are
+    salt-invariant by construction (pinned by tests). Using MII as a row
+    IDENTITY key (what repetition_stats once did) is the unsafe pattern,
+    because there the value itself survives into the output."""
     return F.abs(F.xxhash64(F.monotonically_increasing_id())) % n_buckets
 
 
@@ -153,16 +155,6 @@ def salted_join(
     )
     s_s = small.withColumn("__salt", F.explode(F.when(is_hot, all_salts).otherwise(zero)))
     return b_s.join(s_s, [key, "__salt"], how).drop("__salt")
-
-
-def two_phase_count(df: DataFrame, key: str, salt_buckets: int = 32) -> DataFrame:
-    """groupBy(key).count() that survives a single dominant key: partial
-    count on (key, salt), final sum on key. (Spark's partial aggregation
-    already does this map-side; the explicit salt guards reduce-side skew
-    when upstream partitioning clusters the hot key.)"""
-    salted = df.withColumn("__salt", _row_salt(salt_buckets))
-    partial = salted.groupBy(key, "__salt").agg(F.count(F.lit(1)).alias("__c"))
-    return partial.groupBy(key).agg(F.sum("__c").alias("count"))
 
 
 # ---------------------------------------------------------------------------

@@ -91,7 +91,7 @@ def run_training_data_pipeline(
     semantic_vec_col: str = "embedding",
     shuffle_seed: int | None = None,
     stage_hook=None,
-    manage_storage: bool | None = None,
+    manage_storage: bool = True,
 ) -> DataFrame:
     """The LLM training-data assembly flow, composed from the extension
     operators — what a user runs over raw documents before tokenization:
@@ -143,24 +143,22 @@ def run_training_data_pipeline(
 
     ``stage_hook``: optional fn(stage_name, df) -> df called at every stage
     BOUNDARY with the stage's output frame; whatever it returns feeds the
-    next stage. The per-stage profiler (tools/profile_e2e.py) passes an
-    eager-checkpoint-and-time hook so each stage's wall time is attributed
-    cleanly (a later stage can't silently recompute an earlier one); None
-    (default) adds nothing to the plan.
+    next stage. A tracer passes one to attribute work to stages (with
+    ``manage_storage`` on, each boundary is already materialized, so a
+    later stage never recomputes an earlier one); None (default) adds
+    nothing to the plan.
 
-    ``manage_storage`` (default: on exactly when no ``stage_hook`` is
-    passed): the pipeline's own storage lifecycle. Several stages pin
-    full-corpus localCheckpoint block sets internally (span-dedup token
-    windows, CC edge lists, SemDeDup cells, posting streams); left alone,
-    every stage's set stays pinned until job end — at sf100 the FULL
-    config exhausted the disk the corpus itself needed (round-8 ENOSPC).
-    With management on, each stage boundary is eagerly checkpointed
-    (serialized MEMORY_AND_DISK) and, once that materializes, everything
-    the stage pinned internally — plus the previous boundary — is
-    released (blocking). A boundary is only taken when there is something
-    to release, so cheap stages add no serialization pass. Results are
-    value-identical either way; callers that pass their own ``stage_hook``
-    (the profiler) own the lifecycle instead unless they opt back in."""
+    ``manage_storage`` (default on): the pipeline's own storage lifecycle.
+    Several stages pin full-corpus localCheckpoint block sets internally
+    (span-dedup token windows, CC edge lists, SemDeDup cells, posting
+    streams); left alone, every stage's set stays pinned until job end — at
+    sf100 the FULL config exhausted the disk the corpus itself needed
+    (round-8 ENOSPC). With management on, each stage boundary is eagerly
+    checkpointed (serialized MEMORY_AND_DISK) and, once that materializes,
+    everything the stage pinned internally — plus the previous boundary —
+    is released (blocking). A boundary is only taken when there is
+    something to release, so cheap stages add no serialization pass.
+    Results are value-identical either way."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
@@ -173,13 +171,12 @@ def run_training_data_pipeline(
         release_collected,
     )
 
-    manage = manage_storage if manage_storage is not None else stage_hook is None
     _tracked: list[DataFrame] = []
     _prev_boundary: list[DataFrame] = []
     _persisted: list[DataFrame] = []
 
     def _h(stage: str, frame: DataFrame) -> DataFrame:
-        if manage and (_tracked or _prev_boundary or _persisted):
+        if manage_storage and (_tracked or _prev_boundary or _persisted):
             # materialize the boundary FIRST (self-contained LogicalRDD),
             # then free what it supersedes: the stage's internal checkpoint
             # blocks and the boundary it consumed. Serialized blocks — the
@@ -202,7 +199,7 @@ def run_training_data_pipeline(
             _prev_boundary.append(frame)
         return stage_hook(stage, frame) if stage_hook is not None else frame
 
-    _scope = collect_checkpoints() if manage else None
+    _scope = collect_checkpoints() if manage_storage else None
     if _scope is not None:
         _tracked = _scope.__enter__()
     try:
@@ -312,7 +309,7 @@ def run_training_data_pipeline(
             # dedup/scoring work above isn't executed once per downstream job
             # (registered for release at the next boundary when managing)
             filtered = filtered.persist()
-            if manage:
+            if manage_storage:
                 _persisted.append(filtered)
             lm = unigram_logprob_score(filtered, id_col, text_col)
             filtered = _h(
@@ -363,7 +360,7 @@ def run_training_data_pipeline(
             # held a full-corpus cache AND blocked the previous boundary's
             # release via the cache manager's InMemoryRelation substitution)
             filtered = filtered.persist()
-            if manage:
+            if manage_storage:
                 _persisted.append(filtered)
             packed = pack_documents(filtered, pack_key, "n_tokens", pack_budget)
             out = _h(

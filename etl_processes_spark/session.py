@@ -13,12 +13,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_driver_mem() -> str:
+    """Driver heap of at most 3/4 of physical memory, capped at 48g: the
+    heap is the whole local[N] cluster's memory, and a heap larger than
+    RAM swaps or gets the JVM killed instead of triggering GC."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, kib * 3 // 4 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "etl_processes_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # Env overrides: SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM,
+    # SPARK_GRAFT_SHUFFLE_PARTITIONS. The defaults come from the host: the
+    # CPUs in this process's affinity mask (a container or taskset may
+    # grant fewer than the machine has) and its physical memory.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     # Initial shuffle width = 8× the core count (the canonical AQE pattern:
     # start high, let coalescing merge small shuffles back down to the
@@ -54,8 +70,10 @@ def get_spark(
         # local[N] puts driver + all executor threads in ONE JVM: size the
         # heap for N concurrent tasks' shuffle/agg buffers, or GC thrash
         # silently multiplies query times (measured 5-10x on this harness).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
+        # the \r progress frames flood stderr and any captured log
+        .config("spark.ui.showConsoleProgress", "false")
     )
     # testdata events.parquet is TIMESTAMP(NANOS); with this legacy flag Spark
     # reads it as long (nanos), without it as TIMESTAMP_NTZ — loaders handle

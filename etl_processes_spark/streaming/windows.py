@@ -434,41 +434,6 @@ def rollup_read(state: DataFrame, ndigits: int = 6) -> DataFrame:
     )
 
 
-def sessionize_native(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Gap sessionization via Spark's NATIVE ``session_window`` aggregate —
-    the same session boundaries as ``sessionize`` (lag+cumsum) but computed
-    by the engine's built-in session operator: one shuffle on the grouping
-    key, sessions merged inside the aggregation, and — unlike the window-
-    function formulation — directly usable in Structured Streaming with a
-    watermark (state expires per closed session).
-
-    Returns (user_id, session_start, session_end, n_events, sum_value) —
-    no session ordinal: the native operator has no per-user numbering; join
-    on (user_id, session_start) against ``sessionize``'s output when the
-    ordinal matters (row-for-row boundary parity is pinned by tests).
-
-    Semantics note: session_window closes a session ``gap`` after the last
-    event and a successor at EXACTLY gap distance still merges (verified:
-    two events 30 min apart form ONE 30-min-gap session) — the same
-    inclusive boundary as the lag+cumsum form's ``diff > gap`` split rule,
-    so the two formulations agree row-for-row (pinned by tests, boundary
-    case included)."""
-    events = ensure_timestamp(events, "ts")
-    return (
-        events.groupBy(
-            F.session_window(F.col("ts"), f"{gap_minutes} minutes").alias("w"),
-            F.col("user_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events", "sum_value")
-    )
-
-
 def continuous_rollup_stream(
     spark,
     source_path: str,

@@ -45,13 +45,13 @@ _TOKEN_RE = re.compile(r"(?:(?!\d)\w)+", re.UNICODE)
 MIN_TOKEN_LEN, MAX_TOKEN_LEN = 2, 15
 
 
-def tokenize(text: str, min_len: int = MIN_TOKEN_LEN) -> list[str]:
+def tokenize(text: str) -> list[str]:
     if text is None:
         return []
     return [
         t
         for t in _TOKEN_RE.findall(str(text).lower())
-        if min_len <= len(t) <= MAX_TOKEN_LEN
+        if MIN_TOKEN_LEN <= len(t) <= MAX_TOKEN_LEN
     ]
 
 
@@ -132,59 +132,6 @@ def vectorise_udf(vector_size: int = VECTOR_SIZE):
         return s.map(one)
 
     return _vec
-
-
-def vectorise_entry_mean(entry: str, vector_size: int = VECTOR_SIZE) -> np.ndarray:
-    """Mean-pooled entry embedding — the reference's get_vectorised_entries
-    (Latanova_v1.py:23-43; dead code there, implemented here for API
-    completeness and because mean-pooling is the pooling that scales: a
-    V-dim vector per entry instead of 32·V). Reference parity: tokens are
-    simple_preprocess(min_len=1) — NOT the concat path's min_len=2 — with
-    no 32-token truncation, and a token-less entry embeds as zeros(V)."""
-    toks = tokenize(entry, min_len=1)
-    if not toks:
-        return np.zeros(vector_size)
-    return np.mean([token_vector(t, vector_size) for t in toks], axis=0)
-
-
-def vectorise_mean_udf(vector_size: int = VECTOR_SIZE):
-    """Arrow-batched pandas_udf twin of vectorise_entry_mean (same
-    per-executor token cache as the concat variant)."""
-    cache: dict[str, np.ndarray] = {}
-
-    def tv(tok: str) -> np.ndarray:
-        v = cache.get(tok)
-        if v is None:
-            if len(cache) > 500_000:
-                cache.clear()
-            v = cache[tok] = token_vector(tok, vector_size)
-        return v
-
-    def one(entry: str) -> list[float]:
-        toks = tokenize(entry, min_len=1)
-        if not toks:
-            return [0.0] * vector_size
-        acc = np.zeros(vector_size)
-        for t in toks:
-            acc += tv(t)
-        return (acc / len(toks)).tolist()
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _vec(s: pd.Series) -> pd.Series:
-        return s.map(one)
-
-    return _vec
-
-
-def embed_entries_mean(
-    df: DataFrame, c: str, vector_size: int = VECTOR_SIZE
-) -> DataFrame:
-    """df + ``__vec`` of V doubles (mean-pooled; see vectorise_entry_mean)."""
-    from etl_processes_spark.partitioning import widen
-
-    return widen(df).withColumn(
-        "__vec", vectorise_mean_udf(vector_size)(F.col(c).cast("string"))
-    )
 
 
 def embed_entries(df: DataFrame, c: str, vector_size: int = VECTOR_SIZE) -> DataFrame:

@@ -11,7 +11,6 @@ from etl_processes_spark.ops.dedup import (
     ngram_jaccard_pairs,
     shingles_expr,
     simhash_fingerprints,
-    simhash_near_dup_pairs,
     tokens_expr,
 )
 
@@ -133,11 +132,6 @@ def test_simhash_identical_for_dups(docs):
     fp = {r["id"]: r["simhash"] for r in simhash_fingerprints(docs, "doc_id", "text").collect()}
     assert fp[0] == fp[1] == fp[3]
     assert fp[0] != fp[4]
-    cand = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_dup_pairs(docs, "doc_id", "text", band_bits=16).collect()
-    }
-    assert (0, 1) in cand
 
 
 def test_connected_components_chain_and_islands(spark):

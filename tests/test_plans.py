@@ -52,22 +52,6 @@ def test_numeric_profile_single_column_scan(spark, sf001):
     assert "l_orderkey" not in read_schema
 
 
-def test_cosine_topk_broadcasts_queries(spark):
-    from pyspark.sql import functions as F, types as T
-
-    from etl_processes_spark.ops.similarity import cosine_topk
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    df = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(50)], schema)
-    plan = _plan(cosine_topk(df, df.filter("vec_id < 3"), k=2))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def _emb_df(spark, n=50):
     from pyspark.sql import types as T
 

@@ -1,5 +1,5 @@
-"""Similarity-search tests: brute-force top-k vs numpy ground truth; blocked
-(mapInPandas) variant agrees with expression variant; LSH recall sanity."""
+"""Similarity-search tests: exact top-k vs numpy ground truth; LSH recall
+sanity."""
 
 import numpy as np
 import pytest
@@ -7,8 +7,6 @@ from pyspark.sql import types as T
 
 from etl_processes_spark.ops.similarity import (
     ann_cosine_lsh,
-    cosine_topk,
-    cosine_topk_blocked,
     cosine_topk_fast,
     embedding_near_dup_pairs,
 )
@@ -35,62 +33,41 @@ def emb(spark):
     return df, mat
 
 
-def _numpy_topk(mat, qids, k=5):
+def _numpy_sims(mat):
     m = mat.astype(np.float64)
     m = m / np.linalg.norm(m, axis=1, keepdims=True)
-    sims = m @ m.T
+    return np.round(m @ m.T, 6)
+
+
+def _numpy_topk(mat, qids, k=5):
+    sims = _numpy_sims(mat)
     out = {}
     for q in qids:
-        order = [
-            i for i in np.argsort(-np.round(sims[q], 6), kind="stable") if i != q
-        ][:k]
+        order = [i for i in np.argsort(-sims[q], kind="stable") if i != q][:k]
         out[q] = order
     return out
 
 
 def test_cosine_topk_matches_numpy(emb):
     df, mat = emb
-    res = cosine_topk(df, df.filter("vec_id < 5"), k=5).collect()
-    expected = _numpy_topk(mat, range(5), 5)
+    res = cosine_topk_fast(df, df.filter("vec_id < 5"), k=5).collect()
+    assert all(r["query_id"] != r["neighbor_id"] for r in res)  # no self-match
+    sims = _numpy_sims(mat)
+    expected = {
+        q: [(i, sims[q, i]) for i in ids]
+        for q, ids in _numpy_topk(mat, range(5), 5).items()
+    }
     got = {}
     for r in sorted(res, key=lambda r: (r["query_id"], r["rank"])):
-        got.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    for q in range(5):
-        assert got[q] == expected[q], f"query {q}"
+        got.setdefault(r["query_id"], []).append((r["neighbor_id"], r["cosine_sim"]))
+    assert got == expected
 
 
 def test_planted_neighbor_found(emb):
     df, _ = emb
-    res = cosine_topk(df, df.filter("vec_id = 7"), k=1).collect()
+    res = cosine_topk_fast(df, df.filter("vec_id = 7"), k=1).collect()
     assert res[0]["neighbor_id"] == 3
     assert res[0]["cosine_sim"] > 0.99
-
-
-def test_blocked_variant_agrees(emb):
-    df, mat = emb
-    qpdf = df.filter("vec_id < 5").toPandas()
-    a = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in cosine_topk(df, df.filter("vec_id < 5"), k=3).collect()
-    }
-    b = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in cosine_topk_blocked(df, qpdf, k=3).collect()
-    }
-    assert a == b
-
-
-def test_fast_variant_agrees_with_expression_variant(emb):
-    df, _ = emb
-    a = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-        for r in cosine_topk(df, df.filter("vec_id < 5"), k=4).collect()
-    }
-    b = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-        for r in cosine_topk_fast(df, df.filter("vec_id < 5"), k=4).collect()
-    }
-    assert a == b
 
 
 def test_near_dup_exact_blocked_matches_numpy(emb):

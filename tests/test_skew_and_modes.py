@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_processes_spark.generate.generators import gen_categorical_join
-from etl_processes_spark.ops.skew import salted_join, two_phase_count
+from etl_processes_spark.ops.skew import salted_join
 from etl_processes_spark.profile import infer_types
 
 
@@ -17,13 +17,6 @@ def test_salted_join_equals_plain_join(spark):
     plain = big.join(small, "k").select("k", "v", "name")
     salted = salted_join(big, small, "k", salt_buckets=8).select("k", "v", "name")
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_two_phase_count_matches(spark):
-    df = spark.range(3000).select((F.col("id") % 3).alias("k"))
-    a = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
-    b = {r["k"]: r["count"] for r in two_phase_count(df, "k").collect()}
-    assert a == b
 
 
 def test_gen_categorical_join_large_domain(spark):

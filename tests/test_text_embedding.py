@@ -259,32 +259,6 @@ def test_powersums_same_on_both_sides_of_the_merge_route(spark, monkeypatch):
             assert np.array_equal(a, b)
 
 
-def test_embed_mean_reference_parity(spark):
-    """embed_mean (reference dead code, Latanova_v1.py:23-43): mean of ALL
-    token vectors (min_len=1, no 32-token cap), zeros for token-less."""
-    import numpy as np
-
-    from etl_processes_spark.text.embedding import (
-        embed_entries_mean,
-        token_vector,
-        tokenize,
-        vectorise_entry_mean,
-    )
-
-    text = "a quick brown fox " * 20  # 80 tokens incl. len-1 'a' > the 32 cap
-    toks = tokenize(text, min_len=1)
-    assert len(toks) == 80 and "a" in toks
-    expect = np.mean([token_vector(t, 4) for t in toks], axis=0)
-    np.testing.assert_allclose(vectorise_entry_mean(text, 4), expect, rtol=0, atol=0)
-    assert (vectorise_entry_mean("", 4) == np.zeros(4)).all()
-    assert (vectorise_entry_mean("123 456", 4) == np.zeros(4)).all()  # digits drop
-
-    df = spark.createDataFrame([(1, text), (2, None), (3, "07 9")], ["id", "t"])
-    got = {r["id"]: np.array(r["__vec"]) for r in embed_entries_mean(df, "t", 4).collect()}
-    np.testing.assert_allclose(got[1], expect, rtol=0, atol=0)
-    assert (got[2] == 0).all() and (got[3] == 0).all()
-
-
 def test_medians_matches_spark_median(spark):
     """_medians (histogram-bracketed distributed selection — the no-explode
     100 TB path) must be BIT-IDENTICAL to F.median over the posexploded

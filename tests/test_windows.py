@@ -159,23 +159,12 @@ def test_rollup_upsert_batch_fold_equals_full(spark, sf_dir):
     assert sorted(map(tuple, again)) == sorted(map(tuple, folded))
 
 
-def test_sessionize_native_matches_lag_cumsum(spark, sf_dir):
-    import __spark_entry__ as entrymod
-    from etl_processes_spark.streaming.windows import sessionize, sessionize_native
-
-    ev = entrymod._load_events(spark, sf_dir)
-    cols = ["user_id", "session_start", "session_end", "n_events", "sum_value"]
-    a = sorted(map(tuple, sessionize(ev, 30).select(*cols).collect()))
-    b = sorted(map(tuple, sessionize_native(ev, 30).collect()))
-    assert a == b and len(a) > 100
-
-
-def test_sessionize_native_boundary_semantics(spark):
-    # exactly-gap successor MERGES in both formulations (inclusive
-    # boundary); one tick past the gap splits in both
+def test_sessionize_gap_boundary_semantics(spark):
+    # exactly-gap successor MERGES (inclusive boundary); one tick past the
+    # gap splits
     import datetime as dt
 
-    from etl_processes_spark.streaming.windows import sessionize, sessionize_native
+    from etl_processes_spark.streaming.windows import sessionize
 
     def mk(second):
         return spark.createDataFrame(
@@ -187,6 +176,4 @@ def test_sessionize_native_boundary_semantics(spark):
         )
 
     assert sessionize(mk(0), 30).count() == 1
-    assert sessionize_native(mk(0), 30).count() == 1
     assert sessionize(mk(1), 30).count() == 2
-    assert sessionize_native(mk(1), 30).count() == 2

@@ -915,8 +915,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_text_analysis(spark, sf):
         # token counting + language ID + quality scoring + unigram-LM
-        # fluency score in one wide per-doc gate slot. token_count and
-        # lang_id are ROW-WISE expressions, so they fuse into one projection
+        # fluency score in one wide per-doc gate slot. Token counts and
+        # lang-ID are ROW-WISE expressions, so they fuse into one projection
         # (the pipeline.py pattern) — only the two genuinely aggregating
         # frames (quality features, LM score) join back on doc_id: 2 joins,
         # not 4, each a full-corpus shuffle at scale. Token-less docs

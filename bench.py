@@ -222,42 +222,36 @@ def main() -> None:
     # from a code change without the spreads).
     repeats: dict[str, list[float]] = {}
 
-    # Per-line shuffle-write / spill telemetry (round-7 verdict ask): both
-    # 100x-only failures that round (deserialized-checkpoint OOM,
-    # denormalized-index disk death) were invisible until the run died —
-    # record the bytes per query so the next one shows up as a number
-    # first. Read from the JVM AppStatusStore (populated with the UI off);
-    # scoped to the stages each repeat created (stage ids are monotonic, so
-    # summing stages with id > the pre-repeat max is eviction-safe). All
-    # best-effort: telemetry must never void a benchmark record.
-    def _stage_seq(min_id: int):
-        store = spark.sparkContext._jsc.sc().statusStore()
-        args = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-        it = store.stageList(None, *args).iterator()
-        while it.hasNext():
-            s = it.next()
-            if s.stageId() > min_id:
-                yield s
+    # Per-line Spark counters of the best repeat, so a line's cost shows up
+    # as a number before it kills a scale run. perfbench's Ledger reads the
+    # status store (populated with the UI off) for the jobs and stages whose
+    # ids were allocated inside the repeat's window. All best-effort:
+    # telemetry must never void a benchmark record.
+    from perfbench.spans import Ledger
 
-    def _max_stage_id() -> int:
-        try:
-            return max((s.stageId() for s in _stage_seq(-1)), default=-1)
-        except Exception:
-            return -1
+    ledger = Ledger(spark)
 
-    def _metrics_since(min_id: int) -> tuple[float, float] | None:
+    def _mark() -> tuple[int, int] | None:
         try:
-            try:  # drain queued task-end events so sums are complete
-                spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-            except Exception:
-                pass
-            sw = sp = 0
-            for s in _stage_seq(min_id):
-                sw += s.shuffleWriteBytes()
-                sp += s.memoryBytesSpilled() + s.diskBytesSpilled()
-            return round(sw / 1048576, 2), round(sp / 1048576, 2)
+            return ledger.mark()
         except Exception:
             return None
+
+    def _counters(start, end, wall_s: float) -> dict | None:
+        if start is None or end is None:
+            return None
+        try:
+            c = ledger.counters(start, end, wall_s)
+        except Exception:
+            return None
+        return {
+            "jobs": c["jobs"],
+            "stages": int(c["stages"]),
+            "tasks": int(c["tasks"]),
+            "exec_cpu_s": round(c["exec_cpu_s"], 3),
+            "shuffle_write_mb": round(c["shuffle_mb"], 2),
+            "spill_mb": round(c["spill_mb"], 2),
+        }
 
     telemetry: dict[str, dict] = {}
 
@@ -377,7 +371,7 @@ def main() -> None:
                     prepare[cname](spark, SF_DIR)
                 reps: list[float] = []
                 cpus: list[int] = []
-                best_tele: tuple[float, float] | None = None
+                best_tele: dict | None = None
                 for rep in range(REPEATS_FOR.get(name, REPEATS)):
                     _reclaim()
                     # host-capacity canary: this sandbox's VISIBLE CPU count
@@ -390,12 +384,14 @@ def main() -> None:
                     # post-hoc full-capacity sample (round-9 advice).
                     c_pre = os.cpu_count() or 0
                     stat_pre = _stat_snap()
-                    pre_stage = _max_stage_id()
+                    start = _mark()
                     sampler = _CanarySampler().start()
                     t0 = time.time()
                     df = fn(spark, SF_DIR)
                     df.write.mode("overwrite").format("noop").save()
-                    reps.append(round(time.time() - t0, 3))
+                    wall = time.time() - t0
+                    end = _mark()
+                    reps.append(round(wall, 3))
                     win = sampler.stop()
                     cpus.append(min(c_pre, os.cpu_count() or 0))
                     sd = _stat_delta(stat_pre, _stat_snap())
@@ -412,14 +408,12 @@ def main() -> None:
                         ).append(win)
                     if reps[-1] < best:
                         best = reps[-1]
-                        best_tele = _metrics_since(pre_stage)
+                        best_tele = _counters(start, end, wall)
                     if rep == 0:
                         n = df.count()  # untimed, informational
                 repeats[name] = reps
                 if best_tele is not None:
-                    telemetry.setdefault(name, {}).update(
-                        shuffle_write_mb=best_tele[0], spill_mb=best_tele[1]
-                    )
+                    telemetry.setdefault(name, {}).update(best_tele)
                 # one sample per repeat, index-aligned with repeats[name];
                 # the sample for the best (reported) repeat is what
                 # adjudicates a slow line. cpus_visible changed shape to a
@@ -493,7 +487,7 @@ def main() -> None:
             # a ~2.6 GB spill ceiling while the same round's artifact recorded
             # 27.2 GB on a production line — a computed field makes that
             # contradiction structurally impossible). max_spill = the largest
-            # per-line disk+memory spill of the best repeat; max_canary_median
+            # per-line disk spill of the best repeat; max_canary_median
             # = the worst in-window host-throughput median (high ⇒ the host,
             # not the plan, was slow during that line's windows).
             spills = [

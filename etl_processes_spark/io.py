@@ -14,8 +14,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from etl_processes_spark.profile.types import ColumnProfile
 
@@ -121,163 +120,3 @@ def report_sink(
     for t, cols in sorted(type_summary.items()):
         lines.append(f"{t}: {len(cols)} column(s), e.g. {cols[0]}")
     return "\n".join(lines)
-
-
-def clustered_sink(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int | None = None,
-) -> None:
-    """Write parquet range-CLUSTERED on ``cluster_cols``: rows are range-
-    partitioned so each output file owns a disjoint key range, then sorted
-    within the file so every row group's min/max statistics are tight.
-
-    Why this matters at 100 TB: parquet predicate pushdown prunes at
-    file/row-group granularity using min/max stats — on randomly-laid-out
-    data every file's range spans the whole domain and nothing prunes; on
-    clustered data a point/range filter touches only the files whose range
-    intersects it (the same effect a coarse index or Z-order gives for one
-    key dimension). Cost: one range shuffle at write time, paid once,
-    amortized over every subsequent selective scan.
-
-    ``num_files`` defaults to the current shuffle parallelism. Disjointness
-    of file ranges is pinned by tests via parquet footer statistics."""
-    cols = [F.col(c) for c in cluster_cols]
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.repartitionByRange(n, *cols)
-        .sortWithinPartitions(*cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def zorder_key_expr(bucket_cols: list[Column], bits: int) -> Column:
-    """Interleave the low ``bits`` bits of the given bucket-index columns
-    into one Morton (Z-order) key: bit i of column j lands at position
-    i*len(cols)+j. Pure bitwise Column expressions — codegen'd, no UDF."""
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(bucket_cols):
-            bit = F.shiftright(c, i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * len(bucket_cols) + j))
-    return z
-
-
-def zorder_sink(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    bits: int = 8,
-    num_files: int | None = None,
-) -> None:
-    """Write parquet Z-ORDERED on several columns at once: each cluster
-    column is bucketized to 2^bits cells (robust 0.5/99.5-percentile
-    scaling, outliers clamped to the edge cells) and the bucket bits are
-    interleaved into a Morton key; files are range-partitioned and sorted
-    by that key.
-
-    Why over ``clustered_sink`` (single-dimension range clustering):
-    range clustering gives tight min/max file statistics on the FIRST
-    column only — a filter on any other column still scans everything.
-    The Morton curve keeps every file inside a small hyper-rectangle of
-    the bucket grid, so parquet min/max pruning works on ANY of the
-    interleaved dimensions (the lakehouse OPTIMIZE ZORDER BY effect).
-    Cost identical to clustered_sink: one range shuffle + in-file sort at
-    write time, paid once."""
-    if not 1 <= bits * len(cluster_cols) <= 63:
-        raise ValueError(
-            f"bits*len(cols) must fit a signed long, got {bits}x{len(cluster_cols)}"
-        )
-    qs = df.select(
-        *[
-            F.percentile_approx(F.col(c), F.array(F.lit(0.005), F.lit(0.995)), 10000)
-            .alias(c)
-            for c in cluster_cols
-        ]
-    ).first()
-    n_cells = (1 << bits) - 2
-    buckets = []
-    for c in cluster_cols:
-        # empty frame / all-NULL column: no percentile range to bucket on
-        if qs[c] is None or qs[c][0] is None:
-            raise ValueError(
-                f"zorder_sink: cluster column {c!r} has no non-null values "
-                "to derive a bucket range from (empty input?)"
-            )
-        lo, hi = float(qs[c][0]), float(qs[c][1])
-        if not hi > lo:
-            hi = lo + 1.0
-        b = F.width_bucket(
-            F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_cells)
-        )
-        buckets.append(
-            F.least(F.greatest(b, F.lit(0)), F.lit((1 << bits) - 1)).cast("long")
-        )
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.withColumn("__z", zorder_key_expr(buckets, bits))
-        .repartitionByRange(n, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def sharded_sink(
-    df: DataFrame,
-    path: str,
-    rows_per_shard: int,
-    order_col: str | None = None,
-    manifest: bool = True,
-) -> None:
-    """Write the frame as bounded-size parquet SHARDS — the training-loader
-    layout (webdataset/Mosaic-style): every file holds at most
-    ``rows_per_shard`` rows, so loader workers can stripe shards without
-    opening footers first. ``order_col`` (e.g. the shuffle_rank from
-    shuffle_deterministic) makes shard boundaries follow a deterministic
-    global order: shard k holds positions [k*rows, (k+1)*rows).
-
-    A ``_manifest`` parquet subdir records (file, n_rows) per shard —
-    loaders size their work queue from |manifest| rows instead of listing
-    and footer-probing the directory (at 100 TB the listing alone is a
-    metadata storm).
-
-    Plan: with ``order_col`` this is ONE range-partitioned sort (the same
-    cost shuffle_deterministic already pays — compose them by passing its
-    rank column) sized so each partition holds one shard; without it, a
-    round-robin repartition (no sort). ``maxRecordsPerFile`` caps any
-    residual straggler partition."""
-    if rows_per_shard <= 0:
-        raise ValueError("rows_per_shard must be positive")
-    # the count and the write both consume the (possibly expensive — a
-    # global sort when composed with shuffle_deterministic) upstream plan:
-    # persist so it executes once
-    df = df.persist()
-    try:
-        n_rows = df.count()
-        n_shards = max(1, -(-n_rows // rows_per_shard))
-        if order_col is not None:
-            out = df.repartitionByRange(
-                n_shards, F.col(order_col)
-            ).sortWithinPartitions(order_col)
-        else:
-            out = df.repartition(n_shards)
-        (
-            out.write.mode("overwrite")
-            .option("maxRecordsPerFile", rows_per_shard)
-            .parquet(path)
-        )
-    finally:
-        df.unpersist()
-    if manifest:
-        spark = df.sparkSession
-        files = (
-            spark.read.parquet(path)
-            .select(F.input_file_name().alias("file"))
-            .groupBy("file")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-        )
-        files.coalesce(1).write.mode("overwrite").parquet(path + "/_manifest")

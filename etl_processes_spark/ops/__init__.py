@@ -4,11 +4,11 @@ below are the high-traffic entry points re-exported for discoverability.
 
 Submodules: dedup (exact / near / line / span / semantic / incremental),
 similarity (top-k, ANN, SemDeDup), textstats (lang-ID, quality, PII,
-repetition, web curation, corpus reports, heavy hitters), classify
-(model-based quality filter), pack (sampling, mixtures, splits, chunking,
+repetition, URL domains, heavy hitters, tf-idf), classify
+(model-based quality scores), pack (sampling, mixtures, splits, chunking,
 packing, shuffle), timeseries (resample / gap-fill / interpolation),
 audit (key integrity, accepted values, schema drift, multivariate
-outliers), cdc (CDC compaction, SCD-2 history, temporal joins),
+outliers), cdc (CDC compaction, SCD-2 history),
 decontaminate, multimodal, asof, rangejoin, skew, relational.
 """
 
@@ -16,7 +16,6 @@ from etl_processes_spark.ops.audit import (
     accepted_values_violations,
     distribution_drift,
     fk_violations,
-    mad_outliers,
     mahalanobis_outliers,
     pk_violations,
     schema_drift,
@@ -24,16 +23,13 @@ from etl_processes_spark.ops.audit import (
 from etl_processes_spark.ops.cdc import (
     latest_snapshot,
     scd2_intervals,
-    temporal_join,
 )
 from etl_processes_spark.ops.classify import (
-    filter_by_classifier,
     score_with_classifier,
     train_logistic,
 )
 from etl_processes_spark.ops.dedup import (
     dedup_clusters,
-    dedup_exact,
     dedup_incremental,
     edit_distance_pairs,
     line_dedup,
@@ -45,7 +41,6 @@ from etl_processes_spark.ops.dedup import (
 )
 from etl_processes_spark.ops.decontaminate import contamination_report, decontaminate
 from etl_processes_spark.ops.pack import (
-    assemble_bins,
     chunk_documents,
     mixture_rates,
     mixture_rates_by_tokens,
@@ -54,7 +49,6 @@ from etl_processes_spark.ops.pack import (
     shuffle_deterministic,
     split_assign,
     stratified_sample,
-    weighted_sample,
 )
 from etl_processes_spark.ops.similarity import (
     ann_cosine_ivf,
@@ -66,19 +60,11 @@ from etl_processes_spark.ops.similarity import (
     semantic_dedup,
 )
 from etl_processes_spark.ops.textstats import (
-    compression_ratio,
-    corpus_diff,
-    corpus_stats,
-    domain_blocklist_filter,
-    frequent_itemsets,
     heavy_hitters,
-    lang_id,
-    per_domain_cap,
     pii_scrub,
     quality_features,
     repetition_stats,
     tfidf_top_terms,
-    token_count,
     token_heavy_hitters,
     unigram_logprob_score,
 )
@@ -90,26 +76,19 @@ from etl_processes_spark.ops.timeseries import (
 )
 
 __all__ = [
-    "accepted_values_violations", "distribution_drift", "fk_violations",
-    "mad_outliers", "mahalanobis_outliers",
-    "pk_violations",
-    "schema_drift",
-    "ann_cosine_ivf", "ann_cosine_ivf_pq", "ann_cosine_lsh", "assemble_bins",
-    "chunk_documents", "ivf_pq_index",
-    "compression_ratio", "contamination_report", "corpus_diff", "corpus_stats", "cosine_topk_fast",
-    "decontaminate", "dedup_clusters", "dedup_exact", "dedup_incremental",
-    "domain_blocklist_filter", "edit_distance_pairs",
-    "embedding_near_dup_pairs",
-    "filter_by_classifier", "frequent_itemsets", "gap_fill", "heavy_hitters",
-    "lang_id",
-    "latest_snapshot", "scd2_intervals", "temporal_join",
-    "line_dedup", "line_dedup_incremental",
-    "minhash_lsh_pairs", "mixture_rates", "mixture_rates_by_tokens",
-    "mixture_sample", "ngram_jaccard_pairs", "pack_documents", "per_domain_cap",
-    "pii_scrub", "quality_features", "remove_duplicate_spans", "resample",
-    "resample_gap_fill", "repetition_stats", "rolling_stats",
-    "score_with_classifier",
-    "semantic_dedup", "shuffle_deterministic", "simhash_fingerprints",
-    "split_assign", "stratified_sample", "tfidf_top_terms", "token_count",
-    "token_heavy_hitters", "train_logistic", "unigram_logprob_score", "weighted_sample",
+    "accepted_values_violations", "ann_cosine_ivf", "ann_cosine_ivf_pq",
+    "ann_cosine_lsh", "chunk_documents", "contamination_report",
+    "cosine_topk_fast", "decontaminate", "dedup_clusters", "dedup_incremental",
+    "distribution_drift", "edit_distance_pairs", "embedding_near_dup_pairs",
+    "fk_violations", "gap_fill", "heavy_hitters", "ivf_pq_index",
+    "latest_snapshot", "line_dedup", "line_dedup_incremental",
+    "mahalanobis_outliers", "minhash_lsh_pairs", "mixture_rates",
+    "mixture_rates_by_tokens", "mixture_sample", "ngram_jaccard_pairs",
+    "pack_documents", "pii_scrub", "pk_violations", "quality_features",
+    "remove_duplicate_spans", "repetition_stats", "resample",
+    "resample_gap_fill", "rolling_stats", "scd2_intervals", "schema_drift",
+    "score_with_classifier", "semantic_dedup", "shuffle_deterministic",
+    "simhash_fingerprints", "split_assign", "stratified_sample",
+    "tfidf_top_terms", "token_heavy_hitters", "train_logistic",
+    "unigram_logprob_score",
 ]

@@ -82,9 +82,9 @@ def accepted_values_violations(
 def schema_drift(old: DataFrame, new: DataFrame) -> list[dict]:
     """Schema diff between two frames (driver-side, no jobs): one entry per
     changed column, status ∈ {'added', 'removed', 'type_changed',
-    'nullability_changed'}. The complement of ``textstats.corpus_diff``
-    (which diffs CONTENT by id): run both across snapshot boundaries to
-    catch silent upstream changes before they land in a 100 TB table."""
+    'nullability_changed'}. Run it with ``distribution_drift`` (which
+    compares VALUES) across snapshot boundaries to catch silent upstream
+    changes before they land in a 100 TB table."""
     o = {f.name: f for f in old.schema.fields}
     n = {f.name: f for f in new.schema.fields}
     out: list[dict] = []
@@ -206,8 +206,8 @@ def distribution_drift(
     contribution). Cost: one min/max agg over the old snapshot + one
     bucket-groupBy per snapshot — three scans total, each partial-agg'd;
     the per-bin frame is ``bins`` rows. Complements ``schema_drift``
-    (shape) and ``textstats.corpus_diff`` (content): this one catches a
-    column whose schema and rows look fine but whose DISTRIBUTION moved."""
+    (shape): this one catches a column whose schema looks fine but whose
+    DISTRIBUTION moved."""
     import math
 
     x_old = F.col(col).cast("double")
@@ -245,50 +245,3 @@ def distribution_drift(
         out_rows, "bin int, p_old double, p_new double, contribution double"
     )
     return round(psi, ndigits), per_bin
-
-
-def mad_outliers(
-    df: DataFrame,
-    col: str,
-    threshold: float = 3.5,
-    consistency: float = 1.4826,
-) -> DataFrame:
-    """Robust univariate outlier flagging via the median absolute deviation:
-    robust_z = (x − median) / (consistency · MAD) — unlike mean/std z-scores
-    the fit itself cannot be dragged by the outliers it is hunting (50%
-    breakdown point vs 0%). ``consistency`` = 1.4826 rescales MAD to σ under
-    normality so the default |z| > 3.5 matches the usual Iglewicz–Hoaglin
-    cutoff. Degenerate columns (MAD = 0: >50% identical values) fall back
-    to z = 0 for the majority value and +/-inf-like large flags are avoided
-    by scoring against the mean absolute deviation instead when it is
-    nonzero.
-
-    Two tiny median aggregates (exact percentile — at 100 TB swap for the
-    engine's distributed-selection percentiles), then one codegen
-    projection with the fitted constants as literals. Adds ``robust_z`` and
-    ``outlier``; NULL inputs score NULL."""
-    x = F.col(col).cast("double")
-    base = df.filter(x.isNotNull() & ~F.isnan(x))
-    med = base.agg(F.percentile(x, F.lit(0.5)).alias("m")).collect()[0]["m"]
-    if med is None:
-        raise ValueError(f"no finite values in {col!r}")
-    dev = F.abs(x - F.lit(float(med)))
-    row = base.agg(
-        F.percentile(dev, F.lit(0.5)).alias("mad"),
-        F.avg(dev).alias("mean_ad"),
-    ).collect()[0]
-    mad, mean_ad = row["mad"], row["mean_ad"]
-    if mad and mad > 0:
-        scale = consistency * mad
-    elif mean_ad and mean_ad > 0:
-        # >50% identical values: MAD collapses; mean AD still separates
-        scale = 1.2533 * mean_ad  # E|X-mu| -> sigma under normality
-    else:
-        scale = None  # constant column: nothing can be an outlier
-    if scale is None:
-        z = F.when(x.isNotNull(), F.lit(0.0))
-    else:
-        z = (x - F.lit(float(med))) / F.lit(float(scale))
-    return df.withColumn("robust_z", z).withColumn(
-        "outlier", (F.abs(F.col("robust_z")) > F.lit(float(threshold))).cast("int")
-    )

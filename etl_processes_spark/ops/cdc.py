@@ -1,6 +1,6 @@
-"""Change-data-capture compaction and temporal (slowly-changing-dimension)
-joins — turning an append-only change log into queryable snapshots and
-history, the warehouse layer on top of the as-of machinery (ops/asof.py).
+"""Change-data-capture compaction and slowly-changing-dimension history —
+turning an append-only change log into queryable snapshots and validity
+intervals; point-in-time joins against them are ``ops.asof.asof_join``.
 
 No reference counterpart (SURVEY.md §2.6 — the reference is single-table).
 All operators are window/join compositions: one key shuffle each, no
@@ -122,31 +122,3 @@ def scd2_intervals(
         F.coalesce(nxt, F.lit(end_us).cast("long")),
     )
     return out.withColumn("is_current", nxt.isNull())
-
-
-def temporal_join(
-    facts: DataFrame,
-    dim_changes: DataFrame,
-    on: str | list[str],
-    fact_ts: str = "ts",
-    dim_ts: str = "ts",
-    suffix: str = "_dim",
-) -> DataFrame:
-    """Enrich facts with the dimension version that was valid AT EVENT
-    TIME — the SCD-2 lookup, executed as a backward as-of join (union +
-    one window pass, ONE key shuffle, no interval-explosion range join;
-    see ops/asof.py). Equivalent to joining against ``scd2_intervals`` on
-    valid_from <= fact_ts < valid_to, without materializing intervals or
-    paying a range join (equivalence pinned by tests). Facts before the
-    key's first version keep NULL dimension columns."""
-    from etl_processes_spark.ops.asof import asof_join
-
-    return asof_join(
-        facts,
-        dim_changes,
-        on,
-        left_ts=fact_ts,
-        right_ts=dim_ts,
-        direction="backward",
-        suffix=suffix,
-    )

@@ -1,6 +1,6 @@
-"""Model-based quality filtering — the classifier stage of a web-corpus
+"""Model-based quality scoring — the classifier stage of a web-corpus
 curation pipeline (CCNet / RedPajama style: a small linear model scores every
-document's embedding; low scorers are dropped or down-mixed).
+document's embedding; the caller drops or down-mixes low scorers).
 
 No reference counterpart (driver-mandated extension family). Split into the
 two phases that scale differently:
@@ -52,18 +52,6 @@ def score_with_classifier(
     if ndigits is not None:
         s = F.round(s, ndigits)
     return df.withColumn(out_col, s)
-
-
-def filter_by_classifier(
-    df: DataFrame,
-    vec_col: str,
-    weights: Sequence[float],
-    bias: float = 0.0,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Keep rows scoring >= threshold. The predicate fuses into the scan —
-    model-based filtering at read speed (no materialized score column)."""
-    return df.filter(logistic_score_expr(vec_col, weights, bias) >= threshold)
 
 
 def train_logistic(

@@ -116,11 +116,6 @@ def shingles_expr(c: str | Column, k: int = 3) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def dedup_exact(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal — hash-groupBy under the hood (one shuffle)."""
-    return df.dropDuplicates(subset)
-
-
 def dedup_exact_keep_min(df: DataFrame, id_col: str, key: Column | str) -> DataFrame:
     """Keep the row with the smallest id per content key — deterministic
     survivor choice (dropDuplicates keeps an arbitrary row). Returns
@@ -329,7 +324,8 @@ def ngram_jaccard_pairs(
     PRECONDITION: ``id_col`` is unique (one row per document) — the doc-id
     contract every dedup operator here shares. Rows that duplicate an id
     would double-count that id's shingles in both the intersection and the
-    set size (pre-dedupe such inputs with ``dedup_exact`` first).
+    set size (pre-dedupe such inputs with ``dropDuplicates([id_col])``
+    first).
 
     Shuffle diet: ``shingles_expr`` is per-doc distinct already
     (array_distinct), so the exploded (id, shingle) stream needs NO extra

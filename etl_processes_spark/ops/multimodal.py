@@ -5,12 +5,13 @@ Driver-mandated extension (no reference counterpart). Two kernels behind one
 pinned contract:
 
 - ``real_feature_kernel`` — REAL pure-numpy decoders for BMP 24-bit,
-  PPM P6, WAV PCM16 AND (compressed) 8-bit non-interlaced PNG — PNG is
-  zlib + five scanline filters, both available without PIL — + feature
-  extraction (channel moments, luminance percentiles, edge energy / rms,
-  zero-crossing rate, duration). jpeg/mp4 still require PIL/ffmpeg (absent
-  in this container) — undecodable payloads yield a zero vector, so one
-  corrupt blob never kills a 1000-executor stage.
+  PPM P6, WAV PCM16, (compressed) 8-bit non-interlaced PNG — zlib + five
+  scanline filters, available without PIL — and baseline JPEG
+  (``ops.jpeg``), + feature extraction (channel moments, luminance
+  percentiles, edge energy / rms, zero-crossing rate, duration).
+  Progressive JPEG and mp4 still require PIL/ffmpeg — undecodable payloads
+  yield a zero vector, so one corrupt blob never kills a 1000-executor
+  stage.
 - ``_fake_features`` (``fake_decode=True``, default for the oracle-gated
   query) — deterministic Box-Muller-over-md5 stand-in that DuckDB can compute
   identically, which is what hash-gates the multimodal_features query.
@@ -33,41 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),       # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),       # images/video
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),    # audio/video
-        T.StructField("content", T.BinaryType(), True),      # opaque payload
-    ]
-)
-
-
-def make_fake_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic synthetic media table for tests: payload bytes derived
-    from md5(media_id), metadata derived from the id."""
-    rows = []
-    for i in range(n):
-        h = hashlib.md5(f"{seed}:{i}".encode()).digest()
-        kind = ("image", "audio", "video")[i % 3]
-        payload = (h * ((64 + i % 17) // len(h) + 1))[: 64 + i % 17]
-        rows.append(
-            (
-                i,
-                kind,
-                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                32 + (i % 8) * 16 if kind != "audio" else None,
-                32 + (i % 5) * 16 if kind != "audio" else None,
-                1000 * (i % 30 + 1) if kind != "image" else None,
-                bytearray(payload),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def media_from_documents(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -78,8 +44,7 @@ def media_from_documents(
     = utf-8 text bytes, kind/mime/dims/duration pure functions of the id and
     length. Every column is a plain expression over real testdata, so
     metadata-only operators over it (media_stats, frame_sample_plan) are
-    SQL-expressible and hash-gated against DuckDB — unlike the in-session
-    fake table, which no oracle can see."""
+    SQL-expressible and hash-gated against DuckDB."""
     did = F.col(id_col)
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
@@ -102,8 +67,9 @@ def media_from_documents(
 # ---------------------------------------------------------------------------
 # REAL decode kernels — pure numpy/struct codecs decodable without
 # PIL/ffmpeg: BMP (24-bit BI_RGB), PPM (binary P6), WAV (PCM16), and PNG
-# (zlib inflate + the five scanline filters; 8-bit, non-interlaced).
-# jpeg/mp3/mp4 still need external codecs; ``real_feature_kernel`` returns
+# (zlib inflate + the five scanline filters; 8-bit, non-interlaced);
+# baseline JPEG lives in ``ops.jpeg``. Progressive JPEG, mp3 and mp4 still
+# need external codecs; ``real_feature_kernel`` returns
 # a zero vector for payloads it cannot decode — at scale one corrupt blob
 # must not kill a 1000-executor stage.
 # ---------------------------------------------------------------------------
@@ -282,62 +248,6 @@ def decode_png(b: bytes) -> np.ndarray | None:
     if idx.max(initial=0) >= len(plte):
         return None
     return plte[idx]
-
-
-def encode_png(img: np.ndarray, filters: str = "none") -> bytes:
-    """(h, w, 3) uint8 RGB → non-interlaced 8-bit RGB PNG. ``filters``:
-    "none" (filter 0 rows) or "mixed" (cycles Sub/Up/Average/Paeth/None —
-    exists to exercise every decoder filter path in tests; a size-optimal
-    encoder would pick per-row minimums). Inverse of decode_png."""
-    import zlib
-
-    h, w = img.shape[:2]
-    nch = 3
-    lines = []
-    prev = np.zeros(w * nch, dtype=np.uint8)
-    for y in range(h):
-        line = img[y].reshape(-1)
-        ft = 0 if filters == "none" else (y % 5 + 1) % 5  # 1,2,3,4,0,...
-        if ft == 0:
-            res = line.copy()
-        elif ft == 1:  # Sub
-            res = line - np.concatenate([np.zeros(nch, np.uint8), line[:-nch]])
-        elif ft == 2:  # Up
-            res = line - prev
-        elif ft == 3:  # Average
-            left = np.concatenate([np.zeros(nch, np.uint8), line[:-nch]])
-            res = line - ((left.astype(np.uint16) + prev.astype(np.uint16)) // 2).astype(np.uint8)
-        else:  # Paeth
-            res = np.empty_like(line)
-            for x in range(w):
-                for c in range(nch):
-                    i = x * nch + c
-                    a = int(line[i - nch]) if x > 0 else 0
-                    b_ = int(prev[i])
-                    c_ = int(prev[i - nch]) if x > 0 else 0
-                    p = a + b_ - c_
-                    pa, pb, pc = abs(p - a), abs(p - b_), abs(p - c_)
-                    pred = a if pa <= pb and pa <= pc else (b_ if pb <= pc else c_)
-                    res[i] = (int(line[i]) - pred) & 0xFF
-        lines.append(bytes([ft]) + res.tobytes())
-        prev = line
-    raw = zlib.compress(b"".join(lines), 6)
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        import zlib as _z
-
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", _z.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", raw)
-        + chunk(b"IEND", b"")
-    )
 
 
 def decode_wav_pcm16(b: bytes) -> tuple[np.ndarray, int] | None:
@@ -553,91 +463,3 @@ def media_stats(media: DataFrame) -> DataFrame:
         F.avg(F.length("content")).alias("avg_bytes"),
         F.avg("duration_ms").alias("avg_duration_ms"),
     )
-
-
-# ---------------------------------------------------------------------------
-# resize — the decode → resample → re-encode stage of an image pipeline,
-# Arrow-batched; real nearest-neighbor kernel + real BMP writer (the same
-# no-external-codec constraint as the decoders above)
-# ---------------------------------------------------------------------------
-
-
-def resize_nn(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample (h, w, 3) → (height, width, 3): pure numpy
-    integer gather — pixel-center sampling (the same grid PIL NEAREST
-    uses), deterministic, no interpolation state."""
-    h, w = img.shape[:2]
-    rows = np.minimum(((np.arange(height) + 0.5) * h / height).astype(np.int64), h - 1)
-    cols = np.minimum(((np.arange(width) + 0.5) * w / width).astype(np.int64), w - 1)
-    return img[rows][:, cols]
-
-
-def encode_bmp(img: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 RGB → 24-bit bottom-up BI_RGB BMP bytes (the inverse
-    of decode_bmp: decode_bmp(encode_bmp(x)) == x)."""
-    h, w = img.shape[:2]
-    row_bytes = (w * 3 + 3) // 4 * 4
-    body = np.zeros((h, row_bytes), dtype=np.uint8)
-    body[:, : w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up, RGB→BGR
-    data = body.tobytes()
-    header = struct.pack(
-        "<2sIHHIIiiHHIIiiII",
-        b"BM", 54 + len(data), 0, 0, 54,
-        40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0,
-    )
-    return header + data
-
-
-def resize_images(
-    media: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode for every image payload
-    the real codecs understand (BMP-24 / PPM-P6 / PNG); all output re-encoded as
-    BMP. Output: (id, ok, width, height, n_bytes, content). Undecodable or
-    non-image payloads pass through with ok=false and NULL content — one
-    corrupt blob must never kill the stage (same contract as
-    real_feature_kernel).
-
-    Scale shape: mapInPandas, map-side only — no shuffle; each Arrow batch
-    decodes/resamples/encodes as numpy array ops. This is the image-side
-    normalization step before feature extraction or training-tensor
-    assembly."""
-    if width <= 0 or height <= 0:
-        raise ValueError(f"target dims must be positive, got {width}x{height}")
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("ok", T.BooleanType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField(content_col, T.BinaryType()),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                img = None
-                if blob is not None:
-                    raw = bytes(blob)
-                    img = decode_bmp(raw)
-                    if img is None:
-                        img = decode_ppm(raw)
-                    if img is None:
-                        img = decode_png(raw)
-                if img is None:
-                    out.append((int(mid), False, None, None, None, None))
-                    continue
-                enc = encode_bmp(resize_nn(img, width, height))
-                out.append((int(mid), True, width, height, len(enc), enc))
-            yield pd.DataFrame(
-                out, columns=[id_col, "ok", "width", "height", "n_bytes", content_col]
-            )
-
-    return media.select(id_col, content_col).mapInPandas(run, schema=schema)

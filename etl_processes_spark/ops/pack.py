@@ -342,76 +342,3 @@ def shuffle_deterministic(
         10,
     ).cast("long")
     return df.withColumn(rank_col, rank).orderBy(rank_col, key_col)
-
-
-def assemble_bins(
-    df: DataFrame,
-    bin_col: str = "bin_id",
-    offset_col: str = "offset_in_bin",
-    text_col: str = "text",
-    tokens_col: str = "n_tokens",
-    doc_sep: str = " ",
-) -> DataFrame:
-    """Materialize the packed TRAINING SEQUENCES: one row per bin with the
-    member texts concatenated in offset order (what actually feeds the
-    tokenizer), plus n_docs and the summed token count. The final step
-    after ``pack_documents``/``chunk_documents`` assigned bins.
-
-    One shuffle on the bin id; in-bin order is restored by array_sort over
-    (offset, text) structs — partition-invariant, the same reassembly
-    contract as line_dedup. Each output row is bounded by the pack budget
-    (plus one straddling doc), so rows stay small no matter the corpus."""
-    return (
-        df.groupBy(F.col(bin_col))
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col(offset_col), F.col(text_col)))
-                    ),
-                    lambda s: s[text_col],
-                ),
-                doc_sep,
-            ).alias("sequence"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(tokens_col).cast("long").alias("n_tokens"),
-        )
-    )
-
-
-def weighted_sample(
-    df: DataFrame,
-    weight_col: str,
-    n: int,
-    key_col: str,
-    seed: int = 42,
-) -> DataFrame:
-    """Weighted random sample WITHOUT replacement (Efraimidis–Spirakis
-    A-ES): each row draws its deterministic md5-uniform u(seed, key) and
-    the sample is the n rows with the smallest exponential rank
-    -ln(u)/w — inclusion probability is proportional to weight at every
-    prefix, the one-pass/distributed-safe formulation of weighted
-    sampling (Efraimidis & Spirakis, IPL 2006).
-
-    Plan: one scan; the rank orderBy+limit plans as TakeOrderedAndProject
-    (per-partition top-n heap, driver merge of n rows) — no full sort, no
-    shuffle of the data. Deterministic in (seed, keys, weights) under any
-    partitioning, so re-runs and retries keep the identical sample; a new
-    seed is a fresh draw. Rows with weight <= 0 or NULL are excluded (they
-    have zero inclusion probability by definition).
-
-    Unlike the engine's hash-certified samplers, the rank passes through
-    libm's ln — deterministic on one platform, NOT certified bit-identical
-    cross-engine; covered by statistical tests rather than an oracle."""
-    from etl_processes_spark.generate.generators import u_expr
-
-    w = F.col(weight_col).cast("double")
-    u = u_expr(seed, "ws", F.col(key_col).cast("string"))
-    rank = -F.log(u) / w
-    return (
-        df.filter(w > 0)
-        .withColumn("__wrank", rank)
-        .orderBy("__wrank", F.col(key_col))
-        .limit(n)
-        .drop("__wrank")
-    )

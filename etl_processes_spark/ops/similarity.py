@@ -1366,9 +1366,9 @@ def ivf_pq_index(
     """The billion-scale ANN layout: coarse IVF cells for pruning + PQ codes
     for compression, built in ONE Arrow pass over the corpus. Returns
     (centroids, codebooks, index) where index = (cell, id, codes) — m bytes
-    of payload per vector. Persist the index with ``io.clustered_sink``
-    keyed on ``cell`` and a probe query's scan prunes to its cells at the
-    parquet row-group level.
+    of payload per vector. Persist the index range-clustered on ``cell``
+    (``repartitionByRange`` + ``sortWithinPartitions``) and a probe query's
+    scan prunes to its cells at the parquet row-group level.
 
     Both quantizers fit driver-side on the SAME seeded sample (deterministic
     — the oracle refits them bit-identically); assignment + encoding are a

@@ -52,15 +52,6 @@ def bpe_ish_token_count_expr(c: str | Column) -> Column:
     )
 
 
-def token_count(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return widen(df, per_mb=2.0).select(
-        F.col(id_col),
-        token_count_expr(text_col).alias("n_tokens"),
-        bpe_ish_token_count_expr(text_col).alias("n_tokens_bpe"),
-        F.length(F.col(text_col).cast("string")).alias("n_chars_measured"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # language identification (marker-token heuristic)
 # ---------------------------------------------------------------------------
@@ -93,14 +84,6 @@ def lang_id_exprs(text_col: str | Column) -> tuple[Column, Column]:
         pred = F.when(scores[lang] == best, F.lit(lang)).otherwise(pred)
     pred = F.when(best == 0, F.lit("und")).otherwise(pred)
     return pred, best.cast("long")
-
-
-def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, pred_lang, lang_score): argmax of marker hits, ties → LANG_ORDER."""
-    pred, score = lang_id_exprs(text_col)
-    return widen(df, per_mb=2.0).select(
-        F.col(id_col), pred.alias("pred_lang"), score.alias("lang_score")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -256,9 +239,10 @@ def text_analysis_features(
 ) -> DataFrame:
     """Fused text-analysis pass: token counts + language ID + quality
     features (+ optional caller row-wise columns) in ONE tokenize →
-    Arrow-kernel → collapse pass. Value-identical to
-    token_count ⋈ lang_id ⋈ quality_features, but without the two id-keyed
-    join shuffles and — the real cost — without re-evaluating the
+    Arrow-kernel → collapse pass. Value-identical to selecting
+    token_count_expr, bpe_ish_token_count_expr and lang_id_exprs and joining
+    quality_features on the id, but without that id-keyed join shuffle
+    and — the real cost — without re-evaluating the
     interpreted tokenize pipeline per consumer: higher-order functions are
     never subexpression-eliminated, so the column-composition form
     (token_count_expr + 4 _marker_hits + the argmax when-chain referencing
@@ -812,7 +796,7 @@ def unigram_logprob_score(
 
 
 # ---------------------------------------------------------------------------
-# web-corpus curation: URL/domain filtering
+# web-corpus curation: URL hosts and registered domains
 # ---------------------------------------------------------------------------
 
 # scheme / userinfo stripped, host captured up to port/path/query/fragment.
@@ -839,141 +823,9 @@ def url_registered_domain_expr(c: str | Column) -> Column:
     ).otherwise(host)
 
 
-def domain_blocklist_filter(
-    df: DataFrame,
-    url_col: str,
-    blocked: list[str] | DataFrame,
-    keep_unparsed: bool = True,
-) -> DataFrame:
-    """Drop rows whose registered domain is on the blocklist (UT1-style
-    corpus hygiene). A Python list becomes a scan-side ``isin`` predicate
-    (codegen, shuffle-free — right for the usual few-thousand-entry list);
-    a DataFrame blocklist (single column of domains) becomes a BROADCAST
-    anti-join — the corpus never shuffles by domain either way."""
-    dom = url_registered_domain_expr(url_col)
-    # NULL url → NULL domain; '' → regex miss. Both are "unparsed" and must
-    # be decided by keep_unparsed EXPLICITLY on both paths — a bare filter
-    # predicate evaluating to NULL silently drops the row otherwise.
-    unparsed = dom.isNull() | (dom == "")
-    if isinstance(blocked, DataFrame):
-        bl = blocked.select(
-            F.lower(F.col(blocked.columns[0]).cast("string")).alias("__blocked_dom")
-        )
-        out = df.withColumn("__dom", dom)
-        if not keep_unparsed:
-            out = out.filter(~(F.col("__dom").isNull() | (F.col("__dom") == "")))
-        out = out.join(
-            F.broadcast(bl), F.col("__dom") == F.col("__blocked_dom"), "left_anti"
-        )
-        return out.drop("__dom")
-    pred = F.when(unparsed, F.lit(keep_unparsed)).otherwise(
-        ~dom.isin([b.lower() for b in blocked])
-    )
-    return df.filter(pred)
-
-
-def per_domain_cap(
-    df: DataFrame, url_col: str, cap: int, key_col: str, seed: int = 0
-) -> DataFrame:
-    """At most ``cap`` rows per registered domain, chosen deterministically
-    (md5-ranked — the stratified_sample policy keyed on the domain): the
-    anti-SEO guard against a single host flooding the corpus. Bounded
-    per-group sort; the hot domain IS the skew case this exists to cap."""
-    from etl_processes_spark.ops.pack import stratified_sample
-
-    with_dom = df.withColumn("__domain", url_registered_domain_expr(url_col))
-    return stratified_sample(with_dom, "__domain", cap, key_col, seed).drop("__domain")
-
-
 # ---------------------------------------------------------------------------
-# corpus-level reporting / snapshot diff
+# corpus-level reporting: heavy hitters and term weights
 # ---------------------------------------------------------------------------
-
-
-def corpus_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    group_col: str | None = None,
-    ndigits: int = 6,
-) -> DataFrame:
-    """One-call corpus health report, per ``group_col`` (source/lang; None =
-    one global row): doc count, token count, token/doc quantiles, mean
-    quality score, exact-dup rate (1 - distinct content hashes / docs).
-    The per-doc signals are ONE fused projection + ONE aggregation — the
-    wide-agg pattern the profiling core uses; quantiles via
-    percentile_approx (sketch-mergeable, no sort)."""
-    from etl_processes_spark.ops.dedup import content_hash_expr
-
-    toks = token_count_expr(text_col)
-    per_doc = df.select(
-        F.col(id_col),
-        (F.lit(None) if group_col is None else F.col(group_col)).alias("__g"),
-        toks.alias("__tok"),
-        # NULL text hashes to NULL, which count_distinct would skip while
-        # n_docs counts the row — coalesce so all-null docs form ONE
-        # empty-content group and the dup rate stays consistent
-        F.coalesce(content_hash_expr(text_col), F.lit("")).alias("__sha"),
-    )
-    # quality_score comes from its own aggregation pass (token explode), so
-    # one id-keyed join is unavoidable — but both sides are two narrow
-    # columns (id + score / id + group), never document bodies
-    q = quality_features(df, id_col, text_col, ndigits=ndigits).select(
-        F.col(id_col), F.col("quality_score")
-    )
-    per_doc = per_doc.join(q, id_col, "left")
-    agg = per_doc.groupBy("__g").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("__tok").cast("long").alias("n_tokens"),
-        F.round(F.avg("__tok"), ndigits).alias("avg_tokens"),
-        F.percentile_approx("__tok", [0.5, 0.9, 0.99]).alias("__tq"),
-        F.round(F.avg("quality_score"), ndigits).alias("avg_quality"),
-        F.count_distinct("__sha").alias("__uniq"),
-    )
-    return agg.select(
-        F.col("__g").alias(group_col or "group"),
-        "n_docs",
-        "n_tokens",
-        "avg_tokens",
-        F.element_at("__tq", 1).alias("p50_tokens"),
-        F.element_at("__tq", 2).alias("p90_tokens"),
-        F.element_at("__tq", 3).alias("p99_tokens"),
-        "avg_quality",
-        F.round(1.0 - F.col("__uniq") / F.col("n_docs"), ndigits).alias("dup_rate"),
-    )
-
-
-def corpus_diff(
-    old: DataFrame, new: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Snapshot diff by id and normalized content: one row per doc present
-    in either snapshot, status ∈ {added, removed, changed, unchanged}.
-    Two anti-join-shaped hash joins on the id — no content ever compares
-    byte-wise across the wire (sha digests travel instead), so the diff of
-    two 100 TB snapshots moves ids + 64-byte hashes only."""
-    from etl_processes_spark.ops.dedup import content_hash_expr
-
-    # explicit presence flags: a doc with NULL text hashes to NULL, which a
-    # sha-only null check would misread as absent (added/removed)
-    o = old.select(
-        F.col(id_col),
-        F.lit(True).alias("__in_old"),
-        content_hash_expr(text_col).alias("__old_sha"),
-    )
-    n = new.select(
-        F.col(id_col),
-        F.lit(True).alias("__in_new"),
-        content_hash_expr(text_col).alias("__new_sha"),
-    )
-    j = o.join(n, id_col, "full_outer")
-    return j.select(
-        id_col,
-        F.when(F.col("__in_old").isNull(), "added")
-        .when(F.col("__in_new").isNull(), "removed")
-        .when(~F.col("__old_sha").eqNullSafe(F.col("__new_sha")), "changed")
-        .otherwise("unchanged")
-        .alias("status"),
-    )
 
 
 def heavy_hitters(
@@ -1137,124 +989,3 @@ def tfidf_top_terms(
         .filter(F.col("rank") <= k)
         .select("id", "rank", "token", "tf", "df")
     )
-
-
-def compression_ratio(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    level: int = 6,
-    ndigits: int = 6,
-) -> DataFrame:
-    """Per-doc zlib compression ratio (compressed bytes / raw bytes) — the
-    classic redundancy signal corpus filters use alongside the n-gram
-    repetition stats: machine-generated and template text compresses far
-    below prose (ratio < ~0.3 is a strong spam/boilerplate tell), and the
-    signal catches long-range redundancy that bounded n-gram fractions
-    miss. Returns (id, n_bytes, ratio); empty/NULL docs get ratio 1.0.
-
-    Arrow-batched mapInPandas over stdlib zlib — a narrow map, no shuffle;
-    at 100 TB this streams at scan speed like the other per-doc signals.
-    Deterministic for a fixed zlib version+level (pinned by tests), but not
-    SQL-expressible — covered by tests rather than an oracle gate."""
-    import zlib
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("ratio", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_n, out_r = [], []
-            for t in pdf[text_col]:
-                if t is None or t == "":
-                    out_n.append(0)
-                    out_r.append(1.0)
-                    continue
-                raw = str(t).encode("utf-8", errors="replace")
-                out_n.append(len(raw))
-                out_r.append(round(len(zlib.compress(raw, level)) / len(raw), ndigits))
-            yield pd.DataFrame(
-                {"id": pdf[id_col].astype("int64"), "n_bytes": out_n, "ratio": out_r}
-            )
-
-    return widen(df.select(id_col, text_col), per_mb=2.0).mapInPandas(
-        score, schema=schema
-    )
-
-
-def frequent_itemsets(
-    df: DataFrame,
-    items_col: str,
-    min_support: float = 0.1,
-    min_confidence: float = 0.5,
-) -> tuple[DataFrame, DataFrame]:
-    """Frequent itemsets + association rules over a basket column
-    (array<string>) via distributed FP-Growth (pyspark.ml.fpm) — co-occur
-    mining for tag/entity/token sets ("docs containing X usually contain
-    Y"). Returns (itemsets, rules): itemsets = (items, freq, support),
-    rules = (antecedent, consequent, confidence, lift, support); both
-    sorted deterministically (itemsets are also canonically item-sorted so
-    output is partition-invariant).
-
-    Input baskets are de-duplicated per row (FP-Growth requires set
-    semantics; a repeated tag would throw). FP-Growth's shape at scale:
-    one pass for item frequencies, one for the conditional FP-trees —
-    group-prefix parallelism, no candidate-generation blowup (vs Apriori).
-    """
-    from pyspark.ml.fpm import FPGrowth
-
-    baskets = df.select(
-        F.array_sort(F.array_distinct(F.col(items_col))).alias("items")
-    ).filter(F.size("items") > 0)
-    # Support denominator = the baskets FP-Growth actually fits on
-    # (non-null, non-empty) so `support` is consistent with min_support
-    # semantics; counting all rows would deflate it when empty baskets
-    # exist, and n=0 would divide by zero.
-    n = baskets.count()
-    if n == 0:
-        spark = df.sparkSession
-        empty_sets = spark.createDataFrame(
-            [], "items array<string>, freq long, support double"
-        )
-        empty_rules = spark.createDataFrame(
-            [],
-            "antecedent array<string>, consequent array<string>, "
-            "confidence double, lift double, support double",
-        )
-        return empty_sets, empty_rules
-    model = FPGrowth(
-        itemsCol="items", minSupport=min_support, minConfidence=min_confidence
-    ).fit(baskets)
-    itemsets = (
-        model.freqItemsets.select(
-            F.array_sort("items").alias("items"),
-            F.col("freq"),
-            (F.col("freq") / F.lit(float(n))).alias("support"),
-        )
-        .orderBy(F.desc("freq"), F.asc(F.col("items").cast("string")))
-    )
-    rules = (
-        model.associationRules.select(
-            F.array_sort("antecedent").alias("antecedent"),
-            F.array_sort("consequent").alias("consequent"),
-            "confidence",
-            "lift",
-            "support",
-        )
-        .orderBy(
-            F.desc("confidence"),
-            F.asc(F.col("antecedent").cast("string")),
-            F.asc(F.col("consequent").cast("string")),
-        )
-    )
-    return itemsets, rules

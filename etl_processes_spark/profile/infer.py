@@ -130,9 +130,6 @@ def _ratio(pred: Column) -> Column:
     return F.avg(F.when(pred, 1.0).when(pred.isNotNull(), 0.0))
 
 
-PROBE_METRICS = ("email_ratio", "phone_ratio", "datetime_ratio")
-
-
 def inference_metric_exprs(
     c: str, dtype: T.DataType | None = None, include_probe: bool = True
 ) -> list[Column]:
@@ -228,7 +225,7 @@ def inference_metrics(
 
     ``probe_rows`` mirrors the reference's head(100) bound
     (Latanova_v1.py:72,79,104,163): when set, the regex/parse-heavy ratios
-    (email/phone/datetime — PROBE_METRICS) are computed over only the first
+    (email/phone/datetime) are computed over only the first
     ``probe_rows`` rows (LocalLimit pushes into the scan, so only the first
     file splits are read), while counts/cardinalities/numeric ratios still
     scan the full frame. At 100 TB this caps the per-string-column regex

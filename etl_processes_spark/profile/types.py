@@ -24,10 +24,6 @@ CATEGORICAL = "categorical"
 TEXT = "text"
 UNKNOWN = "unknown"
 
-LOGICAL_TYPES = (
-    BOOLEAN, EMAIL, PHONE, INTEGER, FLOAT, DATETIME, CATEGORICAL, TEXT, UNKNOWN,
-)
-
 # Boolean vocabulary (Latanova_v1.py:135, 238-240).
 BOOL_TRUE = ("true", "yes", "1", "y", "t")
 BOOL_FALSE = ("false", "no", "0", "n", "f")
@@ -96,8 +92,3 @@ class ColumnProfile:
             },
             default=_default,
         )
-
-    @staticmethod
-    def from_json(s: str) -> "ColumnProfile":
-        d = json.loads(s)
-        return ColumnProfile(d["name"], d["logical_type"], d.get("format"), d.get("stats", {}))

@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the etl_processes_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _host_driver_mem() -> str:
     """Driver heap of at most 3/4 of physical memory, capped at 48g: the
@@ -81,6 +84,10 @@ def get_spark(
     # session (which reads NTZ) for local correctness runs.
     if os.environ.get("SPARK_GRAFT_NTZ_MODE") != "1":
         builder = builder.config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Python workers (UDFs, mapInPandas) import this package whatever the
+    # driver's working directory; Spark merges this with the worker's
+    # inherited PYTHONPATH.
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     # N concurrent Python workers × multithreaded BLAS = N² runnable threads.
     # Per-batch matrices in the UDF paths are small (d ≤ a few hundred), where
     # single-threaded GEMM wins anyway; parallelism comes from Spark tasks.

@@ -164,7 +164,8 @@ def test_audit_cdc_ops_match_under_ansi(ansi, spark):
         mahalanobis_outliers,
         pk_violations,
     )
-    from etl_processes_spark.ops.cdc import latest_snapshot, scd2_intervals, temporal_join
+    from etl_processes_spark.ops.asof import asof_join
+    from etl_processes_spark.ops.cdc import latest_snapshot, scd2_intervals
 
     child = spark.createDataFrame(
         [(10, 1), (11, 2), (12, 9), (13, None)], "id long, ref long"
@@ -190,7 +191,7 @@ def test_audit_cdc_ops_match_under_ansi(ansi, spark):
             _rows(mahalanobis_outliers(num, ["a", "b"]).select("id", "maha_sq")),
             _rows(latest_snapshot(ch, "k", "ts")),
             _rows(scd2_intervals(ch, "k", "ts").select("val", "valid_from_us", "valid_to_us")),
-            _rows(temporal_join(facts, ch, "k").select("fid", "val_dim")),
+            _rows(asof_join(facts, ch, "k", suffix="_dim").select("fid", "val_dim")),
         )
 
     with_ansi = run_all()

@@ -159,52 +159,6 @@ def test_distribution_drift_degenerate(spark):
         distribution_drift(empty, const, "x")
 
 
-def test_mad_outliers(spark):
-    import numpy as np
-
-    from etl_processes_spark.ops.audit import mad_outliers
-
-    rng = np.random.RandomState(3)
-    vals = list(np.round(rng.normal(100, 5, 500), 6)) + [500.0, -300.0]
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(vals)], "id long, x double"
-    )
-    out = mad_outliers(df, "x")
-    flagged = {r["id"] for r in out.filter("outlier = 1").collect()}
-    assert 500 in flagged and 501 in flagged      # planted extremes
-    assert len(flagged) <= 8                      # robust fit: few false alarms
-    # robust: the fit barely moves when the outliers are present vs absent
-    clean = mad_outliers(df.filter("id < 500"), "x")
-    z_all = {r["id"]: r["robust_z"] for r in out.collect()}
-    z_cln = {r["id"]: r["robust_z"] for r in clean.collect()}
-    import pytest
-
-    for i in (0, 100, 250):
-        assert z_all[i] == pytest.approx(z_cln[i], abs=0.1)
-
-
-def test_mad_outliers_degenerate(spark):
-    import pytest as _pytest
-
-    from etl_processes_spark.ops.audit import mad_outliers
-
-    # >50% identical -> MAD=0 -> mean-AD fallback still flags the spike
-    df = spark.createDataFrame(
-        [(i, 5.0) for i in range(10)] + [(10, 500.0), (11, None)],
-        "id long, x double",
-    )
-    rows = {r["id"]: (r["robust_z"], r["outlier"]) for r in mad_outliers(df, "x").collect()}
-    assert rows[10][1] == 1
-    assert rows[0][1] == 0
-    assert rows[11][0] is None
-    const = spark.createDataFrame([(1, 7.0), (2, 7.0)], "id long, x double")
-    got = mad_outliers(const, "x").collect()
-    assert all(r["outlier"] == 0 for r in got)
-    empty = spark.createDataFrame([], "id long, x double")
-    with _pytest.raises(ValueError):
-        mad_outliers(empty, "x")
-
-
 def test_mahalanobis_magnitude_guard(spark):
     import pytest as _pytest
 

@@ -1,10 +1,11 @@
-"""CDC compaction + SCD-2 temporal joins."""
+"""CDC compaction + SCD-2 history, and the as-of lookup against it."""
 
 import datetime as dt
 
 from pyspark.sql import functions as F
 
-from etl_processes_spark.ops.cdc import latest_snapshot, scd2_intervals, temporal_join
+from etl_processes_spark.ops.asof import asof_join
+from etl_processes_spark.ops.cdc import latest_snapshot, scd2_intervals
 
 
 def _ts(d, h=0):
@@ -57,7 +58,10 @@ def test_scd2_intervals(spark):
     assert capped["valid_to_us"] == us(9)
 
 
-def test_temporal_join_equals_interval_join(spark):
+def test_asof_join_equals_scd2_interval_join(spark):
+    """The SCD-2 lookup (dimension version valid at event time) as a
+    backward as-of join equals the explicit interval join against
+    ``scd2_intervals``."""
     dim = _changes(spark).select("k", "ts", "val")
     facts = spark.createDataFrame(
         [(i, k, _ts(d, 12)) for i, (k, d) in enumerate(
@@ -67,7 +71,7 @@ def test_temporal_join_equals_interval_join(spark):
     )
     tj = {
         r["fid"]: r["val_dim"]
-        for r in temporal_join(facts, dim, "k", "ts", "ts").collect()
+        for r in asof_join(facts, dim, "k", suffix="_dim").collect()
     }
     # ground truth: explicit interval join against scd2_intervals
     iv = scd2_intervals(dim, "k", "ts")

@@ -1,4 +1,4 @@
-"""Model-based quality filtering: ml-trained weights, expression-side scoring."""
+"""Model-based quality scoring: ml-trained weights, expression-side scoring."""
 
 import math
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_processes_spark.ops.classify import (
-    filter_by_classifier,
     logistic_score_expr,
     score_with_classifier,
     train_logistic,
@@ -42,20 +41,6 @@ def test_train_and_separate(labeled):
         F.avg(((F.col("clf_score") >= 0.5).cast("int") == F.col("label")).cast("int"))
     ).first()[0]
     assert acc > 0.97  # separable data → near-perfect linear fit
-
-
-def test_filter_fuses_into_scan(labeled):
-    w, b = train_logistic(labeled, "vec", "label")
-    kept = filter_by_classifier(labeled, "vec", w, b, threshold=0.5)
-    assert 0 < kept.count() < 200
-    # shuffle-free: the predicate is a plain Filter over the scan
-    import contextlib, io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        kept.explain("formatted")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan
 
 
 def test_score_deterministic_expression(spark):

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from etl_processes_spark.ops.dedup import (
     content_hash_expr,
-    dedup_exact,
     dedup_exact_keep_min,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -39,7 +38,6 @@ def test_tokens_and_shingles(docs):
 
 
 def test_dedup_exact(docs):
-    assert dedup_exact(docs, ["text"]).count() == 5  # 0/1 collapse
     kept = dedup_exact_keep_min(docs, "doc_id", F.col("text"))
     ids = {r["doc_id"] for r in kept.collect()}
     assert 0 in ids and 1 not in ids

@@ -209,7 +209,7 @@ def test_interval_overlap_join(spark):
 def test_round4_ops_degenerate_inputs(spark):
     """Empty/singleton/degenerate frames must not error in the round-4 ops."""
     from etl_processes_spark.ops.dedup import line_dedup, remove_duplicate_spans
-    from etl_processes_spark.ops.pack import assemble_bins, shuffle_deterministic
+    from etl_processes_spark.ops.pack import shuffle_deterministic
     from etl_processes_spark.ops.similarity import semantic_dedup
     from pyspark.sql import types as T
 
@@ -231,15 +231,6 @@ def test_round4_ops_degenerate_inputs(spark):
     sv = spark.createDataFrame([(7, [1.0, 0.0])], ["vec_id", "embedding"])
     out = semantic_dedup(sv, "vec_id", "embedding", n_centroids=4).collect()
     assert len(out) == 1 and out[0]["keep"]
-
-    # assemble over an empty packed frame
-    pe = spark.createDataFrame(
-        [], T.StructType([T.StructField("bin_id", T.LongType()),
-                          T.StructField("offset_in_bin", T.LongType()),
-                          T.StructField("text", T.StringType()),
-                          T.StructField("n_tokens", T.LongType())])
-    )
-    assert assemble_bins(pe).count() == 0
 
 
 def test_semantic_dedup_empty_corpus(spark):

@@ -1,14 +1,12 @@
-"""Baseline JPEG codec tests: lossy round-trip against uncompressed ground
+"""Baseline JPEG decoder tests: lossy round-trip against uncompressed ground
 truth across subsampling/quality/restart paths, real-world-decoder
 robustness via the corrupt/hostile contract, and the feature-kernel hookup."""
 
 import numpy as np
 import pytest
 
-from etl_processes_spark.ops.jpeg import (
-    decode_jpeg_baseline,
-    encode_jpeg_baseline,
-)
+from etl_processes_spark.ops.jpeg import decode_jpeg_baseline
+from fixture_producers import encode_bmp, encode_jpeg_baseline
 
 
 def _gradient_rgb(h=64, w=64):
@@ -90,10 +88,7 @@ def test_decoder_reads_tables_from_file_not_constants():
 
 
 def test_feature_kernel_decodes_jpeg():
-    from etl_processes_spark.ops.multimodal import (
-        encode_bmp,
-        real_feature_kernel,
-    )
+    from etl_processes_spark.ops.multimodal import real_feature_kernel
 
     img = _gradient_rgb(32, 32)
     jpeg_feats = real_feature_kernel(encode_jpeg_baseline(img, quality=95))

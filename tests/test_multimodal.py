@@ -8,9 +8,9 @@ from etl_processes_spark.ops.multimodal import (
     FEATURE_DIM,
     extract_features,
     frame_sample_plan,
-    make_fake_media_df,
     media_stats,
 )
+from fixture_producers import MEDIA_SCHEMA, encode_bmp, encode_png, make_fake_media_df
 
 
 @pytest.fixture(scope="module")
@@ -145,7 +145,7 @@ def test_real_kernel_decodes_bmp_ppm_wav():
 def test_real_kernel_through_spark_plumbing(spark):
     import numpy as np
 
-    from etl_processes_spark.ops.multimodal import MEDIA_SCHEMA, extract_features
+    from etl_processes_spark.ops.multimodal import extract_features
 
     t = np.arange(4000) / 8000.0
     rows = [
@@ -169,7 +169,7 @@ def test_real_kernel_dim_and_empty_wav(spark):
     import numpy as np
     import struct
 
-    from etl_processes_spark.ops.multimodal import MEDIA_SCHEMA, extract_features, real_feature_kernel
+    from etl_processes_spark.ops.multimodal import extract_features, real_feature_kernel
 
     # empty data chunk: undecodable -> zeros, never NaN
     fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
@@ -186,53 +186,15 @@ def test_real_kernel_dim_and_empty_wav(spark):
     assert len(out["features"]) == 8
 
 
-def test_resize_roundtrip_and_kernels():
+def test_bmp_encode_decode_roundtrip():
     import numpy as np
 
-    from etl_processes_spark.ops.multimodal import (
-        decode_bmp,
-        encode_bmp,
-        resize_nn,
-    )
+    from etl_processes_spark.ops.multimodal import decode_bmp
 
     rng = np.random.RandomState(7)
     img = rng.randint(0, 256, (6, 10, 3), dtype=np.uint8)
     # encode/decode are exact inverses
     assert (decode_bmp(encode_bmp(img)) == img).all()
-    # downsample picks pixel-center sources; upsample replicates
-    small = resize_nn(img, 5, 3)
-    assert small.shape == (3, 5, 3)
-    assert (small[0, 0] == img[1, 1]).all()  # center of 2x2 block
-    big = resize_nn(img, 20, 12)
-    assert big.shape == (12, 20, 3)
-    assert (big[0, 0] == img[0, 0]).all() and (big[-1, -1] == img[-1, -1]).all()
-    # identity resize is lossless
-    assert (resize_nn(img, 10, 6) == img).all()
-
-
-def test_resize_images_spark_stage(spark):
-    import numpy as np
-
-    from etl_processes_spark.ops.multimodal import decode_bmp, resize_images
-
-    bmp = _make_bmp(8, 4, (10, 200, 30))
-    ppm = _make_ppm(6, 6, (1, 2, 3))
-    rows = [(1, bytearray(bmp)), (2, bytearray(ppm)),
-            (3, bytearray(b"\x89PNG not decodable")), (4, None)]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r["media_id"]: r for r in resize_images(media, 4, 4).collect()}
-    for mid in (1, 2):
-        r = out[mid]
-        assert r["ok"] and r["width"] == 4 and r["height"] == 4
-        img = decode_bmp(bytes(r["content"]))
-        assert img is not None and img.shape == (4, 4, 3)
-    assert decode_bmp(bytes(out[2]["content"]))[0, 0].tolist() == [1, 2, 3]
-    for mid in (3, 4):  # undecodable payloads survive with ok=false
-        assert out[mid]["ok"] is False and out[mid]["content"] is None
-    import pytest
-
-    with pytest.raises(ValueError, match="dims"):
-        resize_images(media, 0, 4)
 
 
 # ---------------------------------------------------------------------------
@@ -249,7 +211,7 @@ def _rand_img(seed, h=13, w=17):
 def test_png_roundtrip_all_filters():
     import numpy as np
 
-    from etl_processes_spark.ops.multimodal import decode_png, encode_png
+    from etl_processes_spark.ops.multimodal import decode_png
 
     img = _rand_img(7)
     for filters in ("none", "mixed"):  # mixed cycles Sub/Up/Average/Paeth/None
@@ -260,11 +222,7 @@ def test_png_roundtrip_all_filters():
 def test_png_features_match_bmp_for_same_pixels():
     import numpy as np
 
-    from etl_processes_spark.ops.multimodal import (
-        encode_bmp,
-        encode_png,
-        real_feature_kernel,
-    )
+    from etl_processes_spark.ops.multimodal import real_feature_kernel
 
     img = _rand_img(11, 21, 9)
     f_png = real_feature_kernel(encode_png(img, filters="mixed"))
@@ -279,7 +237,7 @@ def test_png_gray_palette_alpha_and_corrupt():
 
     import numpy as np
 
-    from etl_processes_spark.ops.multimodal import decode_png, encode_png
+    from etl_processes_spark.ops.multimodal import decode_png
 
     def chunk(ctype, body):
         return (
@@ -329,20 +287,6 @@ def test_png_gray_palette_alpha_and_corrupt():
     inter[8 + 8 + 12] = 1  # IHDR interlace byte
     assert decode_png(bytes(inter)) is None
 
-
-def test_resize_handles_png_input():
-    import numpy as np
-
-    from etl_processes_spark.ops.multimodal import decode_bmp, encode_png, resize_nn
-
-    img = _rand_img(19, 16, 16)
-    # resize path accepts PNG payloads end-to-end via resize_images' decode
-    # cascade; kernel-level check: decode(encode) then resize matches direct
-    from etl_processes_spark.ops.multimodal import decode_png
-
-    assert np.array_equal(
-        resize_nn(decode_png(encode_png(img)), 8, 8), resize_nn(img, 8, 8)
-    )
 
 def test_png_zlib_bomb_bounded():
     """A tiny IDAT that inflates far past the scanline size must return None

@@ -412,25 +412,6 @@ def test_training_pipeline_span_dedup_stage(spark):
     assert "original story" in texts[0]
 
 
-def test_assemble_bins_materializes_sequences(spark):
-    from etl_processes_spark.ops.pack import assemble_bins, pack_documents
-
-    rows = [(i, f"doc{i} body", 40) for i in range(6)]
-    df = spark.createDataFrame(rows, ["doc_id", "text", "n_tokens"])
-    packed = pack_documents(df, "doc_id", "n_tokens", budget=100).join(
-        df.select("doc_id", "text"), "doc_id"
-    )
-    seqs = {r["bin_id"]: r for r in assemble_bins(packed).collect()}
-    # 6 docs x 40 tokens, budget 100: bins 0..2 by the cumulative rule
-    assert sorted(seqs) == [0, 1, 2]
-    assert seqs[0]["sequence"] == "doc0 body doc1 body doc2 body"
-    assert seqs[0]["n_docs"] == 3 and seqs[0]["n_tokens"] == 120
-    # partition-invariant order
-    seqs2 = {r["bin_id"]: r["sequence"]
-             for r in assemble_bins(packed.repartition(7)).collect()}
-    assert {b: s["sequence"] for b, s in seqs.items()} == seqs2
-
-
 def test_mixture_rates_by_tokens(spark):
     from etl_processes_spark.ops.pack import mixture_rates_by_tokens, mixture_sample
 
@@ -488,39 +469,6 @@ def test_incremental_ingest_line_state_replay_is_noop(spark):
     assert acc2.count() == 0
     assert st2["line_counts"].count() == 0   # no double-counted lines
     assert st2["digests"].count() == 0
-
-
-def test_weighted_sample_proportional_and_deterministic(spark):
-    from collections import Counter
-
-    from etl_processes_spark.ops.pack import weighted_sample
-
-    # item 'heavy' carries 50x the weight of each of 200 light items
-    rows = [("heavy", 50.0)] + [(f"l{i}", 1.0) for i in range(200)]
-    df = spark.createDataFrame(rows, "k string, w double").repartition(5)
-    hits = Counter()
-    for seed in range(40):
-        got = {r["k"] for r in weighted_sample(df, "w", 20, "k", seed=seed).collect()}
-        assert len(got) == 20
-        hits.update(got)
-    # P(heavy in sample of 20) is near-certain; each light item ~10%
-    assert hits["heavy"] >= 38
-    light = [hits[f"l{i}"] for i in range(200)]
-    assert 2 <= sum(light) / len(light) <= 6  # ~20*40/200 = 4 expected
-    # deterministic under repartitioning
-    a = sorted(map(tuple, weighted_sample(df, "w", 20, "k", seed=7).collect()))
-    b = sorted(map(tuple, weighted_sample(df.repartition(13), "w", 20, "k", seed=7).collect()))
-    assert a == b
-
-
-def test_weighted_sample_excludes_nonpositive(spark):
-    from etl_processes_spark.ops.pack import weighted_sample
-
-    df = spark.createDataFrame(
-        [("a", 1.0), ("b", 0.0), ("c", -2.0), ("d", None)], "k string, w double"
-    )
-    got = {r["k"] for r in weighted_sample(df, "w", 10, "k").collect()}
-    assert got == {"a"}
 
 
 def test_training_pipeline_manage_storage_releases_and_matches(spark):

@@ -5,7 +5,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_processes_spark.generate.generators import bootstrap_resample_join
 from etl_processes_spark.io import profile_sink, profile_source, report_sink
@@ -108,110 +107,3 @@ def test_json_orc_roundtrip_preserve_values(spark, tmp_path):
     back_o = orc_scan(spark, str(tmp_path / "o"))
     assert back_o.schema == df.schema  # orc is typed; exact schema survives
     assert sorted(map(tuple, back_o.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_clustered_sink_produces_disjoint_file_ranges(spark, tmp_path):
-    """Range-clustered layout: every output file owns a disjoint value range
-    (parquet footer min/max proves skippability), and a selective filter's
-    scan prunes files at planning time."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from etl_processes_spark.io import clustered_sink
-
-    df = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    out = str(tmp_path / "clustered")
-    clustered_sink(df, out, ["k"], num_files=8)
-
-    ranges = []
-    for f in glob.glob(f"{out}/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        col = md.row_group(0).column(0)
-        lo = col.statistics.min
-        hi = pq.ParquetFile(f).metadata.row_group(md.num_row_groups - 1).column(0).statistics.max
-        ranges.append((lo, hi))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a < lo_b  # disjoint, ordered ranges -> file-level skipping
-
-    # round-trip intact and filter pushdown reaches the scan
-    back = spark.read.parquet(out)
-    assert back.count() == 10000
-    plan = back.filter(F.col("k") == 1234)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(k), EqualTo(k,1234)" in plan
-
-
-def test_zorder_sink_prunes_on_both_dimensions(spark, tmp_path):
-    """Z-ordered layout: per-file min/max spans must be narrow on BOTH
-    interleaved columns (range clustering only achieves this on its first
-    column), so parquet min/max pruning works for filters on either."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from etl_processes_spark.io import clustered_sink, zorder_sink
-
-    n = 40_000
-    # independent dims: the full 200x200 grid
-    df = spark.range(n).select(
-        (F.col("id") % 200).cast("double").alias("x"),
-        ((F.col("id") / 200).cast("long") % 200).cast("double").alias("y"),
-    )
-
-    def spans(path, col_idx):
-        out = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                mins.append(st.min); maxs.append(st.max)
-            out.append(max(maxs) - min(mins))
-        return out
-
-    zpath = str(tmp_path / "zord")
-    cpath = str(tmp_path / "clust")
-    zorder_sink(df, zpath, ["x", "y"], bits=8, num_files=16)
-    clustered_sink(df, cpath, ["x"], num_files=16)
-
-    domain = 199.0
-    z_x, z_y = spans(zpath, 0), spans(zpath, 1)
-    c_y = spans(cpath, 1)
-    # z-order: every file covers a small rectangle in BOTH dims
-    assert sum(z_x) / len(z_x) < 0.45 * domain
-    assert sum(z_y) / len(z_y) < 0.45 * domain
-    # range clustering on x leaves y unclustered (files span ~whole domain)
-    assert sum(c_y) / len(c_y) > 0.9 * domain
-    # and the data round-trips
-    assert spark.read.parquet(zpath).count() == n
-
-
-def test_sharded_sink_bounded_files_and_manifest(spark, tmp_path):
-    from etl_processes_spark.io import sharded_sink
-    from etl_processes_spark.ops.pack import shuffle_deterministic
-
-    df = shuffle_deterministic(
-        spark.range(1000).withColumnRenamed("id", "doc_id"), "doc_id", seed=3
-    )
-    out = str(tmp_path / "shards")
-    sharded_sink(df, out, rows_per_shard=128, order_col="shuffle_rank")
-
-    back = spark.read.parquet(out)
-    assert back.count() == 1000
-    man = spark.read.parquet(out + "/_manifest")
-    rows = man.collect()
-    assert sum(r["n_rows"] for r in rows) == 1000
-    assert all(r["n_rows"] <= 128 for r in rows)
-    assert len(rows) >= 8  # ceil(1000/128)
-
-    # deterministic order survives the roundtrip: reading back sorted by
-    # rank reproduces the shuffle order
-    from pyspark.sql import functions as F
-    a = [r["doc_id"] for r in back.orderBy("shuffle_rank").collect()]
-    b = [r["doc_id"] for r in df.collect()]
-    assert a == b

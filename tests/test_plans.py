@@ -209,15 +209,6 @@ def test_shuffle_deterministic_single_range_sort(spark, sf001):
     assert "shuffle_rank" in plan.split("rangepartitioning")[1][:80]
 
 
-def test_weighted_sample_is_take_ordered(spark, sf001):
-    from etl_processes_spark.ops.pack import weighted_sample
-
-    d = spark.read.parquet(f"{sf001}/documents.parquet").select("doc_id", "n_chars")
-    plan = _plan(weighted_sample(d, "n_chars", 50, "doc_id"))
-    assert "TakeOrderedAndProject" in plan  # per-partition heap, no full sort
-    assert "Exchange" not in plan.split("TakeOrderedAndProject")[0]
-
-
 def test_fk_violations_is_keys_only_anti_join(spark, sf001):
     from etl_processes_spark.ops.audit import fk_violations
 
@@ -228,24 +219,6 @@ def test_fk_violations_is_keys_only_anti_join(spark, sf001):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     # column pruning: the scans must read keys only, never payload columns
     assert "l_extendedprice" not in plan and "o_totalprice" not in plan
-
-
-def test_temporal_join_is_join_free(spark):
-    import datetime as dt
-
-    from etl_processes_spark.ops.cdc import temporal_join
-
-    dim = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1), "v1")], "k long, ts timestamp, val string"
-    )
-    facts = spark.createDataFrame(
-        [(1, 1, dt.datetime(2024, 1, 2))], "fid long, k long, ts timestamp"
-    )
-    plan = _plan(temporal_join(facts, dim, "k"))
-    # asof machinery: union + window, no join operator anywhere
-    for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
-               "CartesianProduct", "BroadcastNestedLoopJoin"):
-        assert op not in plan, op
 
 
 def test_gap_fill_single_data_exchange(spark):

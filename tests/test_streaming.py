@@ -1,5 +1,5 @@
-"""Structured Streaming twin: drain the hourly rollup with availableNow and
-compare against the batch rollup on the same files."""
+"""Structured Streaming: library operators on a readStream frame, drained
+once with availableNow, must equal their batch results on the same files."""
 
 import shutil
 import tempfile
@@ -7,11 +7,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from etl_processes_spark.streaming.windows import (
-    hourly_event_rollup,
-    hourly_event_rollup_stream,
-    run_stream_once,
-)
+from fixture_producers import run_stream_once
 
 
 @pytest.fixture(scope="module")
@@ -27,109 +23,6 @@ def event_dir(spark):
     df.write.mode("overwrite").parquet(src)
     yield src
     shutil.rmtree(src, ignore_errors=True)
-
-
-def test_stream_rollup_matches_batch(spark, event_dir):
-    out = tempfile.mkdtemp(prefix="stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    try:
-        stream_df = hourly_event_rollup_stream(spark, event_dir, watermark="10 minutes")
-        run_stream_once(stream_df, out, ckpt)
-        got = (
-            spark.read.parquet(out)
-            .select("hour", "event_type", "n_events", F.round("sum_value", 6).alias("sum_value"))
-            .collect()
-        )
-        batch = (
-            hourly_event_rollup(spark.read.parquet(event_dir))
-            .select("hour", "event_type", "n_events", "sum_value")
-            .collect()
-        )
-        key = lambda r: (r["hour"], r["event_type"])
-        got_map = {key(r): (r["n_events"], r["sum_value"]) for r in got}
-        batch_map = {key(r): (r["n_events"], r["sum_value"]) for r in batch}
-        # Append-mode semantics: only windows CLOSED by the watermark are
-        # emitted; the final (max-hour) windows stay open at availableNow
-        # drain. Closed windows must match batch exactly.
-        max_hour = max(h for h, _ in batch_map)
-        closed = {k: v for k, v in batch_map.items() if k[0] < max_hour}
-        assert got_map == closed
-        assert len(got_map) == 4  # 2 closed hours × 2 event types
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_stateful_sessionize_stream_matches_batch(spark):
-    """applyInPandasWithState sessionizer: sessions closed by the watermark
-    must EQUAL the batch sessionize rows (same ordinals, bounds, aggregates).
-    Three single-file micro-batches: the straggler files push the watermark
-    past every first-file session's gap horizon so their timeouts fire."""
-    import datetime as dt
-    import os
-
-    from etl_processes_spark.streaming.windows import (
-        run_stream_once,
-        sessionize,
-        sessionize_stream,
-    )
-
-    src = tempfile.mkdtemp(prefix="sess_src_")
-    out = tempfile.mkdtemp(prefix="sess_out_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
-    try:
-        t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
-        m = lambda mins: t0 + dt.timedelta(minutes=mins)
-        cols = ["event_id", "ts", "user_id", "event_type", "value"]
-        main = [
-            # user 1: session A (0,5,10m), session B (60,65m)
-            (1, m(0), 1, "click", 1.0),
-            (2, m(5), 1, "view", 2.0),
-            (3, m(10), 1, "click", 3.0),
-            (4, m(60), 1, "view", 4.0),
-            (5, m(65), 1, "click", 5.0),
-            # user 2: two singleton sessions (gap 100m)
-            (6, m(0), 2, "view", 10.0),
-            (7, m(100), 2, "click", 20.0),
-        ]
-        stragglers = [[(8, m(600), 99, "view", 0.5)], [(9, m(660), 99, "view", 0.25)]]
-        spark.createDataFrame(main, cols).coalesce(1).write.parquet(f"{src}/f1")
-        for i, rows in enumerate(stragglers):
-            spark.createDataFrame(rows, cols).coalesce(1).write.parquet(f"{src}/f{i+2}")
-        # file-stream source orders by modification time: force f1 < f2 < f3
-        for i, d in enumerate(("f1", "f2", "f3")):
-            for f in os.listdir(f"{src}/{d}"):
-                os.utime(f"{src}/{d}/{f}", (1700000000 + i * 100, 1700000000 + i * 100))
-
-        stream = sessionize_stream(
-            spark, f"{src}/*", gap_minutes=30, watermark="1 hour", max_files_per_trigger=1
-        )
-        run_stream_once(stream, out, ckpt)
-        got = {
-            (r["user_id"], r["session_id"]): (
-                r["session_start"], r["session_end"], r["n_events"], r["sum_value"]
-            )
-            for r in spark.read.parquet(out).collect()
-        }
-        batch = {
-            (r["user_id"], r["session_id"]): (
-                r["session_start"], r["session_end"], r["n_events"], r["sum_value"]
-            )
-            for r in sessionize(
-                spark.read.parquet(f"{src}/*"), gap_minutes=30
-            ).collect()
-        }
-        # every main-file session must have been closed and emitted, equal to batch
-        expected = {k: v for k, v in batch.items() if k[0] in (1, 2)}
-        assert len(expected) == 4
-        for k, v in expected.items():
-            assert got.get(k) == v, (k, got.get(k), v)
-        # nothing emitted that batch doesn't have
-        assert set(got) <= set(batch)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_stream_static_dim_join_matches_batch(spark, event_dir):
@@ -170,7 +63,7 @@ def test_stream_static_dim_join_matches_batch(spark, event_dir):
 def test_streaming_dedup_within_watermark(spark, event_dir):
     """Streaming exact dedup: dropDuplicatesWithinWatermark keyed on
     event_id — state expires with the watermark instead of growing forever
-    (the streaming twin of dedup_exact; at scale the key is the content
+    (the streaming form of exact dedup; at scale the key is the content
     sha). Result must equal the batch distinct over the same files."""
     out = tempfile.mkdtemp(prefix="sd_out_")
     ckpt = tempfile.mkdtemp(prefix="sd_ckpt_")
@@ -197,13 +90,13 @@ def test_streaming_dedup_within_watermark(spark, event_dir):
 
 
 def test_stateless_hygiene_ops_on_stream_match_batch(spark):
-    """pii_scrub / token_count / repetition-free textstats are stateless row
+    """pii_scrub / token_count_expr / repetition-free textstats are stateless row
     expressions, so they compose with readStream unchanged: an availableNow
     drain must equal the batch result on the same files (widen() safely
     no-ops on streaming frames — the plan probe rejects them)."""
     import tempfile
 
-    from etl_processes_spark.ops.textstats import pii_scrub, token_count
+    from etl_processes_spark.ops.textstats import pii_scrub, token_count_expr
 
     src = tempfile.mkdtemp(prefix="docs_src_")
     out = tempfile.mkdtemp(prefix="docs_out_")
@@ -223,7 +116,10 @@ def test_stateless_hygiene_ops_on_stream_match_batch(spark):
             for r in pii_scrub(batch, "doc_id", "text").collect()
         }
         expect_tok = {
-            r["doc_id"]: r["n_tokens"] for r in token_count(batch, "doc_id", "text").collect()
+            r["doc_id"]: r["n_tokens"]
+            for r in batch.select(
+                "doc_id", token_count_expr("text").alias("n_tokens")
+            ).collect()
         }
 
         stream = spark.readStream.schema(batch.schema).parquet(src)
@@ -235,10 +131,10 @@ def test_stateless_hygiene_ops_on_stream_match_batch(spark):
             for r in spark.read.parquet(out).collect()
         }
         assert got == expect_pii
-        # token_count drains too
+        # token_count_expr drains too
         out2 = tempfile.mkdtemp(prefix="docs_out2_")
         ckpt2 = tempfile.mkdtemp(prefix="docs_ckpt2_")
-        tdf = token_count(stream, "doc_id", "text").select("doc_id", "n_tokens")
+        tdf = stream.select("doc_id", token_count_expr("text").alias("n_tokens"))
         run_stream_once(tdf, out2, ckpt2)
         got_tok = {r["doc_id"]: r["n_tokens"] for r in spark.read.parquet(out2).collect()}
         assert got_tok == expect_tok
@@ -391,36 +287,3 @@ def test_incremental_ingest_stream_line_state_flows(spark, tmp_path):
     assert "subscribe" in texts[0]
     assert "subscribe" not in texts[1]
     assert "tall ship" in texts[1]
-
-
-def test_continuous_rollup_stream(spark, tmp_path, sf_dir):
-    import __spark_entry__ as entrymod
-    from etl_processes_spark.streaming.windows import (
-        continuous_rollup_stream,
-        hourly_rollup_state,
-        read_continuous_rollup,
-        rollup_read,
-    )
-
-    ev = entrymod._load_events(spark, sf_dir)
-    src = str(tmp_path / "src")
-    # three source files -> at least one micro-batch each with
-    # maxFilesPerTrigger=1
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).write.parquet(f"{src}/f{i}.parquet")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    q = continuous_rollup_stream(
-        spark, f"{src}/*", state, ckpt, available_now=True, max_files_per_trigger=1
-    )
-    q.awaitTermination()
-    got = sorted(map(tuple, read_continuous_rollup(spark, state).collect()))
-    full = sorted(map(tuple, rollup_read(hourly_rollup_state(ev)).collect()))
-    assert got == full and len(got) > 100
-    # restart with no new files: a no-op, state unchanged
-    q2 = continuous_rollup_stream(
-        spark, f"{src}/*", state, ckpt, available_now=True, max_files_per_trigger=1
-    )
-    q2.awaitTermination()
-    again = sorted(map(tuple, read_continuous_rollup(spark, state).collect()))
-    assert again == got

@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from etl_processes_spark.ops.textstats import (
     fingerprint,
-    lang_id,
+    lang_id_exprs,
     quality_features,
-    token_count,
+    token_count_expr,
     winnowing_fingerprints,
 )
 
@@ -30,7 +30,12 @@ def docs(spark):
 
 
 def test_token_count(docs):
-    rows = {r["doc_id"]: r for r in token_count(docs, "doc_id", "text").collect()}
+    counted = docs.select(
+        "doc_id",
+        token_count_expr("text").alias("n_tokens"),
+        F.length(F.col("text").cast("string")).alias("n_chars_measured"),
+    )
+    rows = {r["doc_id"]: r for r in counted.collect()}
     assert rows[0]["n_tokens"] == 8
     assert rows[5]["n_tokens"] == 0
     assert rows[6]["n_tokens"] == 8  # a b c 123 mixed content 42 done
@@ -38,7 +43,11 @@ def test_token_count(docs):
 
 
 def test_lang_id_markers(docs):
-    rows = {r["doc_id"]: r["pred_lang"] for r in lang_id(docs, "doc_id", "text").collect()}
+    pred_lang, _ = lang_id_exprs("text")
+    rows = {
+        r["doc_id"]: r["pred_lang"]
+        for r in docs.select("doc_id", pred_lang.alias("pred_lang")).collect()
+    }
     assert rows[0] == "en"
     assert rows[1] == "de"
     assert rows[2] == "es"
@@ -317,56 +326,6 @@ def test_unigram_logprob_score(spark):
     assert a == b
 
 
-def test_corpus_stats_per_group(spark):
-    from etl_processes_spark.ops.textstats import corpus_stats
-
-    rows = (
-        [(i, "en", "the quick brown fox jumps over the lazy dog") for i in range(4)]
-        + [(10, "de", "der hund und die katze laufen durch den park im regen")]
-    )
-    df = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-    out = {r["lang"]: r for r in corpus_stats(df, "doc_id", "text", "lang").collect()}
-    assert out["en"]["n_docs"] == 4 and out["de"]["n_docs"] == 1
-    assert out["en"]["n_tokens"] == 4 * 9
-    # 4 identical en docs -> 1 unique sha -> dup rate 0.75
-    assert abs(out["en"]["dup_rate"] - 0.75) < 1e-9
-    assert out["de"]["dup_rate"] == 0.0
-    assert out["en"]["p50_tokens"] == 9
-
-    # global (no group): one row
-    g = corpus_stats(df, "doc_id", "text").collect()
-    assert len(g) == 1 and g[0]["n_docs"] == 5
-
-
-def test_corpus_diff_statuses(spark):
-    from etl_processes_spark.ops.textstats import corpus_diff
-
-    old = spark.createDataFrame(
-        [(1, "stays the same"), (2, "gets edited soon"), (3, "will be removed")],
-        ["doc_id", "text"],
-    )
-    new = spark.createDataFrame(
-        [(1, "stays the same"), (2, "was edited now"), (4, "brand new doc")],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r["status"] for r in corpus_diff(old, new, "doc_id", "text").collect()}
-    assert out == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}
-    # normalization: case/punctuation differences are NOT changes
-    new2 = spark.createDataFrame([(1, "STAYS the same!!")], ["doc_id", "text"])
-    out2 = {r["doc_id"]: r["status"]
-            for r in corpus_diff(old.filter("doc_id=1"), new2, "doc_id", "text").collect()}
-    assert out2 == {1: "unchanged"}
-
-
-def test_corpus_diff_null_text(spark):
-    from etl_processes_spark.ops.textstats import corpus_diff
-
-    old = spark.createDataFrame([(1, None), (2, "text"), (3, None)], ["doc_id", "text"])
-    new = spark.createDataFrame([(1, "filled"), (2, None), (3, None)], ["doc_id", "text"])
-    out = {r["doc_id"]: r["status"] for r in corpus_diff(old, new, "doc_id", "text").collect()}
-    assert out == {1: "changed", 2: "changed", 3: "unchanged"}
-
-
 def test_unigram_frozen_lm_oov_floor(spark):
     from etl_processes_spark.ops.textstats import unigram_logprob_score
 
@@ -450,59 +409,6 @@ def test_tfidf_top_terms(spark):
     ]
 
 
-def test_compression_ratio(spark):
-    from etl_processes_spark.ops.textstats import compression_ratio
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spam " * 400),                      # highly redundant
-            (2, None),
-            (3, ""),
-            (4, "The quick brown fox jumps over the lazy dog while seventeen "
-                "zebras quietly examine fourteen unique artifacts nearby."),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["id"]: r for r in compression_ratio(docs, "doc_id", "text").collect()}
-    assert got[1]["ratio"] < 0.05          # template text crushes
-    assert got[2]["ratio"] == 1.0 and got[2]["n_bytes"] == 0
-    assert got[3]["ratio"] == 1.0
-    assert 0.3 < got[4]["ratio"] <= 1.2    # prose does not
-    # deterministic across runs and partitionings
-    a = sorted(map(tuple, compression_ratio(docs, "doc_id", "text").collect()))
-    b = sorted(map(tuple, compression_ratio(docs.repartition(3), "doc_id", "text").collect()))
-    assert a == b
-
-
-def test_frequent_itemsets(spark):
-    from pyspark.sql import functions as F
-
-    from etl_processes_spark.ops.textstats import frequent_itemsets
-
-    # {a,b} co-occur in 6/10 baskets; c is frequent alone; d is rare
-    baskets = (
-        [(["a", "b", "c"],)] * 3
-        + [(["a", "b"],)] * 3
-        + [(["c"],)] * 3
-        + [(["d", "a", "a"],)]  # duplicate item in basket must not throw
-    )
-    df = spark.createDataFrame(baskets, "items array<string>")
-    itemsets, rules = frequent_itemsets(df, "items", min_support=0.3, min_confidence=0.6)
-    freq = {tuple(r["items"]): r["freq"] for r in itemsets.collect()}
-    assert freq[("a",)] == 7 and freq[("a", "b")] == 6 and freq[("c",)] == 6
-    assert ("d",) not in freq  # below support
-    got_rules = {
-        (tuple(r["antecedent"]), tuple(r["consequent"])): r["confidence"]
-        for r in rules.collect()
-    }
-    assert got_rules[(("b",), ("a",))] == 1.0  # every b-basket contains a
-    assert got_rules[(("a",), ("b",))] == pytest.approx(6 / 7)
-    # partition invariance
-    a = sorted(map(tuple, itemsets.collect()))
-    i2, _ = frequent_itemsets(df.repartition(5), "items", 0.3, 0.6)
-    assert a == sorted(map(tuple, i2.collect()))
-
-
 def test_heavy_hitters_rejects_sub_floor_share(spark):
     # below Spark's freqItems floor (1e-4) the no-false-negative contract
     # cannot hold -> loud error, never a silent clamp
@@ -513,27 +419,9 @@ def test_heavy_hitters_rejects_sub_floor_share(spark):
         heavy_hitters(df, "v", min_share=1e-5)
 
 
-def test_frequent_itemsets_support_denominator(spark):
-    from etl_processes_spark.ops.textstats import frequent_itemsets
-
-    # 2 real baskets + 1 empty + 1 null: support denominator is 2, not 4
-    df = spark.createDataFrame(
-        [(["a", "b"],), (["a"],), ([],), (None,)], "items array<string>"
-    )
-    itemsets, _ = frequent_itemsets(df, "items", min_support=0.5, min_confidence=0.5)
-    sup = {tuple(r["items"]): r["support"] for r in itemsets.collect()}
-    assert sup[("a",)] == 1.0  # 2/2, would be 0.5 with the old denominator
-    assert sup[("a", "b")] == 0.5
-
-    # all-empty input: empty results, no division by zero
-    empty = spark.createDataFrame([([],), (None,)], "items array<string>")
-    i0, r0 = frequent_itemsets(empty, "items")
-    assert i0.count() == 0 and r0.count() == 0
-
-
 def test_text_analysis_features_matches_composed_form(spark):
     """The fused single-aggregate pass must be value-identical to the
-    composed form (token_count ⋈ lang_id ⋈ quality_features) — including
+    composed form (token_count_expr, lang_id_exprs ⋈ quality_features) — including
     the null-text and empty-text edges where size(null)/filter(null)
     propagate NULL in the expression forms."""
     from pyspark.sql import functions as F

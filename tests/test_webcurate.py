@@ -1,14 +1,9 @@
-"""URL/domain curation: host extraction, blocklist filtering, per-domain caps."""
+"""URL/domain curation: host and registered-domain extraction."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from etl_processes_spark.ops.textstats import (
-    domain_blocklist_filter,
-    per_domain_cap,
-    url_host_expr,
-    url_registered_domain_expr,
-)
+from etl_processes_spark.ops.textstats import url_host_expr, url_registered_domain_expr
 
 URLS = [
     (0, "https://docs.example.com/guide/intro?x=1"),
@@ -39,60 +34,3 @@ def test_host_and_domain_extraction(urls):
     assert rows[3]["dom"] == "example.org"
     assert rows[6]["dom"] == "example.com"          # case-folded
     assert rows[5]["host"] == "" or rows[5]["host"] is None
-
-
-def test_blocklist_list_and_frame(urls, spark):
-    kept = domain_blocklist_filter(urls, "url", ["bad-site.net"])
-    ids = {r["id"] for r in kept.collect()}
-    assert 1 not in ids and 0 in ids and 2 in ids
-
-    bl = spark.createDataFrame([("bad-site.net",), ("example.org",)], ["domain"])
-    kept2 = {r["id"] for r in domain_blocklist_filter(urls, "url", bl).collect()}
-    assert kept2.isdisjoint({1, 3})
-    assert 0 in kept2
-
-
-def test_blocklist_is_scan_side_for_lists(urls):
-    import contextlib, io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        domain_blocklist_filter(urls, "url", ["bad-site.net"]).explain("formatted")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan  # pure Filter over the scan
-
-
-def test_per_domain_cap(spark):
-    rows = [(i, f"https://hot.example.com/p{i}") for i in range(50)] + [
-        (100 + i, f"https://rare{i}.org/x") for i in range(5)
-    ]
-    df = spark.createDataFrame(rows, ["id", "url"])
-    capped = per_domain_cap(df, "url", cap=10, key_col="id", seed=1)
-    by_dom = (
-        capped.withColumn("d", url_registered_domain_expr("url"))
-        .groupBy("d").count().collect()
-    )
-    counts = {r["d"]: r["count"] for r in by_dom}
-    assert counts["example.com"] == 10          # hot domain capped
-    assert sum(v for k, v in counts.items() if k != "example.com") == 5
-    # deterministic
-    a = sorted(r["id"] for r in capped.collect())
-    b = sorted(r["id"] for r in per_domain_cap(df, "url", 10, "id", seed=1).collect())
-    assert a == b
-
-
-def test_blocklist_null_url_and_keep_unparsed(urls, spark):
-    # NULL/unparseable urls follow keep_unparsed on BOTH paths
-    kept = {r["id"] for r in domain_blocklist_filter(
-        urls, "url", ["bad-site.net"], keep_unparsed=True
-    ).collect()}
-    assert 5 in kept and 4 in kept          # NULL + junk kept
-    dropped = {r["id"] for r in domain_blocklist_filter(
-        urls, "url", ["bad-site.net"], keep_unparsed=False
-    ).collect()}
-    assert 5 not in dropped
-    bl = spark.createDataFrame([("bad-site.net",)], ["domain"])
-    strict = {r["id"] for r in domain_blocklist_filter(
-        urls, "url", bl, keep_unparsed=False
-    ).collect()}
-    assert 5 not in strict and 1 not in strict

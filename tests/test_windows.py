@@ -96,69 +96,6 @@ def test_cascading_rollup_daily_equals_from_raw(spark):
     assert got == from_raw
 
 
-def test_cascading_rollup_distinct_sketch(spark, sf_dir):
-    """HLL cascade: daily distinct users estimated from UNIONED hourly
-    sketches must track the exact daily count-distinct within sketch error
-    (~1.6% at lgk=12), and the hourly estimates likewise."""
-    import __spark_entry__ as em
-    from etl_processes_spark.streaming.windows import cascading_rollup_distinct
-
-    ev = em._load_events(spark, sf_dir)
-    hourly, daily = cascading_rollup_distinct(ev, lgk=12)
-
-    exact_daily = {
-        (r["day"], r["event_type"]): r["n"]
-        for r in ev.groupBy(
-            F.date_trunc("day", "ts").alias("day"), "event_type"
-        )
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    got = daily.collect()
-    assert len(got) > 0
-    for r in got:
-        exact = exact_daily[(r["day"], r["event_type"])]
-        assert abs(r["n_users_approx"] - exact) <= max(2.0, 0.05 * exact), (
-            r["day"], r["event_type"], r["n_users_approx"], exact,
-        )
-    # n_events cascades exactly
-    exact_events = {
-        (r["day"], r["event_type"]): r["n"]
-        for r in ev.groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    for r in got:
-        assert exact_events[(r["day"], r["event_type"])] == r["n_events"]
-
-
-def test_rollup_upsert_batch_fold_equals_full(spark, sf_dir):
-    # fold the state over arbitrary batch splits == rollup of the full data,
-    # EXACTLY (decimal partials make the merge order-independent)
-    import __spark_entry__ as entrymod
-    from etl_processes_spark.streaming.windows import (
-        hourly_rollup_state,
-        rollup_read,
-        rollup_upsert,
-    )
-
-    ev = entrymod._load_events(spark, sf_dir)
-    full = rollup_read(hourly_rollup_state(ev)).collect()
-    state = None
-    for i in range(3):  # uneven batches, late "events" land in old hours
-        batch = ev.filter(F.col("event_id") % 3 == i)
-        state = rollup_upsert(state, batch).localCheckpoint()
-    folded = rollup_read(state).collect()
-    key = lambda r: (r["hour"], r["event_type"])
-    assert sorted(map(tuple, folded), key=lambda t: (t[0], t[1])) == sorted(
-        map(tuple, full), key=lambda t: (t[0], t[1])
-    )
-    # replaying an empty batch is a no-op
-    empty = ev.filter(F.lit(False))
-    again = rollup_read(rollup_upsert(state, empty)).collect()
-    assert sorted(map(tuple, again)) == sorted(map(tuple, folded))
-
-
 def test_sessionize_gap_boundary_semantics(spark):
     # exactly-gap successor MERGES (inclusive boundary); one tick past the
     # gap splits

@@ -40,7 +40,6 @@ def generate(
     profiles: dict[str, ColumnProfile],
     n_samples: int,
     seed: int = DEFAULT_GEN_SEED,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """One generation job: spark.range(n) + one expression per column.
     Per-column seeds are offset deterministically, so the whole table is
@@ -48,11 +47,7 @@ def generate(
     embedding model fall back to bootstrap resampling of retained entries
     (the reference's email/phone strategy, Latanova_v1.py:306-309); the MVN
     embedding path lives in etl_processes_spark.text."""
-    frame = (
-        spark.range(0, n_samples, 1, num_partitions)
-        if num_partitions
-        else spark.range(n_samples)
-    )
+    frame = spark.range(n_samples)
     # Generated columns are built under reserved temp names and renamed to
     # their profile names only in the final select: the range "id" column
     # (which u_expr/z_expr and gen_text_column key their RNG off) must stay

@@ -5,9 +5,9 @@ csv_scan / csv_sink mirror the reference's pd.read_csv / to_csv
 (:706-738); profile_sink/profile_source persist the ColumnProfile artifact
 (the engine's "catalog") as JSON.
 
-Scale notes: csv_sink's ``single_file`` coalesces to one partition — only for
-small result exports (the reference's semantic); bulk output stays
-partitioned parquet via ``parquet_sink``.
+Scale notes: csv_sink coalesces to one partition — for small result exports
+(the reference's semantic); bulk output stays partitioned parquet via
+``parquet_sink``.
 """
 
 from __future__ import annotations
@@ -43,18 +43,15 @@ def csv_scan(
     )
 
 
-def csv_sink(df: DataFrame, path: str, single_file: bool = True) -> None:
-    """to_csv(index=False) equivalent (Latanova_v1.py:705). Writes RFC4180
-    doubled-quote escapes so csv_scan (and pandas) read back verbatim."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("escape", '"').csv(path, header=True)
+def csv_sink(df: DataFrame, path: str) -> None:
+    """to_csv(index=False) equivalent (Latanova_v1.py:705): one part file.
+    Writes RFC4180 doubled-quote escapes so csv_scan (and pandas) read back
+    verbatim."""
+    df.coalesce(1).write.mode("overwrite").option("escape", '"').csv(path, header=True)
 
 
-def parquet_sink(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+def parquet_sink(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
 def json_scan(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -75,11 +72,8 @@ def orc_scan(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def orc_sink(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
+def orc_sink(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").orc(path)
 
 
 def profile_sink(profiles: dict[str, ColumnProfile], path: str) -> None:

@@ -129,10 +129,9 @@ def dedup_exact_keep_min(df: DataFrame, id_col: str, key: Column | str) -> DataF
     )
 
 
-def content_hash_expr(c: str | Column, normalize: bool = True) -> Column:
-    """sha2-256 content fingerprint; optionally over normalized text."""
-    col = normalized_text_expr(c) if normalize else (F.col(c) if isinstance(c, str) else c)
-    return F.sha2(col.cast("string"), 256)
+def content_hash_expr(c: str | Column) -> Column:
+    """sha2-256 content fingerprint over normalized text."""
+    return F.sha2(normalized_text_expr(c).cast("string"), 256)
 
 
 # ---------------------------------------------------------------------------
@@ -293,6 +292,11 @@ def line_dedup_incremental(
 # ---------------------------------------------------------------------------
 
 
+# ngram_jaccard_pairs takes the PPJoin prefix route at thresholds from here
+# up, the full-postings inverted join below (see its docstring)
+PREFIX_MIN_THRESHOLD = 0.3
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -301,25 +305,24 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int | None = None,
     ndigits: int = 6,
-    mode: str = "auto",
     log_dropped: bool = False,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with Jaccard(shingleset_a, shingleset_b) >=
     threshold. Exact; the self-join is on the shingle key (inverted index),
     so cost is Σ df(shingle)² — cap with ``max_df`` at scale.
 
-    ``mode``: "inverted" = the full-postings join below; "prefix" = PPJoin
-    prefix filtering (Bayardo et al., WWW'07; Xiao et al., WWW'08): each
-    doc indexes only its |S| - ceil(t*|S|) + 1 RAREST shingles (global
-    (df, hash) order) — two sets with Jaccard >= t must collide inside
-    those prefixes, so candidate volume falls from Σ df² to Σ pdf² and the
-    exact verify (array_intersect on per-doc hash arrays) runs on survivors
-    only. Identical output, certified by a brute-force differential test.
-    "auto" = prefix when threshold >= 0.3 (prefixes prune meaningfully),
-    inverted otherwise — at sf10 (500k realistic docs) the t=0.06 inverted
-    join measures ~570s while t=0.5 prefix measures seconds; LOW-threshold
-    exact all-pairs is intrinsically Σ df²-bound, and the scale answer
-    there is minhash_lsh_pairs or a higher threshold, not this operator.
+    Two routes, picked by ``threshold``: below ``PREFIX_MIN_THRESHOLD`` the
+    full-postings inverted join below; from it up, PPJoin prefix filtering
+    (Bayardo et al., WWW'07; Xiao et al., WWW'08), where prefixes prune
+    meaningfully: each doc indexes only its |S| - ceil(t*|S|) + 1 RAREST
+    shingles (global (df, hash) order) — two sets with Jaccard >= t must
+    collide inside those prefixes, so candidate volume falls from Σ df² to
+    Σ pdf² and the exact verify (array_intersect on per-doc hash arrays)
+    runs on survivors only. Identical output, certified by a differential
+    test. At sf10 (500k realistic docs) the t=0.06 inverted join measures
+    ~570s while t=0.5 prefix measures seconds; LOW-threshold exact
+    all-pairs is intrinsically Σ df²-bound, and the scale answer there is
+    minhash_lsh_pairs or a higher threshold, not this operator.
 
     PRECONDITION: ``id_col`` is unique (one row per document) — the doc-id
     contract every dedup operator here shares. Rows that duplicate an id
@@ -335,10 +338,6 @@ def ngram_jaccard_pairs(
     ~n²/2⁶⁰ per doc pair), ~3-4× narrower shuffles. The hashed stream is
     localCheckpoint'd once and feeds the df-cap, the size count and both
     self-join sides — without it the scan+shingle+md5 work runs 3×."""
-    if mode not in ("auto", "inverted", "prefix"):
-        raise ValueError(f"mode must be auto|inverted|prefix, got {mode!r}")
-    if mode == "auto":
-        mode = "prefix" if threshold >= 0.3 else "inverted"
     sh = widen(df).select(
         F.col(id_col).alias("id"), F.explode(shingles_expr(text_col, k)).alias("shingle")
     ).select("id", md5_long_expr("shingle").alias("h"))
@@ -370,7 +369,7 @@ def ngram_jaccard_pairs(
                 )
         sh = sh.join(freq.filter(F.col("__df") <= max_df).select("h"), "h")
         sh = _ckpt_wide(sh)
-    if mode == "prefix":
+    if threshold >= PREFIX_MIN_THRESHOLD:
         return _jaccard_pairs_prefix(sh, threshold, ndigits)
     # set sizes travel INLINE on the postings (one narrow join on id, ~|postings|
     # rows) so the Jaccard filter applies directly on the pair aggregation — at a
@@ -445,7 +444,7 @@ def _jaccard_pairs_prefix(sh: DataFrame, threshold: float, ndigits: int) -> Data
     Every pruning bound runs at ``t = threshold - 0.5·10^-ndigits``, not at
     ``threshold``: the final filter keeps round(J, ndigits) >= threshold,
     which a J just under ``threshold`` can pass by rounding up, so pruning
-    at the exact threshold would drop pairs the inverted mode returns."""
+    at the exact threshold would drop pairs the inverted route returns."""
     from pyspark.sql.window import Window
 
     t = threshold - 0.5 * 10.0**-ndigits
@@ -638,9 +637,8 @@ def minhash_lsh_pairs(
     bands: int = 16,
     k: int = 5,
     threshold: float = 0.5,
-    verify: bool = True,
 ) -> DataFrame:
-    """LSH-banded candidate generation + (optional) exact-Jaccard verify.
+    """LSH-banded candidate generation + exact-Jaccard verify.
     rows-per-band = num_hashes // bands; two docs are candidates if any band
     of their signatures collides. The bucket join is an equi-join on
     (band, band_hash) — no quadratic candidate explosion."""
@@ -665,8 +663,6 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    if not verify:
-        return cand
     # Exact-Jaccard verify on CANDIDATES ONLY: join each candidate pair to the
     # two docs' distinct-shingle arrays and intersect. Cost is O(|candidates|),
     # not O(all-pairs) — re-running the full inverted-index join here would
@@ -704,13 +700,18 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
+# connected_components finishes on the driver when the undirected edge list
+# (2 rows per pair) has at most this many rows; label propagation gives up
+# (RuntimeError) after CC_MAX_ITERATIONS rounds without a fixpoint
+DRIVER_MAX_EDGES = 50_000_000
+CC_MAX_ITERATIONS = 25
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iterations: int = 25,
     initial_labels: DataFrame | None = None,
-    driver_max_edges: int = 50_000_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list → (node, cluster_id)
     with cluster_id = min node id in the component.
@@ -738,7 +739,7 @@ def connected_components(
     Size-routed, like embedding_near_dup: a dedup graph is SPARSE relative
     to the corpus (edges exist only between near-dups), so even at 100 TB
     the edge list is usually orders of magnitude smaller than the data.
-    When it fits comfortably on the driver (≤ ``driver_max_edges``, known
+    When it fits comfortably on the driver (≤ ``DRIVER_MAX_EDGES``, known
     from the count the iterative path needs anyway), a vectorized driver
     pass replaces O(log d) Spark rounds whose per-round scheduling dwarfs
     the tiny shuffles — the default cap (25M edges ≈ 400 MB of int64
@@ -747,7 +748,7 @@ def connected_components(
     Above the threshold, distributed min-label propagation with pointer
     jumping handles graphs of any size.
 
-    Exhausting ``max_iterations`` before the label-sum fixpoint means some
+    Exhausting ``CC_MAX_ITERATIONS`` before the label-sum fixpoint means some
     components may still carry split labels; that raises RuntimeError rather
     than silently returning unconverged clusters.
     """
@@ -763,7 +764,7 @@ def connected_components(
     # a cheap cached scan): tiny dup graphs iterate in one partition instead
     # of paying 32-task scheduling per round; huge graphs keep full width
     n_edges = edges.count()
-    if 2 * n_edges <= driver_max_edges:
+    if 2 * n_edges <= DRIVER_MAX_EDGES:
         out = _cc_driver_union_find(edges)
         # the result lives on the driver now (createDataFrame) — the edge
         # checkpoint's blocks are dead weight the moment toPandas returned
@@ -788,7 +789,7 @@ def connected_components(
     labels = labels.localCheckpoint(eager=True)
     prev_sum = None
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ITERATIONS):
         nbr = (
             und.join(labels.withColumnRenamed("node", "s"), "s")
             .groupBy(F.col("d").alias("node"))
@@ -823,8 +824,8 @@ def connected_components(
     if not converged:
         raise RuntimeError(
             f"connected_components did not reach the label fixpoint within "
-            f"{max_iterations} iterations — components may be split; raise "
-            f"max_iterations (graph diameter exceeds 2^{max_iterations})"
+            f"{CC_MAX_ITERATIONS} iterations — components may be split "
+            f"(graph diameter exceeds 2^{CC_MAX_ITERATIONS})"
         )
     # the final labels checkpoint must outlive this call (the returned frame
     # reads it) — register it so a composed pipeline can free it once the
@@ -982,7 +983,6 @@ def dedup_incremental(
     seen_hashes: DataFrame,
     id_col: str,
     text_col: str,
-    normalize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Exact-dedup a NEW batch against an already-ingested corpus without
     touching the corpus itself — the streaming/append shape of production
@@ -1000,7 +1000,7 @@ def dedup_incremental(
     shuffle-hash beyond) plus one within-batch groupBy. The corpus is never
     re-scanned; state grows one digest per unique document, the same state
     economics as dropDuplicatesWithinWatermark but durable across runs."""
-    hashed = new_docs.withColumn("__key", content_hash_expr(text_col, normalize=normalize))
+    hashed = new_docs.withColumn("__key", content_hash_expr(text_col))
     vs_corpus = hashed.join(seen_hashes.select("__key"), "__key", "left_anti")
     survivors = vs_corpus.groupBy("__key").agg(F.min(id_col).alias(id_col))
     fresh = vs_corpus.join(survivors, [id_col, "__key"], "left_semi").drop("__key")
@@ -1244,7 +1244,6 @@ def remove_duplicate_spans(
     text_col: str,
     k: int = 8,
     min_df: int = 2,
-    max_df: int | None = None,
 ) -> DataFrame:
     """ExactSubstr-style span removal (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better"): every token covered by a
@@ -1265,8 +1264,7 @@ def remove_duplicate_spans(
     set is NOT guaranteed Zipf-tiny, so no broadcast is forced) and
     collapse to one sorted array per doc; coverage is then a pure
     array-expression filter — exists(starts, s <= i < s+k) per token index
-    — inside whole-stage codegen, no UDF. ``max_df`` caps pathological
-    windows (boilerplate detected by line dedup is cheaper there)."""
+    — inside whole-stage codegen, no UDF."""
     # tokenize ONCE: interpreted HOFs are not CSE'd across consumers, so
     # size(toks) alongside toks.alias() would re-run the tokenize pipeline
     base = (
@@ -1289,10 +1287,7 @@ def remove_duplicate_spans(
     win = _ckpt_wide(win)
 
     freq = win.groupBy("__h").agg(F.count_distinct("__id").alias("__df"))
-    dup_pred = F.col("__df") >= min_df
-    if max_df is not None:
-        dup_pred = dup_pred & (F.col("__df") <= max_df)
-    frequent = freq.filter(dup_pred).select("__h")
+    frequent = freq.filter(F.col("__df") >= min_df).select("__h")
 
     starts = (
         win.join(frequent, "__h")

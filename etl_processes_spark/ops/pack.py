@@ -46,12 +46,10 @@ def pack_documents(
     id_col: str,
     tokens_col: str,
     budget: int,
-    order_col: str | None = None,
-    num_shards: int | None = None,
 ) -> DataFrame:
     """Assign documents to contiguous bins of ~``budget`` tokens (sequence
-    packing for fixed-context training). Greedy cumulative packing in
-    ``order_col`` order (default: the id): a document goes to bin
+    packing for fixed-context training). Greedy cumulative packing in id
+    order: a document goes to bin
     floor(tokens_before / budget), so every bin holds a contiguous run and
     only the document straddling a boundary can overflow its bin — the
     standard streaming-pack tradeoff (exact first-fit is inherently
@@ -64,31 +62,25 @@ def pack_documents(
     twice out of order).
 
     Scale shape — two-phase prefix sum, no global single-partition sort:
-    the frame is RANGE-partitioned on the pack order into ``num_shards``
-    order-contiguous shards; phase 1 computes each row's shard-local
-    cumulative sum (window partitioned BY SHARD — every shard sorts in
-    parallel); phase 2 adds the total tokens of all earlier shards, a
-    shard-indexed prefix computed from the tiny per-shard totals (one
-    ``num_shards``-row aggregate, broadcast back). The result is the exact
-    global cumulative sum. spark_partition_id() is safe as the shard key
+    the frame is RANGE-partitioned on the id into
+    ``spark.sql.shuffle.partitions`` order-contiguous shards; phase 1
+    computes each row's shard-local cumulative sum (window partitioned BY
+    SHARD — every shard sorts in parallel); phase 2 adds the total tokens
+    of all earlier shards, a shard-indexed prefix computed from the tiny
+    per-shard totals (one row per shard, broadcast back). The result is the
+    exact global cumulative sum. spark_partition_id() is safe as the shard key
     precisely because repartitionByRange makes shards order-contiguous and
     index-ordered: the global cumsum is invariant to WHERE the shard
     boundaries fall, so the output is deterministic even though the range
     sampler is not."""
     if budget <= 0:
         raise ValueError(f"budget must be > 0, got {budget}")  # / and % by 0 are null under non-ANSI
-    order = order_col or id_col
-    base = df.select(
-        F.col(id_col),
-        F.col(tokens_col).alias("n_tokens"),
-        F.col(order).alias("__ord"),
-    )
-    if num_shards is None:
-        try:
-            num_shards = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):  # e.g. "auto" on managed platforms
-            num_shards = df.sparkSession.sparkContext.defaultParallelism
-    sh = base.repartitionByRange(num_shards, F.col("__ord"), F.col(id_col)).withColumn(
+    base = df.select(F.col(id_col), F.col(tokens_col).alias("n_tokens"))
+    try:
+        num_shards = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):  # e.g. "auto" on managed platforms
+        num_shards = df.sparkSession.sparkContext.defaultParallelism
+    sh = base.repartitionByRange(num_shards, F.col(id_col)).withColumn(
         "__shard", F.spark_partition_id()
     )
     # the shard ids come from a SAMPLING-based range partitioner: both plan
@@ -100,11 +92,11 @@ def pack_documents(
     sh = track_checkpoint(sh.localCheckpoint(eager=False))
     w_local = (
         Window.partitionBy("__shard")
-        .orderBy(F.col("__ord"), F.col(id_col))
+        .orderBy(F.col(id_col))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
     )
     local_before = F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    # per-shard totals → prefix of earlier shards (num_shards rows: the
+    # per-shard totals → prefix of earlier shards (one row per shard: the
     # single-partition window here is over the TINY aggregate, never the data)
     w_pref = Window.orderBy("__shard").rowsBetween(
         Window.unboundedPreceding, Window.currentRow - 1

@@ -141,26 +141,30 @@ def _estimate_rows(df: DataFrame) -> int | None:
     return None
 
 
+# embedding_near_dup_pairs routes: exact all-pairs up to MAX_EXACT_ROWS
+# rows; above it, LSH while its estimated candidate volume stays under
+# MAX_CANDIDATE_FACTOR·n rows, else k-means cells
+MAX_EXACT_ROWS = 10_000
+MAX_CANDIDATE_FACTOR = 64.0
+
+
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
     ndigits: int = 6,
-    max_exact_rows: int = 10_000,
     num_planes: int | None = None,
     bands: int | None = None,
     seed: int = 42,
     n_rows: int | None = None,
-    method: str = "auto",
-    max_candidate_factor: float = 64.0,
     target_cell_rows: int = 4096,
     fit_sample: int = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, rounded cosine >=
     threshold). Routed by size AND by measured corpus geometry:
 
-     - corpus <= ``max_exact_rows``: EXACT blocked all-pairs — one side
+     - corpus <= ``MAX_EXACT_ROWS``: EXACT blocked all-pairs — one side
        broadcast as a normalized matrix, corpus streamed, one BLAS matmul per
        Arrow batch, only passing pairs emitted (never the n² pair set).
      - larger, high threshold: hyperplane-LSH bucketed candidates (equi-join
@@ -172,7 +176,7 @@ def embedding_near_dup_pairs(
     The lsh/cells choice is MEASURED, not threshold-ruled: the expected
     candidate volume is estimated on the seeded fit sample (mean pairwise
     band-collision probability × n²/2 — see _estimate_lsh_candidates) and
-    LSH is used only when that stays under ``max_candidate_factor``·n rows.
+    LSH is used only when that stays under ``MAX_CANDIDATE_FACTOR``·n rows.
     The threshold alone can't decide this: at tau=0.5 a corpus of
     near-orthogonal vectors buckets fine, while a corpus concentrated in a
     few tight clusters collides ~20% of same-cluster pairs per band-set —
@@ -184,10 +188,10 @@ def embedding_near_dup_pairs(
     per band ~ log2(n) so a random (orthogonal) pair's collision odds are
     ~1/n per band, and the band count targets 90% recall at the threshold,
     capped at 32 (below-0.5 estimated recall warns). Passing both knobs
-    explicitly pins the LSH route and skips auto entirely — existing
-    callers keep their exact plan. ``method`` ("auto"/"exact"/"lsh"/
-    "cells") overrides routing; exact/cells recall contracts match
-    semantic_dedup's (cell-boundary pairs are missed).
+    explicitly pins the LSH route above the exact size and skips the
+    candidate estimate — existing callers keep their exact plan. The cells
+    route's recall contract matches semantic_dedup's (cell-boundary pairs
+    are missed).
 
     Routing reads ``n_rows`` (caller-supplied hint) first. Catalyst's
     optimized-plan row-count statistic is trusted only in the SAFE
@@ -198,38 +202,30 @@ def embedding_near_dup_pairs(
     broadcast an arbitrarily large matrix. At 100 TB the caller passes the
     size, so no probe runs.
     """
-    if method not in ("auto", "exact", "lsh", "cells"):
-        raise ValueError(f"method must be auto|exact|lsh|cells, got {method!r}")
-    n = n_rows
-    if n is None:
-        est = _estimate_rows(corpus)
-        if est is not None and est > max_exact_rows:
-            n = est  # safe direction: over-threshold routes away from exact
-        else:
-            n = corpus.count()
     if (num_planes is None) != (bands is None):
         raise ValueError(
             "embedding_near_dup_pairs: num_planes and bands must be supplied "
             "together (or both left None for auto geometry); got "
             f"num_planes={num_planes!r}, bands={bands!r}"
         )
-    if method == "exact" or (method == "auto" and n <= max_exact_rows):
+    n = n_rows
+    if n is None:
+        est = _estimate_rows(corpus)
+        if est is not None and est > MAX_EXACT_ROWS:
+            n = est  # safe direction: over-threshold routes away from exact
+        else:
+            n = corpus.count()
+    if n <= MAX_EXACT_ROWS:
         return _near_dup_exact_blocked(corpus, id_col, vec_col, threshold, ndigits)
-    if method == "cells":
-        return _near_dup_cells(
-            corpus, id_col, vec_col, threshold, ndigits,
-            target_cell_rows, fit_sample, seed,
-        )
     if num_planes is None:
         num_planes, bands = _auto_lsh_geometry(n, threshold)
-        if method == "auto":
-            X = _sample_norm_matrix(corpus, vec_col, min(fit_sample, 2048), seed)
-            est_cand = _estimate_lsh_candidates(X, n, num_planes, bands)
-            if est_cand > max_candidate_factor * n:
-                return _near_dup_cells(
-                    corpus, id_col, vec_col, threshold, ndigits,
-                    target_cell_rows, fit_sample, seed,
-                )
+        X = _sample_norm_matrix(corpus, vec_col, min(fit_sample, 2048), seed)
+        est_cand = _estimate_lsh_candidates(X, n, num_planes, bands)
+        if est_cand > MAX_CANDIDATE_FACTOR * n:
+            return _near_dup_cells(
+                corpus, id_col, vec_col, threshold, ndigits,
+                target_cell_rows, fit_sample, seed,
+            )
     return _near_dup_lsh(
         corpus, id_col, vec_col, threshold, ndigits, num_planes, bands, seed
     )
@@ -295,7 +291,6 @@ def _auto_topk_lsh_geometry(
     max_bands: int = 64,
     max_total_planes: int = 1024,
     nq: int = 20,
-    warn: bool = True,
 ) -> tuple[int, int]:
     """Cost-optimal (num_planes, bands) for TOP-K hyperplane LSH at an
     estimated k-th-neighbor similarity ``tau``: per-band collision odds for
@@ -305,10 +300,9 @@ def _auto_topk_lsh_geometry(
     (bands * n * 2^-kp per query), and the cheapest wins. Unlike the
     near-dup geometry (which assumes a HIGH threshold), this degrades
     gracefully in low-sim regimes by dropping planes-per-band — candidates
-    grow toward a scan, but the recall contract holds; the near-exhaustive
-    case warns so users pick IVF instead."""
+    grow toward a scan, but the recall contract holds (``ann_cosine_lsh``
+    hands the near-exhaustive case to IVF)."""
     import math
-    import warnings
 
     p = 1.0 - math.acos(max(-1.0, min(1.0, tau))) / math.pi
     best: tuple[float, int, int] | None = None
@@ -326,15 +320,6 @@ def _auto_topk_lsh_geometry(
         kp, b = 2, max_bands
     else:
         _, kp, b = best
-    if warn and b * 2.0**-kp > 0.25:
-        warnings.warn(
-            f"ann_cosine_lsh: at estimated neighbor similarity tau={tau:.2f} "
-            f"the geometry ({b} bands x {kp} planes) expects to verify "
-            f"~{min(1.0, b * 2.0 ** -kp):.0%} of the corpus per query to hold "
-            f"recall>={target_recall}. Hyperplane buckets do not prune in "
-            "this low-similarity regime - prefer ann_cosine_ivf.",
-            stacklevel=3,
-        )
     return kp * b, b
 
 
@@ -366,8 +351,7 @@ def _auto_lsh_geometry(
             f"embedding_near_dup_pairs: LSH at threshold={threshold} reaches "
             f"estimated recall ~{recall:.0%} with {bands} bands x {k} planes "
             "(capped). Low/mid thresholds do not bucket under hyperplane "
-            "LSH at this corpus size - use semantic_dedup (k-means cells) "
-            "or raise max_exact_rows.",
+            "LSH at this corpus size - use semantic_dedup (k-means cells).",
             stacklevel=3,
         )
     return k * bands, bands
@@ -619,6 +603,11 @@ def _band_hashes_udf(planes: np.ndarray, bands: int):
     return band_hashes
 
 
+# ann_cosine_lsh hands a query set to IVF when auto geometry expects to
+# verify more than this fraction of the corpus per query
+MAX_VERIFY_FRAC = 0.25
+
+
 def ann_cosine_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -633,8 +622,6 @@ def ann_cosine_lsh(
     target_recall: float = 0.9,
     fit_sample: int = 2048,
     n_rows: int | None = None,
-    route: str = "auto",
-    max_verify_frac: float = 0.25,
 ) -> DataFrame:
     """ANN via random-hyperplane LSH: candidates = bucket collisions on any
     band of the sign signature; exact cosine re-rank of candidates only.
@@ -649,18 +636,15 @@ def ann_cosine_lsh(
     never collide. Pass both knobs to pin a geometry (the gate/oracle path);
     pass ``n_rows`` at scale to skip the count.
 
-    ``route``: with "auto" (default) the MEASURED regime decides the
-    algorithm, the way ``embedding_near_dup_pairs`` routes lsh/cells: if the
-    chosen geometry's expected per-query verify volume exceeds
-    ``max_verify_frac`` of the corpus (bands·2^-planes_per_band — the same
-    quantity the old warning reported), hyperplane buckets are not pruning
-    in this similarity regime and the call delegates to ``ann_cosine_ivf``
-    (identical output contract, calibrated to the same ``target_recall``) —
-    sf100 measured 188s non-pruning LSH vs 13-28s IVF at equal-or-better
-    recall. "lsh" pins the hyperplane path (the old warning fires instead);
-    explicit ``num_planes``/``bands`` also pin it."""
-    if route not in ("auto", "lsh"):
-        raise ValueError(f"route must be auto|lsh, got {route!r}")
+    With auto geometry the MEASURED regime also decides the algorithm, the
+    way ``embedding_near_dup_pairs`` routes lsh/cells: if the chosen
+    geometry's expected per-query verify volume exceeds ``MAX_VERIFY_FRAC``
+    of the corpus (bands·2^-planes_per_band), hyperplane buckets are not
+    pruning in this similarity regime and the call delegates to
+    ``ann_cosine_ivf`` (identical output contract, calibrated to the same
+    ``target_recall``) — sf100 measured 188s non-pruning LSH vs 13-28s IVF
+    at equal-or-better recall. Explicit ``num_planes``/``bands`` pin the
+    hyperplane path."""
     if (num_planes is None) != (bands is None):
         raise ValueError(
             "ann_cosine_lsh: num_planes and bands must be supplied together "
@@ -675,25 +659,22 @@ def ann_cosine_lsh(
             n = corpus.count()
         X = _sample_norm_matrix(corpus, vec_col, fit_sample, seed)
         tau = _estimate_tau_k(X, n, k)
-        num_planes, bands = _auto_topk_lsh_geometry(
-            n, tau, target_recall, warn=(route != "auto")
-        )
+        num_planes, bands = _auto_topk_lsh_geometry(n, tau, target_recall)
         kp = max(1, num_planes // max(bands, 1))
-        if route == "auto" and bands * 2.0**-kp > max_verify_frac:
+        if bands * 2.0**-kp > MAX_VERIFY_FRAC:
             # the algorithm switch must be observable in production runs:
             # identical calls can return different (recall-equivalent)
             # neighbor sets once the regime changes — callers needing
-            # reproducible LSH output pin route="lsh" or explicit geometry
+            # reproducible LSH output pin an explicit geometry
             import logging
 
             logging.getLogger(__name__).info(
-                "ann_cosine_lsh(route='auto'): hyperplane buckets are not "
-                "pruning in this similarity regime (expected verify fraction "
-                "%.3f = bands*2^-planes_per_band > max_verify_frac=%.3f); "
-                "delegating to ann_cosine_ivf at target_recall=%.2f. Pin "
-                "route='lsh' or explicit num_planes/bands for reproducible "
-                "LSH output.",
-                bands * 2.0**-kp, max_verify_frac, target_recall,
+                "ann_cosine_lsh: hyperplane buckets are not pruning in this "
+                "similarity regime (expected verify fraction %.3f = "
+                "bands*2^-planes_per_band > MAX_VERIFY_FRAC=%.3f); delegating "
+                "to ann_cosine_ivf at target_recall=%.2f. Pin explicit "
+                "num_planes/bands for reproducible LSH output.",
+                bands * 2.0**-kp, MAX_VERIFY_FRAC, target_recall,
             )
             return ann_cosine_ivf(
                 corpus,

@@ -228,7 +228,6 @@ def bloom_semi_filter(
     large_key: str | None = None,
     expected_items: int | None = None,
     fpp: float = 0.03,
-    merge: str = "auto",
 ) -> DataFrame:
     """Filter ``large`` down to rows whose ``large_key`` PROBABLY appears in
     ``keys[key]`` — the semi-join reduction for joins where the small side
@@ -236,16 +235,15 @@ def bloom_semi_filter(
 
     Build: one Arrow pass over ``keys`` emits ONE dense numpy bitmap per
     partition (numBits/8 bytes — ~220 KB at 1M keys / 3% fpp); only bitmaps
-    cross the wire, never keys. Merge is size-routed (``merge="auto"``):
-    when partitions x bitmap stays under ~64 MB the partials collect and OR
-    on the driver (one hop, cheapest); above that a TREE merge runs — each
-    partial splits into fixed 1 MB chunks keyed by word offset (all-zero
-    chunks skipped), chunks OR-reduce per key on executors, and the driver
-    collects exactly ONE bitmap's worth of merged chunks regardless of how
-    many partitions built partials. ``merge="driver"``/``"tree"`` force a
-    route. ``expected_items`` is clamped by the 64 MiB bitmap cap
-    (_bloom_num_bits): past ~1.5e8 items at 3% fpp the filter silently
-    trades fpp for size rather than growing unboundedly — callers with
+    cross the wire, never keys. Merge is size-routed: when partitions x
+    bitmap stays under ``_BLOOM_DRIVER_MERGE_MAX`` the partials collect and
+    OR on the driver (one hop, cheapest); above that a TREE merge runs —
+    each partial splits into fixed 1 MB chunks keyed by word offset
+    (all-zero chunks skipped), chunks OR-reduce per key on executors, and
+    the driver collects exactly ONE bitmap's worth of merged chunks
+    regardless of how many partitions built partials. ``expected_items`` is
+    clamped by the 64 MiB bitmap cap (_bloom_num_bits): past ~1.5e8 items
+    at 3% fpp the filter silently trades fpp for size rather than growing unboundedly — callers with
     billions of DISTINCT keys should route through a real semi-join
     instead, the key set no longer fits a useful bloom. Probe: the bitmap
     is broadcast and applied as a vectorized Arrow predicate right after
@@ -279,15 +277,11 @@ def bloom_semi_filter(
     n_hashes = _bloom_num_hashes(n_bits, expected_items)
     n_words = n_bits // 64
 
-    if merge not in ("auto", "driver", "tree"):
-        raise ValueError(f"merge must be auto|driver|tree, got {merge!r}")
-    nbytes = n_words * 8
-    if merge == "auto":
-        try:
-            n_parts = keys.rdd.getNumPartitions()
-        except Exception:
-            n_parts = 200
-        merge = "driver" if n_parts * nbytes <= _BLOOM_DRIVER_MERGE_MAX else "tree"
+    try:
+        n_parts = keys.rdd.getNumPartitions()
+    except Exception:
+        n_parts = 200
+    driver_merge = n_parts * n_words * 8 <= _BLOOM_DRIVER_MERGE_MAX
     words_per_chunk = max(1, _BLOOM_CHUNK_BYTES // 8)
 
     def _fill(bitmap: "np.ndarray", pdf) -> bool:
@@ -324,7 +318,7 @@ def bloom_semi_filter(
             yield pd.DataFrame({"w0": pd.Series(offs, dtype="int64"), "bm": bufs})
 
     bitmap = np.zeros(n_words, dtype=np.uint64)
-    if merge == "driver":
+    if driver_merge:
         partials = keys.select(key).mapInPandas(build, schema="bm binary").collect()
         if not partials:  # empty key set: nothing can match
             return large.filter(F.lit(False))

@@ -13,11 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_processes_spark.partitioning import _plan_size_bytes, widen
-from etl_processes_spark.ops.dedup import (
-    grams_from_tokens_expr,
-    normalized_text_expr,
-    tokens_expr,
-)
+from etl_processes_spark.ops.dedup import normalized_text_expr, tokens_expr
 
 # ---------------------------------------------------------------------------
 # token counting
@@ -377,16 +373,12 @@ def text_analysis_features(
 # ---------------------------------------------------------------------------
 
 
-# gram slicing lives in dedup.grams_from_tokens_expr — ONE implementation
-# feeds shingling, decontamination and repetition stats, so the Spark
-# expressions and their DuckDB twins cannot drift apart per consumer
-
-
 def _rep_stats_batch(toks_values) -> "pd.DataFrame":
     """Vectorized per-doc repetition counts for one Arrow batch of token
-    arrays. Exact twin of the expression path: tokens are [a-z0-9]+ only
-    (tokens_expr) and grams are space-joined, so integer token codes give
-    the same gram identity as the JVM's string grams with zero collisions.
+    arrays. Exact twin of the expression fold the tests keep: tokens are
+    [a-z0-9]+ only (tokens_expr) and grams are space-joined, so integer
+    token codes give the same gram identity as the JVM's string grams with
+    zero collisions.
     Per doc: pd.factorize (hash, O(n)) → distinct tokens + bincount top
     count; k-gram distincts via shifted code arithmetic (g2 < M², g3 < M³,
     int64-safe for M ≤ 2e6 distinct tokens; exact tuple-set fallback past
@@ -440,7 +432,6 @@ def repetition_stats(
     max_dup_3gram: float = 0.5,
     max_top_token: float = 0.3,
     ndigits: int = 6,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Per-doc repetition signals for corpus filtering (the Gopher/MassiveText
     repetition rules adapted to token n-grams):
@@ -458,11 +449,9 @@ def repetition_stats(
     exploded token stream; even with the payload slimmed to (doc-key, token)
     that shuffled+sort-aggregated the corpus's whole token stream (~1G rows,
     11-28 GB spill at sf100 depending on memory pressure). Both stats are
-    array expressions instead: distinct count is size(array_distinct(toks));
-    the top-token count is the longest run in array_sort(toks), folded with
-    a SCALAR-accumulator aggregate() (O(n log n) per row, accumulator is a
-    3-field struct so there is no per-step array copy). The only shuffle
-    left is the duplicate-row collapse — eight doubles per source row.
+    per-row counts over the document's token array instead. The only
+    shuffle left is the duplicate-row collapse — eight doubles per source
+    row.
 
     Row identity is the DETERMINISTIC (id, xxhash64(text)) pair, like
     quality_features / text_analysis_features — a task retry can never
@@ -472,103 +461,41 @@ def repetition_stats(
     stat computed per-copy row-wise, no multiplicity normalization is
     needed (the values are identical across copies by construction).
 
-    Two interchangeable per-row kernels (``kernel=``, value-identical,
-    pinned by test):
-
-      - ``"arrow"`` (default): one vectorized pandas_udf computes all seven
-        counts per token array (factorize + bincount + shifted-code gram
-        distincts, C-speed hash paths). The token array is consumed by a
-        single expression, so no checkpoint and no token materialization to
-        disk — tokenize fuses into the same stage. Benchmarked 1.8×/2.8×/16×
-        faster than the expression fold at sf0.1/sf1/sf10 (warm, full 32-CPU
-        host; SCALING.md round 10) — the fold's interpreted O(n log n)
-        per-row cost grows with document length while the hash kernel is
-        O(n) in C.
-      - ``"expr"``: pure Catalyst array expressions (longest run in
-        array_sort via a scalar aggregate() fold + array_distinct). Kept as
-        the zero-Python reference implementation; the fold is interpreted,
-        not codegen'd, and the token array must be CHECKPOINTED because
-        Catalyst does not CSE higher-order functions across the seven
-        consumer expressions (re-deriving re-ran tokenize per column:
-        12.7s -> 0.9s at sf0.1)."""
-    if kernel not in ("arrow", "expr"):
-        # a typo ("Arrow") must not silently fall through to the ~16x-slower
-        # expression path (round-10 advice)
-        raise ValueError(f"kernel must be 'arrow' or 'expr', got {kernel!r}")
+    Kernel: one vectorized pandas_udf computes all seven counts per token
+    array (factorize + bincount + shifted-code gram distincts, C-speed hash
+    paths). The token array is consumed by a single expression, so no
+    checkpoint and no token materialization to disk — tokenize fuses into
+    the same stage. Benchmarked 1.8×/2.8×/16× faster than a pure-Catalyst
+    expression fold (longest run in array_sort via aggregate()) at
+    sf0.1/sf1/sf10 (warm, full 32-CPU host; SCALING.md round 10); that fold
+    survives as the value-identical reference in the tests."""
     toks = F.coalesce(tokens_expr(text_col), F.array().cast("array<string>"))
     base_cols = [
         F.col(id_col),
         F.xxhash64(F.col(text_col).cast("string")).alias("__rid"),
         toks.alias("__toks"),
     ]
-    agg_first = [
-        F.first(f"__{k}").alias(f"__{k}")
-        for k in ("n", "t2", "d2", "t3", "d3", "dtok", "top")
-    ]
-    if kernel == "arrow":
-        kern = F.pandas_udf(
-            lambda s: _rep_stats_batch(s.to_numpy()),
-            "n double, t2 double, d2 double, t3 double, d3 double, "
-            "dtok double, top double",
+    keys = ("n", "t2", "d2", "t3", "d3", "dtok", "top")
+    kern = F.pandas_udf(
+        lambda s: _rep_stats_batch(s.to_numpy()),
+        "n double, t2 double, d2 double, t3 double, d3 double, "
+        "dtok double, top double",
+    )
+    # all stats are per-copy row-wise; the groupBy collapses exact
+    # (id, text) duplicate rows to one output row (first() reads
+    # identical values in every copy of a group)
+    stats = (
+        widen(df, per_mb=2.0)
+        .select(*base_cols)
+        .select(F.col(id_col), F.col("__rid"), kern("__toks").alias("__s"))
+        .select(
+            F.col(id_col),
+            F.col("__rid"),
+            *[F.col(f"__s.{k}").alias(f"__{k}") for k in keys],
         )
-        # all stats are per-copy row-wise; the groupBy collapses exact
-        # (id, text) duplicate rows to one output row (first() reads
-        # identical values in every copy of a group)
-        stats = (
-            widen(df, per_mb=2.0)
-            .select(*base_cols)
-            .select(F.col(id_col), F.col("__rid"), kern("__toks").alias("__s"))
-            .select(
-                F.col(id_col),
-                F.col("__rid"),
-                *[
-                    F.col(f"__s.{k}").alias(f"__{k}")
-                    for k in ("n", "t2", "d2", "t3", "d3", "dtok", "top")
-                ],
-            )
-            .groupBy(id_col, "__rid")
-            .agg(*agg_first)
-        )
-    else:
-        from etl_processes_spark.partitioning import track_checkpoint
-
-        toks_frame = track_checkpoint(
-            widen(df, per_mb=2.0).select(*base_cols).localCheckpoint(eager=False)
-        )
-        g2 = grams_from_tokens_expr(F.col("__toks"), 2)
-        g3 = grams_from_tokens_expr(F.col("__toks"), 3)
-        # longest run of equal tokens in the sorted array == occurrence count
-        # of the most frequent token; null-safe <=> handles the null initial
-        # prev
-        top_expr = F.expr(
-            """aggregate(
-                 array_sort(__toks),
-                 named_struct('prev', cast(null as string),
-                              'run', cast(0 as bigint),
-                              'best', cast(0 as bigint)),
-                 (acc, t) -> named_struct(
-                     'prev', t,
-                     'run', IF(t <=> acc.prev, acc.run + 1, cast(1 as bigint)),
-                     'best', greatest(acc.best,
-                                      IF(t <=> acc.prev, acc.run + 1,
-                                         cast(1 as bigint)))),
-                 acc -> acc.best)"""
-        ).cast("double")
-        stats = (
-            toks_frame.select(
-                F.col(id_col),
-                F.col("__rid"),
-                F.size("__toks").cast("double").alias("__n"),
-                F.size(g2).cast("double").alias("__t2"),
-                F.size(F.array_distinct(g2)).cast("double").alias("__d2"),
-                F.size(g3).cast("double").alias("__t3"),
-                F.size(F.array_distinct(g3)).cast("double").alias("__d3"),
-                F.size(F.array_distinct("__toks")).cast("double").alias("__dtok"),
-                top_expr.alias("__top"),
-            )
-            .groupBy(id_col, "__rid")
-            .agg(*agg_first)
-        )
+        .groupBy(id_col, "__rid")
+        .agg(*[F.first(f"__{k}").alias(f"__{k}") for k in keys])
+    )
     n = F.col("__n")
     top_frac = F.when(n > 0, F.col("__top") / n).otherwise(F.lit(0.0))
     dup2 = F.when(F.col("__t2") > 0, 1.0 - F.col("__d2") / F.col("__t2")).otherwise(F.lit(0.0))

@@ -269,10 +269,8 @@ def profile(
     df: DataFrame,
     sample_rows: int | None = DEFAULT_SAMPLE_ROWS,
     seed: int = DEFAULT_SEED,
-    drop_null_rows: bool = True,
     max_retained_entries: int = 10000,
     text_stats: bool = True,
-    text_vector_size: int | None = None,
     deterministic: bool = False,
     sample_key: str | None = None,
 ) -> dict[str, ColumnProfile]:
@@ -284,8 +282,7 @@ def profile(
     This is what lets the full synthetic pipeline be hash-gated against the
     DuckDB oracle; the default mode keeps reference-parity Bernoulli
     sampling."""
-    if drop_null_rows:
-        df = df.na.drop("any")  # Latanova_v1.py:14
+    df = df.na.drop("any")  # Latanova_v1.py:14
     frame = sample_frame(
         df,
         sample_rows,
@@ -318,11 +315,9 @@ def profile(
             from concurrent.futures import ThreadPoolExecutor
 
             from etl_processes_spark.text import text_profile as _tp
-            from etl_processes_spark.text.embedding import VECTOR_SIZE
 
-            vs = text_vector_size or VECTOR_SIZE
             with ThreadPoolExecutor(max_workers=min(4, len(text_cols))) as ex:
-                futures = {c: ex.submit(_tp, frame, c, vs) for c in text_cols}
+                futures = {c: ex.submit(_tp, frame, c) for c in text_cols}
                 text_profiles = {c: f.result() for c, f in futures.items()}
 
         profiles: dict[str, ColumnProfile] = {}

@@ -258,13 +258,11 @@ def inference_metrics(
     return out
 
 
-def decide_type(metrics: dict, spark_type: T.DataType, strict_reference_order: bool = True) -> str:
-    """The reference decision tree (Latanova_v1.py:124-170), order-exact by
-    default. ``strict_reference_order=False`` moves the email/phone probe
-    AFTER the numeric/datetime checks — the reference's order types every
-    date string and most large-magnitude numeric columns as 'phone' (its own
-    fixture's join_date/last_purchase/address land there); the sane order is
-    offered as an explicit, documented divergence knob."""
+def decide_type(metrics: dict, spark_type: T.DataType) -> str:
+    """The reference decision tree (Latanova_v1.py:124-170), order-exact:
+    the email/phone probe runs BEFORE the numeric/datetime checks, so every
+    date string and most large-magnitude numeric columns type as 'phone'
+    (the reference fixture's join_date/last_purchase/address land there)."""
     n = metrics["n"] or 0
     if n == 0:
         return UNKNOWN                                            # :129-130
@@ -272,16 +270,10 @@ def decide_type(metrics: dict, spark_type: T.DataType, strict_reference_order: b
         return BOOLEAN                                            # :131-132
     if metrics["n_distinct_lower"] <= 3 and not metrics["outside_bool_vocab"]:
         return BOOLEAN                                            # :133-137
-
-    def special() -> str | None:
-        if (metrics["email_ratio"] or 0) > EMAIL_PHONE_THRESHOLD:
-            return EMAIL                                          # :71-77,138-140
-        if (metrics["phone_ratio"] or 0) > EMAIL_PHONE_THRESHOLD:
-            return PHONE                                          # :78-85,138-140
-        return None
-
-    if strict_reference_order and (s := special()):
-        return s
+    if (metrics["email_ratio"] or 0) > EMAIL_PHONE_THRESHOLD:
+        return EMAIL                                              # :71-77,138-140
+    if (metrics["phone_ratio"] or 0) > EMAIL_PHONE_THRESHOLD:
+        return PHONE                                              # :78-85,138-140
     int_ratio = metrics["int_ratio"] if metrics["int_ratio"] is not None else 0.0
     if isinstance(spark_type, T.NumericType):
         return INTEGER if int_ratio >= INT_RATIO_THRESHOLD else FLOAT  # :141-148
@@ -291,8 +283,6 @@ def decide_type(metrics: dict, spark_type: T.DataType, strict_reference_order: b
         return DATETIME                                           # :161-162
     if (metrics["datetime_ratio"] or 0) >= DATETIME_THRESHOLD:
         return DATETIME                                           # :163-165
-    if not strict_reference_order and (s := special()):
-        return s
     unique_ratio = metrics["n_distinct_trim"] / n
     if unique_ratio <= UNIQUE_THRESHOLD and metrics["n_distinct_trim"] < MAX_CATEGORIES:
         return CATEGORICAL                                        # :166-169
@@ -302,7 +292,6 @@ def decide_type(metrics: dict, spark_type: T.DataType, strict_reference_order: b
 def infer_types(
     df: DataFrame,
     columns: list[str] | None = None,
-    strict_reference_order: bool = True,
     probe_rows: int | None = None,
 ) -> dict[str, str]:
     """Infer the logical type of every column — one scan + driver tree
@@ -310,6 +299,4 @@ def infer_types(
     columns = columns or df.columns
     metrics = inference_metrics(df, columns, probe_rows=probe_rows)
     schema = {f.name: f.dataType for f in df.schema.fields}
-    return {
-        c: decide_type(metrics[c], schema[c], strict_reference_order) for c in columns
-    }
+    return {c: decide_type(metrics[c], schema[c]) for c in columns}

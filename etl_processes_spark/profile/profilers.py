@@ -8,8 +8,9 @@ detect_boolean_format (:89-121).
 Semantic parity decisions (SURVEY.md §2.11):
  - np.std is POPULATION std (ddof=0) → ``stddev_pop``, never ``stddev``.
  - np.median / np.percentile are exact linear-interpolated → exact
-   ``percentile`` / ``median`` (sort-based agg; fine at profile-sample scale,
-   swap to percentile_approx via ``approx_percentiles=True`` at 100 TB).
+   ``percentile`` / ``median`` (fine at profile-sample scale); the one-column
+   ``numeric_profile_df`` routes large frames to a distributed selection with
+   bit-identical values.
  - scipy.stats.skew/kurtosis defaults (bias=True, fisher=True) equal Spark's
    ``skewness``/``kurtosis`` (population g1 / excess g2) — pinned by tests.
  - Values matching neither boolean vocab set are EXCLUDED from boolean stats
@@ -62,81 +63,52 @@ def _stat_exprs(x: Column, q1: Column, med: Column, q3: Column, p: str = "") -> 
     ]
 
 
-def numeric_profile_exprs(
-    c: str | Column, prefix: str = "", approx_percentiles: bool = False
-) -> list[Column]:
+def numeric_profile_exprs(c: str | Column, prefix: str = "") -> list[Column]:
     """mean/std(pop)/median/min/max/skew/kurtosis/q1/q3/count
     (Latanova_v1.py:179-189). ``skew``/``kurt`` are 0 for degenerate inputs
-    (n<=2 / n<=3), matching the reference's explicit guards (:185-186).
-
-    ``approx_percentiles=True`` swaps exact sort-based percentiles for
-    percentile_approx — the 100 TB knob (SURVEY §4): exact percentiles are
-    fine at profile-sample scale but require a per-column sort at full-frame
-    scale."""
+    (n<=2 / n<=3), matching the reference's explicit guards (:185-186)."""
     x = (F.col(c) if isinstance(c, str) else c).cast("double")
-    if approx_percentiles:
-        q1 = F.percentile_approx(x, F.lit(0.25), F.lit(10000))
-        med = F.percentile_approx(x, F.lit(0.5), F.lit(10000))
-        q3 = F.percentile_approx(x, F.lit(0.75), F.lit(10000))
-    else:
-        q1 = F.percentile(x, F.lit(0.25))
-        med = F.median(x)
-        q3 = F.percentile(x, F.lit(0.75))
+    q1 = F.percentile(x, F.lit(0.25))
+    med = F.median(x)
+    q3 = F.percentile(x, F.lit(0.75))
     return _stat_exprs(x, q1, med, q3, prefix)
 
 
-# numeric_profile_df(percentiles="auto") switches to distributed selection
-# above this much scanned column data (see its docstring for the crossover)
+# numeric_profile_df switches to distributed selection above this much
+# scanned column data (see its docstring for the crossover)
 DISTRIBUTED_THRESHOLD_BYTES = 512 << 10
 # range partitions of the distributed selection (a floor; it widens with size)
 DISTRIBUTED_PARTS = 32
 
 
-def numeric_profile_df(
-    df: DataFrame,
-    c: str,
-    ndigits: int | None = None,
-    percentiles: str = "auto",
-) -> DataFrame:
-    """One-row numeric profile. ``percentiles`` routes the q1/median/q3
-    computation:
+def numeric_profile_df(df: DataFrame, c: str, ndigits: int | None = None) -> DataFrame:
+    """One-row numeric profile. The size of the scanned column data routes
+    the q1/median/q3 computation:
 
-    - "exact": Spark's ``percentile()`` aggregate — fine at profile-sample
-      scale, but it merges every partition's (value, count) map into ONE
-      final buffer: O(distinct) memory and time on a single task. Measured
-      at sf1 (6M-row wide-domain double): 50s for a query whose moments
-      take 1.5s — the single-task merge IS the wall clock.
-    - "distributed": ``exact_percentiles_distributed`` (range partition +
+    - at most ``DISTRIBUTED_THRESHOLD_BYTES`` (Catalyst's column-pruned size
+      statistic, no job; an unknown size counts as small): Spark's
+      ``percentile()`` aggregate. It merges every partition's (value, count)
+      map into ONE final buffer: O(distinct) memory and time on a single
+      task. Measured at sf1 (6M-row wide-domain double): 50s for a query
+      whose moments take 1.5s — the single-task merge IS the wall clock.
+    - above it: ``exact_percentiles_distributed`` (range partition +
       per-partition counts + flank-rank fetch) — bit-identical values,
       nothing bigger than the per-range-partition counts on any one task
       (measured 3.4s on the same sf1 column, ~15x).
-    - "approx": percentile_approx, when exactness isn't required.
-    - "auto" (default): "exact" below ``DISTRIBUTED_THRESHOLD_BYTES`` of
-      scanned column data (Catalyst's column-pruned size statistic, no
-      job; an unknown size counts as small), else "distributed". The
-      512 KB threshold sits at the MEASURED crossover on wide-domain
-      doubles (~2.5 pruned bytes/value): exact wins at 140 KB/60k rows
-      (1.4s vs 2.1s) and loses at 1.4 MB/600k rows (4.4s vs 1.4s) — the
-      percentile() map merge is O(distinct) on one task, so its cost
-      passes the distributed path's ~1.3s multi-job overhead a few hundred
-      thousand distincts in."""
+
+    The 512 KB threshold sits at the MEASURED crossover on wide-domain
+    doubles (~2.5 pruned bytes/value): the aggregate wins at 140 KB/60k rows
+    (1.4s vs 2.1s) and loses at 1.4 MB/600k rows (4.4s vs 1.4s) — its map
+    merge is O(distinct) on one task, so its cost passes the distributed
+    path's ~1.3s multi-job overhead a few hundred thousand distincts in."""
     base = df.filter(F.col(c).isNotNull())
-    mode = percentiles
-    if mode == "auto":
-        sz = _plan_size_bytes(base.select(c))
-        mode = (
-            "distributed"
-            if sz is not None and sz > DISTRIBUTED_THRESHOLD_BYTES
-            else "exact"
-        )
-    if mode in ("exact", "approx"):
-        out = base.agg(*numeric_profile_exprs(c, approx_percentiles=(mode == "approx")))
-    elif mode == "distributed":
+    sz = _plan_size_bytes(base.select(c))
+    if sz is not None and sz > DISTRIBUTED_THRESHOLD_BYTES:
         n, qs = exact_percentiles_distributed(base, c, [0.25, 0.5, 0.75])
         q1, med, q3 = (F.lit(v if n else None).cast("double") for v in qs)
         out = base.agg(*_stat_exprs(F.col(c).cast("double"), q1, med, q3))
     else:
-        raise ValueError(f"percentiles must be auto|exact|approx|distributed, got {mode!r}")
+        out = base.agg(*numeric_profile_exprs(c))
     if ndigits is not None:
         out = round_floats(out, ndigits)
     return out

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from etl_processes_spark.ops.dedup import (
     content_hash_expr,
     dedup_exact_keep_min,
+    PREFIX_MIN_THRESHOLD,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     shingles_expr,
@@ -132,50 +133,52 @@ def test_simhash_identical_for_dups(docs):
     assert fp[0] != fp[4]
 
 
-def test_connected_components_chain_and_islands(spark):
-    from etl_processes_spark.ops.dedup import connected_components
+def test_connected_components_chain_and_islands(spark, monkeypatch):
+    from etl_processes_spark.ops import dedup
 
-    # a 9-node chain (exercises pointer jumping: diameter 8 must converge
-    # well under max_iterations), a triangle, and a 2-node island
+    # a 9-node chain (exercises pointer jumping on the distributed route:
+    # diameter 8 must converge well under 6 iterations), a triangle, and a
+    # 2-node island
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "CC_MAX_ITERATIONS", 6)
     edges = [(i, i + 1) for i in range(8)] + [(20, 21), (21, 22), (20, 22), (30, 31)]
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     got = {
         r["node"]: r["cluster_id"]
-        for r in connected_components(pairs, max_iterations=6).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert got == {**{i: 0 for i in range(9)}, 20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
 
 
-def test_connected_components_raises_when_unconverged(spark):
-    from etl_processes_spark.ops.dedup import connected_components
-
-    import pytest
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
+    from etl_processes_spark.ops import dedup
 
     # a 20-node chain cannot reach + confirm the fixpoint in 2 iterations
-    # (driver_max_edges=0 forces the distributed route the guard protects)
+    # (DRIVER_MAX_EDGES=0 forces the distributed route the guard protects)
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "CC_MAX_ITERATIONS", 2)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(19)], ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(pairs, max_iterations=2, driver_max_edges=0)
+        dedup.connected_components(pairs)
 
 
-def test_connected_components_initial_labels_same_result(spark):
-    from etl_processes_spark.ops.dedup import connected_components
+def test_connected_components_initial_labels_same_result(spark, monkeypatch):
+    from etl_processes_spark.ops import dedup
 
     edges = [(i, i + 1) for i in range(8)] + [(20, 21), (30, 31)]
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     # seed a known group min (nodes 4..8 pre-labeled 4; correct final is 0)
     seeds = spark.createDataFrame([(n, 4) for n in range(4, 9)], ["node", "label"])
-    # driver_max_edges=0 forces the DISTRIBUTED route — the seed-handling
+    # DRIVER_MAX_EDGES=0 forces the DISTRIBUTED route — the seed-handling
     # join is only on that path (the driver union-find ignores seeds)
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", 0)
     plain = {
         r["node"]: r["cluster_id"]
-        for r in connected_components(pairs, driver_max_edges=0).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     seeded = {
         r["node"]: r["cluster_id"]
-        for r in connected_components(
-            pairs, initial_labels=seeds, driver_max_edges=0
-        ).collect()
+        for r in dedup.connected_components(pairs, initial_labels=seeds).collect()
     }
     assert plain == seeded
 
@@ -229,7 +232,7 @@ from hypothesis import given, settings, strategies as st
     )
 )
 def test_connected_components_matches_union_find(spark, edges):
-    from etl_processes_spark.ops.dedup import connected_components
+    from etl_processes_spark.ops import dedup
 
     parent = {}
 
@@ -249,19 +252,21 @@ def test_connected_components_matches_union_find(spark, edges):
         union(a, b)
     expected = {n: find(n) for n in parent}
 
-    # driver_max_edges=0: exercise the DISTRIBUTED label-propagation route
+    # DRIVER_MAX_EDGES=0: exercise the DISTRIBUTED label-propagation route
     # (the default route is a driver union-find — comparing that against
     # this python union-find would be near-tautological)
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(pairs, driver_max_edges=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "DRIVER_MAX_EDGES", 0)
+        got = {
+            r["node"]: r["cluster_id"]
+            for r in dedup.connected_components(pairs).collect()
+        }
     assert got == expected
 
 
-def test_cc_driver_and_distributed_routes_agree(spark):
-    from etl_processes_spark.ops.dedup import connected_components
+def test_cc_driver_and_distributed_routes_agree(spark, monkeypatch):
+    from etl_processes_spark.ops import dedup
 
     # chain + two small cliques + isolated pair — routes must be bit-identical
     edges = (
@@ -271,13 +276,23 @@ def test_cc_driver_and_distributed_routes_agree(spark):
         + [(7, 300), (300, 301)]
     )
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    driver = {
-        r["node"]: r["cluster_id"] for r in connected_components(pairs).collect()
-    }
-    dist = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(pairs, driver_max_edges=0).collect()
-    }
+    routes = []
+    real = dedup._cc_driver_union_find
+
+    def spy(e):
+        routes.append("driver")
+        return real(e)
+
+    monkeypatch.setattr(dedup, "_cc_driver_union_find", spy)
+
+    def run(cap):
+        # the switch point: 2 rows per pair of the undirected edge list
+        monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", cap)
+        return sorted(map(tuple, dedup.connected_components(pairs).collect()))
+
+    driver = run(2 * len(edges))
+    dist = run(2 * len(edges) - 1)
+    assert routes == ["driver"]
     assert driver == dist and len(driver) > 0
 
 
@@ -524,78 +539,80 @@ def _rand_docs(seed, n=60, vocab=40, lo=5, hi=30):
     return rows
 
 
-@pytest.mark.parametrize("seed,threshold", [(1, 0.3), (2, 0.5), (3, 0.8), (4, 0.9)])
-def test_prefix_mode_equals_inverted_mode(spark, seed, threshold):
+def _routed_pairs(monkeypatch, route, df, threshold=0.5, **kw):
+    """ngram_jaccard_pairs on the given route: the threshold alone picks it,
+    so the route constant moves to the threshold (prefix) or just above it
+    (inverted); a spy on the prefix kernel checks the route taken."""
+    from etl_processes_spark.ops import dedup
+
+    taken = []
+    real = dedup._jaccard_pairs_prefix
+
+    def spy(*a):
+        taken.append("prefix")
+        return real(*a)
+
+    monkeypatch.setattr(dedup, "_jaccard_pairs_prefix", spy)
+    cut = threshold if route == "prefix" else threshold + 1e-9
+    monkeypatch.setattr(dedup, "PREFIX_MIN_THRESHOLD", cut)
+    out = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in dedup.ngram_jaccard_pairs(
+            df, "doc_id", "text", threshold=threshold, **kw
+        ).collect()
+    }
+    assert taken == (["prefix"] if route == "prefix" else [])
+    return out
+
+
+@pytest.mark.parametrize(
+    "seed,threshold",
+    [(1, 0.3), (2, 0.5), (3, 0.8), (4, 0.9), (6, PREFIX_MIN_THRESHOLD)],
+)
+def test_prefix_mode_equals_inverted_mode(spark, monkeypatch, seed, threshold):
     """The PPJoin prefix path must return EXACTLY the inverted-index result
     (same pairs, same jaccard values) — prefix filtering is lossless by the
     prefix principle; a false negative anywhere fails this differential."""
     df = spark.createDataFrame(_rand_docs(seed), ["doc_id", "text"])
-    inv = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", k=2, threshold=threshold, mode="inverted"
-        ).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", k=2, threshold=threshold, mode="prefix"
-        ).collect()
-    }
+    inv = _routed_pairs(monkeypatch, "inverted", df, threshold, k=2)
+    pre = _routed_pairs(monkeypatch, "prefix", df, threshold, k=2)
     assert pre == inv
 
 
-def test_prefix_mode_equals_inverted_with_max_df(spark):
-    # the df cap excludes shingles from index AND verify in both modes
+def test_prefix_mode_equals_inverted_with_max_df(spark, monkeypatch):
+    # the df cap excludes shingles from index AND verify on both routes
     df = spark.createDataFrame(_rand_docs(9, vocab=8), ["doc_id", "text"])
     kw = dict(k=2, threshold=0.4, max_df=10)
-    inv = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", mode="inverted", **kw).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", mode="prefix", **kw).collect()
-    }
+    inv = _routed_pairs(monkeypatch, "inverted", df, **kw)
+    pre = _routed_pairs(monkeypatch, "prefix", df, **kw)
     assert pre == inv and len(inv) > 0
 
 
 def test_ngram_mode_auto_routing(spark, docs):
-    # auto = prefix at t >= 0.3 (prunes), inverted below; both exact, so
-    # routing is a plan decision — results must agree with explicit modes
+    # prefix at t >= PREFIX_MIN_THRESHOLD (prunes), inverted below; both
+    # exact, so routing is a plan decision — a higher threshold's pairs are
+    # a subset of a lower one's across the two routes
     hi = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5)
     lo = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.06)
     assert {(r["id_a"], r["id_b"]) for r in hi.collect()} <= {
         (r["id_a"], r["id_b"]) for r in lo.collect()
     }
-    with pytest.raises(ValueError, match="mode"):
-        ngram_jaccard_pairs(docs, "doc_id", "text", mode="nope")
 
 
 @pytest.mark.parametrize("seed,threshold", [(11, 0.4), (12, 0.6)])
-def test_prefix_positional_filter_differential_dense(spark, seed, threshold):
+def test_prefix_positional_filter_differential_dense(spark, monkeypatch, seed, threshold):
     """Positional-filter stress: a dense corpus (small vocab, many docs) where
     most prefix collisions FAIL the positional bound — exactness must hold
     anyway because every qualifying pair's first common shingle passes it."""
     df = spark.createDataFrame(
         _rand_docs(seed, n=80, vocab=12, lo=4, hi=20), ["doc_id", "text"]
     )
-    inv = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", k=2, threshold=threshold, mode="inverted"
-        ).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", k=2, threshold=threshold, mode="prefix"
-        ).collect()
-    }
+    inv = _routed_pairs(monkeypatch, "inverted", df, threshold, k=2)
+    pre = _routed_pairs(monkeypatch, "prefix", df, threshold, k=2)
     assert pre == inv and len(inv) > 0
 
 
-def test_prefix_positional_filter_exact_boundary(spark):
+def test_prefix_positional_filter_exact_boundary(spark, monkeypatch):
     """Pairs sitting EXACTLY at J == t, where α = ceil(t/(1+t)·(|a|+|b|)) is
     an exact integer — the regime where a float-ceil overshoot in the
     positional filter would silently drop a true pair. k=1 so the shingle
@@ -608,16 +625,11 @@ def test_prefix_positional_filter_exact_boundary(spark):
         (5, "zz yy"),            # J(5,·)=0 — no pair
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", k=1, threshold=0.5, mode="prefix"
-        ).collect()
-    }
+    got = _routed_pairs(monkeypatch, "prefix", df, 0.5, k=1)
     assert got == {(1, 2): 0.5, (3, 4): 0.5}
 
 
-def test_prefix_mode_keeps_pairs_that_round_up_to_threshold(spark):
+def test_prefix_mode_keeps_pairs_that_round_up_to_threshold(spark, monkeypatch):
     """J = 5/11 rounds to 0.5 at ndigits=1, so the final filter keeps the
     pair at t=0.5 — prefix pruning must not drop it before the verify.
     8 tokens each, 5 shared: the 3 unique tokens fill the front of both
@@ -629,14 +641,8 @@ def test_prefix_mode_keeps_pairs_that_round_up_to_threshold(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     kw = dict(k=1, threshold=0.5, ndigits=1)
-    inv = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", mode="inverted", **kw).collect()
-    }
-    pre = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", mode="prefix", **kw).collect()
-    }
+    inv = _routed_pairs(monkeypatch, "inverted", df, **kw)
+    pre = _routed_pairs(monkeypatch, "prefix", df, **kw)
     assert inv == {(1, 2): 0.5}
     assert pre == inv
 

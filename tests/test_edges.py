@@ -27,7 +27,7 @@ def test_single_row_numeric_profile_and_constant_generation(spark):
     prof = column_stats(df, {"x": "float"})["x"]
     assert prof["std"] == 0.0 and prof["skew"] == 0.0 and prof["kurtosis"] == 0.0
     assert prof["mean"] == prof["median"] == prof["min"] == prof["max"] == 7.5
-    profs = profile(df, drop_null_rows=False)
+    profs = profile(df)
     vals = [r["x"] for r in generate(spark, profs, 20, seed=5).collect()]
     assert vals == [7.5] * 20  # std=0 + clip to [min,max] => constant
 

@@ -78,13 +78,14 @@ def test_cosine_topk_fast_is_blocked_not_joined(spark):
     assert "Join" not in plan and "CartesianProduct" not in plan
 
 
-def test_near_dup_lsh_path_has_no_cartesian_product(spark):
+def test_near_dup_lsh_path_has_no_cartesian_product(spark, monkeypatch):
     """Above the exact-size threshold the near-dup plan must be the bucketed
     equi-join on band signatures — never an all-pairs cross join."""
-    from etl_processes_spark.ops.similarity import embedding_near_dup_pairs
+    from etl_processes_spark.ops import similarity
 
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 0)
     df = _emb_df(spark)
-    plan = _plan(embedding_near_dup_pairs(df, threshold=0.9, max_exact_rows=0))
+    plan = _plan(similarity.embedding_near_dup_pairs(df, threshold=0.9))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "band" in plan  # candidate generation keyed on (band, bh)
 

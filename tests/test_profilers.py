@@ -151,31 +151,45 @@ def test_exact_percentiles_distributed_empty_and_single(spark):
     assert n == 1 and vs == [42.0, 42.0]
 
 
-def test_numeric_profile_distributed_route_bit_identical(spark):
+def test_numeric_profile_distributed_route_bit_identical(spark, monkeypatch, tmp_path):
     # the 100 TB percentile route must return the SAME one-row profile as
-    # the single-task exact aggregate, bit for bit
+    # the single-task exact aggregate, bit for bit; the size threshold alone
+    # picks the route, so the frames are parquet-backed (a known size)
     import numpy as np
 
-    from etl_processes_spark.profile.profilers import numeric_profile_df
+    from etl_processes_spark.profile import profilers
+
+    def parquet(rows, name):
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows, "x double").write.parquet(path)
+        return spark.read.parquet(path)
 
     rng = np.random.RandomState(23)
     vals = np.concatenate([rng.lognormal(4, 2, 20000), np.full(300, 17.5)])
-    df = spark.createDataFrame([(float(v),) for v in vals], "x double")
-    a = numeric_profile_df(df, "x", percentiles="exact").collect()[0].asDict()
-    b = numeric_profile_df(df, "x", percentiles="distributed").collect()[0].asDict()
-    assert a == b
-    # empty frame: both routes yield n_samples=0 with NULL percentiles
-    empty = spark.createDataFrame([], "x double")
-    e = numeric_profile_df(empty, "x", percentiles="distributed").collect()[0]
-    assert e["n_samples"] == 0 and e["median"] is None
+    df = parquet([(float(v),) for v in vals], "vals")
+    ranges = []
+    real = profilers.exact_percentiles_distributed
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="auto\\|exact"):
-        numeric_profile_df(df, "x", percentiles="bogus")
+    def spy(*args, **kw):
+        ranges.append(1)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(profilers, "exact_percentiles_distributed", spy)
+    monkeypatch.setattr(profilers, "DISTRIBUTED_THRESHOLD_BYTES", 1 << 62)
+    a = profilers.numeric_profile_df(df, "x").collect()[0].asDict()
+    assert ranges == []
+    monkeypatch.setattr(profilers, "DISTRIBUTED_THRESHOLD_BYTES", -1)
+    b = profilers.numeric_profile_df(df, "x").collect()[0].asDict()
+    assert ranges == [1]
+    assert a == b
+    # empty frame: the distributed route yields n_samples=0 with NULL percentiles
+    e = profilers.numeric_profile_df(parquet([], "empty"), "x").collect()[0]
+    assert ranges == [1, 1]
+    assert e["n_samples"] == 0 and e["median"] is None
 
 
 def test_unknown_size_frame_routes_exact_with_partition_floor(spark, monkeypatch):
-    """An RDD-backed frame has no size estimate. percentiles="auto" must
+    """An RDD-backed frame has no size estimate. numeric_profile_df must
     treat it as small (exact), and the distributed selection must keep its
     32-partition floor instead of sizing itself from an unknown estimate."""
     from etl_processes_spark.profile import profilers

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import types as T
 
+from etl_processes_spark.ops import similarity
 from etl_processes_spark.ops.similarity import (
     ann_cosine_lsh,
     cosine_topk_fast,
@@ -90,11 +91,12 @@ def test_near_dup_exact_blocked_matches_numpy(emb):
         assert abs(got[p] - expected[p]) < 1e-9
 
 
-def test_near_dup_lsh_path_finds_planted_pair(emb):
+def test_near_dup_lsh_path_finds_planted_pair(emb, monkeypatch):
     df, _ = emb
     # force the LSH route; the planted pair (3,7) is ~0.9999 cosine, which
     # the band geometry must recover at near-dup thresholds
-    res = embedding_near_dup_pairs(df, threshold=0.9, max_exact_rows=0).collect()
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 0)
+    res = embedding_near_dup_pairs(df, threshold=0.9).collect()
     assert any((r["id_a"], r["id_b"]) == (3, 7) for r in res)
 
 
@@ -348,28 +350,24 @@ def test_auto_lsh_geometry():
     assert any("semantic_dedup" in str(x.message) for x in w)
 
 
-def test_near_dup_lsh_auto_params_still_finds_planted(emb):
+def test_near_dup_lsh_auto_params_still_finds_planted(emb, monkeypatch):
     df, _ = emb
-    res = embedding_near_dup_pairs(df, threshold=0.9, max_exact_rows=0).collect()
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 0)
+    res = embedding_near_dup_pairs(df, threshold=0.9).collect()
     assert any((r["id_a"], r["id_b"]) == (3, 7) for r in res)
 
 
 def test_auto_topk_lsh_geometry_adapts_to_similarity_regime():
-    import warnings
-
     from etl_processes_spark.ops.similarity import _auto_topk_lsh_geometry
 
     # high-similarity neighbors (near-dup regime): deep bands, few needed
     planes_hi, bands_hi = _auto_topk_lsh_geometry(100_000, 0.92)
     kp_hi = planes_hi // bands_hi
     # low-similarity neighbors (the synthetic-embedding regime): shallow
-    # bands, more of them — and a loud warning that buckets barely prune
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        planes_lo, bands_lo = _auto_topk_lsh_geometry(2_000, 0.34)
+    # bands, more of them
+    planes_lo, bands_lo = _auto_topk_lsh_geometry(2_000, 0.34)
     kp_lo = planes_lo // bands_lo
     assert kp_hi > kp_lo  # geometry follows the similarity regime
-    assert any("ann_cosine_ivf" in str(x.message) for x in w)
     # both geometries' banding math reaches the 0.9 default target
     import math
 
@@ -460,7 +458,7 @@ def test_auto_pq_m_prefers_4dim_subspaces():
     assert _auto_pq_m(7) == 1    # prime, <=8: single subspace
 
 
-def test_near_dup_cells_route_subset_of_exact_with_high_recall(spark):
+def test_near_dup_cells_route_subset_of_exact_with_high_recall(spark, monkeypatch):
     # corpus of tight planted near-dup pairs: the cells route must return a
     # SUBSET of the exact pairs (precision 1, identical rounded sims) and
     # recover nearly all of them (only cell-boundary straddlers may drop)
@@ -476,13 +474,12 @@ def test_near_dup_cells_route_subset_of_exact_with_high_recall(spark):
     pair_map = lambda res: {
         (r["id_a"], r["id_b"]): r["cosine_sim"] for r in res.collect()
     }
-    exact = pair_map(
-        embedding_near_dup_pairs(df, threshold=0.999, method="exact")
-    )
+    exact = pair_map(embedding_near_dup_pairs(df, threshold=0.999))
+    # above the exact size, a candidate budget nothing meets forces cells
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 0)
+    monkeypatch.setattr(similarity, "MAX_CANDIDATE_FACTOR", -1.0)
     cells = pair_map(
-        embedding_near_dup_pairs(
-            df, threshold=0.999, method="cells", target_cell_rows=32,
-        )
+        embedding_near_dup_pairs(df, threshold=0.999, target_cell_rows=32)
     )
     assert set(cells) <= set(exact)
     assert len(cells) >= 0.8 * len(exact) > 0
@@ -490,9 +487,9 @@ def test_near_dup_cells_route_subset_of_exact_with_high_recall(spark):
         assert sim == exact[p]
 
 
-def test_near_dup_auto_routes_clustered_corpus_to_cells(spark):
+def test_near_dup_auto_routes_clustered_corpus_to_cells(spark, monkeypatch):
     # mid-threshold + clustered corpus + big-n hint: the sampled candidate
-    # estimate must reject LSH, and the auto result must equal the explicit
+    # estimate must reject LSH, and the auto result must equal the forced
     # cells route bit-for-bit (same seed, same quantizer)
     import warnings
 
@@ -524,10 +521,13 @@ def test_near_dup_auto_routes_clustered_corpus_to_cells(spark):
         auto = pair_set(
             embedding_near_dup_pairs(df, threshold=0.5, n_rows=n_hint)
         )
-    explicit = pair_set(
-        embedding_near_dup_pairs(df, threshold=0.5, method="cells")
-    )
-    assert auto == explicit and len(auto) > 0
+    monkeypatch.setattr(similarity, "MAX_CANDIDATE_FACTOR", -1.0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        forced = pair_set(
+            embedding_near_dup_pairs(df, threshold=0.5, n_rows=n_hint)
+        )
+    assert auto == forced and len(auto) > 0
 
     # the tight near-dup regime on a NON-clustered sample keeps LSH:
     # random d=64 sims concentrate near 0, so candidates stay in budget
@@ -537,31 +537,36 @@ def test_near_dup_auto_routes_clustered_corpus_to_cells(spark):
     assert _estimate_lsh_candidates(Xr, n_hint, npl2, b2) <= 64.0 * n_hint
 
 
-def test_near_dup_method_validation(spark):
-    import pytest
+def test_near_dup_rejects_bad_geometry_before_any_job(spark, tmp_path):
+    # a mismatched num_planes/bands pair is rejected before the size probe:
+    # the corpus file is gone, so any Spark job would fail first
+    path = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    import shutil
 
-    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="method"):
-        embedding_near_dup_pairs(df, method="fast")
+    shutil.rmtree(path)
+    with pytest.raises(ValueError, match="num_planes and bands"):
+        embedding_near_dup_pairs(df, num_planes=8)
 
 
 def test_ann_lsh_route_param_and_pinning(spark, sf_dir):
-    """route="auto" may delegate to IVF in a non-pruning regime; route="lsh"
-    pins the hyperplane path (warning fires instead) and still honors the
-    output contract; a bogus route raises."""
-    import warnings
-
+    """Auto geometry may delegate to IVF in a non-pruning regime; explicit
+    num_planes/bands pin the hyperplane path, which still honors the output
+    contract; a half-given geometry raises."""
     from pyspark.sql import functions as F
 
     from etl_processes_spark.ops.similarity import ann_cosine_lsh
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 3)
-    with pytest.raises(ValueError, match="route"):
-        ann_cosine_lsh(e, q, "vec_id", "embedding", k=3, route="bogus")
-    with warnings.catch_warnings(record=True):
-        warnings.simplefilter("always")
-        pinned = ann_cosine_lsh(e, q, "vec_id", "embedding", k=3, route="lsh")
+    with pytest.raises(ValueError, match="num_planes and bands"):
+        ann_cosine_lsh(e, q, "vec_id", "embedding", k=3, bands=4)
+    pinned = ann_cosine_lsh(
+        e, q, "vec_id", "embedding", k=3, num_planes=16, bands=4
+    )
     rows = pinned.collect()
     assert {r["query_id"] for r in rows} <= {0, 1, 2}
     assert all(1 <= r["rank"] <= 3 for r in rows)

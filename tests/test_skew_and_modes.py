@@ -32,10 +32,10 @@ def test_gen_categorical_join_large_domain(spark):
 
 
 def test_sane_inference_order(spark):
-    # date strings: reference order types them phone; sane order → datetime
+    # date strings: the reference order probes phone before datetime, so
+    # they type as phone, as in the reference fixture
     df = spark.createDataFrame([("2020-01-15",), ("2021-03-04",)] * 10, ["d"])
     assert infer_types(df)["d"] == "phone"
-    assert infer_types(df, strict_reference_order=False)["d"] == "datetime"
 
 
 def test_range_join_bucketized_matches_naive(spark):
@@ -211,24 +211,22 @@ def test_bloom_semi_filter_null_keys_dropped(spark):
     assert None not in kept and 1 in kept
 
 
-def test_bloom_tree_merge_matches_driver_merge(spark):
+def test_bloom_tree_merge_matches_driver_merge(spark, monkeypatch):
     # tree merge (executor-side chunked OR-reduce; driver assembles exactly
     # one bitmap) must be bit-equivalent to the driver merge — same filter
-    # decisions on a multi-partition, multi-chunk (bitmap > 1 MB) build
-    from etl_processes_spark.ops.skew import bloom_semi_filter
+    # decisions on a multi-partition, multi-chunk (bitmap > 1 MB) build;
+    # the size cap alone picks the route
+    from etl_processes_spark.ops import skew
 
     big = spark.range(0, 5000).withColumnRenamed("id", "k")
     keys = spark.range(0, 5000, 7, numPartitions=13).withColumnRenamed("id", "k")
     kw = dict(expected_items=2_000_000, fpp=0.03)  # ~1.8 MB bitmap -> 2 chunks
-    drv = {r["k"] for r in bloom_semi_filter(big, keys, "k", merge="driver", **kw).collect()}
-    tree = {r["k"] for r in bloom_semi_filter(big, keys, "k", merge="tree", **kw).collect()}
+    drv = {r["k"] for r in skew.bloom_semi_filter(big, keys, "k", **kw).collect()}
+    monkeypatch.setattr(skew, "_BLOOM_DRIVER_MERGE_MAX", 0)
+    tree = {r["k"] for r in skew.bloom_semi_filter(big, keys, "k", **kw).collect()}
     assert tree == drv
     assert set(range(0, 5000, 7)) <= tree  # no false negatives
 
     # empty key set short-circuits on the tree route too
-    none = bloom_semi_filter(big, keys.filter("k < 0"), "k", merge="tree", **kw)
+    none = skew.bloom_semi_filter(big, keys.filter("k < 0"), "k", **kw)
     assert none.count() == 0
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="auto\\|driver\\|tree"):
-        bloom_semi_filter(big, keys, "k", merge="bogus")

@@ -165,11 +165,84 @@ def test_repetition_stats_exact_duplicate_rows_collapse(spark):
     assert abs(r["distinct_token_ratio"] - round(2 / 3, 6)) < 1e-9
 
 
+def _repetition_stats_expr(df, id_col, text_col, max_dup_3gram=0.5,
+                           max_top_token=0.3, ndigits=6):
+    """Pure-Catalyst reference for repetition_stats: the same per-row counts
+    as array expressions (longest run in array_sort via a scalar
+    aggregate() fold + array_distinct). The token array is checkpointed
+    because Catalyst does not CSE higher-order functions across the seven
+    consumer expressions."""
+    from etl_processes_spark.ops.dedup import grams_from_tokens_expr, tokens_expr
+    from etl_processes_spark.partitioning import track_checkpoint, widen
+
+    toks = F.coalesce(tokens_expr(text_col), F.array().cast("array<string>"))
+    base_cols = [
+        F.col(id_col),
+        F.xxhash64(F.col(text_col).cast("string")).alias("__rid"),
+        toks.alias("__toks"),
+    ]
+    agg_first = [
+        F.first(f"__{k}").alias(f"__{k}")
+        for k in ("n", "t2", "d2", "t3", "d3", "dtok", "top")
+    ]
+    toks_frame = track_checkpoint(
+        widen(df, per_mb=2.0).select(*base_cols).localCheckpoint(eager=False)
+    )
+    g2 = grams_from_tokens_expr(F.col("__toks"), 2)
+    g3 = grams_from_tokens_expr(F.col("__toks"), 3)
+    # longest run of equal tokens in the sorted array == occurrence count
+    # of the most frequent token; null-safe <=> handles the null initial
+    # prev
+    top_expr = F.expr(
+        """aggregate(
+             array_sort(__toks),
+             named_struct('prev', cast(null as string),
+                          'run', cast(0 as bigint),
+                          'best', cast(0 as bigint)),
+             (acc, t) -> named_struct(
+                 'prev', t,
+                 'run', IF(t <=> acc.prev, acc.run + 1, cast(1 as bigint)),
+                 'best', greatest(acc.best,
+                                  IF(t <=> acc.prev, acc.run + 1,
+                                     cast(1 as bigint)))),
+             acc -> acc.best)"""
+    ).cast("double")
+    stats = (
+        toks_frame.select(
+            F.col(id_col),
+            F.col("__rid"),
+            F.size("__toks").cast("double").alias("__n"),
+            F.size(g2).cast("double").alias("__t2"),
+            F.size(F.array_distinct(g2)).cast("double").alias("__d2"),
+            F.size(g3).cast("double").alias("__t3"),
+            F.size(F.array_distinct(g3)).cast("double").alias("__d3"),
+            F.size(F.array_distinct("__toks")).cast("double").alias("__dtok"),
+            top_expr.alias("__top"),
+        )
+        .groupBy(id_col, "__rid")
+        .agg(*agg_first)
+    )
+    n = F.col("__n")
+    top_frac = F.when(n > 0, F.col("__top") / n).otherwise(F.lit(0.0))
+    dup2 = F.when(F.col("__t2") > 0, 1.0 - F.col("__d2") / F.col("__t2")).otherwise(F.lit(0.0))
+    dup3 = F.when(F.col("__t3") > 0, 1.0 - F.col("__d3") / F.col("__t3")).otherwise(F.lit(0.0))
+    return stats.select(
+        F.col(id_col),
+        n.cast("long").alias("n_tokens"),
+        F.round(F.when(n > 0, F.col("__dtok") / n).otherwise(F.lit(0.0)), ndigits).alias(
+            "distinct_token_ratio"
+        ),
+        F.round(top_frac, ndigits).alias("top_token_frac"),
+        F.round(dup2, ndigits).alias("dup_2gram_frac"),
+        F.round(dup3, ndigits).alias("dup_3gram_frac"),
+        ((dup3 >= max_dup_3gram) | (top_frac >= max_top_token)).alias("repetitive"),
+    )
+
+
 def test_repetition_stats_kernels_identical(spark):
-    """The vectorized Arrow kernel (default) and the pure-Catalyst
-    expression fold must be value-identical on every row — edge docs
-    (empty, 1-token, 2-token, all-same, punctuation-only) plus a real
-    corpus slice."""
+    """The vectorized Arrow kernel and the pure-Catalyst expression fold
+    must be value-identical on every row — edge docs (empty, 1-token,
+    2-token, all-same, punctuation-only) plus a real corpus slice."""
     from etl_processes_spark.ops.textstats import repetition_stats
 
     edge = spark.createDataFrame(
@@ -187,8 +260,8 @@ def test_repetition_stats_kernels_identical(spark):
     )
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for df in (edge, docs):
-        a = repetition_stats(df, "doc_id", "text", kernel="arrow").orderBy("doc_id")
-        e = repetition_stats(df, "doc_id", "text", kernel="expr").orderBy("doc_id")
+        a = repetition_stats(df, "doc_id", "text").orderBy("doc_id")
+        e = _repetition_stats_expr(df, "doc_id", "text").orderBy("doc_id")
         assert a.collect() == e.collect()
 
 
@@ -219,18 +292,6 @@ def test_pii_scrub_pregate_null_and_tokenless(spark):
     assert rows[3]["n_phones"] == 1
     assert rows[4]["clean_text"] == "dash-only, no phone shape"
     assert rows[4]["n_phones"] == 0
-
-
-def test_repetition_stats_rejects_unknown_kernel(spark):
-    """A kernel typo ("Arrow") must raise, not silently take the ~16x-slower
-    expression path (round-10 advice)."""
-    import pytest
-
-    from etl_processes_spark.ops.textstats import repetition_stats
-
-    df = spark.createDataFrame([(0, "a b")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="kernel"):
-        repetition_stats(df, "doc_id", "text", kernel="Arrow")
 
 
 # ---------------------------------------------------------------------------

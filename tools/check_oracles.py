@@ -1,7 +1,9 @@
 """Local mimic of the driver's t2 correctness gate: run every
 __spark_entry__.queries() entry on Spark and its oracle_sql() twin on DuckDB
 at sf0.01, compare row count + sorted column names + values (rows sorted by
-all columns; floats compared exactly — both sides pre-round).
+all columns; floats compared exactly — both sides pre-round). It imports the
+contract and the package of the checkout it sits in, prints the contract's
+path, and exits 1 when any query is BAD (error or mismatch).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -11,8 +13,10 @@ from __future__ import annotations
 import sys
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import duckdb
 import pandas as pd
@@ -61,23 +65,22 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
-def main() -> None:
+def main() -> int:
     import __spark_entry__ as entrymod
-    from etl_processes_spark.session import get_spark
 
-    spark = get_spark("check_oracles")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql(SF_DIR)
+    print(f"contract: {Path(entrymod.__file__).resolve()}", flush=True)
+    qs = {n: fn for n, fn in entrymod.queries().items() if not ONLY or n in ONLY}
     results = {}
+    if qs:
+        from etl_processes_spark.session import get_spark
+
+        spark = get_spark("check_oracles")
+        spark.sparkContext.setLogLevel("ERROR")
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        oracles = entrymod.oracle_sql(SF_DIR)
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
-            continue
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR).toPandas()
@@ -118,7 +121,8 @@ def main() -> None:
     print(f"OK={ok} ROWS-ONLY={ro} BAD={len(bad)}", flush=True)
     for n, (s, detail) in bad.items():
         print(f"--- {n}: {s}\n{detail}\n", flush=True)
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -13,9 +13,19 @@ Scale notes:
    vectors): equi-join on (band, band-signature) so candidate generation is
    linear-ish; multiprobe = more bands. Recall/cost tunable via
    (num_planes, bands).
+ - The quantizer family (IVF, PQ, IVF-PQ, the k-means cells) shares one
+   core: a call reads its corpus row count and seeded fit sample at most
+   once (``_FitInputs``), every index is built by one broadcast-constants
+   map (``_assign_encode``), and both PQ searches score with one ADC
+   kernel (``_adc_topk``).
 """
 
 from __future__ import annotations
+
+import logging
+import math
+import warnings
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -24,10 +34,79 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from etl_processes_spark.partitioning import (
+    _row_statistic,
+    row_count,
+    track_checkpoint,
+    widen,
+)
+
 
 def _as_double_array(c: str | Column) -> Column:
     col = F.col(c) if isinstance(c, str) else c
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _stack(vectors: pd.Series) -> np.ndarray:
+    """A pandas column of vectors as one float64 (n, d) matrix."""
+    return np.stack(vectors.to_numpy()).astype(np.float64)
+
+
+def _unit(M: np.ndarray) -> np.ndarray:
+    """Row-normalized copy of ``M`` (all-zero rows stay zero)."""
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
+
+def _query_matrix(pdf: pd.DataFrame, id_col: str, vec_col: str):
+    """A collected query side as (int64 ids, raw float64 matrix,
+    row-normalized matrix)."""
+    Q = _stack(pdf[vec_col])
+    return pdf[id_col].to_numpy().astype(np.int64), Q, _unit(Q)
+
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine_sim double"
+_PAIR_SCHEMA = "id_a long, id_b long, cosine_sim double"
+# per-batch selection keeps k + _SLACK rows per query: absorbs np.round vs
+# F.round divergence on exact rounding boundaries
+_SLACK = 8
+
+
+def _batch_topk(
+    qids: np.ndarray, ids: np.ndarray, sims: np.ndarray, rsims: np.ndarray, k: int
+) -> pd.DataFrame:
+    """Partial top-k of one scored batch: per query, the k + _SLACK best
+    rows by (rounded sim ``rsims`` desc, id asc) — the same total order the
+    final window ranks by, so the global top-k is always contained in the
+    union of per-batch selections even when many sims tie at the rounded
+    precision. Self-matches and rows already set to -inf are dropped; the
+    unrounded ``sims`` are emitted."""
+    rsims[qids[:, None] == ids[None, :]] = -np.inf  # exclude self-match
+    nk = min(k + _SLACK, sims.shape[1])
+    out_q, out_n, out_s = [], [], []
+    for qi in range(len(qids)):
+        idx = np.lexsort((ids, -rsims[qi]))[:nk]
+        idx = idx[rsims[qi][idx] > -np.inf]
+        out_q.append(np.full(len(idx), qids[qi], dtype=np.int64))
+        out_n.append(ids[idx])
+        out_s.append(sims[qi][idx])
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            "cosine_sim": np.concatenate(out_s),
+        }
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine_sim, rank): the top ``k`` rows per
+    query by (cosine_sim desc, neighbor_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    )
 
 
 def cosine_topk_fast(
@@ -44,27 +123,13 @@ def cosine_topk_fast(
 
     The query side is collected to the driver (it must be small) and its
     normalized matrix broadcast; the corpus is STREAMED, and per Arrow batch
-    one BLAS matmul scores the whole block. Partial top-k per batch, final
-    top-k via a window, so the corpus is never collected. Partial selection
-    inside the kernel uses the SAME total order (np-rounded sim desc,
-    neighbor asc) plus a small slack so the global top-k is always contained
-    in the union of per-batch top-k even when many sims tie at the rounded
-    precision."""
-    queries_pdf = queries.select(id_col, vec_col).toPandas()
-    spark = corpus.sparkSession
-    qids = queries_pdf[id_col].to_numpy().astype(np.int64)
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    b = spark.sparkContext.broadcast((qids, qmat))
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine_sim", T.DoubleType()),
-        ]
+    one BLAS matmul scores the whole block. Partial top-k per batch
+    (_batch_topk), final top-k via a window, so the corpus is never
+    collected."""
+    qids, _, qmat = _query_matrix(
+        queries.select(id_col, vec_col).toPandas(), id_col, vec_col
     )
-    slack = 8  # absorbs np.round vs F.round divergence on exact rounding boundaries
+    b = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
 
     def score(batches):
         qids_, qmat_ = b.value
@@ -72,38 +137,18 @@ def cosine_topk_fast(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy().astype(np.int64)
-            cmat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
-            sims = qmat_ @ cmat.T  # (nq, batch)
-            rsims = np.round(sims, ndigits)
-            rsims[qids_[:, None] == ids[None, :]] = -np.inf  # exclude self-match
-            nk = min(k + slack, sims.shape[1])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids_)):
-                idx = np.lexsort((ids, -rsims[qi]))[:nk]
-                idx = idx[rsims[qi][idx] > -np.inf]
-                out_q.append(np.full(len(idx), qids_[qi], dtype=np.int64))
-                out_n.append(ids[idx])
-                out_s.append(sims[qi][idx])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine_sim": np.concatenate(out_s),
-                }
-            )
+            sims = qmat_ @ _unit(_stack(pdf[vec_col])).T  # (nq, batch)
+            yield _batch_topk(qids_, ids, sims, np.round(sims, ndigits), k)
 
     # work per corpus MB scales with the query count (one GEMM row per
     # query), so the widen density does too: ~8 MB/task at 64 queries,
     # proportionally less input per task as the query matrix grows
     per_mb = max(0.25, min(8.0, 8.0 * 64.0 / max(1, len(qids))))
-    partial = widen(corpus.select(id_col, vec_col), per_mb=per_mb).mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("cosine_sim", F.round(F.col("cosine_sim"), ndigits))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    partial = widen(corpus.select(id_col, vec_col), per_mb=per_mb).mapInPandas(
+        score, schema=_TOPK_SCHEMA
+    )
+    return _rank_topk(
+        partial.withColumn("cosine_sim", F.round(F.col("cosine_sim"), ndigits)), k
     )
 
 
@@ -116,8 +161,7 @@ def cosine_pairs_udf():
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             return pd.Series([], dtype=float)
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
+        A, B = _stack(a), _stack(b)
         num = np.einsum("ij,ij->i", A, B)
         den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
         return pd.Series(num / np.maximum(den, 1e-300))
@@ -125,20 +169,24 @@ def cosine_pairs_udf():
     return cos
 
 
-from etl_processes_spark.partitioning import widen
+class _FitInputs:
+    """What a call's driver-side fits read from its corpus: the row count
+    ``n`` (``partitioning.row_count``) and the seeded fit sample ``X``
+    (_sample_norm_matrix). Each is resolved at most once, and only when a
+    step reads it; an entry point hands its instance to the steps it
+    delegates to, so they share one count and one sample."""
 
+    def __init__(self, corpus: DataFrame, vec_col: str, fit_sample: int, seed: int):
+        self.corpus, self.vec_col = corpus, vec_col
+        self.fit_sample, self.seed = fit_sample, seed
 
-def _estimate_rows(df: DataFrame) -> int | None:
-    """Catalyst optimized-plan row-count statistic (free — no job). Defined
-    for LocalRelations, CBO-analyzed tables and some file sources; None
-    otherwise."""
-    try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-    except Exception:
-        pass
-    return None
+    @cached_property
+    def n(self) -> int:
+        return row_count(self.corpus)
+
+    @cached_property
+    def X(self) -> np.ndarray:
+        return _sample_norm_matrix(self.corpus, self.vec_col, self.fit_sample, self.seed)
 
 
 # embedding_near_dup_pairs routes: exact all-pairs up to MAX_EXACT_ROWS
@@ -157,7 +205,6 @@ def embedding_near_dup_pairs(
     num_planes: int | None = None,
     bands: int | None = None,
     seed: int = 42,
-    n_rows: int | None = None,
     target_cell_rows: int = 4096,
     fit_sample: int = 10_000,
 ) -> DataFrame:
@@ -187,44 +234,46 @@ def embedding_near_dup_pairs(
     LSH geometry defaults to AUTO (``num_planes``/``bands`` = None): planes
     per band ~ log2(n) so a random (orthogonal) pair's collision odds are
     ~1/n per band, and the band count targets 90% recall at the threshold,
-    capped at 32 (below-0.5 estimated recall warns). Passing both knobs
-    explicitly pins the LSH route above the exact size and skips the
-    candidate estimate — existing callers keep their exact plan. The cells
-    route's recall contract matches semantic_dedup's (cell-boundary pairs
-    are missed).
+    capped at 32 (the LSH route warns when its estimated recall is below
+    0.5). Passing both knobs explicitly pins the LSH route above the exact
+    size and skips the candidate estimate — existing callers keep their
+    exact plan. The cells route's recall contract matches semantic_dedup's
+    (cell-boundary pairs are missed).
 
-    Routing reads ``n_rows`` (caller-supplied hint) first. Catalyst's
-    optimized-plan row-count statistic is trusted only in the SAFE
-    direction: a large estimate routes away from exact (correct even if
-    stale — at worst a small corpus pays bucketing overhead); a small
-    estimate is confirmed with a count() before committing to the
-    broadcast-everything exact path, because a stale low estimate would
-    broadcast an arbitrarily large matrix. At 100 TB the caller passes the
-    size, so no probe runs.
+    The corpus size comes from ``partitioning.row_count``. Catalyst's
+    row-count statistic is trusted only in the SAFE direction: a large
+    statistic routes away from exact (correct even if stale — at worst a
+    small corpus pays bucketing overhead); a small one is confirmed with a
+    count() before committing to the broadcast-everything exact path,
+    because a stale low estimate would broadcast an arbitrarily large
+    matrix.
     """
-    if (num_planes is None) != (bands is None):
-        raise ValueError(
-            "embedding_near_dup_pairs: num_planes and bands must be supplied "
-            "together (or both left None for auto geometry); got "
-            f"num_planes={num_planes!r}, bands={bands!r}"
-        )
-    n = n_rows
-    if n is None:
-        est = _estimate_rows(corpus)
-        if est is not None and est > MAX_EXACT_ROWS:
-            n = est  # safe direction: over-threshold routes away from exact
-        else:
-            n = corpus.count()
+    _check_lsh_geometry("embedding_near_dup_pairs", num_planes, bands)
+    fit = _FitInputs(corpus, vec_col, fit_sample, seed)
+    n = fit.n
+    if n <= MAX_EXACT_ROWS and _row_statistic(corpus) is not None:
+        n = corpus.count()
     if n <= MAX_EXACT_ROWS:
         return _near_dup_exact_blocked(corpus, id_col, vec_col, threshold, ndigits)
     if num_planes is None:
-        num_planes, bands = _auto_lsh_geometry(n, threshold)
-        X = _sample_norm_matrix(corpus, vec_col, min(fit_sample, 2048), seed)
-        est_cand = _estimate_lsh_candidates(X, n, num_planes, bands)
+        num_planes, bands, recall = _auto_lsh_geometry(n, threshold)
+        est_cand = _estimate_lsh_candidates(fit.X, n, num_planes, bands)
         if est_cand > MAX_CANDIDATE_FACTOR * n:
-            return _near_dup_cells(
-                corpus, id_col, vec_col, threshold, ndigits,
-                target_cell_rows, fit_sample, seed,
+            scanned = _cell_pairs(
+                corpus, id_col, vec_col, threshold, ndigits, None,
+                target_cell_rows, fit,
+            )
+            if scanned is None:
+                return corpus.sparkSession.createDataFrame([], _PAIR_SCHEMA)
+            return scanned[1].filter(F.col("cosine_sim") >= threshold)
+        if recall < 0.5:
+            warnings.warn(
+                f"embedding_near_dup_pairs: LSH at threshold={threshold} reaches "
+                f"estimated recall ~{recall:.0%} with {bands} bands x "
+                f"{num_planes // bands} planes (capped). Low/mid thresholds do "
+                "not bucket under hyperplane LSH at this corpus size - use "
+                "semantic_dedup (k-means cells).",
+                stacklevel=2,
             )
     return _near_dup_lsh(
         corpus, id_col, vec_col, threshold, ndigits, num_planes, bands, seed
@@ -256,16 +305,18 @@ def _sample_norm_matrix(
 ) -> np.ndarray:
     """Deterministic fit sample as a row-normalized (s, d) float64 matrix —
     the same seeded sample contract every driver-side quantizer fit uses, so
-    DuckDB oracle twins can rebuild the identical matrix with pyarrow."""
+    DuckDB oracle twins can rebuild the identical matrix with pyarrow. The
+    sample is the first ``n_sample`` rows of one seeded order, so a smaller
+    sample is a prefix of a larger one. Empty corpus: a (0, 0) matrix."""
     pdf = (
         corpus.select(vec_col)
         .sample(withReplacement=False, fraction=1.0, seed=seed)
         .limit(n_sample)
         .toPandas()
     )
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return X
+    if len(pdf) == 0:
+        return np.empty((0, 0))
+    return _unit(_stack(pdf[vec_col]))
 
 
 def _estimate_tau_k(X: np.ndarray, n: int, k: int) -> float:
@@ -302,8 +353,6 @@ def _auto_topk_lsh_geometry(
     gracefully in low-sim regimes by dropping planes-per-band — candidates
     grow toward a scan, but the recall contract holds (``ann_cosine_lsh``
     hands the near-exhaustive case to IVF)."""
-    import math
-
     p = 1.0 - math.acos(max(-1.0, min(1.0, tau))) / math.pi
     best: tuple[float, int, int] | None = None
     for kp in range(2, 21):
@@ -326,17 +375,15 @@ def _auto_topk_lsh_geometry(
 def _auto_lsh_geometry(
     n: int, threshold: float, target_recall: float = 0.9,
     max_bands: int = 32, max_planes_per_band: int = 20,
-) -> tuple[int, int]:
+) -> tuple[int, int, float]:
     """Hyperplane-LSH geometry from corpus size and threshold. Per-band
     collision odds for a pair at angle theta are p^k with p = 1 - theta/pi
     and k planes; k = log2(n) makes a RANDOM pair (p = 1/2) collide with
     probability ~1/n per band, so expected spurious candidates stay
     ~bands*n. The band count then targets ``target_recall`` at the
-    threshold: b = ln(1-R) / ln(1-p^k), capped. Warns with the estimated
-    recall when the cap binds hard (recall < 0.5)."""
-    import math
-    import warnings
-
+    threshold: b = ln(1-R) / ln(1-p^k), capped. Returns (num_planes, bands,
+    estimated recall at the threshold) — the recall is well below target
+    when the cap binds."""
     p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
     k = max(4, min(max_planes_per_band, math.ceil(math.log2(max(n, 2)))))
     pk = p**k
@@ -345,34 +392,16 @@ def _auto_lsh_geometry(
     else:
         bands = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pk))
         bands = max(4, min(max_bands, bands))
-    recall = 1.0 - (1.0 - pk) ** bands
-    if recall < 0.5:
-        warnings.warn(
-            f"embedding_near_dup_pairs: LSH at threshold={threshold} reaches "
-            f"estimated recall ~{recall:.0%} with {bands} bands x {k} planes "
-            "(capped). Low/mid thresholds do not bucket under hyperplane "
-            "LSH at this corpus size - use semantic_dedup (k-means cells).",
-            stacklevel=3,
-        )
-    return k * bands, bands
+    return k * bands, bands, 1.0 - (1.0 - pk) ** bands
 
 
 def _near_dup_exact_blocked(
     corpus: DataFrame, id_col: str, vec_col: str, threshold: float, ndigits: int
 ) -> DataFrame:
-    spark = corpus.sparkSession
-    pdf = corpus.select(id_col, vec_col).toPandas()
-    ids_b = pdf[id_col].to_numpy().astype(np.int64)
-    mat_b = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    mat_b /= np.maximum(np.linalg.norm(mat_b, axis=1, keepdims=True), 1e-12)
-    b = spark.sparkContext.broadcast((ids_b, mat_b))
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine_sim", T.DoubleType()),
-        ]
+    ids_b, _, mat_b = _query_matrix(
+        corpus.select(id_col, vec_col).toPandas(), id_col, vec_col
     )
+    b = corpus.sparkSession.sparkContext.broadcast((ids_b, mat_b))
 
     def score(batches):
         ids_, mat_ = b.value
@@ -380,9 +409,7 @@ def _near_dup_exact_blocked(
             if len(pdf_) == 0:
                 continue
             cids = pdf_[id_col].to_numpy().astype(np.int64)
-            cmat = np.stack(pdf_[vec_col].to_numpy()).astype(np.float64)
-            cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
-            sims = mat_ @ cmat.T  # (n_broadcast, batch)
+            sims = mat_ @ _unit(_stack(pdf_[vec_col])).T  # (n_broadcast, batch)
             # each unordered pair is emitted exactly once: broadcast id < batch id
             mask = (np.round(sims, ndigits) >= threshold - 1e-9) & (
                 ids_[:, None] < cids[None, :]
@@ -395,7 +422,7 @@ def _near_dup_exact_blocked(
     # quadratic in corpus size (the whole ≤10k-row corpus is the broadcast
     # side of every batch's GEMM): per-row work is far above the cheap-op
     # density, so widen unconditionally like the other CPU-heavy stages
-    out = widen(corpus.select(id_col, vec_col)).mapInPandas(score, schema=schema)
+    out = widen(corpus.select(id_col, vec_col)).mapInPandas(score, schema=_PAIR_SCHEMA)
     return out.withColumn("cosine_sim", F.round(F.col("cosine_sim"), ndigits)).filter(
         F.col("cosine_sim") >= threshold
     )
@@ -412,9 +439,7 @@ def _near_dup_lsh(
     seed: int,
 ) -> DataFrame:
     dim = len(corpus.select(vec_col).first()[0])
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(num_planes, dim)
-    sig_udf = _band_hashes_udf(planes, bands)
+    sig_udf = _band_hashes_udf(num_planes, bands, dim, seed)
     bk = corpus.select(
         F.col(id_col).alias("id"), F.posexplode(sig_udf(F.col(vec_col))).alias("band", "bh")
     )
@@ -442,97 +467,45 @@ def _near_dup_lsh(
     )
 
 
-def _fit_and_assign_cells(
+def _cell_pairs(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    n_centroids: int | None,
-    fit_sample: int,
-    seed: int,
-    target_cell_rows: int,
-) -> tuple[DataFrame | None, int]:
-    """Shared coarse-quantizer front end for the cell-based pair scans
-    (semantic_dedup and the near-dup cells route): seeded driver-side fit
-    sample → deterministic spherical k-means → broadcast-centroid GEMM
-    assignment with NO shuffle. Returns (cells, n_centroids) where cells =
-    (__cell int, id long, v array<double> row-normalized), localCheckpoint'd
-    because every caller reads it at least twice; (None, 0) on an empty
-    corpus."""
-    spark = corpus.sparkSession
-    sample_pdf = (
-        corpus.select(vec_col)
-        .sample(withReplacement=False, fraction=1.0, seed=seed)
-        .limit(fit_sample)
-        .toPandas()
-    )
-    if len(sample_pdf) == 0:
-        return None, 0
-    X = np.stack(sample_pdf[vec_col].to_numpy()).astype(np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    n_centroids = _auto_centroids(corpus, n_centroids, fit_sample, target_cell_rows)
-    C = _spherical_kmeans(X, n_centroids, seed)
-    bC = spark.sparkContext.broadcast(C)
-
-    assign_schema = T.StructType(
-        [
-            T.StructField("__cell", T.IntegerType()),
-            T.StructField("id", T.LongType()),
-            T.StructField("v", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def assign(batches):
-        C_ = bC.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            cell = np.argmax(Mn @ C_.T, axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "__cell": cell,
-                    "id": pdf[id_col].to_numpy().astype(np.int64),
-                    "v": [m.tolist() for m in Mn],
-                }
-            )
-
-    assign_per_mb = max(0.5, min(8.0, 8.0 * 64.0 / max(1, n_centroids)))
-    cells = widen(corpus.select(id_col, vec_col), per_mb=assign_per_mb).mapInPandas(
-        assign, schema=assign_schema
-    )
-    from etl_processes_spark.partitioning import track_checkpoint
-
-    return track_checkpoint(cells.localCheckpoint(eager=False)), n_centroids
-
-
-def _cell_pair_scan(
-    cells: DataFrame,
     threshold: float,
     ndigits: int,
-    block_rows: int,
-    with_sim: bool,
-) -> DataFrame:
-    """Within-cell passing-pair scan over ``cells`` from _fit_and_assign_cells:
-    one shuffle on the cell id (applyInPandas), per-cell work blocked into
+    n_centroids: int | None,
+    target_cell_rows: int,
+    fit: _FitInputs,
+    block_rows: int = 4096,
+) -> tuple[DataFrame, DataFrame] | None:
+    """The cell-based pair scan behind semantic_dedup and the near-dup cells
+    route: deterministic spherical k-means on the call's fit sample →
+    broadcast-centroid assignment (_assign_encode) with NO shuffle → one
+    shuffle on the cell id (applyInPandas), per-cell work blocked into
     (block_rows × |cell|) GEMMs so memory stays bounded even in a hot cell.
-    Emits (id_a, id_b) with id_a < id_b — plus the rounded cosine when
-    ``with_sim`` — for pairs whose rounded similarity meets the threshold;
-    the n² pair set never materializes."""
-    fields = [T.StructField("id_a", T.LongType()), T.StructField("id_b", T.LongType())]
-    if with_sim:
-        fields.append(T.StructField("cosine_sim", T.DoubleType()))
-    edge_schema = T.StructType(fields)
+    Returns (cells, pairs): cells = (__cell int, id long, v array<double>),
+    localCheckpoint'd because callers read it again; pairs = (id_a, id_b,
+    rounded cosine) with id_a < id_b for pairs whose rounded similarity
+    meets the threshold — the n² pair set never materializes. None on an
+    empty corpus."""
+    if len(fit.X) == 0:
+        return None
+    n_centroids = _auto_centroids(
+        fit.n if n_centroids is None else None, n_centroids, fit.fit_sample,
+        target_cell_rows,
+    )
+    C = _spherical_kmeans(fit.X, n_centroids, fit.seed)
+    cells = _assign_encode(corpus, id_col, vec_col, C=C)
+    cells = track_checkpoint(cells.localCheckpoint(eager=False))
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        cols = ["id_a", "id_b"] + (["cosine_sim"] if with_sim else [])
         if n < 2:
-            out = pd.DataFrame({c: [] for c in cols})
+            out = pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []})
             return out.astype({"id_a": "int64", "id_b": "int64"})
         pdf = pdf.sort_values("id")
         ids = pdf["id"].to_numpy().astype(np.int64)
-        M = np.stack(pdf["v"].to_numpy())  # already normalized
+        M = _unit(_stack(pdf["v"]))
         out_a, out_b, out_s = [], [], []
         for lo in range(0, n, block_rows):
             blk = M[lo : lo + block_rows]
@@ -541,61 +514,45 @@ def _cell_pair_scan(
             keep_mask = (lo + bi) < ci  # id_a < id_b once, sorted order
             out_a.append(ids[lo + bi[keep_mask]])
             out_b.append(ids[ci[keep_mask]])
-            if with_sim:
-                out_s.append(sims[bi[keep_mask], ci[keep_mask]])
-        data = {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
-        if with_sim:
-            data["cosine_sim"] = np.concatenate(out_s)
-        return pd.DataFrame(data)
-
-    return cells.groupBy("__cell").applyInPandas(cell_pairs, schema=edge_schema)
-
-
-def _near_dup_cells(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    ndigits: int,
-    target_cell_rows: int,
-    fit_sample: int,
-    seed: int,
-    block_rows: int = 4096,
-) -> DataFrame:
-    """Cells route for embedding_near_dup_pairs: semantic_dedup's coarse
-    quantizer + within-cell blocked GEMM, but emitting (id_a, id_b,
-    cosine_sim) pairs directly. Cost is bounded at ~n · target_cell_rows
-    sims regardless of how the corpus clusters — the regime where
-    hyperplane LSH emits ~all same-cluster pairs as candidates (measured:
-    70 GB of spill at 2M clustered vectors). Approximate like
-    semantic_dedup: pairs straddling a cell boundary are missed."""
-    cells, _ = _fit_and_assign_cells(
-        corpus, id_col, vec_col, None, fit_sample, seed, target_cell_rows
-    )
-    if cells is None:
-        spark = corpus.sparkSession
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, cosine_sim double"
+            out_s.append(sims[bi[keep_mask], ci[keep_mask]])
+        return pd.DataFrame(
+            {
+                "id_a": np.concatenate(out_a),
+                "id_b": np.concatenate(out_b),
+                "cosine_sim": np.concatenate(out_s),
+            }
         )
-    pairs = _cell_pair_scan(cells, threshold, ndigits, block_rows, with_sim=True)
-    return pairs.filter(F.col("cosine_sim") >= threshold)
+
+    return cells, cells.groupBy("__cell").applyInPandas(cell_pairs, schema=_PAIR_SCHEMA)
 
 
-def _band_hashes_udf(planes: np.ndarray, bands: int):
+def _check_lsh_geometry(op: str, num_planes: int | None, bands: int | None) -> None:
+    if (num_planes is None) != (bands is None):
+        raise ValueError(
+            f"{op}: num_planes and bands must be supplied together (or both "
+            "left None for auto geometry); got "
+            f"num_planes={num_planes!r}, bands={bands!r}"
+        )
+
+
+def _band_hashes_udf(num_planes: int, bands: int, dim: int, seed: int):
     """Arrow-batched band signatures: one BLAS matmul per batch scores every
     plane at once, sign bits are packed per band into a single long. Returns
-    a pandas_udf mapping embedding → array<long> of length `bands`.
+    a pandas_udf mapping embedding → array<long> of length `bands`; the
+    ``num_planes`` hyperplanes are seeded Gaussian draws in ``dim``
+    dimensions.
 
     This replaces a (num_planes × dim)-literal expression tree whose Catalyst
     analysis+interpreted evaluation dominated runtime (~1 min on 500 rows);
     the matmul form is also the 100 TB design — per-task cost is one
     (batch × dim) @ (dim × planes) GEMM."""
-    rows_per_band = planes.shape[0] // bands
+    planes = np.random.RandomState(seed).randn(num_planes, dim)
+    rows_per_band = num_planes // bands
     weights = (1 << np.arange(rows_per_band, dtype=np.int64))[::-1]
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_hashes(col: pd.Series) -> pd.Series:
-        X = np.stack(col.to_numpy()).astype(np.float64)
+        X = _stack(col)
         bits = (X @ planes.T >= 0).astype(np.int64)  # (n, num_planes)
         packed = bits.reshape(len(X), bands, rows_per_band) @ weights  # (n, bands)
         return pd.Series(list(packed))
@@ -616,12 +573,10 @@ def ann_cosine_lsh(
     k: int = 5,
     num_planes: int | None = None,
     bands: int | None = None,
-    dim: int | None = None,
     seed: int = 42,
     ndigits: int = 6,
     target_recall: float = 0.9,
     fit_sample: int = 2048,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """ANN via random-hyperplane LSH: candidates = bucket collisions on any
     band of the sign signature; exact cosine re-rank of candidates only.
@@ -633,8 +588,7 @@ def ann_cosine_lsh(
     ``target_recall`` at that similarity is chosen — the round-5 static
     default (16 planes / 4 bands) measured recall 0.39 at sf0.1 because the
     test corpus's neighbors live near cosine 0.35 where 4-plane bands almost
-    never collide. Pass both knobs to pin a geometry (the gate/oracle path);
-    pass ``n_rows`` at scale to skip the count.
+    never collide. Pass both knobs to pin a geometry (the gate/oracle path).
 
     With auto geometry the MEASURED regime also decides the algorithm, the
     way ``embedding_near_dup_pairs`` routes lsh/cells: if the chosen
@@ -643,31 +597,21 @@ def ann_cosine_lsh(
     pruning in this similarity regime and the call delegates to
     ``ann_cosine_ivf`` (identical output contract, calibrated to the same
     ``target_recall``) — sf100 measured 188s non-pruning LSH vs 13-28s IVF
-    at equal-or-better recall. Explicit ``num_planes``/``bands`` pin the
-    hyperplane path."""
-    if (num_planes is None) != (bands is None):
-        raise ValueError(
-            "ann_cosine_lsh: num_planes and bands must be supplied together "
-            "(or both left None for auto geometry); got "
-            f"num_planes={num_planes!r}, bands={bands!r}"
-        )
+    at equal-or-better recall. The auto path collects IVF's fit sample once
+    (the tau estimate reads its first ``fit_sample`` rows), so a delegated
+    call refits on it without a second collect or count. Explicit
+    ``num_planes``/``bands`` pin the hyperplane path."""
+    _check_lsh_geometry("ann_cosine_lsh", num_planes, bands)
     if num_planes is None:
-        n = n_rows
-        if n is None:
-            n = _estimate_rows(corpus)
-        if n is None:
-            n = corpus.count()
-        X = _sample_norm_matrix(corpus, vec_col, fit_sample, seed)
-        tau = _estimate_tau_k(X, n, k)
-        num_planes, bands = _auto_topk_lsh_geometry(n, tau, target_recall)
+        fit = _FitInputs(corpus, vec_col, _FIT_SAMPLE, seed)
+        tau = _estimate_tau_k(fit.X[:fit_sample], fit.n, k)
+        num_planes, bands = _auto_topk_lsh_geometry(fit.n, tau, target_recall)
         kp = max(1, num_planes // max(bands, 1))
         if bands * 2.0**-kp > MAX_VERIFY_FRAC:
             # the algorithm switch must be observable in production runs:
             # identical calls can return different (recall-equivalent)
             # neighbor sets once the regime changes — callers needing
             # reproducible LSH output pin an explicit geometry
-            import logging
-
             logging.getLogger(__name__).info(
                 "ann_cosine_lsh: hyperplane buckets are not pruning in this "
                 "similarity regime (expected verify fraction %.3f = "
@@ -685,13 +629,12 @@ def ann_cosine_lsh(
                 seed=seed,
                 ndigits=ndigits,
                 target_recall=target_recall,
+                _fit=fit,
             )
-        dim = X.shape[1]
-    if dim is None:
+        dim = fit.X.shape[1]
+    else:
         dim = len(corpus.select(vec_col).first()[0])
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(num_planes, dim)
-    sig_udf = _band_hashes_udf(planes, bands)
+    sig_udf = _band_hashes_udf(num_planes, bands, dim, seed)
 
     def with_buckets(df: DataFrame, name: str) -> DataFrame:
         return df.select(
@@ -716,29 +659,25 @@ def ann_cosine_lsh(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(cand, k)
 
 
 def _auto_centroids(
-    corpus: DataFrame,
+    n: int | None,
     n_centroids: int | None,
     fit_sample: int,
     target_cell_rows: int = 20_000,
 ) -> int:
-    """Resolve a centroid count: the explicit parameter wins; otherwise
-    derive ``ceil(n / target_cell_rows)`` from the corpus size (Catalyst's
-    free row-count statistic when defined, one count() otherwise) so cells
-    hold ~10-50k rows at ANY corpus size — a static default at 100M+
-    vectors would make the within-cell quadratic work catastrophic. Clamped
-    to [16, fit_sample // 4] — the quantizer is fit on ``fit_sample`` rows,
-    and fewer than ~4 sample rows per centroid stops estimating anything;
-    callers pushing past ~10k centroids should raise fit_sample too."""
+    """Resolve a centroid count: the explicit parameter wins (``n`` is not
+    read then); otherwise derive ``ceil(n / target_cell_rows)`` from the
+    corpus row count so cells hold ~10-50k rows at ANY corpus size — a
+    static default at 100M+ vectors would make the within-cell quadratic
+    work catastrophic. Clamped to [16, fit_sample // 4] — the quantizer is
+    fit on ``fit_sample`` rows, and fewer than ~4 sample rows per centroid
+    stops estimating anything; callers pushing past ~10k centroids should
+    raise fit_sample too."""
     if n_centroids is not None:
         return int(n_centroids)
-    n = _estimate_rows(corpus)
-    if n is None:
-        n = corpus.count()
     k = max(16, -(-int(n) // target_cell_rows))
     return int(min(k, max(16, fit_sample // 4)))
 
@@ -776,23 +715,92 @@ def _calibrate_nprobe(
     A static n_probe can't self-scale: the right depth depends on how the
     quantizer's cells slice the neighbor structure, which this observes
     directly."""
-    cells = np.argmax(X @ C.T, axis=1)
-    nq = min(nq_cal, len(X))
-    Q = X[:nq]
-    sims = Q @ X.T
-    sims[np.arange(nq), np.arange(nq)] = -np.inf
-    kk = min(k, len(X) - 1)
-    if kk <= 0:
+    topk = _sample_true_topk(X, k, nq_cal)
+    if topk is None:
         return 1
-    topk = np.argsort(-sims, axis=1)[:, :kk]
-    order = np.argsort(-(Q @ C.T), axis=1)  # (nq, nc) probe order per query
+    cells = np.argmax(X @ C.T, axis=1)
+    nq = len(topk)
+    order = np.argsort(-(X[:nq] @ C.T), axis=1)  # (nq, nc) probe order per query
     cell_rank = np.empty((nq, len(C)), dtype=np.int64)
     rows = np.arange(nq)[:, None]
     cell_rank[rows, order] = np.arange(len(C))[None, :]
-    nbr_ranks = np.sort(cell_rank[rows, cells[topk]].ravel())
-    need = int(np.ceil(target_recall * len(nbr_ranks)))
-    npb = int(nbr_ranks[need - 1]) + 1 if need else 1
+    npb = _covering_depth(cell_rank[rows, cells[topk]], target_recall)
     return max(1, min(npb, len(C)))
+
+
+def _sample_true_topk(X: np.ndarray, k: int, nq_cal: int) -> np.ndarray | None:
+    """Exact top-k neighbors (sample row indices, self excluded) of the
+    first ``nq_cal`` rows of the fit sample — the ground truth the
+    calibrations measure against; None when the sample has no neighbors."""
+    kk = min(k, len(X) - 1)
+    if kk <= 0:
+        return None
+    nq = min(nq_cal, len(X))
+    sims = X[:nq] @ X.T
+    sims[np.arange(nq), np.arange(nq)] = -np.inf  # query qi IS sample row qi
+    return np.argsort(-sims, axis=1)[:, :kk]
+
+
+def _covering_depth(ranks: np.ndarray, target_recall: float) -> int:
+    """Smallest depth d such that ``target_recall`` of the 0-based ``ranks``
+    lie below d."""
+    ranks = np.sort(ranks.ravel())
+    need = int(np.ceil(target_recall * len(ranks)))
+    return int(ranks[need - 1]) + 1 if need else 1
+
+
+def _assign_encode(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    C: np.ndarray | None = None,
+    books: np.ndarray | None = None,
+) -> DataFrame:
+    """The one corpus pass every index is built by: a broadcast-constants
+    map with NO shuffle. Per row it yields ``__cell`` (the nearest centroid
+    of the row-normalized vector) when centroids ``C`` are given, then
+    ``id``, then the raw vector ``v`` (array<double>) or, with PQ codebooks
+    ``books``, its ``codes`` (array<int>, _pq_codes)."""
+    b = corpus.sparkSession.sparkContext.broadcast((C, books))
+    fields = [T.StructField("__cell", T.IntegerType())] if C is not None else []
+    fields.append(T.StructField("id", T.LongType()))
+    if books is None:
+        fields.append(T.StructField("v", T.ArrayType(T.DoubleType())))
+    else:
+        fields.append(T.StructField("codes", T.ArrayType(T.IntegerType())))
+
+    def assign_encode(batches):
+        C_, books_ = b.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            M = _stack(pdf[vec_col])
+            Mn = _unit(M)
+            out = {}
+            if C_ is not None:
+                out["__cell"] = np.argmax(Mn @ C_.T, axis=1).astype(np.int32)
+            out["id"] = pdf[id_col].to_numpy().astype(np.int64)
+            if books_ is None:
+                out["v"] = [m.tolist() for m in M]
+            else:
+                out["codes"] = [c.tolist() for c in _pq_codes(Mn, books_)]
+            yield pd.DataFrame(out)
+
+    # PQ encoding runs at ~4 MB/task; an assignment costs one GEMM row per
+    # centroid: ~8 MB/task at 64 centroids, proportionally less as the
+    # codebook grows
+    if books is not None:
+        per_mb = 4.0
+    else:
+        per_mb = max(0.5, min(8.0, 8.0 * 64.0 / max(1, len(C))))
+    return widen(corpus.select(id_col, vec_col), per_mb=per_mb).mapInPandas(
+        assign_encode, schema=T.StructType(fields)
+    )
+
+
+# default fit sample of the IVF quantizer (ann_cosine_lsh collects it for a
+# possible delegation)
+_FIT_SAMPLE = 10_000
 
 
 def ann_cosine_ivf(
@@ -803,10 +811,12 @@ def ann_cosine_ivf(
     k: int = 5,
     n_centroids: int | None = None,
     n_probe: int | None = None,
-    fit_sample: int = 10_000,
+    fit_sample: int = _FIT_SAMPLE,
     seed: int = 42,
     ndigits: int = 6,
     target_recall: float = 0.9,
+    *,
+    _fit: _FitInputs | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: a coarse spherical-k-means quantizer is fit
     driver-side on a seeded corpus sample; every corpus vector is assigned
@@ -821,51 +831,22 @@ def ann_cosine_ivf(
     broadcast, assignment is a narrow map, candidates shuffle on the cell
     id."""
     spark = corpus.sparkSession
-    X = _sample_norm_matrix(corpus, vec_col, fit_sample, seed)
-    n_centroids = _auto_centroids(corpus, n_centroids, fit_sample)
-    C = _spherical_kmeans(X, n_centroids, seed)
+    fit = _fit or _FitInputs(corpus, vec_col, fit_sample, seed)
+    n_centroids = _auto_centroids(
+        fit.n if n_centroids is None else None, n_centroids, fit_sample
+    )
+    C = _spherical_kmeans(fit.X, n_centroids, seed)
     if n_probe is None:
-        n_probe = _calibrate_nprobe(X, C, target_recall, k)
-    bC = spark.sparkContext.broadcast(C)
+        n_probe = _calibrate_nprobe(fit.X, C, target_recall, k)
+    cells = _assign_encode(corpus, id_col, vec_col, C=C)
 
-    assign_schema = T.StructType(
-        [
-            T.StructField("__cell", T.IntegerType()),
-            T.StructField("id", T.LongType()),
-            T.StructField("v", T.ArrayType(T.DoubleType())),
-        ]
+    qids, Q, Qn = _query_matrix(
+        queries.select(id_col, vec_col).toPandas(), id_col, vec_col
     )
-
-    def assign(batches):
-        C_ = bC.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax(Mn @ C_.T, axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "__cell": cells,
-                    "id": pdf[id_col].to_numpy().astype(np.int64),
-                    "v": [m.tolist() for m in M],
-                }
-            )
-
-    # assignment cost per row scales with the centroid count: ~8 MB/task at
-    # 64 centroids, proportionally less as the codebook grows
-    assign_per_mb = max(0.5, min(8.0, 8.0 * 64.0 / max(1, n_centroids)))
-    cells = widen(corpus.select(id_col, vec_col), per_mb=assign_per_mb).mapInPandas(
-        assign, schema=assign_schema
-    )
-
-    qpdf = queries.select(id_col, vec_col).toPandas()
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     probe = np.argsort(-(Qn @ C.T), axis=1)[:, : min(n_probe, len(C))]
     q_rows = [
         (int(qid), int(cell), qv.tolist())
-        for qid, qv, row in zip(qpdf[id_col], Q, probe)
+        for qid, qv, row in zip(qids, Q, probe)
         for cell in row
     ]
     q_cells = spark.createDataFrame(q_rows, ["query_id", "__cell", "qv"])
@@ -880,8 +861,7 @@ def ann_cosine_ivf(
             F.round(cos(F.col("qv"), F.col("v")), ndigits).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(cand, k)
 
 
 def semantic_dedup(
@@ -926,16 +906,17 @@ def semantic_dedup(
     more boundary, so raise ``target_cell_rows``/pin ``n_centroids`` when
     recall matters more than cost, or union a second, shifted-seed
     clustering."""
-    cells, n_centroids = _fit_and_assign_cells(
-        corpus, id_col, vec_col, n_centroids, fit_sample, seed, target_cell_rows
+    scanned = _cell_pairs(
+        corpus, id_col, vec_col, threshold, ndigits, n_centroids,
+        target_cell_rows, _FitInputs(corpus, vec_col, fit_sample, seed), block_rows,
     )
-    if cells is None:  # empty corpus: nothing to cluster or prune
+    if scanned is None:  # empty corpus: nothing to cluster or prune
         return corpus.select(
             F.col(id_col),
             F.lit(0).cast("int").alias("cluster_id"),
             F.lit(True).alias("keep"),
         )
-    edges = _cell_pair_scan(cells, threshold, ndigits, block_rows, with_sim=False)
+    cells, edges = scanned
 
     from etl_processes_spark.ops.dedup import connected_components
 
@@ -998,8 +979,6 @@ def _auto_refine(n: int) -> int:
     fit sample instead (_calibrate_refine) because log2(n) undershoots on
     corpora where ADC rank quality is poor (measured recall slide
     1.0 → 0.95 → 0.89 across sf1 → sf10 → sf100)."""
-    import math
-
     return max(8, int(round(math.log2(max(n, 2)))))
 
 
@@ -1024,33 +1003,15 @@ def _calibrate_refine(
     Clamped to [_auto_refine(n), cap] — the refine stage reads only
     nq·refine·k true vectors, so the cap binds cost, not recall, and a cap
     that binds hard means PQ itself is the wrong index for the corpus."""
-    m, ksub, dsub = books.shape
-    s = len(X)
-    if s < 2:
+    topk = _sample_true_topk(X, k, nq_cal)
+    if topk is None:
         return _auto_refine(n)
-    codes = np.empty((s, m), dtype=np.int64)
-    for sub in range(m):
-        Xs = X[:, sub * dsub : (sub + 1) * dsub]
-        codes[:, sub] = np.argmin(_sq_dists(Xs, books[sub]), axis=1)
-    nq = min(nq_cal, s)
-    Q = X[:nq]
-    tables = np.einsum("qsd,sjd->qsj", Q.reshape(nq, m, dsub), books)
-    adc = np.zeros((nq, s), dtype=np.float64)
-    for sub in range(m):
-        adc += tables[:, sub, codes[:, sub]]
-    exact = Q @ X.T
-    diag = np.arange(nq)
-    exact[diag, diag] = -np.inf  # query qi IS sample row qi
+    diag = np.arange(len(topk))
+    adc = _adc_scores(_adc_tables(X[: len(topk)], books), _pq_codes(X, books))
     adc[diag, diag] = -np.inf
-    kk = min(k, s - 1)
-    if kk <= 0:
-        return _auto_refine(n)
-    topk = np.argsort(-exact, axis=1)[:, :kk]
     adc_rank = np.argsort(np.argsort(-adc, axis=1), axis=1)  # 0-based positions
-    ranks = np.sort(adc_rank[diag[:, None], topk].ravel())
-    need = int(np.ceil(target_recall * len(ranks)))
-    r_sample = int(ranks[need - 1]) + 1 if need else 1
-    scaled = r_sample * max(1.0, n / s)
+    r_sample = _covering_depth(adc_rank[diag[:, None], topk], target_recall)
+    scaled = r_sample * max(1.0, n / len(X))
     refine = int(np.ceil(scaled / max(k, 1)))
     return max(_auto_refine(n), min(refine, cap))
 
@@ -1089,6 +1050,32 @@ def _pq_fit(X: np.ndarray, m: int, ksub: int, max_iter: int = 10) -> np.ndarray:
     return books
 
 
+def _pq_codes(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) int64 PQ codes of row-normalized ``X``: per subspace, the
+    nearest codebook entry (_sq_dists; argmin ties take the lowest code)."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(X), m), dtype=np.int64)
+    for s in range(m):
+        codes[:, s] = np.argmin(_sq_dists(X[:, s * dsub : (s + 1) * dsub], books[s]), axis=1)
+    return codes
+
+
+def _adc_tables(Q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """ADC lookup tables T[qi, s, j] = <q_sub, centroid_j> for row-normalized
+    queries ``Q`` — (nq, m, ksub)."""
+    m, _, dsub = books.shape
+    return np.einsum("qsd,sjd->qsj", Q.reshape(len(Q), m, dsub), books)
+
+
+def _adc_scores(tables: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """sims[qi, i] = sum_s tables[qi, s, codes[i, s]], summed in subspace
+    order — the order the oracle's per-subspace contributions sum in."""
+    sims = np.zeros((tables.shape[0], len(codes)), dtype=np.float64)
+    for s in range(tables.shape[1]):
+        sims += tables[:, s, codes[:, s]]
+    return sims
+
+
 def pq_train(
     corpus: DataFrame,
     vec_col: str = "embedding",
@@ -1096,6 +1083,8 @@ def pq_train(
     ksub: int | None = None,
     fit_sample: int = 10_000,
     seed: int = 42,
+    *,
+    _fit: _FitInputs | None = None,
 ) -> np.ndarray:
     """Fit PQ codebooks on a seeded corpus sample (driver-side, same
     sampling contract as ann_cosine_ivf's coarse quantizer). Vectors are
@@ -1106,7 +1095,7 @@ def pq_train(
     Memory story at 100 TB: a 64-dim float32 vector is 256 B; its PQ code is
     m bytes, so a billion-vector index fits in executor memory where raw
     vectors cannot."""
-    X = _sample_norm_matrix(corpus, vec_col, fit_sample, seed)
+    X = (_fit or _FitInputs(corpus, vec_col, fit_sample, seed)).X
     if m is None:
         m = _auto_pq_m(X.shape[1])
     if ksub is None:
@@ -1121,38 +1110,44 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Quantize every corpus vector: (id, codes array<int> of length m).
-    Broadcast codebooks + one Arrow/numpy pass — a narrow map with NO
-    shuffle; the output is the compact index the ADC search scans."""
-    spark = corpus.sparkSession
-    bC = spark.sparkContext.broadcast(codebooks)
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
+    Broadcast codebooks + one Arrow/numpy pass (_assign_encode) — a narrow
+    map with NO shuffle; the output is the compact index the ADC search
+    scans."""
+    return _assign_encode(corpus, id_col, vec_col, books=codebooks)
 
-    def encode(batches):
-        books = bC.value
-        m, ksub, dsub = books.shape
+
+def _adc_topk(
+    codes: DataFrame,
+    qids: np.ndarray,
+    tables: np.ndarray,
+    k: int,
+    ndigits: int,
+    probe_mask: np.ndarray | None = None,
+) -> DataFrame:
+    """The ADC top-k kernel behind pq_topk and ann_cosine_ivf_pq over an
+    (id, codes[, cell]) frame: scoring a row is m table lookups + a sum
+    (_adc_scores) — no floating-point vector math per candidate. With
+    ``probe_mask`` (nq, n_cells), a row only competes for the queries whose
+    probed cells hold it (a boolean table lookup on its ``cell``). Partial
+    top-k per batch (_batch_topk), final top-k via a window."""
+    b = codes.sparkSession.sparkContext.broadcast((qids, tables, probe_mask))
+
+    def score(batches):
+        qids_, tables_, mask_ = b.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(M), m), dtype=np.int32)
-            for s in range(m):
-                Ms = M[:, s * dsub : (s + 1) * dsub]
-                codes[:, s] = np.argmin(_sq_dists(Ms, books[s]), axis=1)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].to_numpy().astype(np.int64),
-                    "codes": [c.tolist() for c in codes],
-                }
-            )
+            ids = pdf["id"].to_numpy().astype(np.int64)
+            C = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
+            sims = _adc_scores(tables_, C)
+            rsims = np.round(sims, ndigits)
+            if mask_ is not None:  # outside this query's probes
+                rsims[~mask_[:, pdf["cell"].to_numpy().astype(np.int64)]] = -np.inf
+            yield _batch_topk(qids_, ids, sims, rsims, k)
 
-    return widen(corpus.select(id_col, vec_col), per_mb=4.0).mapInPandas(
-        encode, schema=schema
+    partial = codes.mapInPandas(score, schema=_TOPK_SCHEMA)
+    return _rank_topk(
+        partial.withColumn("cosine_sim", F.round(F.col("cosine_sim"), ndigits)), k
     )
 
 
@@ -1167,75 +1162,17 @@ def pq_topk(
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over a PQ-encoded corpus: per query,
     an (m, ksub) inner-product lookup table is precomputed driver-side and
-    broadcast; scoring a corpus item is m table lookups + a sum — no
-    floating-point vector math per candidate. Output contract matches
-    cosine_topk_fast: (query_id, neighbor_id, cosine_sim, rank) where
-    cosine_sim is the ADC APPROXIMATION of cosine (rounded), ranked (sim
-    desc, neighbor_id asc). Partial top-k per partition (same slack trick as
-    cosine_topk_fast), final top-k via window.
+    broadcast; scoring a corpus item is m table lookups + a sum. Output
+    contract matches cosine_topk_fast: (query_id, neighbor_id, cosine_sim,
+    rank) where cosine_sim is the ADC APPROXIMATION of cosine (rounded),
+    ranked (sim desc, neighbor_id asc) — the _adc_topk kernel without a
+    probe mask.
 
     100 TB shape: the scanned side is the codes frame (m bytes/row), query
     tables are (nq, m, ksub) floats broadcast once, and the shuffle after
     partial selection is O(num_partitions * nq * k) rows."""
-    spark = codes.sparkSession
-    m, ksub, dsub = codebooks.shape
-    qids = queries_pdf[id_col].to_numpy().astype(np.int64)
-    Q = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    # T[qi, s, j] = <q_sub, centroid>: summed over s in subspace order, the
-    # same order the oracle's per-subspace contributions sum in
-    tables = np.einsum(
-        "qsd,sjd->qsj", Q.reshape(len(Q), m, dsub), codebooks
-    )
-    b = spark.sparkContext.broadcast((qids, tables))
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine_sim", T.DoubleType()),
-        ]
-    )
-    slack = 8
-
-    def score(batches):
-        qids_, tables_ = b.value
-        nq = len(qids_)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy().astype(np.int64)
-            C = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
-            # sims[qi, i] = sum_s tables[qi, s, C[i, s]]
-            sims = np.zeros((nq, len(ids)), dtype=np.float64)
-            for s in range(m):
-                sims += tables_[:, s, C[:, s]]
-            rsims = np.round(sims, ndigits)
-            rsims[qids_[:, None] == ids[None, :]] = -np.inf
-            nk = min(k + slack, sims.shape[1])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(nq):
-                idx = np.lexsort((ids, -rsims[qi]))[:nk]
-                idx = idx[rsims[qi][idx] > -np.inf]
-                out_q.append(np.full(len(idx), qids_[qi], dtype=np.int64))
-                out_n.append(ids[idx])
-                out_s.append(sims[qi][idx])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine_sim": np.concatenate(out_s),
-                }
-            )
-
-    partial = codes.mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("cosine_sim", F.round(F.col("cosine_sim"), ndigits))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    qids, _, Q = _query_matrix(queries_pdf, id_col, vec_col)
+    return _adc_topk(codes, qids, _adc_tables(Q, codebooks), k, ndigits)
 
 
 def exact_rerank(
@@ -1260,11 +1197,9 @@ def exact_rerank(
     shuffle of the corpus; the exact cosine is one Arrow einsum per batch;
     final top-k is a window over nq x refine_k rows."""
     spark = corpus.sparkSession
+    qids, Q, _ = _query_matrix(queries_pdf, id_col, vec_col)
     qdf = spark.createDataFrame(
-        [
-            (int(r[id_col]), [float(x) for x in r[vec_col]])
-            for _, r in queries_pdf.iterrows()
-        ],
+        [(int(i), q.tolist()) for i, q in zip(qids, Q)],
         "query_id long, qv array<double>",
     )
     cand = candidates.select("query_id", "neighbor_id").join(
@@ -1279,14 +1214,7 @@ def exact_rerank(
         "neighbor_id",
         F.round(cos(F.col("qv"), F.col("cv")), ndigits).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def ann_cosine_pq(
@@ -1301,31 +1229,24 @@ def ann_cosine_pq(
     seed: int = 42,
     ndigits: int = 6,
     refine: int | str | None = "auto",
-    n_rows: int | None = None,
 ) -> DataFrame:
     """train + encode + ADC search in one call (the gate/bench entry point).
     For a persistent index, call pq_train/pq_encode once, save the codes
     frame, and run pq_topk per query batch. With ``refine`` = r, the ADC
     stage over-fetches r*k candidates and ``exact_rerank`` re-scores them
     against the true vectors — recall recovers toward exact at the cost of
-    reading nq*r*k raw vectors. ``refine`` DEFAULTS ON ("auto": a
-    corpus-scaled multiple, see _auto_refine) because raw ADC rank quality
+    reading nq*r*k raw vectors. ``refine`` DEFAULTS ON ("auto": calibrated
+    on the fit sample, see _calibrate_refine) because raw ADC rank quality
     silently decays with corpus size; pass refine=None for the raw
     compressed-domain ranking."""
-    books = pq_train(corpus, vec_col, m=m, ksub=ksub, fit_sample=fit_sample, seed=seed)
+    fit = _FitInputs(corpus, vec_col, fit_sample, seed)
+    books = pq_train(corpus, vec_col, m=m, ksub=ksub, _fit=fit)
     codes = pq_encode(corpus, books, id_col, vec_col)
     qpdf = queries.select(id_col, vec_col).toPandas()
     if refine == "auto":
-        n = n_rows
-        if n is None:
-            n = _estimate_rows(corpus)
-        if n is None:
-            n = corpus.count()
-        # calibrated on the SAME seeded sample pq_train fit on (deterministic
-        # by the shared _sample_norm_matrix contract) — log2(n) alone
+        # calibrated on the SAME sample pq_train fit on — log2(n) alone
         # undershot at sf100 (recall 0.89 and sliding one decade per ~0.05)
-        X_fit = _sample_norm_matrix(corpus, vec_col, fit_sample, seed)
-        refine = _calibrate_refine(X_fit, books, n, k)
+        refine = _calibrate_refine(fit.X, books, fit.n, k)
     if refine is None:
         return pq_topk(codes, qpdf, books, id_col, vec_col, k=k, ndigits=ndigits)
     cand = pq_topk(
@@ -1343,6 +1264,8 @@ def ivf_pq_index(
     ksub: int | None = None,
     fit_sample: int = 10_000,
     seed: int = 42,
+    *,
+    _fit: _FitInputs | None = None,
 ) -> tuple[np.ndarray, np.ndarray, DataFrame]:
     """The billion-scale ANN layout: coarse IVF cells for pruning + PQ codes
     for compression, built in ONE Arrow pass over the corpus. Returns
@@ -1352,53 +1275,17 @@ def ivf_pq_index(
     scan prunes to its cells at the parquet row-group level.
 
     Both quantizers fit driver-side on the SAME seeded sample (deterministic
-    — the oracle refits them bit-identically); assignment + encoding are a
-    broadcast-constants map with NO shuffle. ``m``/``ksub`` default to AUTO
-    (see pq_train)."""
-    spark = corpus.sparkSession
-    X = _sample_norm_matrix(corpus, vec_col, fit_sample, seed)
-    if m is None:
-        m = _auto_pq_m(X.shape[1])
-    if ksub is None:
-        ksub = min(256, len(X))
-    n_centroids = _auto_centroids(corpus, n_centroids, fit_sample)
-    C = _spherical_kmeans(X, n_centroids, seed)
-    books = _pq_fit(X, m=m, ksub=ksub)
-    bC = spark.sparkContext.broadcast((C, books))
-
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("id", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
+    — the oracle refits them bit-identically); assignment + encoding are one
+    broadcast-constants map (_assign_encode) with NO shuffle. ``m``/``ksub``
+    default to AUTO (see pq_train)."""
+    fit = _fit or _FitInputs(corpus, vec_col, fit_sample, seed)
+    books = pq_train(corpus, vec_col, m=m, ksub=ksub, _fit=fit)
+    n_centroids = _auto_centroids(
+        fit.n if n_centroids is None else None, n_centroids, fit_sample
     )
-
-    def build(batches):
-        C_, books_ = bC.value
-        m_, ksub_, dsub = books_.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax(M @ C_.T, axis=1).astype(np.int32)
-            codes = np.empty((len(M), m_), dtype=np.int32)
-            for s in range(m_):
-                Ms = M[:, s * dsub : (s + 1) * dsub]
-                codes[:, s] = np.argmin(_sq_dists(Ms, books_[s]), axis=1)
-            yield pd.DataFrame(
-                {
-                    "cell": cells,
-                    "id": pdf[id_col].to_numpy().astype(np.int64),
-                    "codes": [c.tolist() for c in codes],
-                }
-            )
-
-    index = widen(corpus.select(id_col, vec_col), per_mb=4.0).mapInPandas(
-        build, schema=schema
-    )
-    return C, books, index
+    C = _spherical_kmeans(fit.X, n_centroids, seed)
+    index = _assign_encode(corpus, id_col, vec_col, C=C, books=books)
+    return C, books, index.withColumnRenamed("__cell", "cell")
 
 
 def ann_cosine_ivf_pq(
@@ -1416,7 +1303,6 @@ def ann_cosine_ivf_pq(
     ndigits: int = 6,
     refine: int | str | None = "auto",
     target_recall: float = 0.95,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """IVF-PQ search: each query ADC-scores ONLY the PQ codes in its
     ``n_probe`` nearest cells — the pruning of IVF times the compression of
@@ -1428,114 +1314,49 @@ def ann_cosine_ivf_pq(
     The scan-side filter (cell ∈ union of probed cells) is a codegen'd
     isin BEFORE any Python — on a cell-clustered index it prunes at the
     parquet row-group level. Per-query cell masks apply inside the scoring
-    kernel (boolean table lookup, no vector math). Output contract matches
+    kernel (_adc_topk's probe mask). Output contract matches
     cosine_topk_fast/ann_cosine_pq: (query_id, neighbor_id, cosine_sim, rank),
     cosine_sim = ADC approximation, rank by (sim desc, neighbor_id asc).
     With ``refine`` = r, the ADC stage over-fetches r*k candidates per
     query and ``exact_rerank`` re-scores them against the true vectors.
 
     AUTO defaults: ``m``/``ksub`` from dim/sample (pq_train), ``refine`` ON
-    with a corpus-scaled multiple (_auto_refine), and ``n_probe`` calibrated
-    on the fit sample against sqrt(``target_recall``) — the probe stage and
-    the ADC+refine stage multiply, so each targets the square root of the
-    end-to-end goal. The default target is 0.95, NOT 0.9: the calibration
-    is tight enough that a 0.9 target lands almost exactly at 0.90-0.91
-    end-to-end (measured sf1: probe-all 0.97 x refine-all 0.94 ≈ 0.91
-    combined), under the 0.92 recall floor the benchmark enforces for the
-    refined lines; 0.95 measured 0.97+ across sf0.1-sf100."""
-    spark = corpus.sparkSession
-    if refine == "auto" or n_probe is None:
-        n = n_rows
-        if n is None:
-            n = _estimate_rows(corpus)
-        if n is None:
-            n = corpus.count()
-    k_out = k
+    with a calibrated multiple (_calibrate_refine), and ``n_probe``
+    calibrated on the fit sample against sqrt(``target_recall``) — the
+    probe stage and the ADC+refine stage multiply, so each targets the
+    square root of the end-to-end goal. The default target is 0.95, NOT
+    0.9: the calibration is tight enough that a 0.9 target lands almost
+    exactly at 0.90-0.91 end-to-end (measured sf1: probe-all 0.97 x
+    refine-all 0.94 ≈ 0.91 combined), under the 0.92 recall floor the
+    benchmark enforces for the refined lines; 0.95 measured 0.97+ across
+    sf0.1-sf100."""
+    fit = _FitInputs(corpus, vec_col, fit_sample, seed)
     C, books, index = ivf_pq_index(
-        corpus, id_col, vec_col, n_centroids, m, ksub, fit_sample, seed
+        corpus, id_col, vec_col, n_centroids, m, ksub, fit_sample, seed, _fit=fit
     )
-    n_centroids = len(C)  # resolved (auto-scaled and/or sample-clamped)
-    m_, ksub_, dsub = books.shape
-    if refine == "auto" or n_probe is None:
-        Xs_fit = _sample_norm_matrix(corpus, vec_col, fit_sample, seed)
-        if refine == "auto":
-            # the probe stage and the ADC+refine stage multiply, so the
-            # refine calibration targets sqrt of the end-to-end goal —
-            # matched to the n_probe split below; measured on the sample,
-            # scaled to the corpus (see _calibrate_refine)
-            refine = _calibrate_refine(
-                Xs_fit, books, n, k_out, target_recall=max(0.95, target_recall**0.5)
-            )
-        if n_probe is None:
-            n_probe = _calibrate_nprobe(Xs_fit, C, target_recall**0.5, k_out)
-    if refine is not None:
-        k = k * max(1, refine)
+    if refine == "auto":
+        # the probe stage and the ADC+refine stage multiply, so the refine
+        # calibration targets sqrt of the end-to-end goal — matched to the
+        # n_probe split below
+        refine = _calibrate_refine(
+            fit.X, books, fit.n, k, target_recall=max(0.95, target_recall**0.5)
+        )
+    if n_probe is None:
+        n_probe = _calibrate_nprobe(fit.X, C, target_recall**0.5, k)
     qpdf = queries.select(id_col, vec_col).toPandas()
-    qids = qpdf[id_col].to_numpy().astype(np.int64)
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    qids, _, Q = _query_matrix(qpdf, id_col, vec_col)
     # probe cells: np.argmax ties resolve to the lowest cell; the full rank
     # uses (dot desc, cell asc) — same as the IVF oracle's row_number order
-    qc = Q @ C.T
-    order = np.lexsort((np.arange(n_centroids)[None, :].repeat(len(Q), 0), -qc))
+    order = np.lexsort((np.arange(len(C))[None, :].repeat(len(Q), 0), -(Q @ C.T)))
     probed = order[:, :n_probe]  # (nq, n_probe)
-    probe_mask = np.zeros((len(Q), n_centroids), dtype=bool)
-    for qi in range(len(Q)):
-        probe_mask[qi, probed[qi]] = True
-    tables = np.einsum("qsd,sjd->qsj", Q.reshape(len(Q), m_, dsub), books)
-    b = spark.sparkContext.broadcast((qids, tables, probe_mask))
-
+    probe_mask = np.zeros((len(Q), len(C)), dtype=bool)
+    probe_mask[np.arange(len(Q))[:, None], probed] = True
     allowed = sorted({int(c) for c in probed.flatten()})
-    cand = index.filter(F.col("cell").isin(allowed))
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine_sim", T.DoubleType()),
-        ]
-    )
-    slack = 8
-
-    def score(batches):
-        qids_, tables_, mask_ = b.value
-        nq = len(qids_)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy().astype(np.int64)
-            cells = pdf["cell"].to_numpy().astype(np.int64)
-            Cd = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            sims = np.zeros((nq, len(ids)), dtype=np.float64)
-            for s in range(m_):
-                sims += tables_[:, s, Cd[:, s]]
-            rsims = np.round(sims, ndigits)
-            rsims[~mask_[:, cells]] = -np.inf  # outside this query's probes
-            rsims[qids_[:, None] == ids[None, :]] = -np.inf
-            nk = min(k + slack, sims.shape[1])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(nq):
-                idx = np.lexsort((ids, -rsims[qi]))[:nk]
-                idx = idx[rsims[qi][idx] > -np.inf]
-                out_q.append(np.full(len(idx), qids_[qi], dtype=np.int64))
-                out_n.append(ids[idx])
-                out_s.append(sims[qi][idx])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine_sim": np.concatenate(out_s),
-                }
-            )
-
-    partial = cand.mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    out = (
-        partial.withColumn("cosine_sim", F.round(F.col("cosine_sim"), ndigits))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    k_cand = k if refine is None else k * max(1, refine)
+    out = _adc_topk(
+        index.filter(F.col("cell").isin(allowed)), qids, _adc_tables(Q, books),
+        k_cand, ndigits, probe_mask,
     )
     if refine is None:
         return out
-    return exact_rerank(out, corpus, qpdf, id_col, vec_col, k=k_out, ndigits=ndigits)
+    return exact_rerank(out, corpus, qpdf, id_col, vec_col, k=k, ndigits=ndigits)

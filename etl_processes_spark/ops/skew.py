@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_processes_spark.partitioning import row_count
+
 # Join types for which exploding the small side ×N and dropping the salt is
 # result-identical to the plain join. right/full outer would KEEP all N
 # copies of an unmatched small-side row — silently wrong.
@@ -62,11 +64,7 @@ def _detect_hot_keys(
     One sample+groupBy job; the collected hot set is capped at
     ``max_hot_keys`` (hot keys are, by definition, few — a corpus where
     thousands of keys each fill a task needs repartitioning, not salting)."""
-    from etl_processes_spark.ops.similarity import _estimate_rows
-
-    est = _estimate_rows(big)
-    if est is None:
-        est = big.count()
+    est = row_count(big)
     if est == 0:
         return []
     if hot_threshold is None:
@@ -266,12 +264,7 @@ def bloom_semi_filter(
     worse filter."""
     lk = large_key or key
     if expected_items is None:
-        from etl_processes_spark.ops.similarity import _estimate_rows
-
-        est = _estimate_rows(keys)
-        if est is None:
-            est = keys.count()
-        expected_items = max(4096, int(est))
+        expected_items = max(4096, int(row_count(keys)))
     n_bits = _bloom_num_bits(expected_items, fpp)
     n_bits = ((n_bits + 63) // 64) * 64
     n_hashes = _bloom_num_hashes(n_bits, expected_items)

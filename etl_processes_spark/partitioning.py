@@ -68,6 +68,26 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     return None if sz >= _SIZE_UNKNOWN else sz
 
 
+def _row_statistic(df: DataFrame) -> int | None:
+    """Catalyst's optimized-plan row-count statistic (free — no job).
+    Defined for LocalRelations, CBO-analyzed tables and some file sources;
+    None otherwise."""
+    try:
+        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+        if rc.isDefined():
+            return int(str(rc.get()))
+    except Exception:
+        pass
+    return None
+
+
+def row_count(df: DataFrame) -> int:
+    """Rows in ``df``: the row-count statistic when Catalyst defines one,
+    otherwise one ``count()``. The one place a size route counts rows."""
+    n = _row_statistic(df)
+    return df.count() if n is None else n
+
+
 def _parse_bytes_conf(v: str) -> int:
     """'134217728b' / '128m' / '1g' / '1t' → bytes; defaults to 128 MiB on
     anything unparseable."""

@@ -138,8 +138,12 @@ def run_training_data_pipeline(
     Returns (doc_id, text, pred_lang, quality_score, n_tokens
     [, unigram_logprob][, chunk_id][, bin_id, offset_in_bin]). Every stage
     is the bucketed/inverted-index/window formulation documented in
-    SCALING.md — no all-pairs or driver-side loops anywhere; the whole flow
-    is deterministic for a given (corpus, seed).
+    SCALING.md — no all-pairs stage anywhere. The driver does bounded work
+    only: semantic_dedup fits its k-means cells on a seeded sample of at
+    most 10,000 vectors, and connected components collapses edge lists of
+    up to ``dedup.DRIVER_MAX_EDGES`` directed rows in one driver
+    union-find pass. The whole flow is deterministic for a given (corpus,
+    seed).
 
     ``stage_hook``: optional fn(stage_name, df) -> df called at every stage
     BOUNDARY with the stage's output frame; whatever it returns feeds the

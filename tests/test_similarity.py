@@ -103,7 +103,7 @@ def test_near_dup_lsh_path_finds_planted_pair(emb, monkeypatch):
 def test_ann_lsh_high_recall_on_planted_pair(emb):
     df, _ = emb
     res = ann_cosine_lsh(
-        df, df.filter("vec_id = 7"), k=3, num_planes=16, bands=8, dim=DIM
+        df, df.filter("vec_id = 7"), k=3, num_planes=16, bands=8
     ).collect()
     # near-identical vectors share (almost) all hyperplane signs
     assert any(r["neighbor_id"] == 3 for r in res)
@@ -273,13 +273,12 @@ def test_ivf_pq_recall_and_pruning(spark, emb):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_auto_centroids_scaling(spark):
+def test_auto_centroids_scaling():
     # default n_centroids derives from corpus size: ~target_cell_rows rows
     # per cell, floor 16, capped by the fit sample (>= ~4 rows/centroid)
     from etl_processes_spark.ops.similarity import _auto_centroids
 
-    small = spark.range(100).withColumnRenamed("id", "vec_id")
-    big = spark.range(1_000_000).withColumnRenamed("id", "vec_id")
+    small, big = 100, 1_000_000
     assert _auto_centroids(small, None, 10_000) == 16           # floor
     assert _auto_centroids(big, None, 10_000) == 50             # 1M / 20k
     assert _auto_centroids(big, None, 10_000, target_cell_rows=1000) == 1000
@@ -331,23 +330,20 @@ def test_pq_refine_improves_recall(spark, sf_dir):
 
 
 def test_auto_lsh_geometry():
-    import warnings
-
     from etl_processes_spark.ops.similarity import _auto_lsh_geometry
 
     # high threshold, big corpus: bounded bands, ~log2(n) planes per band
-    planes, bands = _auto_lsh_geometry(20_000, 0.9)
+    planes, bands, recall = _auto_lsh_geometry(20_000, 0.9)
     k = planes // bands
-    assert 14 <= k <= 16 and 4 <= bands <= 32
+    assert 14 <= k <= 16 and 4 <= bands <= 32 and recall >= 0.9
     # random-pair collision odds per band ~ (1/2)^k -> spurious candidates
     # near-linear, not the 40%-of-all-pairs blowup of a static 4-plane band
     assert 0.5 ** k * bands * 20_000 < 50  # expected spurious per row << n
 
-    # low threshold: cap binds, warns with estimated recall
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _auto_lsh_geometry(20_000, 0.5)
-    assert any("semantic_dedup" in str(x.message) for x in w)
+    # low threshold: the band cap binds and the estimated recall says so
+    # (the LSH route warns on it; see the clustered-corpus routing test)
+    planes, bands, recall = _auto_lsh_geometry(20_000, 0.5)
+    assert bands == 32 and recall < 0.5
 
 
 def test_near_dup_lsh_auto_params_still_finds_planted(emb, monkeypatch):
@@ -488,9 +484,10 @@ def test_near_dup_cells_route_subset_of_exact_with_high_recall(spark, monkeypatc
 
 
 def test_near_dup_auto_routes_clustered_corpus_to_cells(spark, monkeypatch):
-    # mid-threshold + clustered corpus + big-n hint: the sampled candidate
-    # estimate must reject LSH, and the auto result must equal the forced
-    # cells route bit-for-bit (same seed, same quantizer)
+    # mid-threshold + clustered corpus at a 2M-row size: the sampled
+    # candidate estimate must reject LSH WITHOUT the LSH route's low-recall
+    # warning, and the auto result must equal the forced cells route
+    # bit-for-bit (same seed, same quantizer)
     import warnings
 
     from etl_processes_spark.ops.similarity import (
@@ -508,33 +505,39 @@ def test_near_dup_auto_routes_clustered_corpus_to_cells(spark, monkeypatch):
         [(i, M[i].tolist()) for i in range(300)],
         "vec_id long, embedding array<double>",
     )
-    n_hint = 2_000_000
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        npl, b = _auto_lsh_geometry(n_hint, 0.5)
-    est = _estimate_lsh_candidates(M, n_hint, npl, b)
-    assert est > 64.0 * n_hint  # clustered corpus: LSH would not prune
+    n_big = 2_000_000
+    npl, b, _ = _auto_lsh_geometry(n_big, 0.5)
+    est = _estimate_lsh_candidates(M, n_big, npl, b)
+    assert est > 64.0 * n_big  # clustered corpus: LSH would not prune
 
-    pair_set = lambda res: {(r["id_a"], r["id_b"]) for r in res.collect()}
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        auto = pair_set(
-            embedding_near_dup_pairs(df, threshold=0.5, n_rows=n_hint)
-        )
+    monkeypatch.setattr(similarity, "row_count", lambda df: n_big)
+    # cells sized for the pretended 2M rows keep the 16-centroid floor on
+    # the 300-row sample (4096-row cells would ask for one centroid per row)
+    pair_set = lambda: {
+        (r["id_a"], r["id_b"])
+        for r in embedding_near_dup_pairs(
+            df, threshold=0.5, target_cell_rows=n_big
+        ).collect()
+    }
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        auto = pair_set()
+    assert not [str(w.message) for w in caught if w.category is UserWarning]
     monkeypatch.setattr(similarity, "MAX_CANDIDATE_FACTOR", -1.0)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        forced = pair_set(
-            embedding_near_dup_pairs(df, threshold=0.5, n_rows=n_hint)
-        )
+    forced = pair_set()
     assert auto == forced and len(auto) > 0
+
+    # the warning belongs to the LSH route: forced there, it fires
+    monkeypatch.setattr(similarity, "MAX_CANDIDATE_FACTOR", float("inf"))
+    with pytest.warns(UserWarning, match="semantic_dedup"):
+        embedding_near_dup_pairs(df, threshold=0.5)
 
     # the tight near-dup regime on a NON-clustered sample keeps LSH:
     # random d=64 sims concentrate near 0, so candidates stay in budget
     Xr = rng.randn(512, 64)
     Xr /= np.linalg.norm(Xr, axis=1, keepdims=True)
-    npl2, b2 = _auto_lsh_geometry(n_hint, 0.95)
-    assert _estimate_lsh_candidates(Xr, n_hint, npl2, b2) <= 64.0 * n_hint
+    npl2, b2, _ = _auto_lsh_geometry(n_big, 0.95)
+    assert _estimate_lsh_candidates(Xr, n_big, npl2, b2) <= 64.0 * n_big
 
 
 def test_near_dup_rejects_bad_geometry_before_any_job(spark, tmp_path):
@@ -593,3 +596,79 @@ def test_calibrate_refine_scales_with_corpus_and_floors(spark):
     assert small >= _auto_refine(512)
     assert big >= small
     assert _calibrate_refine(X, books, n=10**9, k=5, cap=64) <= 64
+
+
+def _spy(monkeypatch, module, name, log, tag=None):
+    """Replace ``module.name`` with a wrapper that appends ``tag`` (default:
+    the name) to ``log`` on every call."""
+    real = getattr(module, name)
+
+    def wrapped(*a, **kw):
+        log.append(tag or name)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(module, name, wrapped)
+
+
+_ANN_CALLS = {
+    "ivf": lambda e, q: similarity.ann_cosine_ivf(e, q, k=5),
+    "pq_raw": lambda e, q: similarity.ann_cosine_pq(e, q, k=5, refine=None),
+    "pq_refine": lambda e, q: similarity.ann_cosine_pq(e, q, k=5),
+    "ivfpq_raw": lambda e, q: similarity.ann_cosine_ivf_pq(e, q, k=5, refine=None),
+    "ivfpq_refine": lambda e, q: similarity.ann_cosine_ivf_pq(e, q, k=5),
+    "lsh_auto": lambda e, q: similarity.ann_cosine_lsh(e, q, k=5),
+    "semantic_dedup": lambda e, q: similarity.semantic_dedup(e, threshold=0.5),
+}
+
+
+@pytest.mark.parametrize("call", sorted(_ANN_CALLS))
+def test_ann_call_reads_one_fit_sample_and_one_row_count(spark, sf_dir, monkeypatch, call):
+    # every fit, calibration and delegation of one call shares a single
+    # seeded sample collect and a single row count
+    from pyspark.sql import functions as F
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = e.filter(F.col("vec_id") < 10)
+    log = []
+    _spy(monkeypatch, similarity, "_sample_norm_matrix", log)
+    _spy(monkeypatch, similarity, "row_count", log)
+    _spy(monkeypatch, similarity, "ann_cosine_ivf", log)
+    _ANN_CALLS[call](e, q)
+    assert log.count("_sample_norm_matrix") == 1
+    assert log.count("row_count") <= 1
+    if call == "lsh_auto":  # this corpus takes the LSH -> IVF delegation
+        assert "ann_cosine_ivf" in log
+
+
+@pytest.mark.parametrize("side", ["lsh", "ivf"])
+def test_ann_lsh_switch_point_at_max_verify_frac(spark, sf_dir, monkeypatch, side):
+    # ann_cosine_lsh delegates to IVF exactly when the auto geometry's verify
+    # fraction exceeds MAX_VERIFY_FRAC: the constant at the fraction keeps
+    # LSH, one ulp below it delegates; both sides hold recall@5 >= 0.8
+    from pyspark.sql import functions as F
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = e.filter(F.col("vec_id") < 10)
+    pairs = lambda df: {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
+    truth = pairs(cosine_topk_fast(e, q, "vec_id", "embedding", k=5))
+
+    geometry = []
+    real_geometry = similarity._auto_topk_lsh_geometry
+    monkeypatch.setattr(
+        similarity, "_auto_topk_lsh_geometry",
+        lambda *a, **kw: geometry.append(real_geometry(*a, **kw)) or geometry[-1],
+    )
+    monkeypatch.setattr(similarity, "MAX_VERIFY_FRAC", float("inf"))
+    similarity.ann_cosine_lsh(e, q, k=5)  # the call's own geometry, unrouted
+    planes, bands = geometry[-1]
+    frac = bands * 2.0 ** -(planes // bands)
+
+    ran = []
+    _spy(monkeypatch, similarity, "ann_cosine_ivf", ran, "ivf")
+    _spy(monkeypatch, similarity, "_band_hashes_udf", ran, "lsh")
+    monkeypatch.setattr(
+        similarity, "MAX_VERIFY_FRAC", frac if side == "lsh" else np.nextafter(frac, 0)
+    )
+    got = pairs(similarity.ann_cosine_lsh(e, q, k=5))
+    assert ran == [side]
+    assert len(got & truth) / len(truth) >= 0.8

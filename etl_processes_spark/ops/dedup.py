@@ -24,10 +24,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from etl_processes_spark.partitioning import track_checkpoint, widen
+from etl_processes_spark.partitioning import (
+    collect_bounded, release_checkpoint, row_count, track_checkpoint, widen,
+)
 
 
 def _ckpt_wide(df: DataFrame) -> DataFrame:
@@ -739,37 +742,34 @@ def connected_components(
     Size-routed, like embedding_near_dup: a dedup graph is SPARSE relative
     to the corpus (edges exist only between near-dups), so even at 100 TB
     the edge list is usually orders of magnitude smaller than the data.
-    When it fits comfortably on the driver (≤ ``DRIVER_MAX_EDGES``, known
-    from the count the iterative path needs anyway), a vectorized driver
-    pass replaces O(log d) Spark rounds whose per-round scheduling dwarfs
-    the tiny shuffles — the default cap (25M edges ≈ 400 MB of int64
-    Arrow columns) was measured as the better route by an order of
-    magnitude at 9M edges (sf100: 104.5s distributed vs ~10s driver).
-    Above the threshold, distributed min-label propagation with pointer
-    jumping handles graphs of any size.
+    The edges are read once through ``partitioning.collect_bounded``: when
+    the undirected list (2 rows per pair) fits in ``DRIVER_MAX_EDGES``
+    rows, that collect hands them to a vectorized driver pass, which
+    replaces O(log d) Spark rounds whose per-round scheduling dwarfs the
+    tiny shuffles — the default cap (25M pairs ≈ 400 MB of int64 Arrow
+    columns) was measured as the better route by an order of magnitude at
+    9M edges (sf100: 104.5s distributed vs ~10s driver). When the bound is
+    hit, distributed min-label propagation with pointer jumping handles
+    graphs of any size.
 
     Exhausting ``CC_MAX_ITERATIONS`` before the label-sum fixpoint means some
     components may still carry split labels; that raises RuntimeError rather
     than silently returning unconverged clusters.
     """
-    # checkpoint the SINGLE-direction edge list first: a union of two
-    # branches over the same (expensive) pair pipeline materializes it
-    # twice — Spark has no cross-branch subplan reuse — so the reversal is
-    # derived from the checkpoint, not recomputed
-    from etl_processes_spark.partitioning import release_checkpoint
-
+    # checkpoint the SINGLE-direction edge list (the bounded collect
+    # materializes it): the fallback and its reversal branch then read the
+    # pair pipeline's output instead of each recomputing it
     edges = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    edges = edges.localCheckpoint(eager=True)
-    # size the iteration's shuffle to the edge count (post-checkpoint count is
-    # a cheap cached scan): tiny dup graphs iterate in one partition instead
-    # of paying 32-task scheduling per round; huge graphs keep full width
-    n_edges = edges.count()
-    if 2 * n_edges <= DRIVER_MAX_EDGES:
-        out = _cc_driver_union_find(edges)
-        # the result lives on the driver now (createDataFrame) — the edge
-        # checkpoint's blocks are dead weight the moment toPandas returned
-        release_checkpoint(edges)
-        return out
+    edges = edges.localCheckpoint(eager=False)
+    pdf = collect_bounded(edges, DRIVER_MAX_EDGES // 2)
+    if pdf is not None:
+        node_type = edges.select("s").union(edges.select("d")).schema[0].dataType
+        release_checkpoint(edges)  # the edges live on the driver now
+        return _cc_driver_union_find(pdf, node_type)
+    # size the iteration's shuffle to the edge count: tiny dup graphs
+    # iterate in one partition instead of paying 32-task scheduling per
+    # round; huge graphs keep full width
+    n_edges = row_count(edges)
     und = edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
     npart = max(1, min(edges.rdd.getNumPartitions(), 2 * n_edges // 100_000 + 1))
     und = und.repartition(npart, "s").localCheckpoint(eager=True)
@@ -834,34 +834,26 @@ def connected_components(
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 
-def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
+def _cc_driver_union_find(pdf: pd.DataFrame, node_type: T.DataType) -> DataFrame:
     """Driver route for edge lists that fit in driver memory: min-id
     component labels, bit-identical to what the distributed fixpoint
-    converges to. Input is the SINGLE-direction (s, d) edge frame (already
-    checkpointed — the algorithm is undirected, so the reversal never needs
-    to exist); output matches the distributed path's (node, cluster_id)
-    schema and node coverage (edge endpoints only).
+    converges to. Input is the collected SINGLE-direction (s, d) edge list
+    (the algorithm is undirected, so the reversal never needs to exist) and
+    the id type of its endpoints; output matches the distributed path's
+    (node, cluster_id) schema and node coverage (edge endpoints only).
 
-    Edges arrive as TWO ARROW COLUMNS (toPandas), never as collect()'s Row
+    The edges are two pandas columns from an Arrow collect, not Row
     objects (~100 bytes of Python object per edge — 4 GB at 25M edges vs
     ~400 MB of int64 arrays). Numeric node ids take a fully vectorized
     min-label + pointer-jumping loop in index space: np.minimum.at
     scatters each endpoint's label to the other, then ``lab = lab[lab]``
     halves every propagation path; O(log diameter) rounds like the
-    distributed route, ~seconds at 25M edges (the dict-based union-find
-    this replaces spent microseconds of interpreter per edge, which is
-    what previously forced the driver/distributed cliff down to 1M edges).
-    Non-numeric ids (strings) keep the dict-based path-halving loop."""
-    node_type = (
-        edges.select(F.col("s")).union(edges.select(F.col("d"))).schema[0].dataType
-    )
-    from pyspark.sql import types as T
-
+    distributed route, ~seconds at 25M edges. Non-numeric ids (strings)
+    take a dict-based path-compression loop."""
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("cluster_id", node_type)]
     )
-    pdf = edges.toPandas()
-    spark = edges.sparkSession
+    spark = SparkSession.active()
     if len(pdf) == 0:
         return spark.createDataFrame([], schema)
     s_vals = pdf["s"].to_numpy()

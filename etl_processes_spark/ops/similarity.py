@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 
 from etl_processes_spark.partitioning import (
     _row_statistic,
+    collect_bounded,
     row_count,
     track_checkpoint,
     widen,
@@ -240,21 +241,23 @@ def embedding_near_dup_pairs(
     exact plan. The cells route's recall contract matches semantic_dedup's
     (cell-boundary pairs are missed).
 
-    The corpus size comes from ``partitioning.row_count``. Catalyst's
-    row-count statistic is trusted only in the SAFE direction: a large
-    statistic routes away from exact (correct even if stale — at worst a
-    small corpus pays bucketing overhead); a small one is confirmed with a
-    count() before committing to the broadcast-everything exact path,
-    because a stale low estimate would broadcast an arbitrarily large
-    matrix.
+    The exact route's broadcast side is read by
+    ``partitioning.collect_bounded``, whose bound is the size check: no
+    route broadcasts more than ``MAX_EXACT_ROWS`` rows, even when
+    Catalyst's row-count statistic is stale. The statistic is trusted only
+    in the SAFE direction: a large one skips the collect (at worst a small
+    corpus pays bucketing overhead); an absent or small one is checked by
+    the collect itself. Above the bound, the corpus size comes from
+    ``partitioning.row_count``.
     """
     _check_lsh_geometry("embedding_near_dup_pairs", num_planes, bands)
+    stat = _row_statistic(corpus)
+    if stat is None or stat <= MAX_EXACT_ROWS:
+        pdf = collect_bounded(corpus.select(id_col, vec_col), MAX_EXACT_ROWS)
+        if pdf is not None:
+            return _near_dup_exact_blocked(corpus, pdf, id_col, vec_col, threshold, ndigits)
     fit = _FitInputs(corpus, vec_col, fit_sample, seed)
     n = fit.n
-    if n <= MAX_EXACT_ROWS and _row_statistic(corpus) is not None:
-        n = corpus.count()
-    if n <= MAX_EXACT_ROWS:
-        return _near_dup_exact_blocked(corpus, id_col, vec_col, threshold, ndigits)
     if num_planes is None:
         num_planes, bands, recall = _auto_lsh_geometry(n, threshold)
         est_cand = _estimate_lsh_candidates(fit.X, n, num_planes, bands)
@@ -396,11 +399,12 @@ def _auto_lsh_geometry(
 
 
 def _near_dup_exact_blocked(
-    corpus: DataFrame, id_col: str, vec_col: str, threshold: float, ndigits: int
+    corpus: DataFrame, pdf: pd.DataFrame, id_col: str, vec_col: str,
+    threshold: float, ndigits: int,
 ) -> DataFrame:
-    ids_b, _, mat_b = _query_matrix(
-        corpus.select(id_col, vec_col).toPandas(), id_col, vec_col
-    )
+    """Exact pairs: ``pdf`` (the whole corpus, collected) is broadcast and
+    scored against the streamed corpus."""
+    ids_b, _, mat_b = _query_matrix(pdf, id_col, vec_col)
     b = corpus.sparkSession.sparkContext.broadcast((ids_b, mat_b))
 
     def score(batches):
@@ -491,7 +495,7 @@ def _cell_pairs(
     if len(fit.X) == 0:
         return None
     n_centroids = _auto_centroids(
-        fit.n if n_centroids is None else None, n_centroids, fit.fit_sample,
+        fit.n if n_centroids is None else None, n_centroids, len(fit.X),
         target_cell_rows,
     )
     C = _spherical_kmeans(fit.X, n_centroids, fit.seed)
@@ -665,21 +669,22 @@ def ann_cosine_lsh(
 def _auto_centroids(
     n: int | None,
     n_centroids: int | None,
-    fit_sample: int,
+    sampled: int,
     target_cell_rows: int = 20_000,
 ) -> int:
     """Resolve a centroid count: the explicit parameter wins (``n`` is not
     read then); otherwise derive ``ceil(n / target_cell_rows)`` from the
     corpus row count so cells hold ~10-50k rows at ANY corpus size — a
     static default at 100M+ vectors would make the within-cell quadratic
-    work catastrophic. Clamped to [16, fit_sample // 4] — the quantizer is
-    fit on ``fit_sample`` rows, and fewer than ~4 sample rows per centroid
-    stops estimating anything; callers pushing past ~10k centroids should
-    raise fit_sample too."""
+    work catastrophic. Clamped to [16, sampled // 4] — the quantizer is
+    fit on the ``sampled`` rows actually collected (fewer than fit_sample
+    on a small corpus, whatever a stale ``n`` claims), and fewer than ~4
+    sample rows per centroid stops estimating anything; callers pushing
+    past ~10k centroids should raise fit_sample too."""
     if n_centroids is not None:
         return int(n_centroids)
     k = max(16, -(-int(n) // target_cell_rows))
-    return int(min(k, max(16, fit_sample // 4)))
+    return int(min(k, max(16, sampled // 4)))
 
 
 def _spherical_kmeans(X: np.ndarray, n_centroids: int, seed: int, max_iter: int = 10) -> np.ndarray:
@@ -833,7 +838,7 @@ def ann_cosine_ivf(
     spark = corpus.sparkSession
     fit = _fit or _FitInputs(corpus, vec_col, fit_sample, seed)
     n_centroids = _auto_centroids(
-        fit.n if n_centroids is None else None, n_centroids, fit_sample
+        fit.n if n_centroids is None else None, n_centroids, len(fit.X)
     )
     C = _spherical_kmeans(fit.X, n_centroids, seed)
     if n_probe is None:
@@ -1281,7 +1286,7 @@ def ivf_pq_index(
     fit = _fit or _FitInputs(corpus, vec_col, fit_sample, seed)
     books = pq_train(corpus, vec_col, m=m, ksub=ksub, _fit=fit)
     n_centroids = _auto_centroids(
-        fit.n if n_centroids is None else None, n_centroids, fit_sample
+        fit.n if n_centroids is None else None, n_centroids, len(fit.X)
     )
     C = _spherical_kmeans(fit.X, n_centroids, seed)
     index = _assign_encode(corpus, id_col, vec_col, C=C, books=books)

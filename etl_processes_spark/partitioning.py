@@ -17,6 +17,7 @@ partitioning.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 
 
@@ -86,6 +87,15 @@ def row_count(df: DataFrame) -> int:
     otherwise one ``count()``. The one place a size route counts rows."""
     n = _row_statistic(df)
     return df.count() if n is None else n
+
+
+def collect_bounded(df: DataFrame, max_rows: int) -> pd.DataFrame | None:
+    """``df`` as a pandas frame from one Arrow ``limit(max_rows + 1)``
+    collect, or None when it holds more than ``max_rows`` rows. The one
+    driver hand-off of a size route: the collect that takes the driver
+    route is also the size check, so no row count precedes it."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    return None if len(pdf) > max_rows else pdf
 
 
 def _parse_bytes_conf(v: str) -> int:

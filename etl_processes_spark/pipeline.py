@@ -29,7 +29,6 @@ def run_reference_pipeline(
     profile_json: str | None = None,
     n_samples: int = DEFAULT_N_SAMPLES,
     seed: int = 2025,
-    sample_rows: int | None = 1000,
     deterministic: bool = False,
     sample_key: str | None = None,
 ) -> tuple[DataFrame, dict, str]:
@@ -46,9 +45,7 @@ def run_reference_pipeline(
     else:
         df = spark.read.parquet(input_path)
 
-    profiles = profile(
-        df, sample_rows=sample_rows, deterministic=deterministic, sample_key=sample_key
-    )
+    profiles = profile(df, deterministic=deterministic, sample_key=sample_key)
     # persist: the synthetic frame is re-read by the validation jobs (the
     # shared stats pass and the concurrent text re-profiles) and the sinks
     synthetic = generate(spark, profiles, n_samples, seed=seed).persist()

@@ -23,8 +23,7 @@ every datetime column (in epoch days), gets its moments from ONE
 
 Scale policy: like the reference (SAMPLE_SIZE = min(1000, n), seed 42,
 Latanova_v1.py:632-633), profiling runs on a seeded sample, so cost is
-O(sample) regardless of input size. Set ``sample_rows=None`` to profile the
-full frame (all aggregates have partial forms; still one scan per stage).
+O(sample) regardless of input size.
 """
 
 from __future__ import annotations
@@ -71,7 +70,7 @@ DEFAULT_SEED = 42           # Latanova_v1.py:633
 
 def sample_frame(
     df: DataFrame,
-    sample_rows: int | None,
+    sample_rows: int,
     seed: int = DEFAULT_SEED,
     mode: str = "bernoulli",
     key: str | None = None,
@@ -88,8 +87,6 @@ def sample_frame(
     DuckDB oracle. A top-n by hash is a TakeOrdered (per-partition heap +
     driver merge of n rows), not a full sort — still one scan at scale.
     Requires ``key`` (a unique column)."""
-    if sample_rows is None:
-        return df
     if mode == "hash":
         if key is None:
             raise ValueError("sample_frame(mode='hash') requires a key column")
@@ -267,7 +264,7 @@ def column_stats(
 
 def profile(
     df: DataFrame,
-    sample_rows: int | None = DEFAULT_SAMPLE_ROWS,
+    sample_rows: int = DEFAULT_SAMPLE_ROWS,
     seed: int = DEFAULT_SEED,
     max_retained_entries: int = 10000,
     text_stats: bool = True,
@@ -290,15 +287,6 @@ def profile(
         mode="hash" if deterministic else "bernoulli",
         key=sample_key,
     )
-    # Full-frame mode only: widen AFTER sampling (selection is over the
-    # original partitioning) so the ~dozen profile jobs parallelize when the
-    # source is a one-row-group file. Sample-bounded frames stay narrow on
-    # purpose — 32 tasks per tiny job is pure scheduling overhead for
-    # ≤sample_rows rows.
-    if sample_rows is None:
-        from etl_processes_spark.partitioning import widen
-
-        frame = widen(frame)
     frame = frame.persist()
     try:
         types = infer_types(frame)

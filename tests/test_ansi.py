@@ -61,7 +61,7 @@ def test_profile_generate_under_ansi(ansi, spark):
         [(i, float(i) * 1.5, "A" if i % 2 else "B") for i in range(50)],
         ["k", "v", "c"],
     )
-    profs = profile(df, sample_rows=None)
+    profs = profile(df, sample_rows=50)
     assert generate(spark, profs, 20, seed=3).count() == 20
 
 

@@ -1,6 +1,7 @@
 """Dedup operator tests on small synthetic corpora with known duplicates."""
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_processes_spark.ops.dedup import (
@@ -279,21 +280,54 @@ def test_cc_driver_and_distributed_routes_agree(spark, monkeypatch):
     routes = []
     real = dedup._cc_driver_union_find
 
-    def spy(e):
+    def spy(pdf, node_type):
         routes.append("driver")
-        return real(e)
+        return real(pdf, node_type)
 
     monkeypatch.setattr(dedup, "_cc_driver_union_find", spy)
+    # the route is chosen by the bounded collect alone: the driver route
+    # counts nothing, the distributed fallback at most once (shuffle width)
+    counts = []
+    real_count = DataFrame.count
+    monkeypatch.setattr(
+        DataFrame, "count", lambda df: counts.append(1) or real_count(df)
+    )
 
     def run(cap):
         # the switch point: 2 rows per pair of the undirected edge list
         monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", cap)
-        return sorted(map(tuple, dedup.connected_components(pairs).collect()))
+        counts.clear()
+        rows = dedup.connected_components(pairs).collect()
+        return sorted(map(tuple, rows)), len(counts)
 
-    driver = run(2 * len(edges))
-    dist = run(2 * len(edges) - 1)
+    driver, driver_counts = run(2 * len(edges))
+    dist, dist_counts = run(2 * len(edges) - 1)
     assert routes == ["driver"]
     assert driver == dist and len(driver) > 0
+    assert driver_counts == 0 and dist_counts <= 1
+
+
+@pytest.mark.parametrize("cap", [0, -1], ids=["driver", "distributed"])
+def test_cc_empty_edges_keep_id_type(spark, monkeypatch, cap):
+    # an empty edge list gives an empty (node, cluster_id) frame of the id
+    # type on both routes; below zero, even no edges overflow the bound
+    from pyspark.sql import types as T
+
+    from etl_processes_spark.ops import dedup
+
+    monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", cap)
+    ran = []
+    real = dedup._cc_driver_union_find
+    monkeypatch.setattr(
+        dedup, "_cc_driver_union_find", lambda *a: ran.append(1) or real(*a)
+    )
+    pairs = spark.createDataFrame([], "id_a int, id_b int")
+    out = dedup.connected_components(pairs)
+    assert len(ran) == (cap == 0)
+    assert out.collect() == []
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        ("node", T.IntegerType()), ("cluster_id", T.IntegerType())
+    ]
 
 
 def test_dedup_incremental(spark):

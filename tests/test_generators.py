@@ -144,7 +144,7 @@ def test_deterministic_profile_guards_fractional_floats(spark):
         [(i, 0.001 + i * 0.0001) for i in range(50)], ["id", "x"]
     )
     profs = profile(
-        df, deterministic=True, sample_key="id", text_stats=False, sample_rows=None
+        df, deterministic=True, sample_key="id", text_stats=False, sample_rows=50
     )
     m = profs["x"].stats["mean"]
     assert abs(m - (0.001 + 0.0001 * 49 / 2)) < 1e-6  # true mean, not 0.0
@@ -171,7 +171,7 @@ def test_deterministic_profile_guards_huge_integers(spark):
         [(i, big + i) for i in range(50)], ["id", "x"]
     )
     profs = profile(
-        df, deterministic=True, sample_key="id", text_stats=False, sample_rows=None
+        df, deterministic=True, sample_key="id", text_stats=False, sample_rows=50
     )
     m = profs["x"].stats["mean"]
     assert abs(m - (big + 24.5)) < 8.0  # true mean (double ulp ~2 at 1e16)

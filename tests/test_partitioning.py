@@ -1,7 +1,14 @@
 """partitioning.widen — the guard that keeps CPU-heavy projections off a
-single core for one-row-group inputs while never touching wide inputs."""
+single core for one-row-group inputs while never touching wide inputs —
+and collect_bounded, the driver hand-off of the size routes."""
 
-from etl_processes_spark.partitioning import widen
+from etl_processes_spark.partitioning import collect_bounded, widen
+
+
+def test_collect_bounded_at_and_past_the_bound(spark):
+    df = spark.range(0, 5, numPartitions=3)
+    assert sorted(collect_bounded(df, 5)["id"]) == [0, 1, 2, 3, 4]
+    assert collect_bounded(df, 4) is None
 
 
 def test_widen_spreads_narrow_scan(spark, sf_dir):

@@ -95,7 +95,7 @@ def test_deterministic_exact_path_large_magnitude_falls_back(spark):
         900_000_000 + i for i in range(400)  # 4% long-digit: still INTEGER
     ]
     df = spark.createDataFrame([(int(v),) for v in vals], ["big"])
-    p = profile(df, deterministic=True, sample_key="big", sample_rows=None)["big"]
+    p = profile(df, deterministic=True, sample_key="big", sample_rows=len(vals))["big"]
     assert p.logical_type == "integer"
     stats = p.stats
     assert stats["kurtosis"] is not None        # not the overflow NULL
@@ -111,7 +111,7 @@ def test_deterministic_integer_with_fractions_not_rounded(spark):
 
     vals = [float(i % 9) for i in range(96)] + [1.5, 2.5, 3.5, 4.5]
     df = spark.createDataFrame([(v,) for v in vals], ["mostly_int"])
-    p = profile(df, deterministic=True, sample_key="mostly_int", sample_rows=None)[
+    p = profile(df, deterministic=True, sample_key="mostly_int", sample_rows=len(vals))[
         "mostly_int"
     ]
     true_mean = sum(vals) / len(vals)

@@ -510,14 +510,14 @@ def test_near_dup_auto_routes_clustered_corpus_to_cells(spark, monkeypatch):
     est = _estimate_lsh_candidates(M, n_big, npl, b)
     assert est > 64.0 * n_big  # clustered corpus: LSH would not prune
 
+    # the exact route's bounded collect reads the real 300 rows, so the
+    # pretended size needs a MAX_EXACT_ROWS below them to reach the cells;
+    # there, 4096-row cells for 2M rows clamp to a quarter of the sample
     monkeypatch.setattr(similarity, "row_count", lambda df: n_big)
-    # cells sized for the pretended 2M rows keep the 16-centroid floor on
-    # the 300-row sample (4096-row cells would ask for one centroid per row)
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 299)
     pair_set = lambda: {
         (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            df, threshold=0.5, target_cell_rows=n_big
-        ).collect()
+        for r in embedding_near_dup_pairs(df, threshold=0.5).collect()
     }
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
@@ -672,3 +672,22 @@ def test_ann_lsh_switch_point_at_max_verify_frac(spark, sf_dir, monkeypatch, sid
     got = pairs(similarity.ann_cosine_lsh(e, q, k=5))
     assert ran == [side]
     assert len(got & truth) / len(truth) >= 0.8
+
+
+@pytest.mark.parametrize("side", ["exact", "bound_hit"])
+def test_near_dup_exact_route_bounded_despite_stale_statistic(emb, monkeypatch, side):
+    # a stale small row-count statistic cannot open the exact route: its
+    # bounded collect is the size check, so MAX_EXACT_ROWS = N keeps it and
+    # one row less sends the call to LSH or cells
+    df, _ = emb
+    monkeypatch.setattr(similarity, "_row_statistic", lambda d: 1)
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", N if side == "exact" else N - 1)
+    ran = []
+    for name in ("_near_dup_exact_blocked", "_near_dup_lsh", "_cell_pairs"):
+        _spy(monkeypatch, similarity, name, ran)
+    got = {(r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(df).collect()}
+    if side == "exact":
+        assert ran == ["_near_dup_exact_blocked"]
+    else:
+        assert ran in (["_near_dup_lsh"], ["_cell_pairs"])
+    assert (3, 7) in got

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_processes_spark.partitioning import (
-    collect_bounded, release_checkpoint, row_count, track_checkpoint, widen,
+    collect_bounded, release_checkpoint, track_checkpoint, widen,
 )
 
 
@@ -742,26 +742,26 @@ def connected_components(
     Size-routed, like embedding_near_dup: a dedup graph is SPARSE relative
     to the corpus (edges exist only between near-dups), so even at 100 TB
     the edge list is usually orders of magnitude smaller than the data.
-    The edges are read once through ``partitioning.collect_bounded``: when
-    the undirected list (2 rows per pair) fits in ``DRIVER_MAX_EDGES``
-    rows, that collect hands them to a vectorized driver pass, which
-    replaces O(log d) Spark rounds whose per-round scheduling dwarfs the
-    tiny shuffles — the default cap (25M pairs ≈ 400 MB of int64 Arrow
-    columns) was measured as the better route by an order of magnitude at
-    9M edges (sf100: 104.5s distributed vs ~10s driver). When the bound is
-    hit, distributed min-label propagation with pointer jumping handles
-    graphs of any size.
+    The edges are sized and handed over by ``partitioning.collect_bounded``
+    (one count, which also sizes the fallback's shuffle): when the
+    undirected list (2 rows per pair) fits in ``DRIVER_MAX_EDGES`` rows,
+    they go to a vectorized driver pass, which replaces O(log d) Spark
+    rounds whose per-round scheduling dwarfs the tiny shuffles — the
+    default cap (25M pairs ≈ 400 MB of int64 Arrow columns) was measured
+    as the better route by an order of magnitude at 9M edges (sf100:
+    104.5s distributed vs ~10s driver). When the bound is hit, distributed
+    min-label propagation with pointer jumping handles graphs of any size.
 
     Exhausting ``CC_MAX_ITERATIONS`` before the label-sum fixpoint means some
     components may still carry split labels; that raises RuntimeError rather
     than silently returning unconverged clusters.
     """
-    # checkpoint the SINGLE-direction edge list (the bounded collect
-    # materializes it): the fallback and its reversal branch then read the
-    # pair pipeline's output instead of each recomputing it
+    # checkpoint the SINGLE-direction edge list (the bounded collect's
+    # count materializes it): the collect, the fallback and its reversal
+    # branch then read the pair pipeline's output instead of recomputing it
     edges = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     edges = edges.localCheckpoint(eager=False)
-    pdf = collect_bounded(edges, DRIVER_MAX_EDGES // 2)
+    n_edges, pdf = collect_bounded(edges, DRIVER_MAX_EDGES // 2)
     if pdf is not None:
         node_type = edges.select("s").union(edges.select("d")).schema[0].dataType
         release_checkpoint(edges)  # the edges live on the driver now
@@ -769,7 +769,6 @@ def connected_components(
     # size the iteration's shuffle to the edge count: tiny dup graphs
     # iterate in one partition instead of paying 32-task scheduling per
     # round; huge graphs keep full width
-    n_edges = row_count(edges)
     und = edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
     npart = max(1, min(edges.rdd.getNumPartitions(), 2 * n_edges // 100_000 + 1))
     und = und.repartition(npart, "s").localCheckpoint(eager=True)

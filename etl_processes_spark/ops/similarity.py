@@ -35,7 +35,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from etl_processes_spark.partitioning import (
-    _row_statistic,
     collect_bounded,
     row_count,
     track_checkpoint,
@@ -172,10 +171,11 @@ def cosine_pairs_udf():
 
 class _FitInputs:
     """What a call's driver-side fits read from its corpus: the row count
-    ``n`` (``partitioning.row_count``) and the seeded fit sample ``X``
-    (_sample_norm_matrix). Each is resolved at most once, and only when a
-    step reads it; an entry point hands its instance to the steps it
-    delegates to, so they share one count and one sample."""
+    ``n`` (``partitioning.row_count``, unless the entry point sets it from a
+    count of its own) and the seeded fit sample ``X`` (_sample_norm_matrix).
+    Each is resolved at most once, and only when a step reads it; an entry
+    point hands its instance to the steps it delegates to, so they share one
+    count and one sample."""
 
     def __init__(self, corpus: DataFrame, vec_col: str, fit_sample: int, seed: int):
         self.corpus, self.vec_col = corpus, vec_col
@@ -241,23 +241,20 @@ def embedding_near_dup_pairs(
     exact plan. The cells route's recall contract matches semantic_dedup's
     (cell-boundary pairs are missed).
 
-    The exact route's broadcast side is read by
-    ``partitioning.collect_bounded``, whose bound is the size check: no
-    route broadcasts more than ``MAX_EXACT_ROWS`` rows, even when
-    Catalyst's row-count statistic is stale. The statistic is trusted only
-    in the SAFE direction: a large one skips the collect (at worst a small
-    corpus pays bucketing overhead); an absent or small one is checked by
-    the collect itself. Above the bound, the corpus size comes from
-    ``partitioning.row_count``.
+    The corpus is sized and, when small, collected by
+    ``partitioning.collect_bounded``: a large row-count statistic skips the
+    exact route without reading a vector (at worst a small corpus pays
+    bucketing overhead); a small or absent one is confirmed by one count
+    before the broadcast-everything exact route, so a stale statistic can
+    never broadcast more than ``MAX_EXACT_ROWS`` rows. That size is the
+    call's one row count: the LSH and cells routes read it too.
     """
     _check_lsh_geometry("embedding_near_dup_pairs", num_planes, bands)
-    stat = _row_statistic(corpus)
-    if stat is None or stat <= MAX_EXACT_ROWS:
-        pdf = collect_bounded(corpus.select(id_col, vec_col), MAX_EXACT_ROWS)
-        if pdf is not None:
-            return _near_dup_exact_blocked(corpus, pdf, id_col, vec_col, threshold, ndigits)
+    n, pdf = collect_bounded(corpus.select(id_col, vec_col), MAX_EXACT_ROWS)
+    if pdf is not None:
+        return _near_dup_exact_blocked(corpus, pdf, id_col, vec_col, threshold, ndigits)
     fit = _FitInputs(corpus, vec_col, fit_sample, seed)
-    n = fit.n
+    fit.n = n  # seeds the cached row count the routes below read
     if num_planes is None:
         num_planes, bands, recall = _auto_lsh_geometry(n, threshold)
         est_cand = _estimate_lsh_candidates(fit.X, n, num_planes, bands)

@@ -89,13 +89,20 @@ def row_count(df: DataFrame) -> int:
     return df.count() if n is None else n
 
 
-def collect_bounded(df: DataFrame, max_rows: int) -> pd.DataFrame | None:
-    """``df`` as a pandas frame from one Arrow ``limit(max_rows + 1)``
-    collect, or None when it holds more than ``max_rows`` rows. The one
-    driver hand-off of a size route: the collect that takes the driver
-    route is also the size check, so no row count precedes it."""
-    pdf = df.limit(max_rows + 1).toPandas()
-    return None if len(pdf) > max_rows else pdf
+def collect_bounded(df: DataFrame, max_rows: int) -> tuple[int, pd.DataFrame | None]:
+    """The rows in ``df``, and ``df`` as a pandas frame when they are at
+    most ``max_rows`` (else None): the one driver hand-off of a size route.
+    A row-count statistic above the bound is trusted (a stale one at worst
+    sends a small frame down a distributed route); otherwise one count()
+    sizes the frame — on a lazy ``localCheckpoint``, the action that
+    materializes it — before one Arrow ``toPandas``, one task per
+    partition. A bounded ``limit(max_rows + 1).toPandas()`` with no count
+    is slower at scale: Spark plans it as a single-partition exchange, and
+    past the bound its rows are collected for nothing."""
+    n = _row_statistic(df)
+    if n is None or n <= max_rows:
+        n = df.count()
+    return n, (df.toPandas() if n <= max_rows else None)
 
 
 def _parse_bytes_conf(v: str) -> int:

@@ -7,8 +7,9 @@ from etl_processes_spark.partitioning import collect_bounded, widen
 
 def test_collect_bounded_at_and_past_the_bound(spark):
     df = spark.range(0, 5, numPartitions=3)
-    assert sorted(collect_bounded(df, 5)["id"]) == [0, 1, 2, 3, 4]
-    assert collect_bounded(df, 4) is None
+    n, pdf = collect_bounded(df, 5)
+    assert n == 5 and sorted(pdf["id"]) == [0, 1, 2, 3, 4]
+    assert collect_bounded(df, 4) == (5, None)
 
 
 def test_widen_spreads_narrow_scan(spark, sf_dir):

@@ -510,11 +510,9 @@ def test_near_dup_auto_routes_clustered_corpus_to_cells(spark, monkeypatch):
     est = _estimate_lsh_candidates(M, n_big, npl, b)
     assert est > 64.0 * n_big  # clustered corpus: LSH would not prune
 
-    # the exact route's bounded collect reads the real 300 rows, so the
-    # pretended size needs a MAX_EXACT_ROWS below them to reach the cells;
-    # there, 4096-row cells for 2M rows clamp to a quarter of the sample
-    monkeypatch.setattr(similarity, "row_count", lambda df: n_big)
-    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 299)
+    # the pretended 2M rows skip the exact route; their 4096-row cells
+    # clamp to a quarter of the 300-row sample
+    monkeypatch.setattr(similarity, "collect_bounded", lambda df, m: (n_big, None))
     pair_set = lambda: {
         (r["id_a"], r["id_b"])
         for r in embedding_near_dup_pairs(df, threshold=0.5).collect()
@@ -676,11 +674,13 @@ def test_ann_lsh_switch_point_at_max_verify_frac(spark, sf_dir, monkeypatch, sid
 
 @pytest.mark.parametrize("side", ["exact", "bound_hit"])
 def test_near_dup_exact_route_bounded_despite_stale_statistic(emb, monkeypatch, side):
-    # a stale small row-count statistic cannot open the exact route: its
-    # bounded collect is the size check, so MAX_EXACT_ROWS = N keeps it and
-    # one row less sends the call to LSH or cells
+    # a stale small row-count statistic cannot open the exact route: the
+    # bounded collect confirms it with a count, so MAX_EXACT_ROWS = N keeps
+    # the route and one row less sends the call to LSH or cells
+    from etl_processes_spark import partitioning
+
     df, _ = emb
-    monkeypatch.setattr(similarity, "_row_statistic", lambda d: 1)
+    monkeypatch.setattr(partitioning, "_row_statistic", lambda d: 1)
     monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", N if side == "exact" else N - 1)
     ran = []
     for name in ("_near_dup_exact_blocked", "_near_dup_lsh", "_cell_pairs"):
@@ -690,4 +690,33 @@ def test_near_dup_exact_route_bounded_despite_stale_statistic(emb, monkeypatch, 
         assert ran == ["_near_dup_exact_blocked"]
     else:
         assert ran in (["_near_dup_lsh"], ["_cell_pairs"])
+    assert (3, 7) in got
+
+
+@pytest.mark.parametrize("side", ["exact", "above_bound"])
+def test_near_dup_parquet_corpus_collects_only_below_the_bound(
+    spark, emb, tmp_path, monkeypatch, side
+):
+    # a parquet corpus has no row-count statistic: one count sizes it for
+    # every route, and only at or below MAX_EXACT_ROWS is it collected;
+    # above, the one driver collect is the LSH/cells fit sample
+    df, _ = emb
+    path = str(tmp_path / "emb")
+    df.repartition(4).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    assert corpus.rdd.getNumPartitions() > 1
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", N if side == "exact" else N - 1)
+    log = []
+    for name in ("_near_dup_exact_blocked", "_near_dup_lsh", "_cell_pairs"):
+        _spy(monkeypatch, similarity, name, log)
+    for name in ("count", "toPandas"):  # on the class that defines them
+        _spy(monkeypatch, type(corpus), name, log)
+    got = {(r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(corpus).collect()}
+    assert log.count("count") == 1 and log.count("toPandas") == 1
+    routes = [x for x in log if x not in ("count", "toPandas")]
+    if side == "exact":
+        assert log[:2] == ["count", "toPandas"]
+        assert routes == ["_near_dup_exact_blocked"]
+    else:
+        assert routes in (["_near_dup_lsh"], ["_cell_pairs"])
     assert (3, 7) in got

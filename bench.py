@@ -1,7 +1,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints exactly TWO stdout
 lines: the full JSON record
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...,
+"session": {master, default_parallelism, shuffle_partitions, driver_memory,
+spark_version, git_sha}, ...}
 then a compact totals-only JSON line (the driver's scrape keeps the last
 2000 chars — the compact line always survives the truncation).
 
@@ -48,6 +50,29 @@ DIAGNOSTIC_ALIASES = {
 }
 
 
+def _session_facts(spark) -> dict:
+    """What ran where: master, default parallelism, shuffle width, driver
+    memory, Spark version and the checkout's git sha (None outside git)."""
+    import subprocess
+
+    sc = spark.sparkContext
+    try:
+        sha = subprocess.run(
+            ["git", "-C", os.path.dirname(os.path.abspath(__file__)), "rev-parse", "HEAD"],
+            capture_output=True, text=True, timeout=10,
+        ).stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        sha = None
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "driver_memory": sc.getConf().get("spark.driver.memory", None),
+        "spark_version": spark.version,
+        "git_sha": sha,
+    }
+
+
 def main() -> None:
     # stdout contract (round-9 verdict ask #4): the driver scrapes stdout
     # and keeps landing parsed:null because JVM/Ivy/Spark banner noise also
@@ -64,6 +89,7 @@ def main() -> None:
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    session = _session_facts(spark)
 
     import __spark_entry__ as entrymod
 
@@ -465,6 +491,7 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "session": session,
         }
         if errors:
             out["errors"] = errors

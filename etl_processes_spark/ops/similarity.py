@@ -14,7 +14,7 @@ Scale notes:
    linear-ish; multiprobe = more bands. Recall/cost tunable via
    (num_planes, bands).
  - The quantizer family (IVF, PQ, IVF-PQ, the k-means cells) shares one
-   core: a call reads its corpus row count and seeded fit sample at most
+   core: a call reads its corpus row count and fit sample at most
    once (``_FitInputs``), every index is built by one broadcast-constants
    map (``_assign_encode``), and both PQ searches score with one ADC
    kernel (``_adc_topk``).
@@ -172,7 +172,7 @@ def cosine_pairs_udf():
 class _FitInputs:
     """What a call's driver-side fits read from its corpus: the row count
     ``n`` (``partitioning.row_count``, unless the entry point sets it from a
-    count of its own) and the seeded fit sample ``X`` (_sample_norm_matrix).
+    count of its own) and the fit sample ``X`` (_sample_norm_matrix).
     Each is resolved at most once, and only when a step reads it; an entry
     point hands its instance to the steps it delegates to, so they share one
     count and one sample."""
@@ -187,7 +187,7 @@ class _FitInputs:
 
     @cached_property
     def X(self) -> np.ndarray:
-        return _sample_norm_matrix(self.corpus, self.vec_col, self.fit_sample, self.seed)
+        return _sample_norm_matrix(self.corpus, self.vec_col, self.fit_sample)
 
 
 # embedding_near_dup_pairs routes: exact all-pairs up to MAX_EXACT_ROWS
@@ -222,7 +222,7 @@ def embedding_near_dup_pairs(
        pairs directly, cost bounded at n · target_cell_rows.
 
     The lsh/cells choice is MEASURED, not threshold-ruled: the expected
-    candidate volume is estimated on the seeded fit sample (mean pairwise
+    candidate volume is estimated on the fit sample (mean pairwise
     band-collision probability × n²/2 — see _estimate_lsh_candidates) and
     LSH is used only when that stays under ``MAX_CANDIDATE_FACTOR``·n rows.
     The threshold alone can't decide this: at tau=0.5 a corpus of
@@ -300,23 +300,20 @@ def _estimate_lsh_candidates(
     return float(collide.mean()) * n * (n - 1) / 2.0
 
 
-def _sample_norm_matrix(
-    corpus: DataFrame, vec_col: str, n_sample: int, seed: int = 42
-) -> np.ndarray:
-    """Deterministic fit sample as a row-normalized (s, d) float64 matrix —
-    the same seeded sample contract every driver-side quantizer fit uses, so
-    DuckDB oracle twins can rebuild the identical matrix with pyarrow. The
-    sample is the first ``n_sample`` rows of one seeded order, so a smaller
-    sample is a prefix of a larger one. Empty corpus: a (0, 0) matrix."""
-    pdf = (
-        corpus.select(vec_col)
-        .sample(withReplacement=False, fraction=1.0, seed=seed)
-        .limit(n_sample)
-        .toPandas()
-    )
-    if len(pdf) == 0:
+def _sample_norm_matrix(corpus: DataFrame, vec_col: str, n_sample: int) -> np.ndarray:
+    """The fit sample as a row-normalized (s, d) float64 matrix — the same
+    sample contract every driver-side quantizer fit uses: the first
+    ``n_sample`` rows in scan order, so DuckDB oracle twins rebuild the
+    identical matrix from file order with pyarrow, and a smaller sample is a
+    prefix of a larger one. A plain ``limit().collect()`` takes them through
+    Spark's executeTake, which scans partitions a few at a time and ships no
+    exchange (an Arrow ``toPandas`` of the same limit is planned as a
+    single-partition shuffle of up to ``n_sample`` rows per partition).
+    Empty corpus: a (0, 0) matrix."""
+    rows = corpus.select(vec_col).limit(n_sample).collect()
+    if not rows:
         return np.empty((0, 0))
-    return _unit(_stack(pdf[vec_col]))
+    return _unit(np.array([r[0] for r in rows], dtype=np.float64))
 
 
 def _estimate_tau_k(X: np.ndarray, n: int, k: int) -> float:
@@ -821,7 +818,7 @@ def ann_cosine_ivf(
     _fit: _FitInputs | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: a coarse spherical-k-means quantizer is fit
-    driver-side on a seeded corpus sample; every corpus vector is assigned
+    driver-side on the fit sample (_sample_norm_matrix); every vector is assigned
     to its nearest centroid in one Arrow/GEMM pass; each query probes its
     ``n_probe`` nearest cells and exact-reranks ONLY the vectors in those
     cells (an equi-join on the cell id — no cross join anywhere). Expected
@@ -889,7 +886,7 @@ def semantic_dedup(
     id per within-cluster duplicate component, via connected_components —
     the same keep-one policy the text dedup family uses).
 
-    100 TB shape: the quantizer is fit driver-side on a seeded sample
+    100 TB shape: the quantizer is fit driver-side on the fit sample
     (identical to ann_cosine_ivf); assignment is a broadcast-centroid GEMM
     map with NO shuffle; the within-cell pair scan shuffles once on the
     cell id (applyInPandas), with per-cell work blocked into
@@ -1088,7 +1085,7 @@ def pq_train(
     *,
     _fit: _FitInputs | None = None,
 ) -> np.ndarray:
-    """Fit PQ codebooks on a seeded corpus sample (driver-side, same
+    """Fit PQ codebooks on the fit sample (driver-side, same
     sampling contract as ann_cosine_ivf's coarse quantizer). Vectors are
     row-normalized first, so inner-product ADC approximates cosine.
     Defaults are AUTO: ``m`` from the dimensionality (4-dim subspaces, see
@@ -1276,7 +1273,7 @@ def ivf_pq_index(
     (``repartitionByRange`` + ``sortWithinPartitions``) and a probe query's
     scan prunes to its cells at the parquet row-group level.
 
-    Both quantizers fit driver-side on the SAME seeded sample (deterministic
+    Both quantizers fit driver-side on the SAME fit sample (deterministic
     — the oracle refits them bit-identically); assignment + encoding are one
     broadcast-constants map (_assign_encode) with NO shuffle. ``m``/``ksub``
     default to AUTO (see pq_train)."""

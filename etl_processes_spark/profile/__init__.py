@@ -10,11 +10,15 @@
     exploded (col, category) groupBy (bounded: <50 categories each by
     definition). ``validate()`` re-profiles the synthetic frame through the
     same function, so learned and synthetic stats come from one code path.
-  Stage 4: datetime columns each add a date-format detection pass;
-    email/phone/text columns retain their (sample-bounded) raw entries for
-    bootstrap generation / embedding modeling — bounded by ``sample_rows``,
-    never the full table — and get their embedding profiles (text_profile,
-    run concurrently across columns).
+  Stage 4: datetime columns each add a date-format detection pass.
+  Stage 5 (``_text_column_stats``): the email/phone/text columns of the
+    sample cross to the driver in ONE Arrow collect, which is both their
+    retained raw entries (bootstrap source / embedding-model input, bounded
+    by ``sample_rows``, never the full table) and the hand-off to the
+    driver-side embedding profile (text.embedding.text_profile_local; only
+    its vocabulary groupBy runs in Spark). A sample larger than
+    ``text.embedding.DRIVER_MAX_ROWS`` keeps a bounded collect per column
+    and the distributed text_profile.
 
 Exact mode (``deterministic=True``): the integer/float columns' exact-decimal
 guards ride in the stage-3 wide agg, and every column that passes them, plus
@@ -262,6 +266,80 @@ def column_stats(
     return stats
 
 
+def _text_column_stats(
+    frame: DataFrame,
+    cols: list[str],
+    sample_rows: int,
+    max_retained_entries: int,
+    text_stats: bool,
+    deterministic: bool,
+) -> dict[str, dict]:
+    """Stats of the email/phone/text columns of the persisted sample: the
+    retained raw entries (bootstrap source for email/phone,
+    Latanova_v1.py:307-309, and embedding-model input for text, :640-641),
+    plus, with ``text_stats``, the embedding profile of each column (the
+    reference profiles all three via calculate_text_statistics, :640-641).
+    Deterministic mode orders the entries by value, so the entry list (and
+    therefore bootstrap output) is engine-independent.
+
+    A sample of at most ``text.embedding.DRIVER_MAX_ROWS`` rows (the sample
+    holds at most ``sample_rows``) crosses to the driver in ONE Arrow
+    collect of all these columns: that collect is both the retained entries
+    and the hand-off to text_profile_local, so no column is counted or
+    collected again. A larger sample keeps a bounded entry collect per
+    column and the distributed text_profile. The per-column profiles run
+    concurrently: each ends in a Spark job (the vocabulary groupBy), and
+    the scheduler interleaves them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from etl_processes_spark.text import embedding
+
+    if not cols:
+        return {}
+    if sample_rows <= embedding.DRIVER_MAX_ROWS:
+        pdf = frame.select(*[F.col(c).cast("string").alias(c) for c in cols]).toPandas()
+        texts = {c: pdf[c].dropna() for c in cols}
+        entries = {
+            c: (sorted(v) if deterministic else v.tolist())[:max_retained_entries]
+            for c, v in texts.items()
+        }
+
+        def text_prof(c):
+            return embedding.text_profile_local(texts[c], frame, c)
+
+    else:
+        entries = {}
+        for c in cols:
+            ent = frame.select(F.col(c).cast("string").alias("v")).filter(
+                F.col("v").isNotNull()
+            )
+            if deterministic:
+                ent = ent.orderBy("v")
+            entries[c] = [r[0] for r in ent.limit(max_retained_entries).collect()]
+
+        def text_prof(c):
+            return embedding.text_profile(frame, c)
+
+    text_profiles: dict[str, dict | None] = {}
+    if text_stats:
+        with ThreadPoolExecutor(max_workers=min(4, len(cols))) as ex:
+            futures = {c: ex.submit(text_prof, c) for c in cols}
+            text_profiles = {c: f.result() for c, f in futures.items()}
+    out = {}
+    for c in cols:
+        stats = {"raw_entries": entries[c], "n_samples": len(entries[c])}
+        tp = text_profiles.get(c)
+        if tp:
+            # the embedding moments were fit over the WHOLE sample column —
+            # keep text_profile's own n_samples (the capped retained-entry
+            # count would misreport the MVN fit size whenever rows >
+            # max_retained_entries); the retained count stays as n_retained
+            stats["n_retained"] = len(entries[c])
+            stats.update(dict(tp))
+        out[c] = stats
+    return out
+
+
 def profile(
     df: DataFrame,
     sample_rows: int = DEFAULT_SAMPLE_ROWS,
@@ -292,21 +370,10 @@ def profile(
         types = infer_types(frame)
         col_stats = column_stats(frame, types, exact=deterministic)
 
-        # Text-ish columns' embedding profiles run CONCURRENTLY (Spark's
-        # scheduler interleaves the per-column jobs; each is several small
-        # stages, so wall-clock is otherwise job-count bound, not data
-        # bound). The reference profiles text/email/phone via
-        # calculate_text_statistics (Latanova_v1.py:640-641).
-        text_profiles: dict[str, dict | None] = {}
         text_cols = [c for c, t in types.items() if t in (EMAIL, PHONE, TEXT)]
-        if text_stats and text_cols:
-            from concurrent.futures import ThreadPoolExecutor
-
-            from etl_processes_spark.text import text_profile as _tp
-
-            with ThreadPoolExecutor(max_workers=min(4, len(text_cols))) as ex:
-                futures = {c: ex.submit(_tp, frame, c) for c in text_cols}
-                text_profiles = {c: f.result() for c, f in futures.items()}
+        text_col_stats = _text_column_stats(
+            frame, text_cols, sample_rows, max_retained_entries, text_stats, deterministic
+        )
 
         profiles: dict[str, ColumnProfile] = {}
         for c, t in types.items():
@@ -319,28 +386,9 @@ def profile(
             elif t == BOOLEAN:
                 profiles[c] = ColumnProfile(c, t, col_stats[c]["format"], col_stats[c])
             elif t in (EMAIL, PHONE, TEXT):
-                # Retain sample-bounded raw entries: bootstrap source for
-                # email/phone (Latanova_v1.py:307-309) and embedding-model
-                # input for text (:640-641). Bounded — never the full column.
-                # Deterministic mode orders by value so the entry list (and
-                # therefore bootstrap output) is engine-independent.
-                ent = frame.select(F.col(c).cast("string").alias("v")).filter(
-                    F.col("v").isNotNull()
+                profiles[c] = ColumnProfile(
+                    c, t, t if t in (EMAIL, PHONE) else None, text_col_stats[c]
                 )
-                if deterministic:
-                    ent = ent.orderBy("v")
-                entries = [r[0] for r in ent.limit(max_retained_entries).collect()]
-                stats = {"raw_entries": entries, "n_samples": len(entries)}
-                tp = text_profiles.get(c)
-                if tp:
-                    # the embedding moments were fit over the FULL column —
-                    # keep text_profile's own n_samples (overwriting it with
-                    # the capped retained-entry count misreports the MVN
-                    # fit size whenever rows > max_retained_entries); the
-                    # retained count stays available as n_retained
-                    stats["n_retained"] = len(entries)
-                    stats.update(dict(tp))
-                profiles[c] = ColumnProfile(c, t, t if t in (EMAIL, PHONE) else None, stats)
             else:
                 profiles[c] = ColumnProfile(c, UNKNOWN, None, {})
         return profiles

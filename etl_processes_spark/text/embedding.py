@@ -10,22 +10,31 @@ nondeterminism (SURVEY.md §2.11 Q5) — in-vocabulary and OOV tokens are the
 same deterministic function; the "vocabulary" (for k-NN decode) is the
 distinct token set of the profiled entries.
 
-Scale design: vectorisation is an Arrow-batched pandas_udf (no per-row Python
-dispatch); per-dimension moments come from one Arrow powersum pass;
-per-dimension exact medians from histogram-bracketed distributed selection
-(no posexplode — the explode+sort-agg route spilled 27.2 GB at sf100);
-covariance is a distributed Gramian (Σ x·xᵀ per partition, the partials
-merged through one stage only above ``merge_partitions`` partitions), so raw
-n×d vectors are NEVER collected (unlike Latanova_v1.py:223-224 which retains
-the full matrix in the stats dict). Generation draws z ~ N(0, I) by md5
-Box-Muller keyed (seed, row id, dim) inside mapInPandas (deterministic under
-any partitioning), applies the driver-computed Cholesky factor and decodes
-every token slot by one block-wise cosine k-NN over the vocabulary.
+Scale design: text_profile has two routes, chosen by ``collect_bounded``
+against one module constant, ``DRIVER_MAX_ROWS``. At or below it (a profile
+sample at the default ``sample_rows``, the validation re-profile of a
+synthetic frame of up to that many rows) the column's strings cross to the driver in one Arrow hand-off and numpy does
+the rest: no Python worker stage runs. Above it the statistics are
+distributed and raw n×d vectors are NEVER collected (unlike
+Latanova_v1.py:223-224 which retains the full matrix in the stats dict):
+vectorisation is an Arrow-batched pandas_udf, per-dimension moments and the
+covariance come from one power-sum/Gramian pass (partials merged through one
+stage only above ``merge_partitions`` partitions), and per-dimension exact
+medians from histogram-bracketed distributed selection (no posexplode — the
+explode+sort-agg route spilled 27.2 GB at sf100). Both routes share one
+vectoriser (vectorise_batch), one power-sum kernel (_powersums), one
+median selection (_flank_median) and the JVM vocabulary groupBy.
+Generation draws z ~ N(0, I) by md5 Box-Muller keyed (seed, row id, dim)
+inside mapInPandas (deterministic under any partitioning), applies the
+driver-computed Cholesky factor and decodes every token slot by one
+block-wise cosine k-NN over the vocabulary.
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
+import math
 import re
 
 import numpy as np
@@ -38,10 +47,16 @@ from etl_processes_spark.profile.types import ColumnProfile
 
 MAX_TOKENS_PER_ENTRY = 32  # Latanova_v1.py:21
 VECTOR_SIZE = 8  # engine knob; reference model dim is unknowable (model absent)
+# text_profile's route: a column of at most this many non-null entries is
+# profiled on the driver. Equal to _medians' per_dim_cap: at or below it the
+# distributed median selection already ships every vector value to the driver.
+DRIVER_MAX_ROWS = 16_384
 
 # gensim simple_preprocess parity (Latanova_v1.py:29,48): unicode alphabetic
-# runs (no digits), lowercased, 2 <= len <= 15.
-_TOKEN_RE = re.compile(r"(?:(?!\d)\w)+", re.UNICODE)
+# runs (no digits), lowercased, 2 <= len <= 15. The class "word character
+# but not a digit" is the same per code point as (?:(?!\d)\w), without a
+# lookahead per character.
+_TOKEN_RE = re.compile(r"[^\W\d]+")
 MIN_TOKEN_LEN, MAX_TOKEN_LEN = 2, 15
 
 
@@ -82,8 +97,6 @@ def token_vector(token: str, vector_size: int = VECTOR_SIZE) -> np.ndarray:
     hash-gated against the oracle. Scalar math.* (libm) rather than numpy
     ufuncs for cross-engine bit parity; +0.5 keeps u1 off zero. Still
     deterministic for OOV/any token (SURVEY.md §2.11 Q5 fix)."""
-    import math
-
     if vector_size > 8:
         raise ValueError("vector_size > 8 exceeds the 128-bit md5 slice budget")
     h1 = hashlib.md5(token.encode("utf-8")).hexdigest()
@@ -106,30 +119,29 @@ def vectorise_entry(entry: str, vector_size: int = VECTOR_SIZE) -> np.ndarray:
     return out
 
 
+def vectorise_batch(texts, vector_size: int = VECTOR_SIZE) -> np.ndarray:
+    """(len(texts), 32·V) entry vectors, bit-identical to vectorise_entry
+    per row: every distinct token of the batch is embedded once by
+    _vocab_matrix, and one gather fills the zero-padded token slots."""
+    toks = [tokenize(t)[:MAX_TOKENS_PER_ENTRY] for t in list(texts)]
+    lens = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    codes, unique = pd.factorize(
+        np.fromiter(itertools.chain.from_iterable(toks), dtype=object, count=int(lens.sum()))
+    )
+    # the last row is the zero vector of an empty slot
+    mat = np.vstack([_vocab_matrix(list(unique), vector_size), np.zeros((1, vector_size))])
+    slots = np.full((len(toks), MAX_TOKENS_PER_ENTRY), len(unique), dtype=np.int64)
+    slots[np.arange(MAX_TOKENS_PER_ENTRY)[None, :] < lens[:, None]] = codes  # row-major
+    return mat[slots].reshape(len(toks), MAX_TOKENS_PER_ENTRY * vector_size)
+
+
 def vectorise_udf(vector_size: int = VECTOR_SIZE):
-    """Arrow-batched pandas_udf: string → array<double> (the 32·V entry vec).
-    A per-executor token→vector cache amortizes the md5+randn derivation —
-    corpora repeat tokens heavily (Zipf), so the hot path is a dict hit."""
-    cache: dict[str, np.ndarray] = {}
-
-    def tv(tok: str) -> np.ndarray:
-        v = cache.get(tok)
-        if v is None:
-            if len(cache) > 500_000:  # bound executor memory
-                cache.clear()
-            v = cache[tok] = token_vector(tok, vector_size)
-        return v
-
-    def one(entry: str) -> list[float]:
-        toks = tokenize(entry)[:MAX_TOKENS_PER_ENTRY]
-        out = np.zeros(MAX_TOKENS_PER_ENTRY * vector_size)
-        for i, t in enumerate(toks):
-            out[i * vector_size : (i + 1) * vector_size] = tv(t)
-        return out.tolist()
+    """Arrow-batched pandas_udf: string → array<double> (the 32·V entry
+    vec), one vectorise_batch call per Arrow batch."""
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def _vec(s: pd.Series) -> pd.Series:
-        return s.map(one)
+        return pd.Series(list(vectorise_batch(s, vector_size)), index=s.index)
 
     return _vec
 
@@ -145,8 +157,13 @@ def embed_entries(df: DataFrame, c: str, vector_size: int = VECTOR_SIZE) -> Data
 
 
 # ---------------------------------------------------------------------------
-# distributed moments + covariance (never collects raw vectors)
+# moments, covariance and medians: the distributed route (never collects raw
+# vectors) and the driver route share the kernels
 # ---------------------------------------------------------------------------
+
+
+def _stack_vec(pdf: pd.DataFrame) -> np.ndarray:
+    return np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
 
 
 def _reduce_partials(
@@ -176,7 +193,7 @@ def _medians(
     mn: np.ndarray,
     mx: np.ndarray,
     bins: int = 1024,
-    per_dim_cap: int = 16384,
+    per_dim_cap: int = DRIVER_MAX_ROWS,
     max_levels: int = 6,
     merge_partitions: int = 8,
 ) -> np.ndarray:
@@ -218,8 +235,6 @@ def _medians(
     point masses, negatives, and odd/even n)."""
     if n <= 0:
         return np.full(d, np.nan)
-    import math
-
     mn = np.asarray(mn, dtype=np.float64)
     mx = np.asarray(mx, dtype=np.float64)
     k = (n - 1) * 0.5
@@ -261,7 +276,7 @@ def _medians(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                X = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
+                X = _stack_vec(pdf)
                 m = _mask(X, lvls)
                 flat = (_bin_idx(X, lo_k, inv_k) + offsets[None, :])[m]
                 if flat.size:
@@ -340,7 +355,7 @@ def _medians(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
+            X = _stack_vec(pdf)
             m = _mask(X, levels)
             for j in np.nonzero(m.any(axis=0))[0]:
                 per_dim.setdefault(int(j), []).append(X[m[:, j], j])
@@ -361,115 +376,121 @@ def _medians(
             acc[float(u)] = acc.get(float(u), 0) + int(c)
     for j in np.nonzero(~const)[0]:
         items = sorted(merged_counts.get(int(j), {}).items())
-        total = sum(c for _, c in items)
+        cum = np.cumsum([c for _, c in items], dtype=np.int64)
+        total = int(cum[-1]) if len(cum) else 0
         if total != cnt_in[j]:  # exactness invariant — never silently wrong
             raise AssertionError(
                 f"median selection dim {j}: bracket count {total} != "
                 f"histogram count {int(cnt_in[j])}"
             )
-        cum = 0
-        l_lo, l_hi = r_lo - int(cnt_below[j]), r_hi - int(cnt_below[j])
-        v_lo = v_hi = None
-        for v, c in items:
-            if v_lo is None and cum + c > l_lo:
-                v_lo = v
-            if cum + c > l_hi:
-                v_hi = v
-                break
-            cum += c
-        # lower*(1-f) + higher*f: Spark Percentile's exact IEEE expression
-        med[j] = v_lo * (1.0 - frac) + v_hi * frac
+        below = int(cnt_below[j])
+        med[j] = _flank_median(
+            np.array([v for v, _ in items]), cum, r_lo - below, r_hi - below, frac
+        )
     return med
+
+
+def _flank_median(values: np.ndarray, cum: np.ndarray, l_lo: int, l_hi: int, frac: float) -> float:
+    """The median from ascending ``values`` and their cumulative counts
+    ``cum``: the values at ranks ``l_lo`` and ``l_hi`` (0-based),
+    interpolated with Spark Percentile's exact IEEE expression
+    ``lower*(1-f) + higher*f``."""
+    v_lo = values[np.searchsorted(cum, l_lo, side="right")]
+    v_hi = values[np.searchsorted(cum, l_hi, side="right")]
+    return float(v_lo * (1.0 - frac) + v_hi * frac)
+
+
+def _driver_medians(X: np.ndarray) -> np.ndarray:
+    """Per-dimension exact medians of a driver-held (n, d) matrix, selected
+    by _flank_median exactly as _medians' collect pass selects them: at
+    n <= its ``per_dim_cap`` no histogram level runs, so both see every
+    value of a dimension and pick the same two."""
+    n, d = X.shape
+    k = (n - 1) * 0.5
+    r_lo, r_hi = math.floor(k), math.ceil(k)
+    mn, mx = X.min(axis=0), X.max(axis=0)
+    S = np.sort(X, axis=0)
+    cum = np.arange(1, n + 1, dtype=np.int64)  # each sorted row counts once
+    return np.array(
+        [
+            mn[j] if mn[j] == mx[j] else _flank_median(S[:, j], cum, r_lo, r_hi, k - r_lo)
+            for j in range(d)
+        ]
+    )
 
 
 _POWERSUM_FIELDS = ("s1", "s2", "s3", "s4", "gram", "mn", "mx")
 
 
+def _powersums(X: np.ndarray) -> tuple:
+    """(n, Σx, Σx², Σx³, Σx⁴, XᵀX, min, max) of an (n, d) block — matrix
+    ops, no per-row Python. Per-dim min/max ride along for free: they seed
+    _medians' histogram brackets, so the median selection needs no extra
+    range-discovery pass."""
+    X2 = X * X
+    return (
+        X.shape[0], X.sum(axis=0), X2.sum(axis=0), (X2 * X).sum(axis=0),
+        (X2 * X2).sum(axis=0), X.T @ X, X.min(axis=0), X.max(axis=0),
+    )
+
+
+def _fold_powersums(acc: tuple | None, part: tuple) -> tuple:
+    """Fold one _powersums result (or a partial of them) into ``acc``."""
+    if acc is None:
+        return part
+    return (
+        *(a + b for a, b in zip(acc[:6], part[:6])),
+        np.minimum(acc[6], part[6]),
+        np.maximum(acc[7], part[7]),
+    )
+
+
 def _powersums_and_gram(vec_df: DataFrame, d: int, merge_partitions: int = 8):
-    """One pass, Arrow-batched end to end: per partition the vectors are
-    stacked into an (n_i, d) matrix and reduced to [n, Σx, Σx², Σx³, Σx⁴,
-    XᵀX, min, max] — matrix ops, no per-row Python and no Row
-    deserialization. The driver folds at most ``merge_partitions`` of these
-    O(d²) partials (_reduce_partials merges them through one stage only
-    above that many partitions; collecting raw partials of 2000 partitions
-    at d=256 would ship ~1 GB). Per-dim min/max ride along for free — they
-    seed _medians' histogram brackets, so the median selection needs no
-    extra range-discovery pass."""
-    _SUM = ("s1", "s2", "s3", "s4", "gram")
+    """_powersums of every Arrow batch of ``vec_df.__vec``, folded per
+    partition and then on the driver, which folds at most
+    ``merge_partitions`` of these O(d²) partials (_reduce_partials merges
+    them through one stage only above that many partitions; collecting raw
+    partials of 2000 partitions at d=256 would ship ~1 GB)."""
     schema = T.StructType(
         [T.StructField("n", T.LongType())]
         + [T.StructField(f, T.ArrayType(T.DoubleType())) for f in _POWERSUM_FIELDS]
     )
 
-    def _acc_frame(n, s1, s2, s3, s4, gram, mn, mx):
+    def _acc_frame(acc):
+        n, *arrays = acc
         return pd.DataFrame(
-            {
-                "n": [n],
-                "s1": [s1.tolist()],
-                "s2": [s2.tolist()],
-                "s3": [s3.tolist()],
-                "s4": [s4.tolist()],
-                "gram": [np.asarray(gram).ravel().tolist()],
-                "mn": [mn.tolist()],
-                "mx": [mx.tolist()],
-            }
+            {"n": [n]}
+            | {f: [np.asarray(a).ravel().tolist()] for f, a in zip(_POWERSUM_FIELDS, arrays)}
         )
 
+    def _row_partials(rows: pd.DataFrame):
+        for _, row in rows.iterrows():
+            yield (int(row["n"]),) + tuple(
+                np.asarray(row[f], dtype=np.float64) for f in _POWERSUM_FIELDS
+            )
+
     def part(batches):
-        n = 0
-        s1 = np.zeros(d)
-        s2 = np.zeros(d)
-        s3 = np.zeros(d)
-        s4 = np.zeros(d)
-        gram = np.zeros((d, d))
-        mn = np.full(d, np.inf)
-        mx = np.full(d, -np.inf)
+        acc = None
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-            X2 = X * X
-            n += X.shape[0]
-            s1 += X.sum(axis=0)
-            s2 += X2.sum(axis=0)
-            s3 += (X2 * X).sum(axis=0)
-            s4 += (X2 * X2).sum(axis=0)
-            gram += X.T @ X
-            np.minimum(mn, X.min(axis=0), out=mn)
-            np.maximum(mx, X.max(axis=0), out=mx)
-        if n:
-            yield _acc_frame(n, s1, s2, s3, s4, gram, mn, mx)
+            if len(pdf):
+                acc = _fold_powersums(acc, _powersums(_stack_vec(pdf)))
+        if acc is not None:
+            yield _acc_frame(acc)
 
     def merge(batches):
-        n = 0
-        acc: dict[str, np.ndarray] | None = None
+        acc = None
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                n += int(row["n"])
-                vals = {
-                    f: np.asarray(row[f], dtype=np.float64)
-                    for f in _POWERSUM_FIELDS
-                }
-                if acc is None:
-                    acc = vals
-                else:
-                    for f in _SUM:
-                        acc[f] = acc[f] + vals[f]
-                    acc["mn"] = np.minimum(acc["mn"], vals["mn"])
-                    acc["mx"] = np.maximum(acc["mx"], vals["mx"])
+            for p in _row_partials(pdf):
+                acc = _fold_powersums(acc, p)
         if acc is not None:
-            yield _acc_frame(n, *(acc[f] for f in _POWERSUM_FIELDS))
+            yield _acc_frame(acc)
 
-    rows = _reduce_partials(vec_df, part, merge, schema, merge_partitions)
-    if rows.empty:
+    acc = None
+    for p in _row_partials(_reduce_partials(vec_df, part, merge, schema, merge_partitions)):
+        acc = _fold_powersums(acc, p)
+    if acc is None:
         return None
-    n = int(rows["n"].sum())
-    s1, s2, s3, s4, gram_flat = (
-        np.sum(np.stack(rows[f].to_numpy()), axis=0) for f in _SUM
-    )
-    mn = np.min(np.stack(rows["mn"].to_numpy()), axis=0)
-    mx = np.max(np.stack(rows["mx"].to_numpy()), axis=0)
-    return n, s1, s2, s3, s4, gram_flat.reshape(d, d), mn, mx
+    return (*acc[:5], acc[5].reshape(d, d), acc[6], acc[7])
 
 
 def _moments_from_powersums(n, s1, s2, s3, s4) -> np.ndarray:
@@ -485,6 +506,71 @@ def _moments_from_powersums(n, s1, s2, s3, s4) -> np.ndarray:
     return m, np.sqrt(m2), skew, kurt
 
 
+def _vocab(df: DataFrame, c: str, limit: int) -> list[str]:
+    """Vocabulary for k-NN decode: the distinct tokens of ``df[c]`` (by
+    tokenize_expr, in the JVM on both routes), most frequent first."""
+    rows = (
+        df.select(F.explode(tokenize_expr(c)).alias("token"))
+        .groupBy("token")
+        .count()
+        .orderBy(F.desc("count"), F.asc("token"))
+        .limit(limit)
+        .collect()
+    )
+    return [r["token"] for r in rows]
+
+
+def _stats_dict(sums: tuple, medians, vocab: list[str], vector_size: int) -> dict:
+    n, s1, s2, s3, s4, gram, _, _ = sums
+    d = len(s1)
+    mean_vec, std_vec, skew_vec, kurt_vec = _moments_from_powersums(n, s1, s2, s3, s4)
+    cov = (gram - n * np.outer(mean_vec, mean_vec)) / (n - 1) if n > 1 else np.zeros((d, d))
+    return {
+        "overall_mean": float(np.mean(mean_vec)),
+        "overall_std": float(np.mean(std_vec)),
+        "std_of_means": float(np.std(mean_vec)),
+        "mean_of_medians": float(np.mean(medians)) if medians is not None else None,
+        "asymmetry_avg": float(np.mean(skew_vec)),
+        "excess_avg": float(np.mean(kurt_vec)),
+        "vector_dim": d,
+        "mean_vector": mean_vec,
+        "cov_matrix": cov,
+        "cov_diagonal": np.diag(cov),
+        "cov_trace": float(np.trace(cov)),
+        "cov_det": float(np.linalg.det(cov + np.eye(d) * 1e-6)),
+        "n_samples": int(n),
+        "vocab": vocab,
+        "vector_size": vector_size,
+    }
+
+
+def text_profile_local(
+    texts,
+    df: DataFrame,
+    c: str,
+    vector_size: int = VECTOR_SIZE,
+    build_vocab_limit: int = 100000,
+    compute_medians: bool = True,
+    build_vocab: bool = True,
+) -> dict | None:
+    """text_profile's driver route over ``texts``, the non-null entries of
+    ``df[c]`` already on the driver: one vectorise_batch call, _powersums
+    folded over blocks of at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows (as the distributed route folds its Arrow batches; the block bounds
+    the driver's temporaries), and _driver_medians. Only the vocabulary
+    reads ``df`` again."""
+    if len(texts) == 0:
+        return None
+    X = vectorise_batch(texts, vector_size)
+    block = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    sums = None
+    for lo in range(0, len(X), max(1, block)):
+        sums = _fold_powersums(sums, _powersums(X[lo : lo + block]))
+    medians = _driver_medians(X) if compute_medians else None
+    vocab = _vocab(df, c, build_vocab_limit) if build_vocab else []
+    return _stats_dict(sums, medians, vocab, vector_size)
+
+
 def text_profile(
     df: DataFrame,
     c: str,
@@ -497,64 +583,45 @@ def text_profile(
     keys, but vectorised_data/raw_entries are NOT retained (scale; the
     bootstrap/knn paths keep only the bounded vocabulary).
 
-    ``compute_medians=False`` / ``build_vocab=False`` skip those Spark jobs
-    for callers that only need the moment stats (validation re-embedding
+    ``collect_bounded`` routes the column: at most ``DRIVER_MAX_ROWS``
+    non-null entries cross to the driver in one Arrow hand-off and
+    text_profile_local reduces them; a larger column runs the distributed
+    route (embed_entries, _powersums_and_gram, _medians), which never
+    collects raw vectors. Both routes vectorise with vectorise_batch and
+    build the vocabulary with the same JVM groupBy.
+
+    ``compute_medians=False`` / ``build_vocab=False`` skip those steps for
+    callers that only need the moment stats (validation re-embedding
     compares mean/std/skew/kurt only, Latanova_v1.py:433-446)."""
+    from etl_processes_spark.partitioning import collect_bounded
+
     base = df.filter(F.col(c).isNotNull())
     if build_vocab:
-        # base feeds BOTH the embedding pass and the vocabulary build —
-        # persist so the source scan+filter runs once, not twice (profile
-        # inputs are bounded samples by contract, so caching text is safe)
+        # base feeds the size check, the statistics AND the vocabulary
+        # build: persist so the source scan+filter runs once
         base = base.persist()
-    # Persisted even when only the powersum pass reads it (validate mode):
-    # unpersisted, the embedding pandas_udf and the powersum mapInPandas
-    # chain into one stage with two Python workers per task, which costs
-    # more memory than the cache.
-    vec_df = embed_entries(base, c, vector_size).persist()
     try:
-        d = MAX_TOKENS_PER_ENTRY * vector_size
-        sums = _powersums_and_gram(vec_df, d)
-        if sums is None:
-            return None
-        n, s1, s2, s3, s4, gram, mn, mx = sums
-        mean_vec, std_vec, skew_vec, kurt_vec = _moments_from_powersums(n, s1, s2, s3, s4)
-        cov = (
-            (gram - n * np.outer(mean_vec, mean_vec)) / (n - 1)
-            if n > 1
-            else np.zeros((d, d))
-        )
-        medians = _medians(vec_df, d, n, mn, mx) if compute_medians else None
-        # Vocabulary for k-NN decode: distinct tokens of the profiled text.
-        vocab: list[str] = []
-        if build_vocab:
-            vocab_rows = (
-                base.select(F.explode(tokenize_expr(c)).alias("token"))
-                .groupBy("token")
-                .count()
-                .orderBy(F.desc("count"), F.asc("token"))
-                .limit(build_vocab_limit)
-                .collect()
+        _, pdf = collect_bounded(base.select(F.col(c).cast("string").alias(c)), DRIVER_MAX_ROWS)
+        if pdf is not None:
+            return text_profile_local(
+                pdf[c], base, c, vector_size, build_vocab_limit, compute_medians, build_vocab
             )
-            vocab = [r["token"] for r in vocab_rows]
-        return {
-            "overall_mean": float(np.mean(mean_vec)),
-            "overall_std": float(np.mean(std_vec)),
-            "std_of_means": float(np.std(mean_vec)),
-            "mean_of_medians": float(np.mean(medians)) if medians is not None else None,
-            "asymmetry_avg": float(np.mean(skew_vec)),
-            "excess_avg": float(np.mean(kurt_vec)),
-            "vector_dim": d,
-            "mean_vector": mean_vec,
-            "cov_matrix": cov,
-            "cov_diagonal": np.diag(cov),
-            "cov_trace": float(np.trace(cov)),
-            "cov_det": float(np.linalg.det(cov + np.eye(d) * 1e-6)),
-            "n_samples": int(n),
-            "vocab": vocab,
-            "vector_size": vector_size,
-        }
+        # Persisted even when only the powersum pass reads it (validate
+        # mode): unpersisted, the embedding pandas_udf and the powersum
+        # mapInPandas chain into one stage with two Python workers per
+        # task, which costs more memory than the cache.
+        vec_df = embed_entries(base, c, vector_size).persist()
+        try:
+            d = MAX_TOKENS_PER_ENTRY * vector_size
+            sums = _powersums_and_gram(vec_df, d)
+            if sums is None:
+                return None
+            medians = _medians(vec_df, d, sums[0], sums[6], sums[7]) if compute_medians else None
+            vocab = _vocab(base, c, build_vocab_limit) if build_vocab else []
+            return _stats_dict(sums, medians, vocab, vector_size)
+        finally:
+            vec_df.unpersist()
     finally:
-        vec_df.unpersist()
         if build_vocab:
             base.unpersist()
 
@@ -575,8 +642,6 @@ def _box_muller_tables() -> tuple[np.ndarray, np.ndarray]:
     inline, which is what keeps the DuckDB twin's replay exact."""
     global _BM_TABLES
     if _BM_TABLES is None:
-        import math
-
         r = np.empty(65536)
         c = np.empty(65536)
         for k in range(65536):

@@ -712,11 +712,46 @@ def test_near_dup_parquet_corpus_collects_only_below_the_bound(
     for name in ("count", "toPandas"):  # on the class that defines them
         _spy(monkeypatch, type(corpus), name, log)
     got = {(r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(corpus).collect()}
-    assert log.count("count") == 1 and log.count("toPandas") == 1
     routes = [x for x in log if x not in ("count", "toPandas")]
     if side == "exact":
         assert log[:2] == ["count", "toPandas"]
+        assert log.count("count") == 1 and log.count("toPandas") == 1
         assert routes == ["_near_dup_exact_blocked"]
     else:
+        # the fit sample is a limit().collect(), never an Arrow toPandas
+        assert log.count("count") == 1 and log.count("toPandas") == 0
         assert routes in (["_near_dup_lsh"], ["_cell_pairs"])
     assert (3, 7) in got
+
+
+def test_fit_sample_reads_file_order_without_an_exchange(spark, sf_dir, tmp_path):
+    # a multi-partition corpus: the fit sample is the first n rows in file
+    # order (what the DuckDB twins rebuild with pyarrow), and taking them
+    # writes no shuffle bytes. Spark scans the larger files first, so the
+    # files shrink in name order, and that is the file order of both readers.
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from perfbench.spans import Ledger
+
+    tbl = pq.read_table(str(Path(sf_dir).parent / "sf0.1" / "embeddings.parquet"))
+    assert tbl.num_rows == 2000
+    path = tmp_path / "emb"
+    path.mkdir()
+    lo = 0
+    for i, rows in enumerate((440, 380, 320, 260, 200, 160, 140, 100)):
+        pq.write_table(tbl.slice(lo, rows), str(path / f"part-{i}.parquet"))
+        lo += rows
+    corpus = spark.read.parquet(str(path))
+    assert corpus.rdd.getNumPartitions() > 1
+    n = 500
+    ledger = Ledger(spark)
+    start = ledger.mark()
+    X = similarity._sample_norm_matrix(corpus, "embedding", n)
+    counters = ledger.counters(start, ledger.mark(), 0.0)
+    assert counters["shuffle_mb"] == 0
+    want = np.stack(
+        [np.asarray(v, dtype=np.float64) for v in pq.read_table(str(path))["embedding"].to_pylist()]
+    )[:n]
+    assert np.array_equal(X, similarity._unit(want))

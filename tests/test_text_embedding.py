@@ -1,9 +1,11 @@
 """Text/embedding pipeline: tokenizer parity, deterministic vectorisation,
-distributed moments/covariance vs numpy, MVN generation round-trip."""
+moments/covariance on both text_profile routes vs numpy and vs each other,
+MVN generation round-trip."""
 
 import numpy as np
 import pytest
 
+import etl_processes_spark.text.embedding as emb
 from etl_processes_spark.profile.types import ColumnProfile
 from etl_processes_spark.text.embedding import (
     MAX_TOKENS_PER_ENTRY,
@@ -12,6 +14,7 @@ from etl_processes_spark.text.embedding import (
     tokenize,
     tokenize_expr,
     token_vector,
+    vectorise_batch,
     vectorise_entry,
 )
 
@@ -30,6 +33,18 @@ def test_tokenize_gensim_parity():
     assert tokenize("Hello, World! A x1 superlongtokenbeyondfifteen") == ["hello", "world"]
     assert tokenize(None) == []
     assert tokenize("The CAT_dog") == ["the", "cat_dog"]
+
+
+def test_token_class_is_word_minus_digit_on_every_code_point():
+    # _TOKEN_RE's class [^\W\d] must accept exactly the characters the
+    # lookahead form (?:(?!\d)\w) accepts, over all of Unicode
+    import re
+
+    from etl_processes_spark.text.embedding import _TOKEN_RE
+
+    lookahead = re.compile(r"(?:(?!\d)\w)+")
+    chars = "".join(map(chr, range(0x110000)))
+    assert _TOKEN_RE.findall(chars) == lookahead.findall(chars)
 
 
 def test_tokenize_expr_matches_python(spark):
@@ -53,6 +68,40 @@ def test_vectorise_entry_shape_and_padding():
     assert np.any(v[:8] != 0) and np.all(v[8:] == 0)
 
 
+def test_vectorise_batch_bit_identical_to_vectorise_entry():
+    texts = [
+        None,
+        "",
+        " ".join(f"tok{chr(97 + i % 26)}{chr(97 + i // 26)}" for i in range(40)),  # > 32 tokens
+        "a bb " + "p" * 15 + " " + "q" * 16,  # lengths 1, 2, 15 and 16
+        "snake_case __ _x x_ under_score_",
+        "Ünïcode ŜTRAßE déjà vu ØRESUND",
+        "repeat repeat repeat",
+        "12 34 x1y2 digits9only",
+    ]
+    for vs in (4, 8):
+        want = np.stack([vectorise_entry(t, vs) for t in texts])
+        assert np.array_equal(vectorise_batch(texts, vs), want)
+    assert vectorise_batch([], 4).shape == (0, MAX_TOKENS_PER_ENTRY * 4)
+
+
+def _text_profile_on(route, df, c, **kwargs):
+    """text_profile with DRIVER_MAX_ROWS at the column's non-null row count
+    (driver) or one below it (distributed); checks the route taken."""
+    from pyspark.sql import functions as F
+
+    n = df.filter(F.col(c).isNotNull()).count()
+    taken = []
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(emb, "DRIVER_MAX_ROWS", n if route == "driver" else n - 1)
+        for name in ("text_profile_local", "_powersums_and_gram"):
+            real = getattr(emb, name)
+            m.setattr(emb, name, lambda *a, _r=real, _n=name, **k: taken.append(_n) or _r(*a, **k))
+        prof = text_profile(df, c, **kwargs)
+    assert taken == (["text_profile_local"] if route == "driver" else ["_powersums_and_gram"])
+    return prof
+
+
 @pytest.fixture(scope="module")
 def profiled(spark):
     df = spark.createDataFrame([(t,) for t in TEXTS], ["body"])
@@ -60,15 +109,18 @@ def profiled(spark):
 
 
 def test_text_profile_matches_numpy(profiled):
-    _, prof = profiled
+    # both routes of text_profile, in one test
+    df, _ = profiled
     X = np.stack([vectorise_entry(t, 4) for t in TEXTS])
-    assert prof["n_samples"] == len(TEXTS)
-    assert prof["vector_dim"] == X.shape[1]
-    np.testing.assert_allclose(prof["mean_vector"], X.mean(axis=0), rtol=1e-9)
-    np.testing.assert_allclose(prof["cov_matrix"], np.cov(X.T), rtol=1e-8, atol=1e-12)
-    assert prof["overall_mean"] == pytest.approx(float(np.mean(X.mean(axis=0))), rel=1e-9)
-    assert prof["overall_std"] == pytest.approx(float(np.mean(X.std(axis=0))), rel=1e-9)
-    assert "spark" in prof["vocab"]
+    for route in ("driver", "distributed"):
+        prof = _text_profile_on(route, df, "body", vector_size=4)
+        assert prof["n_samples"] == len(TEXTS)
+        assert prof["vector_dim"] == X.shape[1]
+        np.testing.assert_allclose(prof["mean_vector"], X.mean(axis=0), rtol=1e-9)
+        np.testing.assert_allclose(prof["cov_matrix"], np.cov(X.T), rtol=1e-8, atol=1e-12)
+        assert prof["overall_mean"] == pytest.approx(float(np.mean(X.mean(axis=0))), rel=1e-9)
+        assert prof["overall_std"] == pytest.approx(float(np.mean(X.std(axis=0))), rel=1e-9)
+        assert "spark" in prof["vocab"]
 
 
 def test_gen_text_roundtrip_and_determinism(spark, profiled):
@@ -317,3 +369,78 @@ def test_medians_matches_spark_median(spark):
     Z[:40, 1] = 2.0
     for partitions in (2, 16):
         check(Z, bins=4, cap=3, levels=6, partitions=partitions)
+
+
+def _sf001_documents(sf_dir):
+    # the sf0.01 documents table, next to the sf0.001 fixture directory
+    import os
+
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01", "documents.parquet")
+
+
+_ORACLE_KEYS = (
+    "overall_mean", "overall_std", "std_of_means", "asymmetry_avg", "excess_avg", "cov_trace",
+)
+
+
+@pytest.mark.parametrize("mode", ["profile", "validate"])
+def test_text_profile_routes_agree_at_the_switch_point(spark, sf_dir, mode):
+    """DRIVER_MAX_ROWS at the column's row count takes the driver route, one
+    below takes the distributed one; both must give the same vocabulary,
+    medians, n_samples and vector_dim, and moments that agree to rounding
+    noise (the two routes sum in different orders)."""
+    df = spark.read.parquet(_sf001_documents(sf_dir))
+    kwargs = {} if mode == "profile" else {"compute_medians": False, "build_vocab": False}
+    got = {route: _text_profile_on(route, df, "text", **kwargs) for route in ("driver", "distributed")}
+    a, b = got["driver"], got["distributed"]
+    for k in ("vocab", "mean_of_medians", "n_samples", "vector_dim", "vector_size"):
+        assert a[k] == b[k], k
+    assert a["n_samples"] == df.filter(df["text"].isNotNull()).count()
+    if mode == "profile":
+        assert a["vocab"] and a["mean_of_medians"] is not None
+    else:
+        assert a["vocab"] == [] and a["mean_of_medians"] is None
+    for k in ("mean_vector", "cov_matrix"):
+        np.testing.assert_allclose(a[k], b[k], rtol=1e-9, atol=1e-15)
+    for k in _ORACLE_KEYS:
+        assert a[k] == pytest.approx(b[k], rel=1e-9)
+        assert round(a[k], 6) == round(b[k], 6), k
+
+
+def test_driver_medians_match_distributed_selection(spark):
+    """_driver_medians and _medians' collect pass select through the same
+    _flank_median: identical medians at n <= per_dim_cap, including point
+    masses, constant dims and odd/even n."""
+    from etl_processes_spark.text.embedding import _driver_medians, _medians
+
+    rng = np.random.default_rng(13)
+    for n in (1, 2, 31, 64):
+        X = np.round(rng.normal(size=(n, 5)) * 3, 1)
+        X[:, 1] = 0.5  # constant
+        X[: n // 2, 2] = -2.0  # half point mass
+        df = spark.createDataFrame([(r.tolist(),) for r in X], ["__vec"]).repartition(3)
+        want = _medians(df, 5, n, X.min(axis=0), X.max(axis=0))
+        assert np.array_equal(_driver_medians(X), want)
+
+
+@pytest.mark.parametrize("deterministic", [False, True])
+def test_profile_text_columns_same_on_both_routes(spark, sf_dir, monkeypatch, deterministic):
+    """profile() hands its sample's text columns to the driver route when
+    sample_rows <= DRIVER_MAX_ROWS (one shared collect) and otherwise
+    collects entries per column and runs the distributed text_profile:
+    same retained entries, vocabulary, medians and counts either way."""
+    from etl_processes_spark.profile import profile
+
+    df = spark.read.parquet(_sf001_documents(sf_dir))
+    kw = {"deterministic": deterministic, "sample_key": "doc_id" if deterministic else None}
+    got = {}
+    for side, cap in (("driver", 1000), ("distributed", 999)):
+        monkeypatch.setattr(emb, "DRIVER_MAX_ROWS", cap)
+        got[side] = profile(df, sample_rows=1000, max_retained_entries=300, **kw)["text"].stats
+    a, b = got["driver"], got["distributed"]
+    assert a["raw_entries"] == b["raw_entries"] and len(a["raw_entries"]) == 300
+    if deterministic:
+        assert a["raw_entries"] == sorted(a["raw_entries"])
+    for k in ("vocab", "mean_of_medians", "n_samples", "n_retained", "vector_dim"):
+        assert a[k] == b[k], k
+    np.testing.assert_allclose(a["cov_matrix"], b["cov_matrix"], rtol=1e-9, atol=1e-15)
